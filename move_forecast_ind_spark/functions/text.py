@@ -111,13 +111,6 @@ def shingles_from_tokens(toks: Column | str, k: int = 3) -> Column:
     )
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles straight from text — convenience form; for
-    hot paths project ``tokens(text)`` first and use
-    :func:`shingles_from_tokens` (see its CSE note)."""
-    return shingles_from_tokens(tokens(text), k)
-
-
 def marker_hits(text: Column, lang: str) -> Column:
     """How many of ``lang``'s marker words appear in the token set."""
     markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])

@@ -29,7 +29,6 @@ from ..functions.rounding import r4, sql_double
 from ..functions.text import (
     TOKENS_SQL,
     fingerprint,
-    shingles_from_tokens,
     sql_hashed_windows,
     tokens,
 )
@@ -229,8 +228,8 @@ def jaccard_pairs(
     # explode: CollapseProject inlines the whole tokenize→shingle chain
     # into every projection that references `shs`, and a generator's
     # sibling columns are evaluated per OUTPUT row — measured 6.1 s vs
-    # 0.65 s at sf0.1 for this one select (the same trap _shingle_sets
-    # documents for minhash).
+    # 0.65 s at sf0.1 for this one select (the same trap hits any lazy
+    # hash column that many later expressions reference).
     # The index keys shingles by their 64-bit window hash (the same
     # identity `shs` now holds): the posting shuffle moves 8-byte longs
     # instead of ~20-byte k-gram strings and the groupBy hashes longs
@@ -369,75 +368,14 @@ def _finish_pairs(
     )
 
 
-def _shingle_sets(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(doc_id, shs array<string>, hs array<long>) — one row per doc:
-    distinct shingles plus their base hashes
-    pmod(xxhash64(shingle, 42), 2^31-1).
-
-    The base hashes are computed HERE, not in the signature stage, so that
-    a checkpoint of this frame stores them: Catalyst's CollapseProject
-    inlines adjacent projections even when an alias is referenced many
-    times, so a lazy `hs` feeding 32 permutation folds re-hashes every
-    shingle 32× (observed 3× wall-clock regression) — persisting `hs`
-    through the checkpoint is the reliable materialization barrier.
-    """
-    return (
-        fanout(docs, F.col(id_col))
-        .select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks"))
-        .select("doc_id", shingles_from_tokens("toks", k).alias("shs"))
-        .select(
-            "doc_id",
-            "shs",
-            F.transform(
-                "shs",
-                lambda s: F.pmod(F.xxhash64(s, F.lit(42)), F.lit(MERSENNE31)),
-            ).alias("hs"),
-        )
-    )
-
-
-def signatures_from_sets(sets: DataFrame) -> DataFrame:
-    """(doc_id, …, hs) → (doc_id, sig array<N_PERM longs>) — MAP-ONLY.
-
-    Permutation i: h_i = (a_i·h + b_i) mod (2^31-1) with seeded full-range
-    coefficients (PERM_A/PERM_B — see the module-level note on why small
-    multipliers break the estimator) — products stay under 2^62, no
-    overflow. Because the per-doc hash array is already one row per doc,
-    the 32 minima are pure array folds: NO explode, NO shuffle — at 100 TB
-    the signature stage is a scan-speed map over the (tiny) set table.
-    Feed this a CHECKPOINTED frame (see _shingle_sets on why a lazy `hs`
-    is a 32× re-hash trap).
-    """
-    hsd = sets.filter(F.size("hs") > 0).select("doc_id", "hs")
-
-    # One SQL string for all 32 folds: Column-lambda HOFs cost dozens of
-    # gateway roundtrips EACH and DataFrame construction (not execution)
-    # dominated the cascade's wall (round-8 profile) — the parsed tree is
-    # identical to the old per-permutation F.transform build.
-    folds = ", ".join(
-        f"array_min(transform(hs, h -> pmod(h * {PERM_A[i]}L + {PERM_B[i]}L, "
-        f"{MERSENNE31}L)))"
-        for i in range(N_PERM)
-    )
-    return hsd.select("doc_id", F.expr(f"array({folds})").alias("sig"))
-
-
-def minhash_signatures(
-    docs: DataFrame, id_col: str, text_col: str, k: int = 3
-) -> DataFrame:
-    """N_PERM (32) deterministic min-hashes per doc (docs with fewer than
-    k tokens have no shingles and no signature)."""
-    return signatures_from_sets(_shingle_sets(docs, id_col, text_col, k))
-
-
 def _pairs_in_row(ds: str) -> F.Column:
     """All (a < b) combinations of a sorted id array, built in-row: the
     shared expansion for every bucketed candidate generator (LSH bands,
     simhash chunks, winnowing fingerprints). Work per bucket is |ds|² —
     callers bound |ds| (max_df fence / bucket width) before expanding.
     ``ds`` is a column NAME (every caller passes one); a single expr
-    string replaces the two nested Column-lambda HOFs (construction-cost
-    doctrine — see signatures_from_sets).
+    string replaces the two nested Column-lambda HOFs (one gateway
+    roundtrip to build instead of dozens per lambda).
 
     Prefer :func:`expand_pairs` on the hot candidate paths: this
     Column-level form materializes the whole |ds|² struct array per row
@@ -480,41 +418,6 @@ def expand_pairs(
             F.expr("slice(__ds, __i + 2, greatest(size(__ds) - __i - 1, 0))")
         ).alias(b),
     )
-
-
-def minhash_lsh_candidates(signatures: DataFrame) -> DataFrame:
-    """Band the signature (N_BANDS bands × BAND_SIZE rows), bucket docs by
-    (band, band-hash), and expand candidate pairs (doc_a < doc_b, distinct)
-    IN-ROW from each bucket's sorted id list.
-
-    This is a grouped inverted index over band hashes, not a self-join:
-    one shuffle builds the buckets and the pair expansion is row-local —
-    versus the band self-join's two shuffled sides plus join. (Round 3
-    measured ~15% off the cascade at sf0.1; same candidate set.) Bucket
-    sizes are bounded by the banding's collision behavior — a bucket is a
-    set of docs agreeing on BAND_SIZE consecutive minhashes, so large
-    buckets are themselves near-duplicate clusters, not skew."""
-    band_structs = ", ".join(
-        "struct({b} AS band, xxhash64({slots}) AS bh)".format(
-            b=b,
-            slots=", ".join(
-                f"element_at(sig, {b * BAND_SIZE + j + 1})"
-                for j in range(BAND_SIZE)
-            ),
-        )
-        for b in range(N_BANDS)
-    )
-    bands = signatures.select(
-        "doc_id", F.expr(f"explode(array({band_structs}))").alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    buckets = (
-        bands.groupBy("band", "bh")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    # two-generator expansion (see expand_pairs: r14 A/B vs the in-row
-    # HOF — same pair set, codegen instead of interpreted struct arrays)
-    return expand_pairs(buckets).distinct()
 
 
 def minhash_dedup_pairs(
@@ -579,10 +482,11 @@ def minhash_dedup_pairs(
     # the signature groupBy shuffles on doc anyway, so pre-shuffling the
     # raw docs was a pure extra exchange. Measured at sf0.1:
     # postings 0.64→0.37 s, postings+signatures 0.64→0.41 s.
-    # Expression strings throughout (construction-cost doctrine — see
-    # signatures_from_sets): the parsed trees are identical to the old
-    # Column-lambda builds, but each string is ONE gateway roundtrip where
-    # the 32-permutation/8-band comprehensions cost hundreds.
+    # Expression strings throughout (construction cost, not execution,
+    # dominated the cascade's wall in the round-8 profile): the parsed
+    # trees are identical to the old Column-lambda builds, but each string
+    # is ONE gateway roundtrip where the 32-permutation/8-band
+    # comprehensions cost hundreds.
     # Topology (r12, RE-AFFIRMED r13 by measurement): two direct
     # tokenize passes — the fence's df-count and the signature postings
     # — plus a candidates-only third for verify; ZERO full-corpus
@@ -795,9 +699,9 @@ def simhash_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame
         F.explode(tokens(F.col(text_col))).alias("tok"),
     )
     # Expression strings for the 48 conditional sums and the 48-term
-    # signature reassembly (construction-cost doctrine — see
-    # signatures_from_sets): identical parsed trees, a handful of
-    # roundtrips instead of a few hundred. h is PROJECTED once (its own
+    # signature reassembly (each Column-builder call is a gateway
+    # roundtrip at construction time): identical parsed trees, a handful
+    # of roundtrips instead of a few hundred. h is PROJECTED once (its own
     # column) so md5 is computed once per token, not once per bit.
     hcol = tok.select(
         "doc_id",

@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import r4, r6, sql_r4, sql_r6
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 
@@ -129,7 +128,6 @@ def events_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized aggregate inside a 4-deep join lineage — measured 4.0 s
     at sf0.1 vs ~1.0-1.4 s for the collect form (scan-bound), with
     byte-identical output."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # one user-keyed aggregate (collect_set dedups in-shuffle), then the
     # <=k² pair fan-out expands IN-ROW — no distinct, no self-join.
@@ -257,7 +255,6 @@ def ts_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     state never exceeds the day count, the same bounded-series contract
     as ml_holt_winters; at 100 TB the fold partitions by series key
     inside the same aggregate shuffle."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
@@ -408,7 +405,6 @@ def emb_pq_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a constant 4×16 fold fan-out per vector (no join, no shuffle),
     then one (subspace, code)-keyed aggregate of bounded output — the
     IVF-assign posture, so 100 TB encodes at scan rate."""
-    tune(spark)
     from ..functions.vectors import as_double
 
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -534,7 +530,6 @@ def emb_silhouette_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation. Engine shape: one posexplode aggregate for centroids
     (k×d bounded), centroids broadcast as ONE array row, a map-only
     distance pass, one label-keyed aggregate — scan-rate at 100 TB."""
-    tune(spark)
     from ..functions.vectors import as_double
 
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -734,7 +729,6 @@ def emb_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus itself never shuffles by more than the final per-query
     rank, mirroring sim_cosine_topk's broadcast-query doctrine at
     100 TB."""
-    tune(spark)
     from ..functions.vectors import as_double
 
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -947,7 +941,6 @@ def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-way dimension fan-out multiplies the VECTOR frame (in-row
     explode), one (label, era, dim) aggregate, then a 64-row-per-label
     join of broadcast-sized centroid frames."""
-    tune(spark)
     from ..functions.vectors import as_double
 
     grid = float(_CD_GRID)
@@ -1072,7 +1065,6 @@ def emb_triplet_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion, clamped and quantized at 1e6 BEFORE comparison; margins
     sum as exact BIGINTs. Engine shape: two lead windows + one per-label
     aggregate; no pairwise anything."""
-    tune(spark)
     from ..functions.vectors import as_double
 
     e = load_table(spark, sf_dir, "embeddings").select(

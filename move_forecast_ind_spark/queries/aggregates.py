@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import r2, r4, sql_r2, sql_r4
-from ..session import tune
 from ..sources import load_table, register_views
 from .registry import register
 
@@ -37,7 +36,6 @@ from .registry import register
 )
 def a2_groupby_sum_4key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-key hash aggregate; the multi-year calendar collapse."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         "l_suppkey",
@@ -63,7 +61,6 @@ def a2_groupby_sum_4key(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a4_groupby_sum_orderby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-grain aggregate with range predicate pushed to the scan."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.filter(
@@ -96,7 +93,6 @@ def a4_groupby_sum_orderby(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a5_global_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global aggregate: partial per partition, one final reduce."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.agg(
         r4(F.avg("o_totalprice")).alias("avg_price"),
@@ -119,7 +115,6 @@ def a5_global_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a6_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT = group-by-all-columns hash aggregate."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.select("o_orderpriority", "o_orderstatus").distinct().orderBy(
         "o_orderpriority", "o_orderstatus"
@@ -140,7 +135,6 @@ def a6_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct aggregate; Catalyst plans the expand + partial distinct."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
@@ -182,7 +176,6 @@ def a_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch aggregate holds |groups| buffers (6 here) and the exact
     aggregate's expanded keys carry only counters; the join back is a
     |groups|-row broadcast."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
 
     def within(approx, exact):
@@ -225,7 +218,6 @@ def a_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (Spark `percentile` == SQL
     quantile_cont). At 100 TB prefer percentile_approx (t-digest sketch,
     bounded memory) — exposed separately as rows-only."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         r4(F.expr("percentile(l_extendedprice, 0.5)")).alias("p50_price"),
@@ -250,7 +242,6 @@ def a_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials). Sketch outputs are engine-specific, so the hash gate runs on
     the exact percentile plus a ≤5%-relative-error assertion on the sketch
     (the oracle recomputes the exact value and asserts the bound)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, 0.5)").alias("exact"),
@@ -282,7 +273,6 @@ def a_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the sketch is EXACT by construction — requesting k above
     cardinality sidesteps tie-order at a top-k boundary, which the sketch
     does not define."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part")
     top = part.agg(F.expr("approx_top_k(p_brand, 50)").alias("tk"))
     return top.select(F.explode("tk").alias("e")).select(
@@ -308,7 +298,6 @@ def a_hll_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     of incremental distinct-count rollups at 100 TB. Oracle gate: exact
     value + ≤5% relative-error assertion (sketch estimates are
     engine-specific)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     # Separate aggregations joined back, NOT one mixed .agg(): countDistinct
     # Expands every distinct value into an aggregation key, and a
@@ -353,7 +342,6 @@ def a_pivot_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-job dynamic path, vs a_pivot's single-job static one. The
     oracle enumerates the fixture's priority values explicitly (dynamic
     PIVOT output schema must still be deterministic to hash)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderstatus")
@@ -407,7 +395,6 @@ def a_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine at ANY data distribution. n=1 groups
     yield NULL variance (both sides), the var_samp convention.
     Map-side combinable single pass, same shuffle shape as before."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     c = F.expr(
         "CAST(FLOOR(o_totalprice * 1e2 + 0.5) AS DECIMAL(38,0))"
@@ -448,7 +435,6 @@ def a_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over 2 keys = 4 grouping sets in one pass (Expand + aggregate)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         r2(F.sum("l_quantity")).alias("sum_qty"),
@@ -471,7 +457,6 @@ def a_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP (year → priority → grand total) in one Expand pass."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.rollup(
         F.year("o_orderdate").alias("y"), F.col("o_orderpriority")
@@ -495,7 +480,6 @@ def a_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS through spark.sql over a registered view."""
-    tune(spark)
     register_views(spark, sf_dir, ["lineitem"])
     return spark.sql(
         f"""
@@ -524,7 +508,6 @@ def a_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a_conditional_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered aggregates in one scan (no per-predicate passes)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_suppkey").agg(
         r2(
@@ -551,7 +534,6 @@ def a_conditional_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a_collect_list_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested assembly: collect per-group lists (sorted for determinism),
     serialized to a string so both engines hash identically."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.filter(F.col("o_custkey") % 100 == 0)
@@ -583,7 +565,6 @@ def a_collect_list_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with an explicit value list (no extra distinct-values job)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     wide = (
         li.groupBy("l_returnflag")

@@ -34,7 +34,6 @@ from pyspark.sql.window import Window
 
 from ..functions.percentiles import group_percentiles
 from ..functions.rounding import r2, r4, r6, sql_double, sql_r2, sql_r4, sql_r6
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 from ..operators.dedup import fanout
@@ -82,7 +81,6 @@ def ts_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-sized: types × days). At 100 TB the only full-data pass is
     the daily aggregate — one shuffle with map-side partials; the grid is
     O(types × days) regardless of fact volume."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     day = F.to_date("ts").alias("day")
     daily = ev.groupBy("event_type", day).agg(
@@ -154,7 +152,6 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over each partition (one shuffle on user_id, no UDF, no loop).
     Weight literals are emitted via ``repr`` so both engines parse
     bit-identical doubles."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     num = F.lit(0.0)
@@ -202,7 +199,6 @@ def ts_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the window and the aggregate share the same (event_type, day)
     partitioning, so Catalyst plans ONE exchange; frame state is a counter
     and six scalars."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # project `day` BEFORE the window so the window's partition key and the
     # aggregate's group key are the same attribute — otherwise Catalyst
@@ -264,7 +260,6 @@ def ts_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile holds a per-group value buffer, so at extreme cardinality
     swap in approx_percentile (the sketch twin already registered as
     ``a_approx_percentile``)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -312,7 +307,6 @@ def events_top_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     user boundaries. Count ties break lexicographically so the top-10 cut
     is deterministic. 100 TB: one shuffle on user_id, then a trigram-
     cardinality aggregate (≤ |types|³ keys) and a tiny TakeOrdered."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tri = ev.select(
@@ -368,7 +362,6 @@ def w_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     user. 100 TB: everything after the DISTINCT is user-cardinality;
     the distinct, the window, and both aggregates all partition by
     user_id, so Catalyst plans a single exchange."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     days = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
     anchored = days.select(
@@ -431,7 +424,6 @@ def w_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fewer than 5 points) emit NULL instead of a garbage slope. 100 TB: one
     shuffle on user_id; both windows share the same partitioning + ordering,
     so Catalyst plans them in a single Window node."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     seq = ev.select(
         "event_id",
@@ -508,7 +500,6 @@ def dq_referential_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row report, so the whole check is one job. No broadcast hints: at
     100 TB the parent key sets are not dimension-sized, and AQE picks
     broadcast exactly when a parent fits."""
-    tune(spark)
     tables = {t: load_table(spark, sf_dir, t)
               for t in ("lineitem", "orders", "part", "supplier", "customer",
                         "events")}
@@ -582,7 +573,6 @@ def dq_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate count falls out as Σc − |keys| with no distinct-count pass.
     100 TB: each audit is one map-side-partial shuffle on its key; the
     eight audits are independent jobs unioned into an 8-row report."""
-    tune(spark)
     reports = []
     for name, table, keys in _KEY_CHECKS:
         per = (
@@ -669,7 +659,6 @@ def dq_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     never satisfies a constraint (explicit COALESCE). 100 TB: single-table
     rules over the same table share one scan each; the report is seven
     rows."""
-    tune(spark)
     reports = []
     for name, table, pred in _ROW_RULES:
         df = load_table(spark, sf_dir, table)
@@ -747,7 +736,6 @@ def j_grid_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's cross-product formulation is the semantics, not the
     plan. Cell size trades replication (rect copies) against refine
     selectivity, the standard grid-file knob."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     pts = ev.select(
         "event_id",
@@ -861,7 +849,6 @@ def corpus_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: pure map expressions (two regexp_replace, two regexp_extract)
     into one grouped aggregate on the canonical key — one shuffle."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("HTTPS://WWW.Example.COM/"),
@@ -931,7 +918,6 @@ def a_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one shuffle on the group key; both window specs share the same
     partitioning so Catalyst plans one sort. For extreme groups, swap in the
     approx-percentile sketch twin."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     wcum = (
         Window.partitionBy("l_returnflag")
@@ -984,7 +970,6 @@ def a_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation is a grouped count plus a row_number cut, which pins the
     answer on every engine. 100 TB: the count aggregate shuffles on the
     (group, value) pair; the window runs on group-cardinality rows."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     counts = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n")
@@ -1032,7 +1017,6 @@ def s_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     combination from scratch) — each ingestion batch shuffles only its own
     rows, and the merge is group-cardinality work. SUM/COUNT/MIN/MAX merge
     losslessly; AVG ships as (sum, count); medians need a sketch."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     month = F.month("o_orderdate").cast("int").alias("month")
     split = F.expr(_IVM_SPLIT)
@@ -1095,7 +1079,6 @@ def emb_prefix_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF), then a grouped average per (label, k). Elements are cast
     float→double BEFORE squaring on both engines so the arithmetic
     matches. 100 TB: map-side work plus a (labels × 4)-key aggregate."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
 
     def ssq(col):  # sum of squares in double, left-to-right fold
@@ -1230,7 +1213,6 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same bounded "fit locally, apply distributed" doctrine as
     ``plans/training.py`` (reference pretrain_models.py fits per-branch
     models the same way)."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     d, s = _PCA_D, _PCA_SCALE
     v = F.col("embedding").cast("array<double>")
@@ -1353,7 +1335,6 @@ def w_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: two shuffles on user_id/day for the aggregates; the window
     runs over ~days rows on a single partition, which is exactly where a
     day-grain cumulative curve belongs."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     day = F.to_date("ts").alias("day")
     firsts = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_day"))
@@ -1421,7 +1402,6 @@ def dq_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per key: one grouped count, then a 1-row summary; the four audits
     union into the report. Skew factor = max / (Σ/|keys|), computed
     identically on both engines and r2-rounded."""
-    tune(spark)
     reports = []
     for name, table, col in _SKEW_KEYS:
         per = (
@@ -1484,7 +1464,6 @@ def emb_intra_class_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     per pair. At 100 TB-scale class sizes, subsample per class first
     (``corpus_stratified_sample``) — the blocked-pair bound is the
     documented contract."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     dot_self = F.aggregate(
@@ -1549,7 +1528,6 @@ def a_numeric_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical floor arithmetic on both engines, so bucket boundaries are
     bit-stable. 100 TB: bounds pass + one tiny-key shuffle; for a single
     pass, swap the exact bounds for fixed domain knowledge."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
     width = (F.col("hi") - F.col("lo")) / float(_HIST_BINS)
@@ -1798,7 +1776,6 @@ def ml_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer (``operators/similarity.py``) remains the library path;
     this is the engine-native, oracle-checkable one. 100 TB: ``iters``
     scans + tiny-key shuffles, no all-pairs anything."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     # fanout (r14): the embeddings fixture parquet is one row group, so
     # every per-round assignment pass (interpreted distance transforms
@@ -1895,7 +1872,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, one for document length; everything else is broadcast-sized. A
     standing query set would precompute the inverted tf index once
     (``s_incremental_agg_merge`` shows the maintenance pattern)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
@@ -1998,7 +1974,6 @@ def ml_ols_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ ~1e31 at the 100× probe — 7 orders inside decimal(38)/HUGEINT.
     The d-feature generalization keeps the pattern (d² sums/group)
     until d is large enough for MLlib's distributed solver."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     q = li.selectExpr(
         "l_returnflag",
@@ -2082,7 +2057,6 @@ def events_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than a second pass. NULL-guarded so sparse users emit null CV
     and FALSE, never a spurious flag. 100 TB: one shuffle on user_id
     shared by the window and the aggregate."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -2157,7 +2131,6 @@ def ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a query. Scale: the series is one row per (grain) — aggregation
     shuffles the events once, then windows run over the tiny series
     frame; the seasonal frame is 7 rows, broadcast back."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -2223,7 +2196,6 @@ def dq_benford_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated numeric columns (TPC-H's uniform synthetic prices deviate
     strongly and visibly, which is itself the point: the audit detects
     non-natural generation). One map-side aggregate to 9 rows."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     digit = F.substring(
         F.floor(F.col("l_extendedprice")).cast("long").cast("string"), 1, 1
@@ -2276,7 +2248,6 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute per word) and drives per-language mixture budgeting next to
     corpus_mix_weighted. Pure map-side counting into a 5-row frame — no
     token explosion, the regexes count in place."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     from ..functions.text import token_count
 
@@ -2343,7 +2314,6 @@ def events_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user frame; the NTILE windows are global but run over one row
     per user — for web-scale user counts swap for percent_rank bucketing
     per partition-range (documented trade; the fixture frame is tiny)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max(F.col("ts").cast("date")).alias("max_day"))
     base = (
@@ -2420,7 +2390,6 @@ def a_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     median); the per-group median frame is tiny and broadcast back.
     Exact interpolated medians (Spark percentile == quantile_cont) so
     both engines agree bit-for-bit after rounding."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     med = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, 0.5)").alias("med")
@@ -2477,7 +2446,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the global rank window runs over the type frame only (at web scale
     cap to the top-k types by count first; slope over the head is the
     standard practice anyway)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     from ..functions.text import tokens
 
@@ -2538,7 +2506,6 @@ def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (single partition) — correct for auditing one log; at 100 TB
     audit per ingestion shard/hour and aggregate the shares, since
     watermarks advance per-partition upstream anyway."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding, 0)
     arr = ev.select(
@@ -2593,7 +2560,6 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     IGNORE-NULLS running window per user carries (source type, source
     time) as two scalars; no self-join, no as-of join materialization.
     Scale: single shuffle on user_id, window state is O(1) per user."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -2671,7 +2637,6 @@ def a_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped pass of count/mean/variance (all map-side combinable) and a
     2-row join. Spark's var_samp matches quantile-free one-pass
     co-moments on both engines; outputs rounded against sum-order ulp."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     g = li.select(
         F.when(F.col("l_returnflag") == "R", "returned")
@@ -2766,7 +2731,6 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     dq_skew_report's pipeline health view. One scan + a 1-row bounds
     broadcast + a ≤10-key aggregate; epsilon-smoothed log ratio keeps
     empty bins finite on both engines identically."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     half = ev.select(
         "value",
@@ -2857,7 +2821,6 @@ def a_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-customer aggregate, then a single global rank window over
     one row per customer — for web-scale swap the exact rank for the
     binned Lorenz approximation."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     x = orders.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev"))
     w = Window.orderBy("rev", "o_custkey")
@@ -2940,7 +2903,6 @@ def ml_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows); the estimator handles censoring wherever it occurs. Scale:
     one shuffle to per-user rows, then windows over one row per distinct
     duration — vanishing vs the log."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     logend = ev.agg(F.max(us).alias("te"))
@@ -3041,7 +3003,6 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pretrain_models.py's changepoint_prior_scale). Earliest peak day
     wins ties deterministically. Scale: one shuffle to the daily frame;
     every window runs over one row per day."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -3114,7 +3075,6 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     log), then one distinct aggregate keyed by day. Scale: activity is
     one row per (user, day); the explode multiplies by the fixed window
     length only, and both aggregates are map-side combinable."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     activity = ev.select(
         "user_id", F.col("ts").cast("date").alias("day")
@@ -3180,7 +3140,6 @@ def a_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-based exact percentile (functions.percentiles — bit-identical
     to the buffering `percentile` aggregate, ~2× faster at sf0.1 and
     spill-safe at scale; r14)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     fences = group_percentiles(
         li, ["l_returnflag"], "l_extendedprice", [0.05, 0.95], ["lo", "hi"]
@@ -3393,7 +3352,6 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cap are hash-sub-banded (semdedup_drop_pairs) so the worst block
     is ~cap², never |cluster|². The oracle computes the identical banding
     (output-neutral at fixture SFs where no cluster reaches the cap)."""
-    tune(spark)
     from ..functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3778,7 +3736,6 @@ def events_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor); for billion-node graphs swap the stats broadcast for the
     shuffle-join-on-src formulation and checkpoint each round (the
     generic iterate pattern this replaced)."""
-    tune(spark)
     # multi-partition adjacency (r14, via _coactivity_adjacency's
     # si-keyed pair fanout): the per-round in-row contribution pass ran
     # on ONE task (noop 5.2-5.9 s; count() prunes the rank values, so
@@ -3903,7 +3860,6 @@ def events_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-join-on-frontier formulation as the billion-node fallback);
     rounds are bounded by the declared constant, and each round's cost
     is one adjacency scan."""
-    tune(spark)
     full = _coactivity_adjacency(spark, sf_dir)
     dist = full.select(
         "i",
@@ -4037,7 +3993,6 @@ def events_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oriented edge list with the oriented adjacency on the head
     vertex, plus the per-node contribution aggregate. All-integer state
     (tri, deg exact; lcc rounded 1e-4) → the SQL oracle is exact."""
-    tune(spark)
     adj = _coactivity_adjacency(spark, sf_dir, bucket_seconds=_TRI_BUCKET_S)
     darr = adj.agg(
         F.transform(
@@ -4152,7 +4107,6 @@ def w_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra sibling of w_gaps_islands (which merges adjacent DAYS, not
     arbitrary spans). One shuffle on user_id; both windows stream with
     O(1) state per user (the running max end IS the sweep line)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     iv = ev.select(
@@ -4221,7 +4175,6 @@ def a_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle to the ≤35-cell contingency frame; margins are windows over
     that tiny frame. Engine dayofweek conventions aligned as in
     ml_seasonal_naive_forecast."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     obs = ev.groupBy(
         "event_type", F.dayofweek("ts").cast("int").alias("dow")
@@ -4301,7 +4254,6 @@ def a_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate to the distinct-value frame, one ordered window over it —
     at web scale pre-bin values (the PSI grid) and KS on the binned
     ECDF, the standard trade."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     pts = ev.filter(F.col("event_type").isin("purchase", "click")).select(
         "value", (F.col("event_type") == "purchase").cast("int").alias("isa")
@@ -4380,7 +4332,6 @@ def a_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_ks_two_sample (whole distribution), completes the standard
     two-sample inference kit. Scale: one distinct-value aggregate + one
     ordered window over it; every moment is map-side combinable."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     pts = ev.filter(F.col("event_type").isin("purchase", "click")).select(
         "value", (F.col("event_type") == "purchase").cast("int").alias("isa")
@@ -4450,7 +4401,6 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanning; this is the exact reference the sketch trades against).
     Self-join keyed on user_id (co-grouped, one shuffle); type pairs per
     user are bounded by the type cardinality, not the log."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     a = ev.select("event_type", "user_id").distinct()
     sizes = a.groupBy("event_type").agg(
@@ -4531,7 +4481,6 @@ def o_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥-all/&gt;-one domination definition). Scale: one per-customer
     aggregate, one tiny per-level frame with an ordered window — the
     d>2 generalization block-partitions on a grid, the standard trade."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     pts = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).cast("long").alias("freq"),
@@ -4583,7 +4532,6 @@ def ml_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tiny R² — the estimator exposes that the generator priced
     without demand response, which is exactly what the diagnostic is
     for. Map-side combinable; no windows."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     lnq = F.log(F.col("l_quantity").cast("double"))
     lnp = F.log(F.col("l_extendedprice") / F.col("l_quantity"))
@@ -4647,7 +4595,6 @@ def dedup_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     decisions are insensitive to it. Runs the exact verifier (same plan
     as dedup_ngram_jaccard) and reduces to ≤10 band rows — at 100 TB
     this is the cheap audit run BEFORE committing to a banding scheme."""
-    tune(spark)
     from ..operators.dedup import jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4712,7 +4659,6 @@ def a_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_chi_square_independence (full contingency) and a_ks_two_sample
     (distributions). Pooled-variance z with exact integer counts; one
     per-user aggregate then a 2-row join."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     assign = ev.groupBy("user_id", (F.col("user_id") % 2).alias("grp")).agg(
         (
@@ -4795,7 +4741,6 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in corr aggregate. The series frame is one row per day;
     everything downstream of the first aggregate is negligible at any
     scale."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("double").alias("y")
@@ -4866,7 +4811,6 @@ def ts_strength_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_autocorrelation and ml_forecast_backtest. Reuses
     ts_stl_decompose's exact component construction over full 7-day
     windows; single scalar row out."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -4970,7 +4914,6 @@ def dq_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     wider tables or when exactness is negotiable, the HLL tier
     (a_hll_sketch_distinct) replaces Expand with one sketch per column
     and no fan-out. Output unpivots driver-side-free via stack()."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     aggs: list = [F.count(F.lit(1)).cast("long").alias("n")]
     for c, kind in _PROFILE_COLS:
@@ -5061,7 +5004,6 @@ def events_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared (baskets are per-user-day, naturally capped; a runaway
     basket gets the same max-size fence as jaccard's hot postings), and
     no shuffle carries more than one row per (basket, pair)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     baskets = ev.groupBy(
         "user_id", F.col("ts").cast("date").alias("day")
@@ -5190,7 +5132,6 @@ def events_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector (same |V| ≪ |E| broadcast assumption as pagerank; swap for a
     shuffle join on billion-node graphs); the mode fold is O(deg²) per
     node, bounded by the same hot-bucket fence as the adjacency build."""
-    tune(spark)
     # multi-partition adjacency (r14): the per-round in-row mode pass —
     # the whole query's compute — serialized on ONE task before
     # _coactivity_adjacency's si-keyed pair fanout (noop profile: one
@@ -5363,7 +5304,6 @@ def events_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence asserted in tests). At 100 TB: per-round state is the
     |V| layer vector (same |V| << |E| broadcast doctrine as
     pagerank/LPA; swap for a shuffle join on billion-node graphs)."""
-    tune(spark)
     full = _coactivity_adjacency(spark, sf_dir, bucket_seconds=_TRI_BUCKET_S)
     kf = full.agg(
         F.greatest(
@@ -5458,7 +5398,6 @@ def events_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user state is bounded by the journey length (cap journeys like
     the hot-bucket fences if a 100 TB user exceeds memory — the motif
     only needs the event-type stream, bytes per event)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.array_join(
@@ -5573,7 +5512,6 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single-partition window frame is metadata-scale by construction.
     At 100 TB: the only data-sized stages are per-user windows and the
     dur collapse."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     d = (
         ev.filter(F.col("event_type") == "purchase")
@@ -5683,7 +5621,6 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     of table size; generalization ladders (coarser bands) re-run the
     same plan with a different banding expression. At 100 TB this is
     the cheapest query in the privacy stack, by design."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     g = cust.groupBy(
         "c_nationkey",
@@ -5772,7 +5709,6 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-event after the first aggregate. At 100 TB this is the
     experimentation readout shape: metric state is one (pre, post) pair
     per user."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     span = ev.agg(
         F.min(F.col("ts").cast("date")).alias("d0"),
@@ -5966,7 +5902,6 @@ def events_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user argmax is a window. At 100 TB: pair volume is |V|*cap^2/2
     worst-case, the fence's purpose; the raw-pair stream is map-side
     only; everything else shuffles one row per surviving candidate."""
-    tune(spark)
     sl0 = _coactivity_sliced(spark, sf_dir, _TRI_BUCKET_S, _LINKPRED_MAX_NBRS)
     # fanout before the per-user pair expansion: sl0 arrives either as
     # the 8-file slim checkpoint (solo path) or as a lazy slice over the
@@ -6050,6 +5985,9 @@ def events_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(F.col("score")).alias("aa_score"),
         )
     )
+
+
+fmt_doc(events_link_prediction, m=_LINKPRED_MAX_NBRS)
 
 
 # --- resampling inference: deterministic Poisson bootstrap -------------------
@@ -6139,7 +6077,6 @@ def a_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes — bootstrap at 100 TB is exactly this shape (the fan-out
     never shuffles raw rows; only {b} partial sums per partition
     move)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "value"
@@ -6200,6 +6137,9 @@ def a_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+fmt_doc(a_bootstrap_ci, b=_BOOT_B)
+
+
 # --- spectral analysis: discrete periodogram ---------------------------------
 
 _PGRAM_MIN_P, _PGRAM_MAX_P = 2, 14  # candidate periods (days)
@@ -6252,7 +6192,6 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy((type, period)) over the 13-way in-row period fan-out — at
     100 TB the fan-out multiplies the DAILY frame (one row per
     series-day), never raw events."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -6386,7 +6325,6 @@ def events_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint; per-user window). 100x probe r11 (warm min-of-2, same
     instrument): 82 s (r10 judge) -> 33-37 s; growth for 10x data fell
     17x -> 5.3x (sub-linear). The pre-rebuild body alone was 83 s."""
-    tune(spark)
     sl0 = _coactivity_sliced(spark, sf_dir, _TRI_BUCKET_S, _LINKPRED_MAX_NBRS)
     # fanout before the expansion - same rationale as events_link_prediction
     sl = fanout(sl0, F.col("i")).select("i", "deg", "sn")

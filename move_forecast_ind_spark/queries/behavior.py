@@ -36,9 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import r2, r4, r6, sql_r2, sql_r4, sql_r6
-from ..session import tune
 from ..sources import load_table
-from .registry import register
+from .registry import fmt_doc, register
 
 # --- item-item collaborative filtering ---------------------------------------
 
@@ -81,7 +80,6 @@ def events_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     A web-scale item catalog would add the standard min-hash/df-cap fence
     from jaccard_pairs; with a schema-bounded item set no fence is
     needed."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     ut = ev.select("user_id", "event_type").distinct()
     tot = ut.groupBy("event_type").agg(
@@ -212,7 +210,6 @@ def events_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed co-activity expansion (hot-bucket fence argument as the
     triangle tier); everything after it is two groupBys on community —
     k rows — plus broadcast-sized reductions."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     evd = ev.select(
         "user_id",
@@ -365,7 +362,6 @@ def events_attribution_position(
     ordering so tie timestamps cannot flip ranks across engines (and a
     within-channel tie cannot change the per-channel sum regardless).
     At 100 TB: two shuffles — user_id join, pid window."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("pid"),
@@ -472,7 +468,6 @@ def events_state_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     key space. At 100 TB the self-join is user-partitioned (lead()
     within the same window pass is the production variant; the join
     form is kept so the oracle is line-for-line comparable)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     e = ev.select(
@@ -578,7 +573,6 @@ def a_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable to r*c rows), margins as window passes over those cells,
     one final row. The grouped-contingency pattern scales to any volume
     because everything after the first aggregate is schema-sized."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     cells = o.groupBy(
         F.col("o_orderpriority").alias("a"),
@@ -670,7 +664,6 @@ def events_session_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     user. Engine shape: one (user, type) aggregate, one user rollup,
     one user-keyed join of schema-sized frames — map-side combine does
     all data-sized work."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     tc = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -756,7 +749,6 @@ def events_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 10-row decile frame aggregates map-side; a pre-bucketed
     histogram variant (value buckets -> interpolated deciles) removes
     the sort entirely when approximate deciles suffice."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     v = o.select(
         F.floor(F.col("o_totalprice") * 1e2 + F.lit(0.5))
@@ -854,7 +846,6 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts exact integers; no rounding anywhere. At 100 TB the state
     per user is one small int array — the same bounded-collect doctrine
     as the co-activity tier."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.min(F.col("ts").cast("date")).alias("d0"))
     uw = (
@@ -960,7 +951,6 @@ def events_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact — no rounding anywhere. Engine shape: one (user, week)
     aggregate, a bounded week fan-out to zero-fill, one lag window, one
     (week, from, to) aggregate of <= weeks x 9 rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.min(F.col("ts").cast("date")).alias("d0"))
     uw = (
@@ -1056,7 +1046,6 @@ def events_journey_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each w_f * H_f contribution is one IEEE expression quantized at
     1e9 and summed as BIGINT. Same transition extraction as the Markov
     tier; everything after is k-row."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     e = ev.select(
@@ -1187,7 +1176,6 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort frame, one 14-row fit reduce. A positive slope (retention
     improving with age — possible on synthetic data) yields NULL
     half-life identically on both engines."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     fs = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("cohort_day")
@@ -1278,6 +1266,9 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+fmt_doc(events_retention_halflife, ma=_RH_MAX_AGE)
+
+
 # --- user activity streaks --------------------------------------------------------
 
 
@@ -1321,7 +1312,6 @@ def events_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, day) aggregate, one rank window, two user-keyed reductions —
     every stage is user-partitioned and map-side combinable at any
     scale."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select(
         "user_id", F.col("ts").cast("date").alias("day")

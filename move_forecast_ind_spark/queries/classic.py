@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import r2, r6, sql_r2
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -60,7 +59,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     those two become shuffle joins on their keys — but nation stays
     broadcast and the nation-pair filter applies at first contact with
     each side, so the pair restriction prunes before the wide join."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").between("1996-01-01 00:00:00", "1997-12-31 23:59:59")
     )
@@ -130,7 +128,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier carry NO hint — Spark auto-broadcasts them while they fit
     and falls back to shuffle joins at full scale. The customer→nation→
     region chain prunes customers to one region before the fact join."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").between("1996-01-01 00:00:00", "1997-12-31 23:59:59")
@@ -188,7 +185,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (auto-broadcast while small, shuffle join at full scale); nation is
     hint-broadcast. Only the (nation, year) aggregate shuffles to a
     ~25 × 7-row result from any corpus size."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     s = load_table(spark, sf_dir, "supplier")
@@ -232,7 +228,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     on l_suppkey; the max is a one-row broadcast). Revenue is rounded
     half-up at 2dp on BOTH sides before the max comparison so the
     engine-order ulp can't flip which supplier wins."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01 00:00:00")
         & (F.col("l_shipdate") < "1996-04-01 00:00:00")
@@ -283,7 +278,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_partkey, map-side combinable); the brand filter broadcasts, so the
     final comparison join is map-side against the (partkey, avg) table —
     which is |part|-sized, broadcastable per brand slice."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
     # The average is rounded at 1e-6 on BOTH sides before the `<`
@@ -334,7 +328,6 @@ def q20_semi_join_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the slice fits; co-shuffled key join beyond); the aggregate
     shuffles on a compound key; the final semi join broadcasts the
     (threshold-bounded) qualifying-supplier set."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01 00:00:00")
         & (F.col("l_shipdate") < "1997-01-01 00:00:00")
@@ -388,7 +381,6 @@ def q11_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast compare — no second fact pass. The unrounded supp_rev is
     compared (both engines aggregate the same doubles); output rounding
     happens after the filter."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     rev = (
@@ -433,7 +425,6 @@ def q12_late_shipment(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-priority, late vs on-time line counts — the join + dual
     conditional-count pattern. orders⋈lineitem co-shuffles on orderkey;
     the aggregate keys on the 5-value priority."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01 00:00:00")
         & (F.col("l_shipdate") < "1997-01-01 00:00:00")

@@ -23,7 +23,6 @@ from pyspark.sql.window import Window
 from ..functions.rounding import r2, r4, r6
 from ..functions.text import sql_hashed_windows, tokens
 from ..functions.vectors import as_double
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 from ..operators.dedup import fanout
@@ -79,7 +78,6 @@ def corpus_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a chunk is its duplicate set, the aggregate is a keyed MIN over a
     packed BIGINT, and hot chunks (boilerplate) are bounded by the
     duplicate count itself — the rows being removed."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     n = F.size("toks")
@@ -142,7 +140,6 @@ def corpus_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality gate against degenerate repetitive text, as two map-side
     combinable aggregations (doc×bigram counts, then per-doc max/sum) —
     no windows, no joins; scales as a word-count."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     base = toks.select(
@@ -199,7 +196,6 @@ def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-length distribution in 16-token buckets with corpus share —
     the sequence-length profile a batching/packing scheduler needs. One
     map-side-combinable aggregate plus a scalar-total window."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_toks = F.size(tokens(F.col("text")))
     h = (
@@ -257,7 +253,6 @@ def corpus_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``weight(lang)`` times (sequence-explode — the epoch-upsampling unit of
     a training mix), then report the realized mixture. The replication is
     a Generate (no shuffle, no rand()); only the small summary aggregates."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     weight = F.coalesce(
         F.create_map(
@@ -313,7 +308,6 @@ def emb_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     of (label, dim) scalar pairs with map-side combine, never whole
     vectors — then fold the centroid back to its norm. The 100 TB shape
     for any per-group vector mean."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "label", F.posexplode(as_double(F.col("embedding"))).alias("dim0", "x")
@@ -350,7 +344,6 @@ def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is partitioning-specific). The per-stratum top-k is a single windowed
     rank; at scale, per-stratum partitions are language-sized and the
     hash ranking needs no global sort."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     rk = F.row_number().over(
         Window.partitionBy("lang").orderBy(
@@ -390,7 +383,6 @@ def corpus_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth never reshuffle existing assignments. Map-side bucket + one
     summary aggregate; the md5-hex idiom is bit-identical in both engines
     (same as the SimHash token hash)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -439,7 +431,6 @@ def corpus_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     web scale swap for the standard pruned-vocab + shuffle join), the
     token stream is scored map-side, and the per-doc average is map-side
     combinable. No Python in the plan."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     vocab = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
@@ -496,7 +487,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the smaller side is ≥ 80% contained. Reuses the jaccard_pairs
     inverted-index topology (its n_common/n_a/n_b output IS the
     containment numerator/denominators)."""
-    tune(spark)
     from ..operators.dedup import jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -565,7 +555,6 @@ def corpus_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     down-weighted or re-crawled. Composes the exact-Jaccard cascade with
     a metadata join: the dup-doc id set is tiny (∝ near-dups), broadcast
     against the corpus."""
-    tune(spark)
     from ..operators.dedup import jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -616,7 +605,6 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (the dedup-adjacent contamination check). No per-shingle join
     back: first-occurrence counts aggregate directly to their owning doc
     (two map-combinable aggregates + one tiny doc-keyed join)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     # Shingle IDENTITY without shingle strings (r11, the
     # corpus_source_overlap finding): novelty consumes only distinct
@@ -681,7 +669,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue (c_custkey tie-break so the LIMIT is deterministic in both
     engines). Plans as TakeOrderedAndProject: per-task top-k heap +
     driver merge, no global sort at any scale."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
@@ -741,7 +728,6 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     featurization: term-frequency aggregate, document-frequency aggregate
     (broadcast — vocabulary-sized), score map-side, per-doc top-k
     window."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
@@ -797,7 +783,6 @@ def dedup_incremental_against_base(spark: SparkSession, sf_dir: str) -> DataFram
     ingestion: the base side reduces to a distinct-fingerprint set — at
     scale a bucketed/Bloom-backed table — and the incoming batch left
     semi-probes it; no pairwise work ever happens."""
-    tune(spark)
     from ..functions.text import fingerprint
 
     docs = load_table(spark, sf_dir, "documents")
@@ -854,7 +839,6 @@ def corpus_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest aggregate is map-side combinable. At scale the window
     partitions by (lang, shard) with per-shard offsets re-based by a
     second tiny aggregate."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "lang", F.size(tokens(F.col("text"))).alias("n_toks")
@@ -913,7 +897,6 @@ def s_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     then unpivoted to (col, stats) rows. At 100 TB swap the exact NDVs
     for approx_count_distinct — kept exact here so the oracle
     value-hashes."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cols = ["l_returnflag", "l_suppkey", "l_shipdate", "l_quantity"]
     agg = li.agg(
@@ -952,7 +935,6 @@ def s_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters on either key (functions/zorder.py; the layout win is
     asserted quantitatively in tests/test_plans.py). Pure shift/mask
     column arithmetic, bit-identical in both engines."""
-    tune(spark)
     from ..functions.zorder import z_value
 
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -989,7 +971,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality, region filter pushed to the two-row dim, year-range filter
     pushed to the orders scan. nation/region/supplier broadcast; the only
     shuffle joins are lineitem⋈orders⋈customer on their keys."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
@@ -1062,7 +1043,6 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp(log_importance) as the weight."""
     from ..functions.text import tokens
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
@@ -1147,7 +1127,6 @@ def corpus_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (word-type, position) — proportional to the VOCABULARY, not the
     corpus; the corpus-scale work is the word-frequency aggregate, which
     is map-side combinable."""
-    tune(spark)
     from ..functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1208,7 +1187,6 @@ def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     the natural byte share, the α-sampled share, and the implied
     up/down-sampling factor that corpus_mix_weighted would execute.
     One aggregate to a 5-row frame; windows over it only."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1285,7 +1263,6 @@ def corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc — the w_cumulative_distinct_users pattern), so the running
     distinct needs no distinct-in-window. Scale: one token aggregate ∝
     vocabulary + one window over the per-doc frame."""
-    tune(spark)
     from ..functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1365,7 +1342,6 @@ def text_good_turing_unseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal, a hapax ratio spike flags OCR noise or boilerplate floods.
     One token aggregate ∝ vocabulary, then a ≤max-count frequency-of-
     frequency frame — trivially map-combinable at any scale."""
-    tune(spark)
     from ..functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1432,7 +1408,6 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     reorder the boundary. Scale: a map stage + one top-k — no shuffle
     beyond TakeOrdered; A-ES keys merge across partitions by
     construction (that is the algorithm's point)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
@@ -1504,7 +1479,6 @@ def corpus_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize once per doc (projected column — the CSE trap), windows
     expand IN-ROW via transform over a sequence, one explode; a pure
     map stage with no shuffle at any scale (plan-asserted)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     t = fanout(docs, F.col("doc_id")).select(
         "doc_id", tokens(F.col("text")).alias("w")
@@ -1596,7 +1570,6 @@ def corpus_cluster_term_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     alphabetical term). Engine shape: one broadcast label join onto the
     token explode, then three schema-sized aggregates — at 100 TB only
     tokenization touches data volume."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "label"
@@ -1734,7 +1707,6 @@ def corpus_modal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio quantized at 1e9, group means exact BIGINT sums. At 100 TB:
     one label broadcast join, one lag window per ordering — the
     set-intersection work is bounded by pairs x bigrams/doc."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "label"

@@ -35,9 +35,8 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import r2, r4, r6, sql_r6
 from ..functions.text import fingerprint, sql_hashed_windows, tokens
-from ..session import tune
 from ..sources import load_table
-from .registry import register
+from .registry import fmt_doc, register
 
 # --- PII redaction ---------------------------------------------------------
 
@@ -95,7 +94,6 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     `regexp_replace` chain inside whole-stage codegen, no shuffle, no
     UDF. The emitted `redacted_fp` md5 proves byte-equality of the
     redacted text, not just the counts."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     # try_element_at: a document with fewer tokens than the slot (empty/
@@ -184,7 +182,6 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side hash semi-join + per-doc count — the corpus never shuffles
     on content. This is exactly the published n-gram decontamination
     topology (eval grams as the small build side)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     # toks projected separately: inlining tokens(text) into the shingle
     # lambda re-splits per shingle position (shingles_from_tokens contract;
@@ -308,7 +305,6 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregate, broadcast to every executor; the probe
     is a 512-row broadcast join + bitmask test, and only the tiny
     candidate set touches the exact fingerprint index."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     fps = docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
     base = fps.filter(F.col("doc_id") % _INC_MOD != 0)
@@ -437,7 +433,6 @@ def text_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; no vocabulary join at all — THE reason hashed features are
     the scale play (a word-level weight table join would shuffle the
     corpus; the hash is free inside codegen)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
@@ -511,7 +506,6 @@ def emb_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats joined per dimension. Codes here are derived per-row and folded
     straight into the error metric; a writer would emit
     `array<tinyint>` + the 64-row scale table."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id",
@@ -600,7 +594,6 @@ def w_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same partitioning reused across all four steps — Catalyst plans a
     single Exchange); per-user state is the run counter, never the
     history."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     chg = (
@@ -695,7 +688,6 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages over an opaque binary column, no shuffle; batch shape and
     schema are exactly what a real decoder (ffmpeg/soundfile) would use
     in this container-less environment."""
-    tune(spark)
     from ..multimodal import audio_features_real, synthesize_wav_media
 
     docs = load_table(spark, sf_dir, "documents")
@@ -751,7 +743,6 @@ def corpus_quality_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: tokenize→hash→score is one map + per-doc aggregate; the draw
     and threshold are row-local — the sample is decided without any
     global coordination, so the stage stays embarrassingly parallel."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     bucket = (
@@ -827,7 +818,6 @@ def w_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning serves the whole chain; per-stage state is a single
     timestamp per user. The final five-number summary collapses through
     a global aggregate (one row out)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
@@ -957,7 +947,6 @@ def sql_recursive_session_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. Both shapes are value-identical against the recursive
     oracle; the switch is an execution-strategy decision, exactly what
     an optimizer would do with a depth estimate."""
-    tune(spark)
     from ..sources import register_views
 
     register_views(spark, sf_dir, ["events"])
@@ -1005,10 +994,7 @@ def sql_recursive_session_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_WINDOW_SESSION_SQL)
 
 
-if sql_recursive_session_roots.__doc__:  # stripped to None under python -OO
-    sql_recursive_session_roots.__doc__ = (
-        sql_recursive_session_roots.__doc__.format(lim=_RECURSION_DEPTH_SWITCH)
-    )
+fmt_doc(sql_recursive_session_roots, lim=_RECURSION_DEPTH_SWITCH)
 
 
 # --- Forward-fill imputation ------------------------------------------------
@@ -1041,7 +1027,6 @@ def f_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: one shuffle on user_id; the window state is a single scalar
     per user (the last non-null seen), streamed in ts order."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     holed = ev.select(
         "event_id",
@@ -1149,7 +1134,6 @@ def j_fuzzy_token_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs only on blocked candidates. This is how spelling-variant
     entity resolution scales (candidate count ∝ true matches, as with
     LSH for documents)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     vocab = docs.select(
         F.explode(tokens(F.col("text"))).alias("clean")
@@ -1233,7 +1217,6 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one shuffle on user_id; frame state is three scalars. The
     guard (n ≥ 5, variance > 0) makes cold-start and constant-signal
     users emit null scores instead of garbage."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     win = (
         Window.partitionBy("user_id")
@@ -1296,7 +1279,6 @@ def f_variant_json_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated field extraction O(tree-walk) instead of O(re-parse), which
     is the practical difference on wide telemetry payloads. One
     low-cardinality aggregate shuffle."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     k = F.try_variant_get(F.parse_json(F.col("props")), "$.k", "int")
     return (
@@ -1372,7 +1354,6 @@ def a_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the sketch is 1024 counters regardless of corpus
     size — mergeable across partitions/days by element-wise sum; the
     estimate join touches a broadcast 1024-row table."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
 
@@ -1447,7 +1428,6 @@ def o_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable. Note the scale caveat this query exists to document: OFFSET
     pagination materializes offset+limit rows per partition — for deep
     pages use keyset pagination (WHERE key > last_seen ORDER BY key)."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     return (
         c.select("c_custkey", "c_name", "c_acctbal")
@@ -1482,7 +1462,6 @@ def sub_lateral_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelates this into the aggregate-then-join plan (the same shape
     J4 hand-builds), so the loop-like syntax costs one shuffle, not
     N subqueries."""
-    tune(spark)
     from ..sources import register_views
 
     register_views(spark, sf_dir, ["nation", "supplier"])
@@ -1518,7 +1497,6 @@ def w_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one user_id shuffle; frame state is a sliding aggregate the
     executor maintains in ts order — never the hour's row buffer for
     sum/count (Spark keeps the frame bound by the range condition)."""
-    tune(spark)
     from ..sources import register_views
 
     register_views(spark, sf_dir, ["events"])
@@ -1545,7 +1523,6 @@ def mm_decode_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch API (raw RecordBatches, no pandas row materialization) — the
     right UDF tier for binary-heavy multimodal columns. Same closed-form
     dimensions, so the oracle value-checks the decode."""
-    tune(spark)
     from ..multimodal import decode_media_arrow, synthesize_png_media
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1588,7 +1565,6 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id (one partitioning serves both); the final matrix is
     weeks×offsets — tiny from any event volume. Week arithmetic uses
     date_trunc + integer day-diff so both engines agree exactly."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
@@ -1648,7 +1624,6 @@ def f_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline uses so one bad row cannot kill a 100 TB job. Null-skipping
     aggregate semantics (COUNT(col), AVG over the divisible subset) are
     part of what the oracle checks."""
-    tune(spark)
     from ..functions.rounding import r4
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1709,7 +1684,6 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the histogram aggregate keys on (doc_id, char) — map-side
     combinable, alphabet-bounded per doc — and the entropy fold is a
     second small aggregate on doc_id. No UDF, no vocabulary state."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     chars = docs.select(
         "doc_id",
@@ -1767,7 +1741,6 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the LAG window shuffles on user_id once; the transition
     matrix is |types|² rows from any volume, so the normalization join
     is against a broadcast-sized aggregate."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -1829,7 +1802,6 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     The driver-side eigen-solve on the 64×64 result is intentionally out
     of scope here (numpy on 4 KB is not a distributed concern); the
     distributed part — this aggregate — is the whole cost at 100 TB."""
-    tune(spark)
     from ..operators.dedup import fanout
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1905,7 +1877,6 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the margin tables are vocabulary-sized, joined back without hints
     (auto-broadcast while they fit — vocabulary margins can exceed the
     broadcast budget on open-domain corpora)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     n_t = F.size("w")
@@ -1998,7 +1969,6 @@ def corpus_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring joins key on (w1[,w2]) — margin/bigram tables are unhinted
     (auto-broadcast while they fit; co-shuffled joins on open-domain
     vocabularies)."""
-    tune(spark)
     from ..operators.dedup import fanout
     from ..operators.materialize import materialize
 
@@ -2112,7 +2082,6 @@ def a_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_stats_moments. Single-pass grouped aggregation; both engines use
     the standard one-pass co-moment recurrences, with outputs rounded on
     both sides against aggregation-order ulp."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("double")
     return li.groupBy("l_returnflag").agg(
@@ -2154,7 +2123,6 @@ def mm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     max per doc: a wrong inverse for ANY filter type flips pixel_sum.
     This closes the last multimodal gap (VERDICT r3 'missing #3') — pixel
     access needs no image library for zlib-coded formats."""
-    tune(spark)
     from ..multimodal import pixel_stats_real, synthesize_png_media
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2239,7 +2207,6 @@ def mm_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary column; the dedup is one (hash)-keyed shuffle — same contract
     as exact_dedup, with Hamming-band buckets (simhash-style) as the
     near-match extension path."""
-    tune(spark)
     from ..multimodal import ahash_real, synthesize_png_media
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2299,7 +2266,6 @@ def mm_ahash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates ∝ true near-dups, one (band, value) shuffle — no
     all-pairs join; degenerate corpora that flood one bucket take the
     same max-width fence as the simhash/jaccard buckets."""
-    tune(spark)
     from ..multimodal import ahash_real, synthesize_png_media
     from ..operators.dedup import expand_pairs, fanout
     from ..operators.materialize import materialize
@@ -2428,7 +2394,6 @@ def a_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch itself is O(k) per group."""
     from pyspark.sql.window import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     h = ev.select(
         "event_type",
@@ -2530,7 +2495,6 @@ def a_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces all three stages."""
     from pyspark.sql.window import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     h = ev.select(
         "event_type",

@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import r4, r6, sql_r4, sql_r6
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 
@@ -109,7 +108,6 @@ def ts_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bounded-band doctrine as j_value_band_join; no sliding window
     ever materializes more than the 7-day neighborhood, and the frame
     partitions by (event_type, day) like every other daily rollup."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # Whole post-aggregate body as expr strings (construction-cost
     # doctrine — lloyd_assign): identical parsed trees to the old Column
@@ -194,7 +192,6 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable (type → max, count) aggregate plus a one-row
     global max broadcast; at 100 TB nothing but the k-row summary ever
     moves."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -259,7 +256,6 @@ def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression work with zero shuffles beyond the output sort, so at
     100 TB this is a pure scan-rate operator with the text column the
     only bytes read."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     n = F.length("text").cast("long")
     letters = (F.length("text") - F.length(F.regexp_replace("text", "[A-Za-z]", ""))).cast("long")
@@ -338,7 +334,6 @@ def corpus_blocklist_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: tokenize (one regex split per document, in-row filter — no
     explode, so token arrays never shuffle), two integer counters per
     document map-side, one per-source aggregate. Scan-rate at 100 TB."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     in_set = ", ".join(f"'{t}'" for t in _BLOCKLIST)
     toks = docs.select(
@@ -428,7 +423,6 @@ def a_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     fence frame, broadcast back over the data, one moment aggregate.
     At 100 TB swap the exact percentile for percentile_approx exactly as
     a_percentiles documents; everything else is unchanged."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     c = cust.select(
         F.col("c_mktsegment").alias("seg"),
@@ -520,7 +514,6 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the daily rollup stays calendar-bounded (365 rows/year/series)
     and the window partitions by series key, so the unpartitioned sort
     here never sees raw data."""
-    tune(spark)
     from pyspark.sql.window import Window as _W
 
     ev = load_table(spark, sf_dir, "events")
@@ -623,7 +616,6 @@ def a_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     would otherwise be engine-order-dependent never happens. Shape: one
     (dow, type) hash aggregate — bounded 7×k cells — then scalar joins;
     at 100 TB only the first aggregate sees data."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         F.dayofweek("ts").cast("long").alias("dow"), "event_type"
@@ -762,7 +754,6 @@ def text_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     token join shuffles the vocabulary, not the corpus; the source-pair
     fence (here a literal 5-source slice) is the operator's documented
     scale knob."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("source").isin(*_JS_SOURCES)
     )
@@ -909,7 +900,6 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_periodogram (daily aggregate, 13-way in-row fan-out, map-side
     combinable) plus two k-row reductions — 100 TB cost is the daily
     aggregate, nothing else."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -1081,7 +1071,6 @@ def dq_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fixed handful of counters per column, exact NDV being the one
     shuffle-bearing term (swap in the existing HLL tier when approximate
     NDV suffices)."""
-    tune(spark)
     lab = load_table(spark, sf_dir, "orders").withColumn(
         "is_b",
         F.col("o_orderdate") >= F.lit(_DRIFT_SPLIT).cast("timestamp"),
@@ -1214,7 +1203,6 @@ def dq_outlier_iqr_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto the scan for the counts. At 100 TB swap the
     exact rank for the existing percentile_approx tier; the fence and
     count stages are unchanged."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     wr = Window.partitionBy("event_type").orderBy("value", "event_id")
     wn = Window.partitionBy("event_type")
@@ -1336,7 +1324,6 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys (ties to the earliest split). Engine shape: one daily
     aggregate, two window passes over <= |days| rows per series, one
     rank — at 100 TB the candidate frame stays |days| x |types| rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -1483,7 +1470,6 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross sums + one ybar), each r_k^2/(n-k) term is quantized at 1e12
     and summed as BIGINT. One lag window with {lags} lags in a single
     pass, one k-row reduce."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -1600,7 +1586,6 @@ def ts_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier (conformal / quantile) is appropriate per series. Exactness:
     moments are BIGINT, mean/variance/D/z each one IEEE expression.
     One daily aggregate + k-row reduce."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -1684,7 +1669,6 @@ def dq_pattern_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB RE2 for these classes. One map-side pattern projection +
     one (column, pattern) aggregate; the census frame is bounded by
     format diversity, not volume."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     vals = (
@@ -1775,7 +1759,6 @@ def dq_id_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     type; at 100 TB this partitions by (type, id-range bucket) with
     boundary pairs handled by a one-row-per-bucket overlap, same
     telescoping as every adjacent-pair audit here."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("event_id")
     s = ev.select(
@@ -1857,7 +1840,6 @@ def dq_order_total_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff is integer. Engine shape: one lineitem aggregate keyed by
     order (map-side combine over the natural key), one key-colocated
     left join — the bucketed-tables shuffle-free shape at 100 TB."""
-    tune(spark)
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -1967,7 +1949,6 @@ def ts_seasonal_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     not fixed, so the normalizer rides the r6 grid like every
     k-row reduce here — documented contract). Engine shape: one daily
     aggregate, one bounded 7-row window, two schema-sized reduces."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",

@@ -43,7 +43,6 @@ from pyspark.sql.window import Window
 from ..functions.rounding import r2, r4, r6, sql_r2, sql_r4, sql_r6
 from ..functions.text import TOKENS_SQL
 from ..functions.vectors import as_double, cosine
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 
@@ -117,7 +116,6 @@ def a_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows are the only data-sized shuffles and they partition by
     segment; a skewed segment would switch to the range-partitioned sort
     the windows already imply."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
@@ -217,7 +215,6 @@ def a_anova_dow_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable groupBy to 7 rows, then a one-row global
     aggregate — two metadata-scale shuffles regardless of table size;
     this is the cheapest possible ANOVA plan at 100 TB."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     v = ev.filter(F.col("event_type") == "purchase").select(
         (F.weekday("ts") + F.lit(1)).alias("dow"),
@@ -304,7 +301,6 @@ def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (QI x sensitive) cells — one shuffle carrying one row per cell —
     then a metadata-scale re-group to classes; at 100 TB this runs at
     the same cost as the k-anonymity audit it extends."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     cells = cust.groupBy(
         "c_nationkey",
@@ -403,7 +399,6 @@ def ml_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     over candidate partitions. At 100 TB the exact leg bounds to top-k
     per partition via TakeOrdered; the ANN legs (sim_ann_lsh / ivf)
     are the production path this evaluator certifies."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "source"
@@ -542,7 +537,6 @@ def ml_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 21-row forecast table to the test days — at 100 TB the daily
     collapse is the only data-sized stage (same posture as the whole
     forecast family)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
@@ -691,7 +685,6 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, two map-side-combinable groupBys ((doc, word) and
     (doc, phrase)), one broadcast-shaped join back — all partitioned by
     doc_id, no corpus-wide state, embarrassingly parallel at 100 TB."""
-    tune(spark)
     from ..operators.dedup import fanout
 
     docs = load_table(spark, sf_dir, "documents")
@@ -843,7 +836,6 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast into the member join; the k^2 separation matrix never
     leaves the driver scale. At 100 TB the member-distance stage is the
     only data-sized pass — one shuffle keyed by vec_id."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select(
         "vec_id", "label", as_double(F.col("embedding")).alias("e")
@@ -971,7 +963,6 @@ def events_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the adjacency build itself and one global aggregate; no edge-level
     join at all (vs the oracle's two, which exist only for SQL
     clarity)."""
-    tune(spark)
     from .analytics import _TRI_BUCKET_S, _coactivity_adjacency
 
     full = _coactivity_adjacency(spark, sf_dir, bucket_seconds=_TRI_BUCKET_S)
@@ -1120,7 +1111,6 @@ def a_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a one-row global moment frame cross-joined broadcast; the BH
     windows run over 25 rows — metadata-scale regardless of table
     size."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     v = cust.select(
         "c_nationkey", _cents(F.col("c_acctbal")).alias("c")
@@ -1268,7 +1258,6 @@ def s_manifest_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Engine shape: one window sort (the layout simulation itself) + two
     metadata-scale groupBys; the real sort-on-write at scale is a
     repartitionByRange the sinks tier already exercises."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_shipdate").cast("date").alias("d"),
         "l_orderkey",
@@ -1464,7 +1453,6 @@ def ts_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale), one single-row fold over <= horizon days; per-series
     filtering at 100 TB partitions the same fold by series key via
     groupBy(series).agg(aggregate(...)) with zero extra shuffles."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
@@ -1608,7 +1596,6 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies verbatim for longer horizons), two metadata-scale
     aggregates. At 100 TB per-key trend screening is the same plan
     with series key in every GROUP BY."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -1755,7 +1742,6 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel (and would fold in-row via transform/aggregate to avoid
     the explode entirely — kept exploded here to mirror the oracle
     join shape)."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.filter(F.col("vec_id") < _JL_SAMPLE).select(
         "vec_id", as_double(F.col("embedding")).alias("e")
@@ -1965,7 +1951,6 @@ def dedup_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     combination measured at or above the lazy plan (7.2-8.5 s vs 6.9 s
     same-session; the per-checkpoint fixed cost outweighs the bounded
     double-compute of the two tiny pair frames)."""
-    tune(spark)
     from ..functions.text import sql_shingles_from_tokens, tokens
     from ..operators.dedup import expand_pairs, fanout, jaccard_pairs
 
@@ -1989,8 +1974,8 @@ def dedup_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(conv(substring(md5(sh), 1, 8), 16, 10) AS BIGINT) % {_M31} "
         "AS h",
     )
-    # expression strings (construction-cost doctrine —
-    # operators/dedup.py signatures_from_sets)
+    # expression strings: one gateway roundtrip per aggregate instead of
+    # one per Column-builder call (construction cost)
     sig = hs.groupBy("doc_id").agg(
         *[
             F.expr(f"min((h * {a}L + {b}L) % {_M31}L) AS s{i}")
@@ -2103,7 +2088,6 @@ def a_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     values — the theil-sen horizon fence applies for longer series); the
     oracle's self-join formulation is SQL clarity. At 100 TB: the daily
     collapse is the only data-sized stage."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -2183,7 +2167,6 @@ def w_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is a single range-partitioned window over the (tiny) daily
     collapse; frame width growth trades linearly, never with data
     volume."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -2285,7 +2268,6 @@ def emb_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered-shaped. At 100 TB the words live as two BIGINT columns
     in parquet (delta-encoded), scanned without touching the float
     arrays at all — the scan-pruning win is the point."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select("vec_id", as_double(F.col("embedding")).alias("e"))
     w = x.select(
@@ -2380,7 +2362,6 @@ def events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONVERTERS only (a small fraction of users) — at 100 TB the p90
     would come from percentile_approx on the same frame; the exact rank
     formulation is the oracle-checkable tier."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     uc = (
         ev.filter(F.col("event_type") == "click")
@@ -2501,7 +2482,6 @@ def a_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     USERS, not events, and one groupBy(b) reduces it — at 100 TB with
     10^8 users this is a 199-way map-side-combinable aggregate, no
     state beyond 2x199 partial sums per task."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     u = (
         ev.filter(F.col("event_type") == "purchase")
@@ -2625,7 +2605,6 @@ def events_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical op sequence; ceil of an identical double is identical.
     Engine shape: one map-side-combinable global aggregate — one row,
     one shuffle, any scale."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     m = ev.filter(F.col("event_type") == "purchase").select(
         _cents(F.col("value")).alias("c")
@@ -2756,7 +2735,6 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     simplification). At 100 TB only tokenize + two bounded aggregates
     touch data; the iteration is O(|edges|) driver math under the
     vocab² cap."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("ws")
     )
@@ -2886,7 +2864,6 @@ def w_conversion_time_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact; shares single divisions. Engine shape: two per-user MIN
     aggregates, a 6-way checkpoint fan-out of the per-user lag frame
     (users, not events), one aggregate."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     uc = ev.filter(F.col("event_type") == "click").groupBy("user_id").agg(
         F.min(F.unix_micros("ts")).alias("first_click_us")

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import r4, r6, sql_r4, sql_r6
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -112,7 +111,6 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup, which AQE handles like every other high-cardinality distinct;
     arm membership is a pure md5 function of the user id, so retries and
     speculation can never flip an assignment (no rand())."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     b = _md5_bucket(F.col("user_id"), 10)
     exposed = ev.select("event_type", "user_id", b.alias("b")).distinct()
@@ -220,7 +218,6 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     is scalar. At 100 TB this is a single map-side-combinable aggregate
     over the purchase slice with predicate pushdown on event_type —
     nothing else moves."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     p = ev.select(
         (_md5_bucket(F.col("user_id"), 2) == 1).alias("treated"),
@@ -332,7 +329,6 @@ def a_cohens_d_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     k(k-1)/2 rows of pure scalar arithmetic with the identical op
     sequence on both engines. At 100 TB only the moment aggregate sees
     data; the pair frame is k²-bounded and broadcast."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     cents = F.floor(F.col("c_acctbal") * F.lit(1e2) + F.lit(0.5)).cast("long")
     m = cust.select(F.col("c_mktsegment").alias("seg"), cents.alias("c")).groupBy(
@@ -437,7 +433,6 @@ def ml_cumulative_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global total-order sort (a global NTILE collapses the whole
     dataset into one window task; at 100 TB that is the difference
     between a scan and an impossibility)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     label = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("int")
     frac = _md5_bucket(F.col("o_orderkey"), 10000) / F.lit(2e4)
@@ -533,7 +528,6 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     big side of one shuffle join keyed by user — the same shape as every
     per-user enrichment here — and the windowed frame stays
     calendar-bounded."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # expr strings (construction-cost doctrine — lloyd_assign); identical
     # trees, oracle-checked at sf0.001/0.01 after the rewrite.
@@ -654,7 +648,6 @@ def ml_propensity_ipw(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three estimates compare exact integers until the final scaled
     divisions. Engine shape: one stratum aggregate (broadcast), one
     map-side weighted pass, one global row — scan-rate at any volume."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     lab = o.select(
         F.when(
@@ -786,7 +779,6 @@ def events_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Engine shape: one distinct-count aggregate per type + one global,
     k rows out; the distinct counts are the only shuffle-bearing terms
     (HLL tier swaps in when approximate suffices at 100 TB)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     n = ev.agg(F.count_distinct("user_id").cast("long").alias("nu"))
     k = ev.groupBy("event_type").agg(
@@ -887,7 +879,6 @@ def a_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact, so both engines round the same value once), every emitted
     statistic a single IEEE expression of them. One aggregate, one
     row."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     lab = o.select(
         (
@@ -1039,7 +1030,6 @@ def a_ratio_metric_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle, decimal(38,0) on Spark — both exact); R, SE, and the CI
     are single
     IEEE expressions. One user aggregate + one global reduce."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.sum(
@@ -1157,7 +1147,6 @@ def ml_offpolicy_ips(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer 2, so ALL three estimates are exact BIGINT cent sums with
     single final divisions — no quantization needed anywhere. One
     map-side aggregate."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     lg = o.select(
         _md5_bucket(F.col("o_orderkey"), 2).alias("a"),
@@ -1260,7 +1249,6 @@ def a_eb_rate_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior and posteriors are single IEEE expressions, variance floored
     at 1e-9 and strength at 1e-2 identically both engines. One group
     aggregate + one broadcast prior row."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", F.col("n_name").alias("nation")
@@ -1380,7 +1368,6 @@ def events_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines walk identical doubles; boundaries are literal
     comparisons. Engine shape: one daily aggregate, one cumulative
     window over |days| rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     t = ev.filter(_md5_bucket(F.col("user_id"), 2) == 1).select(
         F.col("ts").cast("date").alias("day"),

@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import r2, r4, sql_r2, sql_r4, sql_r6
-from ..session import tune
 from ..sources import load_table, register_views
 from .registry import register
 
@@ -39,7 +38,6 @@ from .registry import register
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → two joins → aggregate →
     top-k. customer broadcasts; orders⋈lineitem co-shuffles on orderkey."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -84,7 +82,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q6_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-aggregate; every predicate reaches
     the parquet reader (PushedFilters)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -115,7 +112,6 @@ def sub_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery (threshold = 1.5× global mean) via the SQL
     API — Catalyst evaluates the subquery once and folds it into the scan
     filter."""
-    tune(spark)
     register_views(spark, sf_dir, ["orders"])
     return spark.sql(
         f"""
@@ -143,7 +139,6 @@ def sub_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sub_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS — Catalyst rewrites to a left-semi join (same plan
     as j5_semi_join; exposed through the SQL surface)."""
-    tune(spark)
     register_views(spark, sf_dir, ["supplier", "lineitem"])
     return spark.sql(
         """
@@ -171,7 +166,6 @@ def sub_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sub_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN (subquery) — also a semi join after rewrite."""
-    tune(spark)
     register_views(spark, sf_dir, ["part", "lineitem"])
     return spark.sql(
         """
@@ -202,7 +196,6 @@ def a_min_by_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """min_by/max_by (argmin/argmax) — single-pass, no window needed.
     o_totalprice values are distinct in practice; ties would make argmax
     nondeterministic in both engines alike."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") % 50 == 0)
     return orders.groupBy("o_custkey").agg(
         F.min_by("o_orderkey", "o_totalprice").alias("cheapest_order"),
@@ -230,7 +223,6 @@ def a_min_by_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map construction + key access + map_keys (SURVEY §2.8 harness list)."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") % 20 == 0)
     m = F.create_map(
         F.lit("size"), F.col("p_size"),
@@ -258,7 +250,6 @@ def f_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f_posexplode_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode (lateral view with ordinality)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 10)
     from ..functions.text import tokens
 
@@ -286,7 +277,6 @@ def f_posexplode_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array toolkit: size, element_at (±), slice+sort+distinct, contains."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
     from ..functions.text import tokens
 
@@ -318,7 +308,6 @@ def f_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist within nation."""
-    tune(spark)
     from ..functions.rounding import r6
 
     sup = load_table(spark, sf_dir, "supplier")
@@ -353,7 +342,6 @@ def w_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """<=> (null-safe equality) join: NULL keys match NULL keys — standard
     equality would silently drop them."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
     k = F.when(F.col("o_orderkey") % 3 == 0, F.lit(None)).otherwise(
         F.col("o_orderstatus")
@@ -385,7 +373,6 @@ def j_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f_date_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """date_trunc month/quarter rollup — calendar bucketing without a join
     to a date dimension."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1997)
     return (
         orders.groupBy(
@@ -415,7 +402,6 @@ def f_date_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f_bitwise_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise and/or/xor/popcount (the SimHash toolkit, exposed directly)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 100 == 0)
     return ev.select(
         "event_id",
@@ -445,7 +431,6 @@ def s_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayable. (Spark's seeded ``df.sample`` exists but its sequence is
     engine- and partitioning-specific, which breaks the cross-engine hash
     gate and re-runs after repartitioning.)"""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     key = F.concat_ws(
         ":", F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
@@ -470,7 +455,6 @@ def s_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f_unpivot_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide -> long melt) via stack()."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 500 == 0)
     return li.selectExpr(
         "l_orderkey",
@@ -500,7 +484,6 @@ def f_unpivot_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: outer join with a join-residual predicate, then a
     distribution (count-of-counts) aggregate."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     per_cust = (
@@ -538,7 +521,6 @@ def q16_not_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: NOT IN subquery (null-aware anti join) + IN list +
     distinct aggregate. The supplier subquery is non-empty-null-free so the
     null-aware semantics reduce to a plain anti join."""
-    tune(spark)
     register_views(spark, sf_dir, ["lineitem", "part", "supplier"])
     return spark.sql(
         """
@@ -576,7 +558,6 @@ def q16_not_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q18_having_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: IN over a HAVING-filtered aggregate subquery (large
     orders), then a 3-way join re-aggregation."""
-    tune(spark)
     register_views(spark, sf_dir, ["customer", "orders", "lineitem"])
     return spark.sql(
         f"""
@@ -613,7 +594,6 @@ def q19_or_of_ands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: disjunction of conjunctive band predicates across
     the join - Catalyst pushes the common conjuncts and keeps the OR as a
     join residual."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -659,7 +639,6 @@ def f_python_udtf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI-SQL, but its arithmetic is portable (floor-based rounding, see
     functions.rounding), so the oracle re-derives the identical expansion
     with generate_series — a full value-hash check of the UDTF output."""
-    tune(spark)
     import math
 
     from pyspark.sql.functions import udtf
@@ -704,7 +683,6 @@ def q2_correlated_scalar_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated scalar aggregate subquery (rows equal to
     their group's max) - Catalyst de-correlates it into an aggregate +
     self-join."""
-    tune(spark)
     register_views(spark, sf_dir, ["lineitem"])
     return spark.sql(
         """
@@ -741,7 +719,6 @@ def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated EXISTS against lineitem (returned-flag standing in for the
     late-commit predicate) — Catalyst plans the EXISTS as one left-semi
     join on l_orderkey."""
-    tune(spark)
     register_views(spark, sf_dir, ["orders", "lineitem"])
     return spark.sql(_Q4_SQL)
 
@@ -765,7 +742,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional-aggregate ratio over a fact-dim join in
     a one-month window — the part side broadcasts, the CASE folds into the
     partial aggregate (no second scan for the numerator)."""
-    tune(spark)
     register_views(spark, sf_dir, ["lineitem", "part"])
     return spark.sql(_Q14_SQL)
 
@@ -805,7 +781,6 @@ def q21_exists_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelation shape — two semi/anti self-joins on l_orderkey — is
     identical to the classic query.) LIMIT is deterministic: (numwait DESC,
     s_suppkey) is a total order."""
-    tune(spark)
     register_views(spark, sf_dir, ["supplier", "lineitem", "orders"])
     return spark.sql(_Q21_SQL)
 
@@ -834,7 +809,6 @@ def q21_exists_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q22_anti_with_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar-subquery threshold (above-average balance) +
     NOT EXISTS anti join (no recent orders), grouped."""
-    tune(spark)
     register_views(spark, sf_dir, ["customer", "orders"])
     return spark.sql(
         f"""
@@ -879,7 +853,6 @@ def f_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     no serialization — unlike external UDFs, these cost nothing at
     100 TB). The oracle states the same logic inline; hash equality
     proves the UDF path computes identically."""
-    tune(spark)
     from ..sources import register_views
 
     register_views(spark, sf_dir, names=("lineitem",))
@@ -952,7 +925,6 @@ def s_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     query idempotent — instead of leaking a temp directory per call."""
     from ..sources.formats import derby_url, jdbc_table, jdbc_write
 
-    tune(spark)
     url = derby_url(_derby_query_db())
     nation = load_table(spark, sf_dir, "nation")
     jdbc_write(nation, url, "nation")
@@ -1007,7 +979,6 @@ def s_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_audience_overlap (row join) and a_kmv_distinct (sketch).
     Scale: bitmap size ∝ id-space/8 bytes per type; words shard by
     word_idx, so the AND/OR is an equi-join on a dense small key."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     b = (
         ev.filter(F.col("event_type").isin("purchase", "click", "signup"))
@@ -1077,7 +1048,6 @@ def f_parse_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality proves parse_url's actual parse agrees with the URL
     grammar — the structured sibling of the regex canonicalizer. Pure
     map stage, codegen'd, no Python."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://www.example.com/"),

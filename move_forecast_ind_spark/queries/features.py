@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import r4, r6, sql_r4, sql_r6
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -78,7 +77,6 @@ def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality, and incremental refresh folds in as
     score_new = score_old * decay(dt) + score_delta (documented, not
     materialized here)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max(F.unix_micros("ts")).alias("t_now"))
     lam = float(_DECAY_LN2_OVER_HL)
@@ -149,7 +147,6 @@ def sql_ratio_to_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), then broadcast joins of the two tiny parent slices back
     onto it — at 100 TB the rollup output is |nations| x |segments| +
     |nations| + 1 rows regardless of input volume."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey"), F.col("n_name").alias("nation")
@@ -291,7 +288,6 @@ def events_absorbing_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast row; the K layers are driver-free column expressions over
     that row. At 100 TB only the transition extraction touches data —
     the chain math is constant-size regardless of volume."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     e = ev.select(
@@ -478,7 +474,6 @@ def a_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row fold is over the bounded ~125-element cell array — safe at
     any data volume; only the margins' CARDINALITY, never the data
     size, reaches this row."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", F.col("n_name").alias("nation")
@@ -617,7 +612,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a cross-row double sum. Engine shape: transition extraction
     touches data once; the 15 rounds are constant-size column math on
     one row (single sequence-fold — no 5^K projection blowup)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     e = ev.select(

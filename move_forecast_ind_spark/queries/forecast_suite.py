@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import sql_r6
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 
@@ -207,7 +206,6 @@ def ml_forecast_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference forecasts 110 branches independently with no coherence
     step (main.py:169-185) — this is the aggregate-consistency layer a
     branch hierarchy needs."""
-    tune(spark)
     daily = _daily_spine(spark, sf_dir)
     tot = daily.groupBy("t", "dow", "day").agg(
         F.sum("n").cast("long").alias("y")
@@ -348,7 +346,6 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation anywhere. Plan: daily-aggregate shuffle, one tiny
     window over 7 rows/type, broadcast joins onto a generated future
     axis."""
-    tune(spark)
     daily = _daily_spine(spark, sf_dir)
     dowm = daily.filter(F.col("t") <= _TRAIN_MAX_T).groupBy(
         "event_type", "dow"
@@ -466,7 +463,6 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split search costs the same at 100 TB as at 60 k rows. Emits
     the whole ranked candidate table so the margin between best and
     runner-up is visible, not just the winner."""
-    tune(spark)
     lab = load_table(spark, sf_dir, "orders").select(
         F.floor(F.col("o_totalprice") / _STUMP_BUCKET)
         .cast("long")
@@ -607,7 +603,6 @@ def ml_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin compare exact integers; ties break last < mean < seasonal,
     mirrored in both engines. Plan: one daily shuffle, three broadcast
     model frames, one 35-row join."""
-    tune(spark)
     daily = _daily_spine(spark, sf_dir)
     train = daily.filter(F.col("t") <= _TRAIN_MAX_T)
     hold = daily.filter(F.col("t") > _TRAIN_MAX_T)
@@ -730,7 +725,6 @@ def ml_kfold_cv_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, fold[, dow]) aggregates of it (<= 5*5*7 rows, broadcast);
     scoring is a broadcast join back onto the 150-row spine — at 100 TB
     every stage after the daily aggregate is schema-sized."""
-    tune(spark)
     daily = _daily_spine(spark, sf_dir)
     folded = daily.withColumn(
         "fold",
@@ -881,7 +875,6 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate once; models are (type, fraction[, dow]) reductions
     joined broadcast onto the 35-row holdout — the 4x fraction fan-out
     multiplies the SPINE, never raw data."""
-    tune(spark)
     daily = _daily_spine(spark, sf_dir)
     lab = daily.withColumn(
         "bucket",
@@ -1033,7 +1026,6 @@ def ml_shapley_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions of them (cast to double only at combination time —
     products of centered moments exceed int64 by design). At 100 TB:
     one aggregate, k rows, zero joins."""
-    tune(spark)
     daily = _daily_spine(spark, sf_dir)
     feat = daily.select(
         "event_type",
@@ -1218,7 +1210,6 @@ def ml_ar2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's generated CTE stack is the same sequence). Engine shape:
     one daily aggregate, one lag window, a k-row moment reduce; the
     recursion is constant-size column math."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -1370,7 +1361,6 @@ def ml_quantile_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     All integers end to end — no rounding grid at all. One spine
     aggregate, one (type, dow) window, broadcast onto the generated
     future axis."""
-    tune(spark)
     daily = _daily_spine(spark, sf_dir)
     wr = Window.partitionBy("event_type", "dow").orderBy("n", "day")
     wm = Window.partitionBy("event_type", "dow")
@@ -1508,7 +1498,6 @@ def ml_forecast_combination(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as ml_model_selection. Engine shape: spine aggregate, three
     broadcast model frames, two broadcast-joined scoring passes —
     schema-sized after the first aggregate."""
-    tune(spark)
     daily = _daily_spine(spark, sf_dir)
     m_last = daily.filter(F.col("t") == _FC_TRAIN_MAX).select(
         "event_type", F.col("n").cast("double").alias("fl")

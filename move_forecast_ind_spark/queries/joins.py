@@ -16,7 +16,6 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import r2, sql_r2
 from ..operators.joins import asof_join, range_join
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -41,7 +40,6 @@ def j1_broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     main.py:91-99, becomes zero round-trips). At 100 TB this holds as long
     as the dim stays under ~8 GB; beyond that Catalyst falls back to
     sort-merge automatically."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     return (
@@ -73,7 +71,6 @@ def j1_broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j_sortmerge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders ⋈ lineitem on orderkey with a merge hint: both sides shuffle
     once on the join key; the filter on orders prunes before the shuffle."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -109,7 +106,6 @@ def j_sortmerge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j3_left_outer_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left join + COALESCE default — the whole 22-line fallback control
     flow of the reference (main.py:97-118) is this one expression."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     agg = orders.groupBy("o_custkey").agg(
@@ -136,7 +132,6 @@ def j3_left_outer_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j5_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """left_semi: EXISTS without duplicating or widening the left side."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     return cust.join(
@@ -156,7 +151,6 @@ def j5_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """left_anti: NOT EXISTS (customers with no large order)."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return cust.join(
@@ -179,7 +173,6 @@ def j_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer of two aggregates with COALESCE'd keys and defaults."""
-    tune(spark)
     sup = (
         load_table(spark, sf_dir, "supplier")
         .groupBy("s_nationkey")
@@ -211,7 +204,6 @@ def j_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit cartesian of two tiny inputs (the reference's
     branch × move_type × month × day driver loop, precompute_percentages.py:178-181,
     is exactly this shape — done declaratively)."""
-    tune(spark)
     region = load_table(spark, sf_dir, "region").select("r_name")
     status = load_table(spark, sf_dir, "orders").select("o_orderstatus").distinct()
     return region.crossJoin(status).orderBy("r_name", "o_orderstatus")
@@ -237,7 +229,6 @@ def j_multiway_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star join: every dimension broadcasts, so the fact table streams
     through three broadcast-hash joins in a single stage — no fact shuffle
     until the final aggregate."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier")
     nat = load_table(spark, sf_dir, "nation")
@@ -274,7 +265,6 @@ def j_multiway_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi + band conjunct: Catalyst keys the hash join on l_orderkey and
     evaluates the band as join residual — no nested-loop blowup."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
     li = load_table(spark, sf_dir, "lineitem")
     joined = range_join(
@@ -311,7 +301,6 @@ def j_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join via the union+window pattern (operators.joins.asof_join):
     one shuffle on user_id, no Python, right side unbounded. Oracle is
     DuckDB's native ASOF JOIN — same tie-matching contract."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -359,7 +348,6 @@ def j_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     backward join (operators.joins.asof_join(direction='forward')): the
     carry-last traversal just walks a descending timeline, so both
     directions share one shuffle shape and one code path."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -409,7 +397,7 @@ def j_value_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-negative (Spark's div truncates toward zero, DuckDB's // floors —
     the shift makes the distinction moot AND is required for bucket
     correctness on negative balances), bucket at the band width, explode
-    the SMALL side to its 3 admissible buckets {{b-1, b, b+1}}, hash-join
+    the SMALL side to its 3 admissible buckets {b-1, b, b+1}, hash-join
     on the bucket key, and apply the exact band predicate as a post-join
     filter. A pair can match in at most one exploded bucket (the
     customer's bucket is fixed; the supplier's 3 exploded keys are
@@ -422,7 +410,6 @@ def j_value_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan past broadcast scale and OOM (round-7 advice). At 100 TB this
     is THE pattern for similarity-band joins on one dimension: candidate
     volume is |pairs within 3 buckets|, never |A|x|B|."""
-    tune(spark)
     cust = load_table(spark, sf_dir, "customer")
     supp = load_table(spark, sf_dir, "supplier")
     c_cents = (
@@ -501,7 +488,6 @@ def j_asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join-based formulation would shuffle both sides AND range-scan;
     the window form is strictly better and exactly how the streaming
     tier's stateful gap operator already thinks."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")

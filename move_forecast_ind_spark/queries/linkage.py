@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import r2, r4, r6, sql_r2, sql_r4, sql_r6
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 
@@ -86,7 +85,6 @@ def er_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity plus the `_ER_BLOCK_CAP` truncation fence for degenerate
     blocks; no shuffle carries more than one row per surviving pair, and
     there is no join anywhere in the plan."""
-    tune(spark)
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
@@ -196,7 +194,7 @@ def er_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ts_level_shift_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-SERIES level-shift report: for each event_type's daily
-    series, the split day maximizing |S_d| where S_d = Σ_{{i<=d}}(y_i - μ)
+    series, the split day maximizing |S_d| where S_d = Σ_{i<=d}(y_i - μ)
     (Page 1954's CUSUM statistic; the split point of a one-changepoint
     binary segmentation), with the segment means either side of it.
     Complements ts_changepoint_cusum (queries/analytics.py), which emits
@@ -212,7 +210,6 @@ def ts_level_shift_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax rank) per series, broadcast-sized per-series totals joined
     back. At 100 TB parallelism is per-series and state per series is one
     running sum — nothing is ever collected."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -309,7 +306,6 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: two shuffles (join on user_id, window on pid); skewed
     mega-users are bounded by the 7-day band and the marketing-type
     filter before the join."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("pid"),
@@ -411,7 +407,6 @@ def a_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_TS_MAX_DAYS` days (mirrored in the oracle; inactive at fixture
     SFs). At 100 TB parallelism is per-series; a series' pair array is
     bounded at ~66k doubles."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -489,7 +484,6 @@ def s_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — at 100 TB this is the metadata-scale query a table
     service runs per partition, shuffling one row per file, not per
     doc."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, -1
@@ -561,7 +555,6 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources number in the hundreds, not millions) and the shuffle
     carries one row per (shingle, source) — the same posture as the
     minhash band buckets."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     # repartition(doc_id) before shingling: both the parallelism spread
     # AND an optimization barrier — without it CollapseProject inlines
@@ -745,7 +738,6 @@ def er_cluster_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one broadcast-size join back to the master for the election; at
     100 TB the matched-pair graph is orders of magnitude smaller than
     the master table, which is the point of blocking."""
-    tune(spark)
     from ..operators.components import connected_components
 
     pairs = er_blocking_pairs(spark, sf_dir).select(
@@ -841,7 +833,6 @@ def s_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     one co-partitioned join shuffle on the primary key (bucketed
     snapshots make it shuffle-free), map-side combinable 4-row
     aggregate."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 1e2 + F.lit(0.5)).cast("long")
     bumped = F.floor(
@@ -920,7 +911,6 @@ def j_interval_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the Hampel/band-join bounded-expansion doctrine) and the aggregate
     map-side combines to |months| rows; a variable-length interval
     version swaps the constant for width buckets, same shape."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("d0"),

@@ -30,7 +30,6 @@ from ..plans.training import (
     train_models,
     train_models_q,
 )
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 
@@ -250,7 +249,6 @@ def ml_linreg_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     'loop' is one grouped aggregate (110 groups in parallel), scoring is a
     cross join with the 7-day future frame — end-to-end relational, so the
     oracle hash-checks the entire forecast."""
-    tune(spark)
     from ..functions.rounding import round_count
 
     daily = _daily_series(spark, sf_dir)
@@ -305,7 +303,6 @@ def ml_train_fourier(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivoted Gauss-Jordan solve a fixed IEEE op sequence, so the DuckDB
     oracle — the same 12 elimination steps unrolled as CTEs — reproduces
     every coefficient bit-for-bit (VERDICT r4 item #2)."""
-    tune(spark)
     models = train_models_q(_daily_series(spark, sf_dir), cutoff=CUTOFF)
     return models.select(
         "branch",
@@ -369,7 +366,6 @@ def ml_forecast_fourier(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine-deterministic quantized fit; the oracle scores them with
     the identical left-associated dot product, so only libm sin/cos ulps
     separate the engines pre-rounding — absorbed by the 1e-4 grid."""
-    tune(spark)
     models = train_models_q(_daily_series(spark, sf_dir), cutoff=CUTOFF)
     frame = _future_frame(spark, "1999-06-01", "1999-06-07", n_branches=10)
     return score(models, frame)
@@ -400,7 +396,6 @@ def ml_mllib_global_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_oracle.py::test_driver_sampled_surface_is_fully_oracle_bearing
     pins that the first 50 queries() slots all carry oracles. pytest
     pins shape + determinism + forecast sanity for this entry."""
-    tune(spark)
     from ..operators.materialize import materialize
     from ..plans.mllib_forecast import fit_global_model, score_global_model
 
@@ -470,7 +465,6 @@ def svc_forecast_request(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-compared against DuckDB (VERDICT r4 item #2)."""
     import datetime as dt
 
-    tune(spark)
     from ..plans.percentages import compute_percentages
     from ..plans.service import forecast_request
 
@@ -531,7 +525,6 @@ def svc_trends_request(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested trends SQL over month-day 601-607 for branch 7."""
     import datetime as dt
 
-    tune(spark)
     from ..plans.service import trends_request
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -608,7 +601,6 @@ def svc_forecast_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     path) — all 140 rows value-compared."""
     import datetime as dt
 
-    tune(spark)
     from ..plans.percentages import compute_percentages
     from ..plans.service import forecast_batch
 
@@ -697,7 +689,6 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.text import tokens
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
@@ -785,7 +776,6 @@ def ml_seasonal_naive_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     is justified, and the natural yardstick next to ml_linreg_forecast /
     ml_forecast_fourier. One shuffle to the daily frame; the weekday
     means (7 rows) broadcast onto a generated future axis."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -849,7 +839,6 @@ def ml_ar1_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast onto a generated horizon."""
     from pyspark.sql.window import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("double").alias("y")
@@ -939,7 +928,6 @@ def ml_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle to the daily frame, 1-row model frames broadcast."""
     from pyspark.sql.window import Window
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("double").alias("y")
@@ -1069,7 +1057,6 @@ def ml_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -1194,8 +1181,8 @@ def ml_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     state), i.e. the non-Bayesian ancestor of the reference's Prophet
     (trend + seasonality decomposition, pretrain_models.py:22-29).
     Initialization: level = mean of the first week, trend = 0, seasonal
-    = first-week deviations; recursion l_t = a*(y_t - s_{{t-m}}) +
-    (1-a)(l+b); b_t as Holt; s_t = g*(y_t - l_t) + (1-g)*s_{{t-m}},
+    = first-week deviations; recursion l_t = a*(y_t - s_{t-m}) +
+    (1-a)(l+b); b_t as Holt; s_t = g*(y_t - l_t) + (1-g)*s_{t-m},
     gains all exact binary fractions, every state snapped to the 1e-6
     grid — so the DuckDB RECURSIVE CTE (seasonal ring carried as a
     rotating LIST column) reproduces level/trend/seasonals bit-for-bit.
@@ -1207,7 +1194,6 @@ def ml_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    tune(spark)
     m = _HW_SEASON
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -1335,8 +1321,8 @@ def ml_isotonic_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT integer (sum, count) state — violator merges compare pools by
     integer cross-multiplication, division happens once per final pool —
     so the emitted doubles are the same integer-ratio divisions the
-    oracle's closed-form minimax formula (fitted[i] = max_{{j<=i}}
-    min_{{k>=i}} mean(y[j..k])) selects: bit-identical before the
+    oracle's closed-form minimax formula (fitted[i] = max_{j<=i}
+    min_{k>=i} mean(y[j..k])) selects: bit-identical before the
     rounding grid. Engine shape: groupBy(event_type).applyInPandas, the
     canonical per-series sequential-algorithm tier (same topology as
     holt_winters); parallelism = number of series; O(n) per series with
@@ -1344,7 +1330,6 @@ def ml_isotonic_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's O(n^3) replica."""
     import pandas as pd
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy("event_type", F.col("ts").cast("date").alias("day"))
@@ -1439,7 +1424,6 @@ def ml_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series state is the demand-event array (sparse by definition).
     At 100 TB parallelism is per-series, the intermittent-series shape
     (most days contribute no row at all)."""
-    tune(spark)
     a, b = _CR_ALPHA, 1.0 - _CR_ALPHA
     ev = load_table(spark, sf_dir, "events")
     d = ev.filter(F.col("event_type") == "purchase").groupBy(
@@ -1625,7 +1609,6 @@ def ml_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability order + one global aggregate; the label median is the
     one full sort (documented: approx-quantile at 100 TB). Output: one
     row (n, n_pos, n_neg, auc, brier)."""
-    tune(spark)
     from pyspark.sql.window import Window
 
     jf = _eval_pairs(spark, sf_dir)
@@ -1686,7 +1669,6 @@ def ml_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Engine shape: one map-side-combinable groupBy over the bin id —
     beyond the shared pair construction, the cheapest eval in the
     stack."""
-    tune(spark)
     jf = _eval_pairs(spark, sf_dir)
     return jf.groupBy(
         F.least(
@@ -1753,7 +1735,6 @@ def ml_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable groupBy to 9 rows — sweeping more thresholds
     changes only the literal, never the shuffle count; at 100 TB this
     costs the same as a single-threshold confusion matrix."""
-    tune(spark)
     jf = _eval_pairs(spark, sf_dir)
     thr = F.explode(
         F.array([F.lit(x / 10.0) for x in range(1, 10)])
@@ -1854,7 +1835,6 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     category and global totals derive from the collapsed frame, so
     nothing row-sized is ever re-shuffled; at 100 TB the whole encoder
     is |cats|×{k} rows after the first aggregate."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     fold = (
         F.conv(
@@ -1974,7 +1954,6 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     (p-y)² quantize per ROW at 1e9 (so bin means are exact integer
     ratios); each bin's REL/RES term quantizes at 1e9 before the final
     BIGINT sum. One bin aggregate + one 10-row reduce."""
-    tune(spark)
     jf = _eval_pairs(spark, sf_dir)
     binned = jf.select(
         F.least(F.floor(F.col("p") * 10.0).cast("long") + 1, F.lit(10))
@@ -2112,7 +2091,6 @@ def ml_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     the AUC/calibration tier; the median length is a rank-picked exact
     order statistic. All cells BIGINT; the statistic is one IEEE
     expression. One scoring pass + one median window + one reduce."""
-    tune(spark)
     jf = _eval_pairs(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars"

@@ -32,7 +32,6 @@ from ..operators.dedup import (
 )
 from ..operators.materialize import checkpoint_parquet, materialize
 from ..operators.similarity import ann_lsh_topk, brute_force_topk, ivf_topk
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -57,7 +56,6 @@ EMB_DIM = 64
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by canonical md5 fingerprint — one hash shuffle,
     keeper = min(doc_id) (operators.dedup.exact_dedup)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return exact_dedup(docs, "doc_id", "text")
 
@@ -73,7 +71,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document canonical fingerprint column (functions.text.fingerprint)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
 
@@ -119,7 +116,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     index join (operators.dedup.jaccard_pairs). The all-pairs exact pass —
     the MinHash cascade's verifier run standalone — fenced for scale with
     the max_df=1000 stop-shingle cap (mirrored in the oracle's QUALIFY)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5, max_df=1000)
 
@@ -145,7 +141,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     near the 0.5 threshold would make the cascade a (verified-precision)
     approximation, which is the standard LSH trade. A recall regression
     here flips the row count/hash."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return minhash_dedup_pairs(docs, "doc_id", "text", k=3, threshold=0.5)
 
@@ -199,7 +194,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepts larger budgets — e.g. max_hamming=6 — where banding becomes a
     recall/cost trade; that regime is covered by tests, not the hash gate.)
     """
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     sig = simhash_signatures(docs, "doc_id", "text")
     return simhash_near_pairs(sig, max_hamming=3)
@@ -232,7 +226,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token/char/punctuation statistics — pure map stage."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -275,7 +268,6 @@ def _sql_marker_hits(lang: str) -> str:
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-stopword language-ID heuristic (functions.text.langid) next to
     the generator's label."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -308,7 +300,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality score (length/stopword/punct heuristic) — the
     filter stage of a training-data pipeline. Pure column arithmetic
     (functions.text.quality_score), mirrored term-for-term in the oracle."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -330,7 +321,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token histogram top-20 (explode → count → ordered limit)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
@@ -378,7 +368,6 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force top-5 cosine neighbors for queries vec_id<5.
     Hash-checkable because the Spark zip_with/aggregate fold is bit-identical
     to DuckDB's list_inner_product (verified; both left-fold IEEE doubles)."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return brute_force_topk(emb.filter(F.col("vec_id") < 5), emb, k=5)
 
@@ -427,7 +416,6 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the brute-force baseline (deterministic: fixed-seed planes,
     fixed data; measured 0.56 / 0.56 / 0.76 at sf0.001/0.01/0.1 ≥ the
     0.50 bar — was 0.32-0.40 with 16 planes)."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     ann = ann_lsh_topk(q, emb, dim=EMB_DIM, k=5)
@@ -453,7 +441,6 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding L2-norm statistics per label (vector hygiene check)."""
-    tune(spark)
     from ..functions.vectors import as_double, norm
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -482,7 +469,6 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary metadata extraction (multimodal.to_media_table):
     byte length + content digest without ever decoding."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     media = to_media_table(docs, "doc_id", "text")
     return media.select("doc_id", "n_bytes", "digest")
@@ -508,7 +494,6 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload length alone, so the mapInPandas output — schema, batching,
     values — is fully oracle-checkable even though the Python stage itself
     isn't SQL."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decode_media_stub(to_media_table(docs, "doc_id", "text"))
 
@@ -537,7 +522,6 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling explode over byte offsets (video pipeline shape):
     one output row per fixed-stride 'frame' of each payload."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return sample_frames(to_media_table(docs, "doc_id", "text"))
 
@@ -564,7 +548,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     BASELINE.json): all pairs at cosine >= threshold. Brute-force all-pairs
     here (exact, hash-checkable); the LSH-bucketed scale path is
     sim_ann_lsh's topology with a threshold filter instead of top-k."""
-    tune(spark)
     from ..functions.vectors import as_double
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -623,7 +606,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001/0.01/0.1 ≥ the 0.60 bar — was 0.40-0.52 at nprobe=4; at 100 TB
     the cell count grows ~sqrt(n) and nprobe stays a small fixed fraction,
     so probing cost per query falls, not rises)."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     ann = ivf_topk(q, emb, k=5, nprobe=8)
@@ -646,7 +628,6 @@ def text_bpe_ish_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace tokens vs a BPE-ish regex
     segmentation (letter runs / digit runs / single punctuation) - the
     pre-tokenizer shape of byte-pair encoders, as a pure regexp count."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     from ..functions.text import token_count
 
@@ -721,7 +702,6 @@ def pipeline_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     is two shuffles (dedup groupBy + keeper semi-join) over a single scan
     lineage, with each stage individually oracle-checked elsewhere
     (dedup_exact, text_langid, text_quality, text_stats)."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     keepers = exact_dedup(docs, "doc_id", "text").select(
         F.col("keeper_doc_id").alias("doc_id")
@@ -796,7 +776,6 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions (no UDF, no shuffle before the final explode); the hash is
     an md5 prefix so the oracle computes bit-identical fingerprints
     (DuckDB hex-literal cast ≡ Spark conv(,16,10))."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     return _winnow_fps(docs)
 
@@ -837,8 +816,8 @@ def _winnow_fps(docs: DataFrame) -> DataFrame:
     # functions), re-hashing the whole gram array once per window position:
     # O(n²) md5s per doc. At sf0.01 that is a hidden ~quadratic slowdown;
     # at sf0.1 the query effectively hangs (round-8 finding: >9 min, vs
-    # ~2 s with the barrier). Same trap _shingle_sets / corpus_semdedup
-    # document; fanout doubles as the parallelism spread.
+    # ~2 s with the barrier). Same trap as corpus_semdedup's lazy hash
+    # column; fanout doubles as the parallelism spread.
     hs = fanout(hs, F.col("doc_id"))
     m = F.size("h")
     wins = hs.select(
@@ -917,7 +896,6 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ≥ w+k-1 grams ⇒ a shared fingerprint) makes this the
     substring-plagiarism variant of near-dup detection, complementary to
     the bag-of-shingles MinHash tier."""
-    tune(spark)
     from ..operators.dedup import expand_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -989,7 +967,6 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct doc in any pair — orders of magnitude smaller than the
     corpus). Oracle: DuckDB recursive CTE computing min reachable id over
     the same (hash-identical) pair set."""
-    tune(spark)
     from ..operators.components import dedup_clusters
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1029,7 +1006,6 @@ def mm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode read the real header, not metadata carried alongside. (Full
     pixel rasterization is covered by mm_pixel_stats — stdlib
     zlib-inflate + unfiltering, no image library needed.)"""
-    tune(spark)
     from ..multimodal import decode_media_real, synthesize_png_media
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1075,7 +1051,6 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     with deterministic tie-break. Scale: one (doc, tok) aggregate, then
     a per-token moment aggregate — both map-side combinable; zeros are
     never materialized."""
-    tune(spark)
     from ..functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1201,7 +1176,6 @@ def dedup_substring_spans(
     oracle-verified by tests on exactly such a corpus). ``shape``
     ('window' | 'aggjoin' | None=auto) pins the branch for tests.
     """
-    tune(spark)
     k = _SPAN_K
     docs = load_table(spark, sf_dir, "documents")
     return _substring_spans_from_docs(spark, docs, k, shape)
@@ -1375,7 +1349,6 @@ def dq_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     either's say-so. Counts exact; shares single divisions. One
     map-side scoring pass + one (labeled, guessed) aggregate — the
     matrix is |langs|² regardless of volume."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     g = docs.select(
         F.col("lang").alias("labeled_lang"),

@@ -17,7 +17,6 @@ from ..operators.materialize import materialize
 from ..plans.forecast_tail import PHRASES, forecast_summary, forecast_tail
 from ..plans.percentages import compute_percentages, month_grain_percentages
 from ..plans.trends import historical_trends, trends_nested
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -250,7 +249,6 @@ def pct_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole precompute_percentages.py (O(combos×groups)
     loop + checkpoint + batched upsert, :178-263) as two grouped sums and one
     equi-join — see plans.percentages."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return compute_percentages(
         li, branch_col="l_suppkey", type_col="l_returnflag",
@@ -271,7 +269,6 @@ def pct_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pct_month_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-grain fallback table (reference main.py:102-110) derived from
     the day-grain table — an aggregate of an aggregate, not a re-scan."""
-    tune(spark)
     return month_grain_percentages(pct_etl(spark, sf_dir))
 
 
@@ -356,7 +353,6 @@ def _build_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 def forecast_tail_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day forecast rows: the reference's per-row lookup loop
     (main.py:239-288) as two broadcast left joins + COALESCE + CASE."""
-    tune(spark)
     return _build_tail(spark, sf_dir)
 
 
@@ -379,7 +375,6 @@ def forecast_tail_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def forecast_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window roll-up (reference main.py:290-332) — one aggregate over the
     tail instead of a second wave of per-day lookups."""
-    tune(spark)
     return forecast_summary(_build_tail(spark, sf_dir))
 
 
@@ -411,7 +406,6 @@ def trends_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-year windows become a (month*100+day) BETWEEN predicate."""
     import datetime as dt
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return historical_trends(
         li, branch_col="l_suppkey", date_col="l_shipdate", count_col="l_quantity",
@@ -441,7 +435,6 @@ def trends_by_move_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trends with the optional move_type conjunct (reference main.py:376-384)."""
     import datetime as dt
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return historical_trends(
         li, branch_col="l_suppkey", date_col="l_shipdate", count_col="l_quantity",
@@ -467,7 +460,6 @@ def trends_by_move_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def trends_nested_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nested {year: [day rows]} response (reference main.py:395-403),
     serialized order-stably."""
-    tune(spark)
     return trends_nested(trends_onepass(spark, sf_dir))
 
 
@@ -494,7 +486,6 @@ def trends_cross_year_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     here; divergence documented in SURVEY.md §7 risk 5.)"""
     import datetime as dt
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return historical_trends(
         li, branch_col="l_suppkey", date_col="l_shipdate", count_col="l_quantity",
@@ -546,7 +537,6 @@ def forecast_tail_demoted_move_type(spark: SparkSession, sf_dir: str) -> DataFra
     """The reference's silent move_type demotion (an unknown type becomes
     None => 100% of the branch forecast, reference main.py:204-209) -
     branches 6-10 get NULL move_type and must come back with pct_used=100."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     pct = compute_percentages(
         li, branch_col="l_suppkey", type_col="l_returnflag",

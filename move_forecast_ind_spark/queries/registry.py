@@ -4,6 +4,11 @@ Every implemented operator from SURVEY.md §2 registers here as a named query:
 a ``(spark, sf_dir) -> DataFrame`` callable plus (when SQL-expressible) the
 equivalent ANSI SQL the DuckDB oracle runs on the same parquet tables.
 
+:func:`register` wraps each body so the stored callable first applies
+``session.tune`` to whatever session it is handed — the driver calls with
+its own vanilla ``SparkSession``, so the runtime configs (UTC timezone, AQE,
+``nanosAsLong`` for events.ts) are set here once, not in every body.
+
 Parity contract (enforced by tests/test_oracle.py, same comparison the
 driver makes): identical column names (alias everything, both sides),
 identical logical types (CAST in the SQL where DuckDB widens — e.g. its
@@ -14,10 +19,13 @@ the value hash.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import tune
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -27,9 +35,13 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
-    doc: str = ""
     bench: bool = False  # part of bench.py's headline set
     tags: tuple[str, ...] = field(default_factory=tuple)
+
+    @property
+    def doc(self) -> str:
+        # Read live: fmt_doc interpolates constants after registration.
+        return (self.fn.__doc__ or "").strip()
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -50,14 +62,23 @@ def register(
     bench: bool = False,
     tags: tuple[str, ...] = (),
 ):
-    """Decorator: register a query under ``name`` with its oracle SQL."""
+    """Decorator: register a query under ``name`` with its oracle SQL.
 
-    def deco(fn: QueryFn) -> QueryFn:
+    Stores and returns a wrapper that runs ``body(tune(session), ...)``, so
+    each call, from the driver, a test, the bench or another query, tunes
+    the session it is given.
+    """
+
+    def deco(body: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
+
+        @functools.wraps(body)
+        def fn(session, *args, **kwargs):
+            return body(tune(session), *args, **kwargs)
+
         REGISTRY[name] = QuerySpec(
-            name=name, fn=fn, oracle=oracle, doc=(fn.__doc__ or "").strip(),
-            bench=bench, tags=tags,
+            name=name, fn=fn, oracle=oracle, bench=bench, tags=tags,
         )
         return fn
 

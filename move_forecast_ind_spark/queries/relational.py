@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import r2, r4, sql_r2, sql_r4
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -48,7 +47,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation then final after one shuffle on the 2-key group. At 100 TB the
     group cardinality is 6, so the shuffle moves only partial aggregates —
     bytes shuffled ∝ tasks, not rows."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     # aggregate expressions as the SAME sql_r2/sql_r4 strings the oracle
     # interpolates (construction-cost doctrine — one parse per aggregate;
@@ -98,7 +96,6 @@ def s2_scan_year_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions; on flat parquet it still prunes row groups via min/max stats
     once expressed as a shipdate range — here we keep the year() form the
     reference uses and let Catalyst evaluate it post-scan."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.filter(F.year("o_orderdate").between(1996, 1998)).select(
         "o_orderkey",
@@ -123,7 +120,6 @@ def s2_scan_year_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p1_projection_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure projection + rename: ReadSchema should list exactly these three
     columns — the parquet reader never materializes the other eight."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         F.col("l_orderkey").alias("okey"),
@@ -150,7 +146,6 @@ def p1_projection_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p3_filter_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive predicate (the reference's 4-column boolean-mask probe,
     precompute_percentages.py:196-201) as one pushed-down filter."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_returnflag") == "R")
@@ -176,7 +171,6 @@ def p3_filter_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p10_null_validity_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality probe as a single aggregate pass (the reference scans the
     whole frame twice with .isnull().any()); one job, observation-style."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -210,7 +204,6 @@ def f_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's date toolkit (to_datetime/.dt.month/timedelta/strftime —
     reference main.py:190-193,222-228,285; precompute_percentages.py:121-126)
     as built-in column expressions inside whole-stage codegen."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     od = F.col("o_orderdate").cast("date")
     out = orders.filter(F.col("o_orderkey") % 100 == 0).select(
@@ -246,7 +239,6 @@ def f_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f6_year_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Project a (month, day) onto other years — null-safe on Feb 29."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     m, d = F.month("o_orderdate"), F.dayofmonth("o_orderdate")
     return orders.filter((m == 2) & (d >= 27)).select(
@@ -285,7 +277,6 @@ def f_numeric_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """clip-at-0 (reference main.py:236), guarded ratio (main.py:266,295),
     round-to-int (main.py:236,255), percentage scaling (main.py:254) — all as
     codegen'd column expressions, no UDF."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     from ..functions.rounding import round_count
 
@@ -340,7 +331,6 @@ def f12_band_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     The %.1f operand is pre-rounded to 1 decimal (IEEE-stable helper) because
     printf midpoint behavior differs between Java and C formatters — a
     pre-rounded value is never a formatting midpoint."""
-    tune(spark)
     from ..functions.rounding import round_half_up
 
     orders = load_table(spark, sf_dir, "orders")
@@ -390,7 +380,6 @@ def f12_band_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String toolkit over part: case, substring, concat, replace, split,
     LIKE, regexp — all JVM-side built-ins."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -423,7 +412,6 @@ def f_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f_json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction from the props string column."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.filter(F.col("event_id") % 25 == 0).select(
         "event_id",
@@ -451,7 +439,6 @@ def f_json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def o3_date_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered date-axis generator (the forecast frame's spine)."""
-    tune(spark)
     seq = F.sequence(
         F.lit("1996-01-01").cast("date"),
         F.lit("1996-03-31").cast("date"),

@@ -40,7 +40,6 @@ from pyspark.sql.window import Window
 from ..functions.rounding import r4, r6, sql_r4, sql_r6
 from ..functions.text import sql_hashed_windows, tokens
 from ..functions.vectors import as_double, cosine
-from ..session import tune
 from ..sources import load_table
 from .registry import fmt_doc, register
 from ..operators.dedup import fanout
@@ -105,7 +104,6 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — a map-only scan stage, no shuffle at any scale; the
     flesch double is identical per row on both engines (integer inputs,
     fixed op order) before the r4 grid."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_words = F.size(tokens(F.col("text"))).cast("long")
     n_term = F.regexp_count(F.col("text"), F.lit(r"[.!?]+")).cast("long")
@@ -210,7 +208,6 @@ def corpus_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks are bit-exact. At 100 TB: a single window over source
     partitions; a skewed mega-source is one sorted partition — swap to a
     two-pass histogram ECDF if a source outgrows a partition."""
-    tune(spark)
     from ..functions.text import sql_quality_score
 
     docs = load_table(spark, sf_dir, "documents")
@@ -339,7 +336,6 @@ def text_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact before the r6 grid. At 100 TB: the corpus shuffles one
     row per (query, candidate) into the rank windows and nothing else;
     both legs are query-count-bounded, not corpus-bounded."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), as_double(F.col("embedding")).alias("v")
@@ -547,7 +543,6 @@ def emb_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     relevance scan is the only data-sized stage; the re-rank window is
     a constant-size tail, the standard two-tier serving shape (the same
     bounded-window doctrine as the ANN re-rank tiers)."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", as_double(F.col("embedding")).alias("v")

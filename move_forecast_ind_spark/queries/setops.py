@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -33,7 +32,6 @@ def _year_custkeys(spark, sf_dir, year: int) -> DataFrame:
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL of two labeled year slices (bag semantics, no shuffle —
     union in Spark is a plan concatenation)."""
-    tune(spark)
     a = _year_custkeys(spark, sf_dir, 1995).withColumn("y", F.lit(1995))
     b = _year_custkeys(spark, sf_dir, 1996).withColumn("y", F.lit(1996))
     return a.unionByName(b)
@@ -50,7 +48,6 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (set semantics) = union + hash-distinct shuffle."""
-    tune(spark)
     return _year_custkeys(spark, sf_dir, 1995).union(
         _year_custkeys(spark, sf_dir, 1996)
     ).distinct()
@@ -67,7 +64,6 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct semantics) — customers active in both years."""
-    tune(spark)
     return _year_custkeys(spark, sf_dir, 1995).intersect(
         _year_custkeys(spark, sf_dir, 1996)
     )
@@ -86,7 +82,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct semantics) — churned customers. ``subtract`` is
     Spark's EXCEPT DISTINCT (``exceptAll`` would keep multiplicity-difference
     duplicates — different semantics)."""
-    tune(spark)
     return _year_custkeys(spark, sf_dir, 1995).subtract(
         _year_custkeys(spark, sf_dir, 1996)
     )
@@ -103,7 +98,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL (bag semantics — multiplicity = min of the two sides)."""
-    tune(spark)
     return _year_custkeys(spark, sf_dir, 1995).intersectAll(
         _year_custkeys(spark, sf_dir, 1996)
     )

@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import r2, sql_r2
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -41,7 +40,6 @@ def st_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute tumbling counts per type — batch twin of
     streaming.events.tumbling_counts (same windows via window(); bucket
     emitted as epoch seconds)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
@@ -78,7 +76,6 @@ def st_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-min/5-min sliding counts — every event in exactly two windows
     (Spark's window(ts, 10m, 5m); the oracle reconstructs the same windows
     by epoch arithmetic)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
@@ -129,7 +126,6 @@ def st_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle derives identical sessions with lag + cumulative new-session
     flags (new session when the gap is ≥ the threshold, matching
     session_window's half-open [first, last+gap) semantics)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -164,7 +160,6 @@ def st_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup on (user, type, minute) — batch twin of
     dropDuplicatesWithinWatermark: unique key count vs raw count per type."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     keyed = ev.withColumn(
         "minute_bucket", (F.unix_micros("ts") / 60_000_000).cast("long")
@@ -194,7 +189,6 @@ def st_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the stream-stream click->purchase interval join
     (streaming.events.stream_stream_click_purchase_join): same equi key +
     event-time band."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
@@ -245,7 +239,6 @@ def st_stateful_user_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-seen-µs scalar the GroupState carries across micro-batches —
     tests/test_streaming.py asserts the drained state matches this row
     for row."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -277,7 +270,6 @@ def st_static_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     join) rolled up into 10-minute tumbling counts per market segment.
     tests/test_streaming.py drains the streaming pipeline and asserts
     it emits exactly these rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -323,7 +315,6 @@ def st_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py drains the stream through both stages and
     asserts it emits exactly these rows. At 100 TB the rank stage's input
     is windows x event-types — metadata-scale next to the event stream."""
-    tune(spark)
     from ..streaming.events import finalize_topk
 
     ev = load_table(spark, sf_dir, "events")
@@ -371,7 +362,6 @@ def st_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's window formulation exists for SQL clarity only.
     tests/test_streaming.py::test_latest_state_equivalence drains the
     stream and asserts it emits exactly these rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     latest = F.max_by(
         F.struct(
@@ -432,7 +422,6 @@ def st_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream, applies the identical read-out, and matches this twin.
     At 100 TB streaming: state is O(|users|) doubles, no watermark, no
     window — the feature-store continuous-refresh shape."""
-    tune(spark)
     from ..streaming.events import (
         _DECAY_LAM_PER_DAY,
         _DECAY_T0_US,

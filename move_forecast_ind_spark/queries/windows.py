@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import r2, sql_r2
-from ..session import tune
 from ..sources import load_table
 from .registry import register
 
@@ -36,7 +35,6 @@ from .registry import register
 def w_row_number_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer: the canonical partitioned-window top-k.
     Deterministic via the o_orderkey tiebreak."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -68,7 +66,6 @@ def w_row_number_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead over the per-customer order timeline (inter-arrival days)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     od = F.col("o_orderdate").cast("date")
@@ -100,7 +97,6 @@ def w_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative sum with an explicit ROWS frame (reference's running
     Python accumulators, main.py:247-258, as a window)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") % 10 == 0)
     w = (
         Window.partitionBy("l_suppkey")
@@ -131,7 +127,6 @@ def w_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_rank_dense_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / ntile over price within brand."""
-    tune(spark)
     part = load_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand").orderBy(
         F.col("p_retailprice").desc(), F.col("p_partkey")
@@ -160,7 +155,6 @@ def w_rank_dense_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_range_frame_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 3-row moving average (bounded preceding frame)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") % 20 == 0)
     w = (
         Window.partitionBy("o_custkey")
@@ -189,7 +183,6 @@ def o_global_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: Spark plans TakeOrderedAndProject — each task keeps a
     k-row heap, driver merges k·tasks rows; no global sort at any scale.
     Tiebreak on o_orderkey makes the result set deterministic."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -209,7 +202,6 @@ def o_global_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def o_multi_column_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total sort, mixed directions (range-partitioned exchange + local sort)."""
-    tune(spark)
     sup = load_table(spark, sf_dir, "supplier")
     return sup.select("s_suppkey", "s_name", "s_acctbal").orderBy(
         F.col("s_acctbal").desc(), F.col("s_name").asc()
@@ -235,7 +227,6 @@ def o_multi_column_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first/last/nth value over the per-customer order timeline (note the
     full frame on LAST_VALUE - the default frame stops at CURRENT ROW)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") % 25 == 0)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)

@@ -7,7 +7,10 @@ Two entry points:
 - :func:`tune` — apply the *runtime-settable* subset of those configs to an
   externally provided session (the correctness driver passes us its own
   ``SparkSession``; master/memory are fixed by then but AQE, timezone and
-  shuffle-partition count are not).
+  shuffle-partition count are not). Query bodies never call it: the
+  ``queries.registry.register`` wrapper applies it to the caller's session
+  on every registered query call. The streaming entry points call it
+  themselves.
 
 Scale posture (100 TB / 1000 executors): everything here is cluster-neutral.
 AQE handles post-shuffle partition coalescing and skew-join splitting at any
@@ -61,12 +64,6 @@ RUNTIME_CONF: dict[str, str] = {
     # not an opt-out. The depth limit (100) stays default everywhere.
 }
 
-# A/B hook for bench noise characterization (BASELINE.md "AQE coalesce A/B"):
-# SPARK_GRAFT_AQE_PARALLELISM_FIRST=true|false overrides the default above.
-_pf_override = os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST")
-if _pf_override in ("true", "false"):
-    RUNTIME_CONF["spark.sql.adaptive.coalescePartitions.parallelismFirst"] = _pf_override
-
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -99,10 +96,7 @@ def tune(spark: SparkSession) -> SparkSession:
     # the default is correct and this branch never fires.
     try:
         if spark.sparkContext.master.startswith("local"):
-            spark.conf.set(
-                "spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
-            )
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
             # Same local-only reasoning for AQE's coalesce target: at the
             # fixture SFs the heavy data paths (jaccard/minhash pair
             # aggregates ~20 MB) coalesce to ONE post-shuffle partition
@@ -115,8 +109,7 @@ def tune(spark: SparkSession) -> SparkSession:
             # per-task scheduling overhead across executors, and this
             # branch never fires.
             spark.conf.set(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", str(2 * 1024 * 1024)),
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(2 * 1024 * 1024)
             )
     except Exception:
         pass

@@ -248,27 +248,6 @@ def dedup_within_watermark(events: DataFrame) -> DataFrame:
     )
 
 
-def run_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    """Drain a bounded file stream synchronously into a memory sink and
-    return the result table (local test harness; SURVEY.md §2.10)."""
-    q = (
-        stream_df.writeStream.outputMode("complete")
-        if stream_df.isStreaming and _has_aggregation(stream_df)
-        else stream_df.writeStream.outputMode("append")
-    )
-    query = q.format("memory").queryName(name).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
-def _has_aggregation(df: DataFrame) -> bool:
-    plan = df._jdf.queryExecution().logical().toString()
-    return "Aggregate" in plan
-
-
 def stream_stream_click_purchase_join(events: DataFrame) -> DataFrame:
     """Stream-stream inner join with event-time bounds: each purchase joins
     clicks from the same user within the preceding 15 minutes. Both sides

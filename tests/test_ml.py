@@ -168,6 +168,7 @@ def test_holt_winters_seasonal_consistency(spark):
     import math
 
     from move_forecast_ind_spark.queries.registry import REGISTRY
+    from move_forecast_ind_spark.sources import load_table
 
     rows = REGISTRY["ml_holt_winters_seasonal"].fn(spark, SF_SMALL).collect()
     assert rows
@@ -183,8 +184,7 @@ def test_holt_winters_seasonal_consistency(spark):
     # old vacuous 1e6 bound, ADVICE r5).
     max_daily = {
         r.event_type: r.mx
-        for r in REGISTRY["ml_holt_winters_seasonal"]
-        .fn.__globals__["load_table"](spark, SF_SMALL, "events")
+        for r in load_table(spark, SF_SMALL, "events")
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .count()
         .groupBy("event_type")

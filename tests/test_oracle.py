@@ -56,17 +56,63 @@ def test_registry_invariants():
     non-empty docstring (the round-2 finding), every bench entry has an
     oracle (the bench compares against DuckDB live), oracle SQL is
     non-empty where present, and the driver front references only
-    registered names."""
+    registered names. Docs are read after ``fmt_doc`` ran: no doubled
+    brace survives, and interpolated constants show their values."""
     from move_forecast_ind_spark.queries.registry import _DRIVER_FRONT
 
     for name, spec in REGISTRY.items():
         assert spec.doc.strip(), f"{name}: empty docstring"
+        assert "{{" not in spec.doc and "}}" not in spec.doc, (
+            f"{name}: unformatted doubled brace in docstring"
+        )
         if spec.oracle is not None:
             assert spec.oracle.strip(), f"{name}: blank oracle"
         if spec.bench:
             assert spec.oracle is not None, f"{name}: bench without oracle"
     missing = [n for n in _DRIVER_FRONT if n not in REGISTRY]
     assert not missing, f"driver front references unknown queries: {missing}"
+    for name, shown, placeholder in [
+        ("a_bootstrap_ci", "100 replicas", "{b}"),
+        ("events_link_prediction", "first 32 neighbors", "{m}"),
+        ("events_retention_halflife", "1-14 days", "{ma}"),
+    ]:
+        doc = REGISTRY[name].doc
+        assert shown in doc and placeholder not in doc, f"{name}: {placeholder}"
+
+
+def test_registry_wrapper_applies_tune(spark):
+    """``register`` wraps every body in ``tune`` (the driver hands us its
+    own session): a registered ``fn`` resets a foreign session timezone to
+    UTC even when only the plan is built, and no body calls ``tune``
+    itself."""
+    import ast
+    import pathlib
+
+    import move_forecast_ind_spark.queries as qpkg
+
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/New_York")
+        REGISTRY["a4_groupby_sum_orderby"].fn(spark, SF_ORACLE)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, before)
+
+    offenders = []
+    for path in sorted(pathlib.Path(qpkg.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.FunctionDef) or not any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for d in node.decorator_list
+            ):
+                continue
+            if any(
+                isinstance(c, ast.Call) and getattr(c.func, "id", None) == "tune"
+                for c in ast.walk(node)
+            ):
+                offenders.append(f"{path.name}:{node.name}")
+    assert not offenders, f"register bodies calling tune: {offenders}"
 
 
 def test_suggest_next_front_prefers_longest_unsampled():

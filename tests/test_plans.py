@@ -102,9 +102,7 @@ def test_tiny_shuffles_coalesce_to_one_partition(spark):
     """AQE with parallelismFirst=false must coalesce a tiny aggregate's
     shuffle to a single partition (the scheduling-floor fix)."""
     from move_forecast_ind_spark.queries import REGISTRY
-    from move_forecast_ind_spark.session import tune
 
-    tune(spark)
     df = REGISTRY["a4_groupby_sum_orderby"].fn(spark, SF_SMALL)
     # collect() (not count()) — count() plans a NEW aggregate on top, and
     # this df's own execution is what finalizes its adaptive plan

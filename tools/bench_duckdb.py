@@ -19,8 +19,10 @@ import argparse
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "

@@ -15,8 +15,10 @@ from __future__ import annotations
 import argparse
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 
 def _audit(plan: str) -> list[str]:
@@ -46,7 +48,7 @@ def _audit(plan: str) -> list[str]:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--out", default="/root/repo/PLANS.md")
+    ap.add_argument("--out", default=f"{ROOT}/PLANS.md")
     args = ap.parse_args()
 
     from move_forecast_ind_spark.queries import bench_queries

@@ -14,8 +14,9 @@ import argparse
 import datetime as dt
 import math
 import sys
+from pathlib import Path
 
-ROOT = "/root/repo"
+ROOT = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, ROOT)
 
 

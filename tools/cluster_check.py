@@ -27,9 +27,11 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+sys.path.insert(0, f"{ROOT}/tools")
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -85,7 +87,7 @@ def main() -> None:
         # PYTHONPATH for pickled mapInPandas/applyInPandas closures
         # (mm_* tier). On a real cluster: --py-files or a cluster-wide
         # pip install; here the repo dir suffices.
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -37,8 +37,10 @@ import subprocess
 import sys
 import threading
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = (
@@ -105,7 +107,7 @@ def main() -> None:
         .config(
             "spark.executor.memory", f"{max(args.mem_mb - 4096, 2048)}m"
         )
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
         # Survive one executor loss without failing the job: the lost
         # executor's shuffle files trigger FetchFailed → stage retry.
         # These are the settings a real cluster job would carry.

@@ -27,8 +27,10 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 FAMILY = [
     # hour-grain adjacency

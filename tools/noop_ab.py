@@ -9,7 +9,7 @@ OPTIMIZATION_r14.md "Instrument note" on long-session contamination):
 
     python tools/noop_ab.py [--sf DIR] [--runs 3] [--action both|count|noop] names...
 
-Prints one line per query: count wall, noop wall, ratio.
+Prints one line per query: count wall, noop wall, noop/count ratio.
 """
 
 from __future__ import annotations
@@ -17,8 +17,10 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -57,7 +59,11 @@ def main() -> None:
                 best = min(best, time.perf_counter() - t0)
             out[action] = best
         c, n = out.get("count"), out.get("noop")
-        ratio = f" ratio={n / c:.2f}" if c and n else ""
+        ratio = (
+            f" noop/count={n / c:.2f}"
+            if c is not None and n is not None and c > 0
+            else ""
+        )
         parts = [f"{name}:"]
         if c is not None:
             parts.append(f"count={c:.2f}s")

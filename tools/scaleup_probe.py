@@ -38,8 +38,10 @@ import os
 import statistics
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 DEFAULT_NAMES = [
     "q1_pricing_summary",

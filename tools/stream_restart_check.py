@@ -59,8 +59,10 @@ import signal
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 SCENARIOS = ("tumbling", "sliding", "session", "cdc_latest", "incremental")
 
@@ -151,7 +153,7 @@ def _run_phase(args) -> None:
             .config("spark.sql.shuffle.partitions", "16")
             .config("spark.driver.memory", "6g")
             .config("spark.executor.memory", "8g")
-            .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+            .config("spark.executorEnv.PYTHONPATH", ROOT)
             .getOrCreate()
         )
     else:

@@ -21,8 +21,10 @@ import argparse
 import sys
 import threading
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:

@@ -34,9 +34,11 @@ from __future__ import annotations
 import argparse
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+sys.path.insert(0, f"{ROOT}/tools")
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
