@@ -35,7 +35,7 @@ class RequestError(ValueError):
     """Invalid request (the reference's HTTP 400 path, main.py:425-427)."""
 
 
-def _parse_date(s: str) -> dt.date:
+def parse_date(s: str) -> dt.date:
     try:
         return dt.datetime.strptime(s, "%Y-%m-%d").date()
     except ValueError as e:
@@ -58,7 +58,7 @@ def forecast_request(
     score the branch's model over the date spine → tail (two broadcast
     joins + fallback chain + banding + phrases) → summary aggregate.
     """
-    input_date = _parse_date(date)
+    input_date = parse_date(date)
     if input_date > max_date:
         raise RequestError(f"forecasts are capped at {max_date}")  # main.py:196-197
 
@@ -155,7 +155,7 @@ def trends_request(
     per-year aggregate + nested shaping (vs. 6 sequential round-trips)."""
     from .trends import historical_trends, trends_nested
 
-    input_date = _parse_date(date)
+    input_date = parse_date(date)
     start, end = forecast_window(input_date, today, max_date)
     trends = historical_trends(
         facts,

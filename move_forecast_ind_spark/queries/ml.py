@@ -391,8 +391,7 @@ def ml_mllib_global_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     option (a) evaluated and declined; restricting the fit to a few
     branches would test a different model). Resolution (b) instead:
     structurally excluded from the driver-sampled surface —
-    suggest_next_front() skips rows-only entries, `_DRIVER_FRONT` is
-    always 50 oracle-bearing names, and
+    `_DRIVER_FRONT` holds only oracle-bearing names, and
     tests/test_oracle.py::test_driver_sampled_surface_is_fully_oracle_bearing
     pins that the first 50 queries() slots all carry oracles. pytest
     pins shape + determinism + forecast sanity for this entry."""

@@ -86,13 +86,11 @@ def register(
 
 
 # Driver-facing ordering. The external correctness driver samples the FIRST
-# 50 entries of ``queries()``. Round-14 front: pure evidence-freshness
-# rotation from suggest_next_front() after baking the r13 sample — the
-# longest-unsampled tier is now the r5/r7-era names (classic TPC-H shapes
-# q7-q20, corpus mix/pack/LM tier, ML fixed-point/Holt-Winters, multimodal
-# decode; unsampled for 7-9 rounds). Everything here passes the identical
-# local oracle gate (tests/test_oracle.py); this is evidence routing, not
-# a semantics change.
+# 50 entries of ``queries()``, so this front lists 50 oracle-bearing names;
+# a rows-only entry there could only be reported as err:no_oracle.
+# tests/test_oracle.py pins both the oracle coverage of the first 50 slots
+# and that every name here is registered. Everything passes the same local
+# oracle gate, so the order routes evidence and changes no semantics.
 _DRIVER_FRONT: tuple[str, ...] = (
     "mm_audio_features",
     "corpus_quality_resample",
@@ -145,43 +143,6 @@ _DRIVER_FRONT: tuple[str, ...] = (
     "corpus_bigram_lm_score",
     "a_corr_covar",
 )
-
-
-# Driver-sample history: which round(s) each query appeared in the driver's
-# first-50 sample. Rounds r1-r10 are baked into _sample_history.py verbatim
-# from the recorded CORRECTNESS_r{N}.json keys (383 distinct names, every
-# one green at its latest sample). Next round: bake this round's front into
-# the history module, then rebuild `_DRIVER_FRONT` from
-# `suggest_next_front()`.
-from ._sample_history import SAMPLED_ROUNDS as _SAMPLED_ROUNDS
-
-
-def suggest_next_front(max_size: int = 50) -> list[str]:
-    """Rotation helper for the NEXT round's `_DRIVER_FRONT`: every
-    ORACLE-BEARING registered query that has no recorded driver sample yet
-    (insertion order), topped up with the longest-unsampled oracle-bearing
-    rest. Rows-only entries are excluded permanently — the driver can only
-    report err:no_oracle for them, a wasted slot (VERDICT r4 item #1).
-    Call from a scratch session when preparing the next round; paste the
-    result into `_DRIVER_FRONT` and bake the outgoing front into
-    `_SAMPLED_ROUNDS`. Purely advisory — never changes the live ordering
-    by itself."""
-    witho = [n for n in REGISTRY if REGISTRY[n].oracle is not None]
-    never = [n for n in witho if n not in _SAMPLED_ROUNDS and n not in _DRIVER_FRONT]
-    rest = [n for n in witho if n not in never]
-    # Longest-unsampled = smallest LATEST round, numerically. Sorting by
-    # the raw tuple is wrong twice over once every name has history:
-    # lexicographic 'r1…' < 'r2' ranks a just-resampled ('r1','r11')
-    # ahead of ('r2',), and 'r11' < 'r2' as strings inverts recency —
-    # the r12 bake surfaced both (the suggestion was re-listing the
-    # names the driver had just sampled).
-    rest.sort(
-        key=lambda n: max(
-            (int(r.lstrip("r")) for r in _SAMPLED_ROUNDS.get(n, ())),
-            default=0,
-        )
-    )
-    return (never + rest)[:max_size]
 
 
 def _ordered_specs() -> list[QuerySpec]:

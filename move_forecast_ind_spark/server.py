@@ -31,7 +31,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .plans.service import RequestError, forecast_request, trends_request
+from .functions.datetime_fns import forecast_window
+from .plans.service import RequestError, forecast_request, parse_date, trends_request
 
 # Summary-comment banks (shape of reference main.py:305-318 SUMMARY_*_PHRASES;
 # original wording) + the deterministic pick used across the repo.
@@ -88,17 +89,23 @@ def _round_half_up(x: float, scale: int = 1) -> float:
     return math.floor(x * p + 0.5) / p
 
 
-def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
-    """POST /forecast/ — the reference's response shape (main.py:320-332)."""
+def _request_fields(body: dict) -> tuple[str, int, str | None]:
+    """``(date, branch, move_type)`` of a POST body; a missing date or
+    branch, or a branch that is not an integer, is a 400."""
     date = body.get("date")
     branch = body.get("branch")
-    move_type = body.get("move_type")
     if not isinstance(date, str) or branch is None:
         raise RequestError("body must carry 'date' (YYYY-MM-DD) and 'branch'")
     try:
         branch = int(branch)
     except (TypeError, ValueError) as e:
         raise RequestError(f"branch must be an integer id, got {branch!r}") from e
+    return date, branch, body.get("move_type")
+
+
+def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
+    """POST /forecast/ — the reference's response shape (main.py:320-332)."""
+    date, branch, move_type = _request_fields(body)
 
     daily, summary = forecast_request(
         ctx.spark, ctx.models, ctx.pct, date=date, branch=branch,
@@ -155,15 +162,7 @@ def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
 
 def trends_response_dict(ctx: ServingContext, body: dict) -> dict:
     """POST /historical_trends/ — per-year window rows (main.py:340-403)."""
-    date = body.get("date")
-    branch = body.get("branch")
-    move_type = body.get("move_type")
-    if not isinstance(date, str) or branch is None:
-        raise RequestError("body must carry 'date' (YYYY-MM-DD) and 'branch'")
-    try:
-        branch = int(branch)
-    except (TypeError, ValueError) as e:
-        raise RequestError(f"branch must be an integer id, got {branch!r}") from e
+    date, branch, move_type = _request_fields(body)
 
     nested = trends_request(
         ctx.spark, ctx.facts, branch_col=ctx.branch_col, date_col=ctx.date_col,
@@ -171,10 +170,7 @@ def trends_response_dict(ctx: ServingContext, body: dict) -> dict:
         type_col=ctx.type_col, today=ctx.today, max_date=ctx.max_date,
         years=ctx.years,
     )
-    from .functions.datetime_fns import forecast_window
-    from .plans.service import _parse_date
-
-    start, end = forecast_window(_parse_date(date), ctx.today, ctx.max_date)
+    start, end = forecast_window(parse_date(date), ctx.today, ctx.max_date)
     per_year = {}
     for r in nested.collect():  # one row per year: the payload
         per_year[int(r.year)] = [

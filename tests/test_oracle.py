@@ -10,9 +10,9 @@ from __future__ import annotations
 import pytest
 
 from move_forecast_ind_spark.queries import REGISTRY
-from tools.check_oracle import normalize, run_oracle, run_spark_query
+from tools.check_oracle import normalize, run_oracle, run_spark_query, sweep
 
-from conftest import SF_ORACLE
+from conftest import ROOT, SF_ORACLE
 
 ALL_NAMES = sorted(REGISTRY)
 
@@ -115,37 +115,61 @@ def test_registry_wrapper_applies_tune(spark):
     assert not offenders, f"register bodies calling tune: {offenders}"
 
 
-def test_suggest_next_front_prefers_longest_unsampled():
-    """The rotation helper must rank by the NUMERIC latest sampled round,
-    not the raw tuple (r12 fix: lexicographic 'r1…' < 'r2' re-ranked a
-    just-resampled ('r1','r11') name ahead of ('r2',), and 'r11' < 'r2'
-    inverted recency once every name had history). Pin: no name whose
-    latest sample is the MOST RECENT recorded round may appear in the
-    suggestion while an older-evidence oracle-bearing name was left out."""
-    from move_forecast_ind_spark.queries.registry import (
-        _SAMPLED_ROUNDS,
-        suggest_next_front,
+def test_runner_vanilla_posture_end_to_end():
+    """``tools/check_oracle.py`` run as users run it, on the driver's bare
+    session: an oracle-bearing query PASSes, the rows-only query reports
+    its row count, and an unknown name is rejected before any JVM starts."""
+    import subprocess
+    import sys
+
+    cmd = [sys.executable, f"{ROOT}/tools/check_oracle.py", "--sf", SF_ORACLE]
+    ok = subprocess.run(
+        cmd + ["--posture", "vanilla", "q1_pricing_summary", "ml_mllib_global_forecast"],
+        capture_output=True, text=True, timeout=600,
     )
-
-    def latest(n):
-        return max(
-            (int(r.lstrip("r")) for r in _SAMPLED_ROUNDS.get(n, ())),
-            default=0,
-        )
-
-    front = suggest_next_front()
-    assert len(front) == 50
-    newest = max(latest(n) for n in _SAMPLED_ROUNDS)
-    left_out = [
-        n
-        for n, s in REGISTRY.items()
-        if s.oracle is not None and n not in front
+    assert ok.returncode == 0, ok.stdout + ok.stderr
+    lines = ok.stdout.splitlines()
+    assert [ln.split()[:2] for ln in lines if ln.startswith(("PASS", "FAIL", "rows"))] == [
+        ["PASS", "q1_pricing_summary:"],
+        ["rows", "ml_mllib_global_forecast:"],
     ]
-    if any(latest(n) < newest for n in left_out):
-        stale_picks = [n for n in front if latest(n) == newest]
-        assert not stale_picks, (
-            f"front re-suggests freshly sampled names: {stale_picks}"
-        )
+    assert "1 pass, 0 fail, 1 rows-only" in lines
+    bad = subprocess.run(cmd + ["no_such_query"], capture_output=True, text=True, timeout=60)
+    assert bad.returncode != 0 and "no_such_query" in bad.stderr
+
+
+def test_runner_restarts_a_dead_jvm():
+    """The runner's isolation loop with a fake child runner in place of the
+    JVM: a batch that dies mid-list has the name it died in retried alone
+    and the rest resumed in a fresh batch; a name that dies alone too is a
+    FAIL; a child that dies before reporting anything still ends the loop."""
+    names = ["a", "b", "heavy", "c", "fatal", "d"]
+    calls = []
+
+    def run_batch(batch):
+        calls.append(list(batch))
+        for n in batch:
+            # "heavy" kills a JVM that already ran others; "fatal" kills any
+            if n == "fatal" or (n == "heavy" and n != batch[0]):
+                return
+            yield n, "PASS", ["1 rows"]
+
+    got = [(n, status) for n, status, _ in sweep(names, run_batch)]
+    assert got == [
+        ("a", "PASS"), ("b", "PASS"), ("heavy", "PASS"),
+        ("c", "PASS"), ("fatal", "FAIL"), ("d", "PASS"),
+    ]
+    assert calls == [names, ["heavy"], ["c", "fatal", "d"], ["fatal"], ["d"]]
+
+    calls.clear()
+
+    def dies_at_once(batch):
+        calls.append(list(batch))
+        return iter(())
+
+    dead = [(n, status) for n, status, _ in sweep(["x", "y"], dies_at_once)]
+    assert dead == [("x", "FAIL"), ("y", "FAIL")]
+    assert calls == [["x", "y"], ["x"], ["y"]]  # a lone batch is not retried
 
 
 def test_oracle_output_types_are_portable(duck):

@@ -1,10 +1,14 @@
 #!/usr/bin/env bash
-# Full local gate: tests, oracle differential (sf0.01), bench (sf0.1).
+# Full local gate: tests, oracle differential (sf0.01), the driver's
+# 50-query sample on its vanilla session, bench (sf0.1).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -q
 echo "== oracle differential (sf0.01) =="
 python tools/check_oracle.py
+echo "== driver sample on the driver's vanilla session (sf0.01) =="
+front=$(python -c 'import __spark_entry__ as e; print(*list(e.queries())[:50])')
+python tools/check_oracle.py --posture vanilla $front
 echo "== bench (sf0.1) =="
 python bench.py

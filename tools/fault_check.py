@@ -17,8 +17,10 @@ script runs the query under the parquet mode (the 100 TB batch default)
 and proves the end-to-end property with a real SIGKILL.
 
     python tools/fault_check.py [--sf /tmp/sfx1] [--kill-at 0.4] \
-        [--materialize parquet|local] \
-        [--workers 2 --cores 16 --mem-mb 24576] [names...]
+        [--materialize parquet|local] [names...]
+
+The session is the host-sized ``local-cluster`` of
+``tools/check_oracle.py --posture cluster``, plus the retry confs below.
 
 Timing: each query runs cold, then warm, then once more with the kill
 scheduled at ``--kill-at`` × the WARM wall (the killed run is warm; an
@@ -43,11 +45,6 @@ ROOT = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 DEFAULT_NAMES = ["dedup_winnow_pairs", "corpus_bigram_lm_score"]
 
 
@@ -61,10 +58,12 @@ def _executor_pids() -> set[int]:
 
 
 def main() -> None:
-    import duckdb
-    from pyspark.sql import SparkSession
-
-    from check_oracle import _norm_value, run_spark_query
+    from check_oracle import (
+        cluster_session,
+        compare,
+        oracle_connection,
+        run_spark_query,
+    )
     from move_forecast_ind_spark.queries import REGISTRY
 
     ap = argparse.ArgumentParser()
@@ -78,9 +77,6 @@ def main() -> None:
         "the cold wall lands after a warm run already finished, which "
         "is how the first negative-control attempt invalidated itself)",
     )
-    ap.add_argument("--workers", type=int, default=2)
-    ap.add_argument("--cores", type=int, default=16)
-    ap.add_argument("--mem-mb", type=int, default=24576)
     ap.add_argument(
         "--materialize",
         default="parquet",
@@ -98,38 +94,17 @@ def main() -> None:
     # die with the executor; parquet checkpoints are re-read from disk.
     os.environ["SPARK_GRAFT_MATERIALIZE"] = args.materialize
 
-    spark = (
-        SparkSession.builder.master(
-            f"local-cluster[{args.workers},{args.cores},{args.mem_mb}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .config(
-            "spark.executor.memory", f"{max(args.mem_mb - 4096, 2048)}m"
-        )
-        .config("spark.executorEnv.PYTHONPATH", ROOT)
-        # Survive one executor loss without failing the job: the lost
-        # executor's shuffle files trigger FetchFailed → stage retry.
-        # These are the settings a real cluster job would carry.
-        .config("spark.task.maxFailures", "8")
-        .config("spark.stage.maxConsecutiveAttempts", "8")
-        .getOrCreate()
+    # Survive one executor loss without failing the job: the lost
+    # executor's shuffle files trigger FetchFailed → stage retry. These
+    # are the settings a real cluster job would carry.
+    spark = cluster_session(
+        {"spark.task.maxFailures": "8", "spark.stage.maxConsecutiveAttempts": "8"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf}/{t}.parquet')"
-        )
+    con = oracle_connection(args.sf)
 
     fails: list[str] = []
     for n in names:
         spec = REGISTRY[n]
-        if spec.oracle is None:
-            print(f"SKIP  {n} (rows-only)")
-            continue
-
         # cold then warm healthy walls: the killed run is warm, so the
         # kill must be timed against the WARM wall or it can land after
         # a fast warm run already completed (an invalid "PASS")
@@ -183,26 +158,19 @@ def main() -> None:
             )
             continue
 
-        rel = con.sql(spec.oracle)
-        ocols, orows = rel.columns, rel.fetchall()
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
-        s_set = sorted(tuple(_norm_value(r[i]) for i in order) for r in rows)
-        o_set = sorted(tuple(_norm_value(r[i]) for i in oorder) for r in orows)
-        ok = s_set == o_set and [cols[i] for i in order] == [
-            ocols[i] for i in oorder
-        ]
-        tag = "PASS" if ok else "FAIL"
-        if not ok:
+        status, lines = compare(con, spec, cols, types, rows)
+        if status == "FAIL":
             fails.append(n)
         in_flight = killed.get("at") is not None and killed["at"] < wall
         print(
-            f"{tag}  {n}: {len(rows)} rows hash-{'exact' if ok else 'MISMATCH'}"
+            f"{status:<5} {n}: {lines[0]}"
             f" | healthy {healthy_cold:.1f}s cold / {healthy:.1f}s warm,"
             f" with kill {wall:.1f}s"
             f" (executor pid {killed.get('pid')} SIGKILLed at"
             f" +{killed.get('at', float('nan')):.1f}s;"
-            f" {'MID-FLIGHT' if in_flight else 'kill landed AFTER completion — retime with --kill-at'})"
+            f" {'MID-FLIGHT' if in_flight else 'kill landed AFTER completion — retime with --kill-at'})",
+            *lines[1:],
+            sep="\n",
         )
 
     print(f"\n{len(names) - len(fails)}/{len(names)} survived executor loss; fails: {fails}")

@@ -19,17 +19,12 @@ ROOT = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, ROOT)
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def main() -> None:
-    import duckdb
-
     from move_forecast_ind_spark.queries import REGISTRY
     from move_forecast_ind_spark.session import get_spark
+    from tools.check_oracle import oracle_connection
 
     names = sys.argv[1:] or sorted(
         n for n, s in REGISTRY.items() if s.bench
@@ -39,12 +34,7 @@ def main() -> None:
 
     results: dict[str, list[str]] = {n: [] for n in names}
     for sfd in SF_DIRS:
-        con = duckdb.connect()
-        for t in TABLES:
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sfd}/{t}.parquet')"
-            )
+        con = oracle_connection(sfd)
         for n in names:
             spec = REGISTRY[n]
             best = duck = float("inf")

@@ -145,17 +145,10 @@ def _run_phase(args) -> None:
         # multi-executor posture: separate executor JVMs + network
         # shuffle + a state store written through the checkpoint file
         # manager from executor processes (single host, so /tmp IS the
-        # shared filesystem — tools/cluster_check.py doctrine)
-        from pyspark.sql import SparkSession
+        # shared filesystem, as for check_oracle.py --posture cluster)
+        from tools.check_oracle import cluster_session
 
-        spark = (
-            SparkSession.builder.master("local-cluster[2,8,12288]")
-            .config("spark.sql.shuffle.partitions", "16")
-            .config("spark.driver.memory", "6g")
-            .config("spark.executor.memory", "8g")
-            .config("spark.executorEnv.PYTHONPATH", ROOT)
-            .getOrCreate()
-        )
+        spark = cluster_session()
     else:
         spark = get_spark("stream-restart-run")
     spark.sparkContext.setLogLevel("ERROR")
@@ -254,8 +247,9 @@ def main() -> int:
     ap.add_argument(
         "--cluster",
         action="store_true",
-        help="run each phase on a local-cluster[2,8,12288] master "
-        "(separate executor JVMs + state store written from executors)",
+        help="run each phase on the host-sized local-cluster master of "
+        "check_oracle.py --posture cluster (separate executor JVMs + "
+        "state store written from executors)",
     )
     # internal phase plumbing
     ap.add_argument("--phase-internal", action="store_true")
