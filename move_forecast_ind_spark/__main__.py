@@ -37,8 +37,6 @@ def _spark():
 
 
 def cmd_forecast(args) -> int:
-    from pyspark.sql import functions as F
-
     from .plans.percentages import compute_percentages
     from .plans.service import RequestError, forecast_request, forecast_response
     from .plans.training import train_models
@@ -62,7 +60,8 @@ def cmd_forecast(args) -> int:
     except RequestError as e:
         print(json.dumps({"error": str(e)}), file=sys.stderr)
         return 2
-    print(forecast_response(daily, summary).toJSON().first())
+    # collect, not RDD.first(): first() runs a Python worker
+    print(forecast_response(daily, summary).toJSON().collect()[0])
     return 0
 
 

@@ -1,13 +1,14 @@
 """MLlib-idiomatic forecasting tier (BASELINE.json: "Spark DataFrame +
 MLlib for forecasting pipeline").
 
-Complements plans/training.py (per-branch OLS via applyInPandas) with a
-single **global** ``pyspark.ml`` model: branch one-hot × (trend + day-of-week
-one-hot + Fourier yearly terms) through a Pipeline of OneHotEncoder +
-VectorAssembler + LinearRegression(solver="normal").
+Complements plans/training.py (per-branch OLS: one aggregate of quantized
+moments, then a driver solve) with a single **global** ``pyspark.ml`` model:
+branch one-hot × (trend + day-of-week one-hot + Fourier yearly terms)
+through a Pipeline of OneHotEncoder + VectorAssembler +
+LinearRegression(solver="normal").
 
-Why both tiers exist: per-branch models (applyInPandas) match the
-reference's architecture 1:1 and parallelize over branches; the global
+Why both tiers exist: per-branch models match the reference's
+architecture 1:1 (one model per branch) and are oracle-checked; the global
 MLlib model shares statistical strength across branches, trains as ONE
 distributed job (normal-equation solve over the whole feature matrix — no
 per-group pandas), and rides MLlib's Pipeline persistence. The features are

@@ -123,17 +123,20 @@ def forecast_response(daily: DataFrame, summary: DataFrame) -> DataFrame:
         ).alias("day"),
     ).groupBy("branch", "move_type").agg(
         F.array_sort(F.collect_list("day")).alias("daily_forecast")
-    )
-    return (
-        summary.join(days, on=["branch", "move_type"])
-        .select(
-            "branch",
-            "move_type",
-            "daily_forecast",
-            F.struct(
-                "total_predicted_moves", "average_daily_moves", "avg_pct_used", "n_days"
-            ).alias("summary"),
-        )
+    ).alias("d")
+    s = summary.alias("s")
+    # move_type is NULL for a branch-level request: join null-safely.
+    return s.join(
+        days,
+        (F.col("s.branch") == F.col("d.branch"))
+        & F.col("s.move_type").eqNullSafe(F.col("d.move_type")),
+    ).select(
+        "s.branch",
+        "s.move_type",
+        "d.daily_forecast",
+        F.struct(
+            "total_predicted_moves", "average_daily_moves", "avg_pct_used", "n_days"
+        ).alias("summary"),
     )
 
 

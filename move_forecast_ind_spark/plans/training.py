@@ -9,15 +9,19 @@ upper bound (main.py:166-185, 230-236).
 
 Spark-first redesign:
 
-- **Training** is ``groupBy(branch).applyInPandas`` — every branch fits in
-  parallel (110 independent tasks; at 100 TB the per-branch series is still
-  tiny because it's one row per day). The model is a *deterministic
-  surrogate* of Prophet's published additive form: linear trend + Fourier
-  seasonality (yearly K terms + weekly K terms), fit by ordinary least
-  squares (numpy lstsq — deterministic given sorted input). Prophet's own
+- **The model** is a *deterministic surrogate* of Prophet's published
+  additive form: linear trend + Fourier seasonality (yearly K terms +
+  weekly K terms), fit by ordinary least squares. Prophet's own
   ``yhat_upper`` is sampling-based and not a sane parity target
   (SURVEY.md §2.9 ⚠); the surrogate's upper bound is the closed-form
   ``yhat + z80 * sigma`` with sigma the training residual stddev.
+- **Training is an aggregate, then a driver solve.** OLS needs only its
+  sufficient statistics, so ONE ``groupBy(branch).agg`` yields every
+  branch's quantized normal equations as exact long sums; the driver
+  collects one row per branch (~110 in the reference) and solves each
+  12×12 system. No Python worker runs, so the fit works from any cwd,
+  and the DuckDB oracle (queries/ml.py ``_fourier_model_ctes``)
+  reproduces it bit-for-bit.
 - **The model registry is a DataFrame** (branch, coeffs array<double>,
   sigma, n_obs) — not 110 pickle files. It broadcasts to the scorer; at
   scale it persists as one parquet file (S4/S6 analog).
@@ -30,9 +34,8 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EPOCH = "1995-01-01"  # t origin for the trend feature
@@ -44,12 +47,12 @@ _YEAR_DAYS = 365.25
 _WEEK_DAYS = 7.0
 
 # Trend feature is t / T_SCALE so every design-matrix column is O(1): the
-# quantized fit (train_models_q) stores features on an integer 1e-6 grid and
-# accumulates exact int64 moments — bounded only if features are O(1).
+# fit stores features on an integer 1e-6 grid and accumulates exact long
+# moments — bounded only if features are O(1).
 T_SCALE = 1000.0
 F_GRID = 1e6  # feature fixed-point grid
 Y_GRID = 1e3  # target fixed-point grid
-MIN_OBS_Q = 30  # quantized tier needs a well-determined 12-coeff system
+MIN_OBS_Q = 30  # a well-determined 12-coeff system needs this many days
 
 MODEL_SCHEMA = "branch long, coeffs array<double>, sigma double, n_obs long"
 
@@ -60,8 +63,8 @@ def n_features() -> int:
 
 def fourier_freqs() -> list[float]:
     """Angular frequencies in feature order (yearly then weekly pairs).
-    Computed with the exact same float expression everywhere (numpy fit,
-    Spark scoring literals, DuckDB oracle literals via repr round-trip)."""
+    Computed with the exact same float expression everywhere (Spark fit
+    and scoring literals, DuckDB oracle literals via repr round-trip)."""
     ws = []
     for k in range(1, YEARLY_K + 1):
         ws.append(2.0 * math.pi * k / _YEAR_DAYS)
@@ -70,59 +73,17 @@ def fourier_freqs() -> list[float]:
     return ws
 
 
-def _feature_matrix(t: np.ndarray) -> np.ndarray:
-    cols = [
-        np.ones_like(t, dtype=np.float64),
-        t.astype(np.float64) / T_SCALE,
-    ]
+def feature_sql() -> list[str]:
+    """The features of date column ``ds`` as Spark SQL, in coefficient
+    order — what :func:`train_models` quantizes and :func:`score` dots.
+    SQL strings, not Column builders: each PySpark Column call is several
+    py4j round trips, and the fit needs ~100 expressions. Literals carry
+    the ``D`` suffix so they parse as doubles, never as decimals."""
+    t = f"CAST(datediff(ds, DATE'{EPOCH}') AS DOUBLE)"
+    feats = ["1.0D", f"{t} / {T_SCALE!r}D"]
     for w in fourier_freqs():
-        cols.append(np.sin(t.astype(np.float64) * w))
-        cols.append(np.cos(t.astype(np.float64) * w))
-    return np.column_stack(cols)
-
-
-def train_models(
-    daily: DataFrame,  # branch, ds (date), y (double)
-    cutoff: str,  # train on ds <= cutoff (reference pretrain_models.py:20)
-) -> DataFrame:
-    """Fit one model per branch in parallel. Branches with < 2 usable rows
-    are skipped (reference pretrain_models.py guard)."""
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ds")  # deterministic design-matrix order
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                columns=["branch", "coeffs", "sigma", "n_obs"]
-            ).astype({"branch": "int64", "sigma": "float64", "n_obs": "int64"})
-        t = (pd.to_datetime(pdf["ds"]) - pd.Timestamp(EPOCH)).dt.days.to_numpy()
-        y = pdf["y"].to_numpy(dtype=np.float64)
-        X = _feature_matrix(t)
-        beta, *_ = np.linalg.lstsq(X, y, rcond=None)
-        resid = y - X @ beta
-        dof = max(len(y) - X.shape[1], 1)
-        sigma = float(np.sqrt(np.sum(resid * resid) / dof))
-        return pd.DataFrame(
-            {
-                "branch": [int(pdf["branch"].iloc[0])],
-                "coeffs": [beta.tolist()],
-                "sigma": [sigma],
-                "n_obs": [len(y)],
-            }
-        )
-
-    filtered = daily.filter(F.col("ds") <= F.lit(cutoff).cast("date"))
-    return filtered.groupBy("branch").applyInPandas(fit, schema=MODEL_SCHEMA)
-
-
-def feature_expr(ds: Column) -> Column:
-    """The scoring-side feature vector as a pure column expression — must
-    mirror :func:`_feature_matrix` exactly."""
-    t = F.datediff(ds, F.lit(EPOCH).cast("date")).cast("double")
-    feats = [F.lit(1.0), t / F.lit(T_SCALE)]
-    for w in fourier_freqs():
-        feats.append(F.sin(t * w))
-        feats.append(F.cos(t * w))
-    return F.array(*feats)
+        feats += [f"sin({t} * {w!r}D)", f"cos({t} * {w!r}D)"]
+    return feats
 
 
 def gauss_jordan_solve(xtx, xty) -> list[float]:
@@ -153,85 +114,78 @@ def gauss_jordan_solve(xtx, xty) -> list[float]:
     return [a[i][p] / a[i][i] for i in range(p)]
 
 
-def train_models_q(
+def train_models(
     daily: DataFrame,  # branch, ds (date), y (double)
-    cutoff: str,
+    cutoff: str,  # train on ds <= cutoff (reference pretrain_models.py:20)
     min_obs: int = MIN_OBS_Q,
 ) -> DataFrame:
-    """The CROSS-ENGINE-DETERMINISTIC tier of the per-branch Fourier OLS
-    (same model family and applyInPandas topology as :func:`train_models`,
-    same reference citation pretrain_models.py:18-33), built so a DuckDB
-    oracle can reproduce the coefficients bit-for-bit:
+    """Fit one model per branch, eagerly: one Spark aggregate of the
+    quantized normal-equation moments, a driver solve per branch, and the
+    registry back as a small DataFrame built from an Arrow table — no
+    Python worker. Features (×1e6) and y (×1e3) on integer grids make X'X,
+    X'y and y'y exact, order-free long sums, so :func:`gauss_jordan_solve`
+    walks the same doubles as the DuckDB oracle. Coefficients are for the
+    scaled feature vector, as scoring uses it. Branches with fewer than
+    ``min_obs`` days get no row rather than a near-singular fit.
 
-    1. features and targets are quantized to integer fixed-point grids
-       (features ×1e6, y ×1e3) — the quantization floor absorbs libm
-       sin/cos ulp differences between engines;
-    2. the normal-equation moments X'X / X'y are EXACT int64 sums of those
-       integers — order-independent, so engine aggregation order is moot;
-    3. the 12×12 solve is an unpivoted Gauss-Jordan in doubles with a fixed
-       op order (:func:`gauss_jordan_solve`) — identical inputs + identical
-       op sequence = identical IEEE results on any engine.
-
-    ``min_obs`` guards invertibility: the quantized tier refuses branches
-    with fewer than 30 observations instead of emitting a rank-deficient
-    garbage fit (the lstsq tier keeps the reference's permissive >=2 guard
-    via the min-norm solution). Coefficients are for the SCALED feature
-    vector (trend per ``T_SCALE`` days); scoring uses the same features, so
-    forecasts are parameterization-invariant."""
+    Raises ``OverflowError`` naming the branch when n·max(|xq|, |yq|)²
+    could exceed a long: with ANSI off Spark's long sums wrap silently
+    (with ANSI on, Spark raises ARITHMETIC_OVERFLOW first)."""
     p = n_features()
+    xs = [f"x{i}" for i in range(p)]
+    pairs = [(i, j) for i in range(p) for j in range(i, p)]
+    # one bigint array per branch: n, max |value|, y'y, X'y, X'X's upper triangle
+    moments = [
+        "count(1)",
+        f"max(greatest({', '.join(f'abs({c})' for c in [*xs, 'yq'])}))",
+        "sum(yq * yq)",
+        *[f"sum({x} * yq)" for x in xs],
+        *[f"sum({xs[i]} * {xs[j]})" for i, j in pairs],
+    ]
+    rows = (
+        daily.filter(F.col("ds") <= F.lit(cutoff).cast("date"))
+        .selectExpr(
+            "branch",
+            *[f"floor({f} * {F_GRID!r}D + 0.5D) AS {x}" for f, x in zip(feature_sql(), xs)],
+            f"floor(CAST(y AS DOUBLE) * {Y_GRID!r}D + 0.5D) AS yq",
+        )
+        .groupBy("branch")
+        .agg(F.expr(f"array({', '.join(moments)}) AS m"))
+        .filter(f"m[0] >= {int(min_obs)}")
+        .collect()
+    )
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ds")
-        if len(pdf) < min_obs:
-            return pd.DataFrame(
-                columns=["branch", "coeffs", "sigma", "n_obs"]
-            ).astype({"branch": "int64", "sigma": "float64", "n_obs": "int64"})
-        t = (pd.to_datetime(pdf["ds"]) - pd.Timestamp(EPOCH)).dt.days.to_numpy()
-        y = pdf["y"].to_numpy(dtype=np.float64)
-        X = _feature_matrix(t)
-        Xq = np.floor(X * F_GRID + 0.5).astype(np.int64)
-        yq = np.floor(y * Y_GRID + 0.5).astype(np.int64)
-        # int64 exactness guard: X'X entries are bounded by design
-        # (|fq| <= ~1.9e6 -> n*(1.9e6)^2 << 2^63) but y is data-dependent
-        # (yq = y*1e3), and numpy int64 WRAPS silently while the DuckDB
-        # oracle promotes to HUGEINT — a cross-engine divergence with
-        # garbage coefficients. Refuse loudly instead: every moment entry
-        # is a sum of n products of values bounded by max(|fq|, |yq|).
-        bound = len(yq) * max(int(np.abs(Xq).max()), int(np.abs(yq).max()), 1) ** 2
+    cols = {"branch": [], "coeffs": [], "sigma": [], "n_obs": []}
+    for branch, m in sorted(rows):
+        n = m[0]
+        bound = n * max(m[1], 1) ** 2
         if bound >= 2**63:
             raise OverflowError(
-                f"branch {int(pdf['branch'].iloc[0])}: quantized moments "
-                f"could exceed int64 (worst-case {bound:.3g}); lower Y_GRID "
-                "or pre-scale y for series with daily totals this large"
+                f"branch {branch}: quantized moments could exceed a "
+                f"long (worst-case {bound:.3g}); lower Y_GRID or pre-scale "
+                "y for series with daily totals this large"
             )
-        xtx = Xq.T @ Xq  # exact int64: guarded above
-        xty = Xq.T @ yq
-        yty = int(yq @ yq)
+        xty = m[3 : 3 + p]
+        xtx = [[0] * p for _ in range(p)]
+        for (i, j), v in zip(pairs, m[3 + p :]):
+            xtx[i][j] = xtx[j][i] = v
         beta_int = gauss_jordan_solve(xtx, xty)
-        # beta_int solves the quantized system (features ×1e6, y ×1e3), so
-        # coefficients on the unquantized scaled features are ×(1e6/1e3).
-        coeffs = [b * (F_GRID / Y_GRID) for b in beta_int]
-        lin = 0.0
+        lin = quad = 0.0
         for i in range(p):
             lin += float(xty[i]) * beta_int[i]
-        quad = 0.0
-        for i in range(p):
             for j in range(p):
                 quad += float(xtx[i][j]) * beta_int[i] * beta_int[j]
-        rss_q = float(yty) - 2.0 * lin + quad
-        dof = max(len(y) - p, 1)
-        sigma = math.sqrt(max(rss_q, 0.0) / (Y_GRID * Y_GRID) / dof)
-        return pd.DataFrame(
-            {
-                "branch": [int(pdf["branch"].iloc[0])],
-                "coeffs": [coeffs],
-                "sigma": [sigma],
-                "n_obs": [len(y)],
-            }
+        rss_q = float(m[2]) - 2.0 * lin + quad
+        cols["branch"].append(branch)
+        # beta_int solves the quantized system, so coefficients on the
+        # unquantized scaled features are ×(1e6/1e3).
+        cols["coeffs"].append([b * (F_GRID / Y_GRID) for b in beta_int])
+        cols["sigma"].append(
+            math.sqrt(max(rss_q, 0.0) / (Y_GRID * Y_GRID) / max(n - p, 1))
         )
-
-    filtered = daily.filter(F.col("ds") <= F.lit(cutoff).cast("date"))
-    return filtered.groupBy("branch").applyInPandas(fit, schema=MODEL_SCHEMA)
+        cols["n_obs"].append(n)
+    # createDataFrame casts the Arrow columns to MODEL_SCHEMA's types
+    return daily.sparkSession.createDataFrame(pa.table(cols), MODEL_SCHEMA)
 
 
 def score(models: DataFrame, frame: DataFrame) -> DataFrame:
@@ -241,7 +195,9 @@ def score(models: DataFrame, frame: DataFrame) -> DataFrame:
     from ..functions.rounding import r4, round_count
 
     dot = F.aggregate(
-        F.zip_with(F.col("coeffs"), feature_expr(F.col("ds")), lambda a, b: a * b),
+        F.zip_with(
+            F.col("coeffs"), F.expr(f"array({', '.join(feature_sql())})"), lambda a, b: a * b
+        ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
@@ -255,61 +211,4 @@ def score(models: DataFrame, frame: DataFrame) -> DataFrame:
             r4(upper).alias("yhat_upper"),
             round_count(F.greatest(upper, F.lit(0.0))).alias("count"),
         )
-    )
-
-
-# Reference hyperparameters (reference pretrain_models.py:22-29). Prophet is
-# not installed in this environment; the surrogate above is the default
-# engine path. If prophet IS available, train_prophet_models applies the
-# reference's exact configuration per branch through the same
-# groupBy().applyInPandas topology.
-PROPHET_PARAMS = dict(
-    daily_seasonality=True,
-    yearly_seasonality=True,
-    weekly_seasonality=False,
-    changepoint_prior_scale=0.01,
-    seasonality_prior_scale=15.0,
-    seasonality_mode="multiplicative",
-)
-
-
-def train_prophet_models(daily: DataFrame, cutoff: str) -> DataFrame:
-    """Per-branch Prophet fit with the reference's hyperparameters — gated
-    on the library being importable (it is not in this container). Output:
-    (branch, model_bytes binary) — the registry-as-table layout with the
-    pickled model as an opaque binary column (S6 analog).
-
-    NOTE: Prophet's predictive intervals are sampling-based and not
-    hash-stable (SURVEY.md §2.9 ⚠); use the OLS surrogate for any
-    oracle-checked path.
-    """
-    try:
-        from prophet import Prophet
-    except ImportError as e:
-        raise NotImplementedError(
-            "prophet is not installed in this environment; use train_models "
-            "(deterministic OLS surrogate) instead"
-        ) from e
-
-    import pickle
-
-    # Capture the class at plan-build time (driver-side import, fail-fast)
-    # and close over it — the applyInPandas workers deserialize the closure
-    # instead of re-importing, so the gate is checked exactly once.
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ds")
-        if len(pdf) < 2:
-            return pd.DataFrame(columns=["branch", "model_bytes"])
-        m = Prophet(**PROPHET_PARAMS)
-        m.fit(pdf.rename(columns={"y": "y", "ds": "ds"})[["ds", "y"]])
-        return pd.DataFrame(
-            {
-                "branch": [int(pdf["branch"].iloc[0])],
-                "model_bytes": [pickle.dumps(m)],
-            }
-        )
-
-    filtered = daily.filter(F.col("ds") <= F.lit(cutoff).cast("date"))
-    return filtered.groupBy("branch").applyInPandas(
-        fit, schema="branch long, model_bytes binary"
     )

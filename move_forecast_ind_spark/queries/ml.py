@@ -7,9 +7,9 @@ Two tiers:
   SQL-expressible, so the DuckDB oracle hash-checks it (the closest an ML
   path gets to the driver's strong gate).
 - ``ml_train_fourier`` / ``ml_forecast_fourier`` — the real surrogate
-  model (trend + yearly/weekly Fourier, OLS per branch via applyInPandas;
-  plans.training). Deterministic but not ANSI-SQL-expressible → rows-only
-  contract; pytest asserts determinism and shape instead.
+  model (trend + yearly/weekly Fourier OLS per branch: one moments
+  aggregate plus a driver solve; plans.training), hash-checked because the
+  oracle replays the same integer moments and the same fixed-order solve.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ from ..plans.training import (
     n_features,
     score,
     train_models,
-    train_models_q,
 )
 from ..sources import load_table
 from .registry import fmt_doc, register
@@ -39,7 +38,7 @@ CUTOFF = "1998-12-31"  # train ≤ cutoff (analog of reference pretrain_models.p
 def _fourier_feature_sql() -> list[str]:
     """Per-index SQL feature expressions, same order and same float
     literals (repr round-trips the exact double) as plans.training's
-    _feature_matrix / feature_expr."""
+    feature_sql."""
     feats = ["1e0", f"t / {T_SCALE!r}"]
     for w in fourier_freqs():
         feats.append(f"sin(t * {w!r})")
@@ -48,12 +47,13 @@ def _fourier_feature_sql() -> list[str]:
 
 
 def _fourier_model_ctes(min_obs: int = MIN_OBS_Q) -> str:
-    """The DuckDB twin of plans.training.train_models_q, as a CTE chain
+    """The DuckDB twin of plans.training.train_models, as a CTE chain
     ending in ``fmodels(branch, c1..c12, sigma, n_obs)``:
 
     integer fixed-point design (features ×1e6, y ×1e3) → exact integer
-    normal-equation moments (order-free sums) → the SAME unpivoted
-    Gauss-Jordan elimination train_models_q runs in Python, unrolled as
+    normal-equation moments (order-free sums; Spark computes them as one
+    groupBy aggregate) → the SAME unpivoted Gauss-Jordan elimination
+    train_models runs on the driver, unrolled as
     one CTE per pivot with the identical expression
     ``v - v_ik * v_kj / v_kk`` — identical integer inputs + identical
     IEEE op sequence = bit-identical coefficients on both engines. This is
@@ -280,7 +280,7 @@ def ml_linreg_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_train_fourier",
-    tags=("ml", "applyinpandas"),
+    tags=("ml", "aggregate"),
     oracle=f"""
     WITH {_fourier_model_ctes()}
     SELECT branch,
@@ -293,17 +293,14 @@ def ml_linreg_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ml_train_fourier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1: parallel per-branch OLS fit of the trend+Fourier surrogate
-    (plans.training.train_models_q). Registry output: one row per branch
-    with the coefficient summary — the DataFrame analog of 110 pickle
-    files (c_trend reported per day: scaled coeff / T_SCALE).
-
-    HASH-CHECKED (was rows-only through r4): the quantized fixed-point
-    design makes the normal-equation moments exact integers and the
-    unpivoted Gauss-Jordan solve a fixed IEEE op sequence, so the DuckDB
-    oracle — the same 12 elimination steps unrolled as CTEs — reproduces
-    every coefficient bit-for-bit (VERDICT r4 item #2)."""
-    models = train_models_q(_daily_series(spark, sf_dir), cutoff=CUTOFF)
+    """M1: per-branch OLS fit of the trend+Fourier surrogate
+    (plans.training.train_models: one moments aggregate, then a driver
+    solve). Registry output: one row per branch with the coefficient
+    summary — the DataFrame analog of 110 pickle files (c_trend reported
+    per day: scaled coeff / T_SCALE). HASH-CHECKED: the oracle runs the
+    same 12 elimination steps, unrolled as CTEs, on the same exact integer
+    moments, so every coefficient matches bit-for-bit."""
+    models = train_models(_daily_series(spark, sf_dir), cutoff=CUTOFF)
     return models.select(
         "branch",
         r4(F.element_at("coeffs", 1)).alias("c_intercept"),
@@ -351,7 +348,7 @@ def _score_ctes(fut_sql: str) -> str:
 
 @register(
     "ml_forecast_fourier",
-    tags=("ml", "applyinpandas"),
+    tags=("ml", "aggregate"),
     oracle=f"""
     WITH {_fourier_model_ctes()},
     {_score_ctes(_JUNE_FUT_SQL)}
@@ -362,11 +359,11 @@ def ml_forecast_fourier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2/M3: score the surrogate registry over a 7-day future frame with
     pure column arithmetic (zip_with dot product; plans.training.score) —
     yhat, the 80% upper bound, and the reference's Count post-processing.
-    HASH-CHECKED (was rows-only through r4): coefficients come from the
-    cross-engine-deterministic quantized fit; the oracle scores them with
+    HASH-CHECKED: coefficients come from the cross-engine-deterministic
+    quantized fit; the oracle scores them with
     the identical left-associated dot product, so only libm sin/cos ulps
     separate the engines pre-rounding — absorbed by the 1e-4 grid."""
-    models = train_models_q(_daily_series(spark, sf_dir), cutoff=CUTOFF)
+    models = train_models(_daily_series(spark, sf_dir), cutoff=CUTOFF)
     frame = _future_frame(spark, "1999-06-01", "1999-06-07", n_branches=10)
     return score(models, frame)
 
@@ -458,10 +455,9 @@ def _svc_request_oracle() -> str:
 def svc_forecast_request(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full /forecast/ endpoint (plans.service.forecast_request): window
     clamp -> registry check -> model scoring -> percentage fallback chain ->
-    banded daily rows. HASH-CHECKED end-to-end (was rows-only through r4):
-    the oracle chains the quantized Fourier-fit CTEs, the scoring twin, and
-    the full percentage/tail SQL — the entire request path, model included,
-    value-compared against DuckDB (VERDICT r4 item #2)."""
+    banded daily rows. HASH-CHECKED end-to-end: the oracle chains the
+    quantized Fourier-fit CTEs, the scoring twin, and the full
+    percentage/tail SQL — the entire request path, model included."""
     import datetime as dt
 
     from ..plans.percentages import compute_percentages
@@ -472,16 +468,12 @@ def svc_forecast_request(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, branch_col="l_suppkey", type_col="l_returnflag",
         date_col="l_shipdate", count_col="l_quantity",
     )
-    # Train only the requested branch: the request consumes exactly one
-    # model, per-branch fits are independent (groupBy-applyInPandas), and
-    # the registry probe inside forecast_request only inspects branch 7 —
-    # so pruning the training input is dead-code elimination the optimizer
-    # cannot see through the opaque Python stage (guide §1.2 "don't
-    # compute things you throw away"; §4.1 column/row pruning around
-    # opaque functions). The branch filter reaches the parquet scan as a
-    # PushedFilter. Output is bit-identical (oracle-checked); the
-    # all-branch registry remains ml_train_fourier's surface.
-    models = train_models_q(
+    # Train only the requested branch: fits are per-branch independent and
+    # the request reads only branch 7's model. train_models collects
+    # eagerly, so no later filter can prune its aggregate; this one reaches
+    # the parquet scan as a PushedFilter. Output is bit-identical
+    # (oracle-checked); ml_train_fourier keeps the all-branch registry.
+    models = train_models(
         _daily_series(spark, sf_dir).filter(F.col("branch") == 7),
         cutoff=CUTOFF,
     )
@@ -594,10 +586,9 @@ def svc_forecast_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     move_types) planned as one Spark job (plans.service.forecast_batch):
     per-row window clamps, exploded spines, one scoring pass, one tail.
     The reference would serve these as 20 HTTP calls x ~30 round-trips.
-    HASH-CHECKED (was rows-only through r4): the oracle re-derives both
-    clamped windows, the quantized model fit, the scoring twin, and the
-    NULL-move_type-aware tail (odd branches take the silent-demotion 100%
-    path) — all 140 rows value-compared."""
+    HASH-CHECKED: the oracle re-derives both clamped windows, the quantized
+    model fit, the scoring twin, and the NULL-move_type-aware tail (odd
+    branches take the silent-demotion 100% path) — all 140 rows."""
     import datetime as dt
 
     from ..plans.percentages import compute_percentages
@@ -608,10 +599,9 @@ def svc_forecast_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, branch_col="l_suppkey", type_col="l_returnflag",
         date_col="l_shipdate", count_col="l_quantity",
     )
-    # Train only the batch's 10 requested branches (same pruning rationale
-    # as svc_forecast_request: per-branch fits are independent and the
-    # batch's registry probes only inspect branches 1-10).
-    models = train_models_q(
+    # Train only the batch's 10 requested branches: the fit collects
+    # eagerly (same pruning as svc_forecast_request).
+    models = train_models(
         _daily_series(spark, sf_dir).filter(F.col("branch") <= 10),
         cutoff=CUTOFF,
     )

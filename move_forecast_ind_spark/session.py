@@ -122,11 +122,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a local session sized for this machine."""
     cpus = default_parallelism()
+    # local mode: the driver JVM is the whole engine; give it half the RAM
+    half_ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", f"{half_ram_mb}m"),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # LOCAL-ONLY (this builder always constructs local[N]): shuffle

@@ -31,8 +31,9 @@ def test_forecasts_are_sane_and_deterministic(spark, historical_means, qname):
 
     fn = REGISTRY[qname].fn
     rows = fn(spark, SF_SMALL).collect()
-    # 10 branches × 7 days, minus branches with no usable training series
-    # at this scale factor (the <2-rows guard drops them from the registry)
+    # 10 branches × 7 days, minus branches with too short a training series
+    # at this scale factor (the linreg <2-rows and Fourier <30-days guards
+    # drop them from the registry)
     assert rows and len(rows) % 7 == 0 and len(rows) <= 70
     assert {r.branch for r in rows} <= set(range(1, 11))
     again = fn(spark, SF_SMALL).collect()
@@ -56,85 +57,53 @@ def test_fourier_upper_bound_above_point(spark):
     assert all(r.yhat_upper >= r.yhat for r in rows)
 
 
-def test_prophet_tier_gated_cleanly(spark):
-    """The reference-exact Prophet tier must fail with a clear
-    NotImplementedError when the library is absent (import-try gate)."""
-    import pytest as _pytest
+def _synthetic_daily(spark, n_days: int, branch: int = 1, y=None):
+    """(branch, ds, y) for ``n_days`` consecutive days from 1998-01-01."""
+    import datetime as dt
 
-    from move_forecast_ind_spark.plans.training import train_prophet_models
-    from move_forecast_ind_spark.queries.ml import _daily_series
-
-    try:
-        import prophet  # noqa: F401
-
-        _pytest.skip("prophet installed; gate not exercised")
-    except ImportError:
-        pass
-    with _pytest.raises(NotImplementedError):
-        train_prophet_models(_daily_series(spark, SF_SMALL), cutoff="1998-12-31")
-
-
-FAKE_PROPHET_SRC = '''
-"""Minimal stand-in for the prophet package (test fixture): records the
-constructor kwargs and the fitted row count, picklable by stdlib pickle."""
-
-
-class Prophet:
-    def __init__(self, **kwargs):
-        self.kwargs = kwargs
-
-    def fit(self, df):
-        assert list(df.columns) == ["ds", "y"]
-        self.n_obs = len(df)
-        return self
-'''
-
-
-def test_prophet_tier_wiring_with_fake_module(spark, tmp_path):
-    """The reference-exact Prophet tier can't execute here (prophet not
-    installed), but its Spark wiring — groupBy().applyInPandas with the
-    registry schema, the reference's hyperparameters — must be real. Ship a
-    minimal fake `prophet` module to driver + workers and run the plan
-    end-to-end."""
-    import pickle
-    import sys
-
-    from pyspark.sql import functions as F
-
-    from move_forecast_ind_spark.plans.training import (
-        PROPHET_PARAMS,
-        train_prophet_models,
+    d0 = dt.date(1998, 1, 1)
+    return spark.createDataFrame(
+        [
+            (branch, d0 + dt.timedelta(days=i), float(y if y is not None else 10 + i % 7))
+            for i in range(n_days)
+        ],
+        "branch long, ds date, y double",
     )
 
-    mod = tmp_path / "prophet.py"
-    mod.write_text(FAKE_PROPHET_SRC)
-    spark.sparkContext.addPyFile(str(mod))  # importable in executors
-    saved_path = list(sys.path)
-    sys.path.insert(0, str(tmp_path))  # importable in the driver
-    sys.modules.pop("prophet", None)
+
+def test_fit_requires_min_obs_days(spark):
+    """A 12-coefficient system needs MIN_OBS_Q (30) training days: a
+    29-day branch gets no model row, a 30-day branch gets one."""
+    from move_forecast_ind_spark.plans.training import MIN_OBS_Q, train_models
+
+    assert MIN_OBS_Q == 30
+    daily = _synthetic_daily(spark, 29, branch=1).unionByName(
+        _synthetic_daily(spark, 30, branch=2)
+    )
+    rows = train_models(daily, cutoff="1998-12-31").collect()
+    assert [(r.branch, r.n_obs, len(r.coeffs)) for r in rows] == [(2, 30, 12)]
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_fit_refuses_long_overflow(spark, ansi):
+    """y ~ 4e12 puts the quantized y'y past a long. Under ANSI mode Spark's
+    own overflow check fires; with ANSI off the long sum wraps silently and
+    the driver guard must raise OverflowError. Either way, no model row."""
+    from move_forecast_ind_spark.plans.training import train_models
+
+    daily = _synthetic_daily(spark, 40, y=4e12)
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
-        daily = spark.createDataFrame(
-            [
-                (b, f"2020-01-{d:02d}", float(10 * b + d))
-                for b in (1, 2)
-                for d in range(1, 11)
-            ],
-            "branch long, ds string, y double",
-        ).select("branch", F.col("ds").cast("date").alias("ds"), "y")
-
-        models = train_prophet_models(daily, cutoff="2020-01-31")
-        rows = {r.branch: r for r in models.collect()}
+        with pytest.raises(Exception) as ei:
+            train_models(daily, cutoff="1998-12-31")
     finally:
-        # restore the no-prophet state so the clean-gate test stays valid
-        sys.modules.pop("prophet", None)
-        sys.path[:] = saved_path
-
-    assert set(rows) == {1, 2}
-    for r in rows.values():
-        m = pickle.loads(bytes(r.model_bytes))
-        # hyperparameters flowed through to the (fake) fit, per branch
-        assert m.kwargs == PROPHET_PARAMS
-        assert m.n_obs == 10
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    if ansi == "false":
+        assert ei.type is OverflowError
+        assert "branch 1" in str(ei.value)
+    else:
+        assert "ARITHMETIC_OVERFLOW" in str(ei.value)
 
 
 def test_holt_winters_internal_consistency(spark):

@@ -135,3 +135,80 @@ def test_unknown_path_404(server):
     with pytest.raises(urllib.error.HTTPError) as e:
         _post(server, "/nope/", {})
     assert e.value.code == 404
+
+
+# Builds the serving context the way `serve` does, from a cwd outside the
+# repo with the package importable only through sys.path, serves one
+# move-type and one branch-level forecast, and lists the process tree.
+OUTSIDE_REPO_SERVE = r'''
+import datetime as dt, json, os, sys
+sys.path.insert(0, sys.argv[1])
+from move_forecast_ind_spark.plans.percentages import compute_percentages
+from move_forecast_ind_spark.plans.training import train_models
+from move_forecast_ind_spark.queries.ml import CUTOFF, _daily_series
+from move_forecast_ind_spark.server import ServingContext, forecast_response_dict
+from move_forecast_ind_spark.session import get_spark
+from move_forecast_ind_spark.sources import load_table
+
+sf = sys.argv[2]
+spark = get_spark("outside-repo")
+li = load_table(spark, sf, "lineitem").cache()
+ctx = ServingContext(
+    spark=spark,
+    models=train_models(_daily_series(spark, sf), cutoff=CUTOFF).cache(),
+    pct=compute_percentages(
+        li, branch_col="l_suppkey", type_col="l_returnflag",
+        date_col="l_shipdate", count_col="l_quantity",
+    ).cache(),
+    facts=li, branch_col="l_suppkey", date_col="l_shipdate",
+    count_col="l_quantity", type_col="l_returnflag",
+    today=dt.date(1999, 6, 1), max_date=dt.date(1999, 7, 31),
+    years=(1995, 2000),
+)
+windows = [
+    len(forecast_response_dict(
+        ctx, {"date": "1999-06-03", "branch": 7, "move_type": mt}
+    )["predicted_summary"])
+    for mt in ("R", None)
+]
+
+children = {}
+for pid in filter(str.isdigit, os.listdir("/proc")):
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            cmd = f.read().replace(b"\0", b" ").decode(errors="replace")
+    except OSError:
+        continue
+    children.setdefault(ppid, []).append((int(pid), cmd))
+descendants, todo = [], [os.getpid()]
+while todo:
+    for pid, cmd in children.get(todo.pop(), []):
+        descendants.append(cmd)
+        todo.append(pid)
+print(json.dumps({"windows": windows, "descendants": descendants}))
+spark.stop()
+'''
+
+
+def test_serves_from_outside_repo_without_python_workers(tmp_path):
+    """A driver started outside the repo root, with the package on sys.path
+    only, serves /forecast/: the serve path (fit included) runs no Python
+    worker, so no pyspark.daemon is ever started and nothing in a worker
+    has to import the package."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", OUTSIDE_REPO_SERVE, repo, SF_SMALL],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["windows"] == [7, 7]
+    assert [c for c in out["descendants"] if "SparkSubmit" in c], out  # the JVM
+    assert not [c for c in out["descendants"] if "pyspark.daemon" in c], out

@@ -60,6 +60,26 @@ def test_forecast_request_end_to_end(spark, models, pct):
     assert set(j) == {"branch", "move_type", "daily_forecast", "summary"}
 
 
+def test_forecast_response_branch_level(spark, models, pct):
+    """A branch-level request (move_type None) has a NULL move_type key on
+    both sides of the response join: it must still give one row with the
+    full 7-day window."""
+    from move_forecast_ind_spark.plans.service import (
+        forecast_request,
+        forecast_response,
+    )
+
+    daily, summary = forecast_request(
+        spark, models, pct, date="1999-06-03", branch=7, move_type=None,
+        today=TODAY, max_date=MAX,
+    )
+    resp = forecast_response(daily, summary).collect()
+    assert len(resp) == 1
+    assert resp[0].branch == 7 and resp[0].move_type is None
+    assert len(resp[0].daily_forecast) == 7
+    assert resp[0].summary.n_days == 7
+
+
 def test_forecast_window_clamps_at_horizon(spark, models, pct):
     from move_forecast_ind_spark.plans.service import forecast_request
 
