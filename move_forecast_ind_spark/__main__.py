@@ -13,8 +13,9 @@ two ways: a CLI over the request shapes, and a real HTTP server
     python -m move_forecast_ind_spark serve    --port 8000
     python -m move_forecast_ind_spark list-queries
 
-Output is one JSON document on stdout (the S7 response shape); errors exit 2
-with the validation message (the HTTP-400 analog).
+Output is one JSON document on stdout; ``forecast`` prints exactly the
+POST /forecast/ response body ``serve`` would send for the same request.
+Errors exit 2 with the validation message (the HTTP-400 analog).
 """
 
 from __future__ import annotations
@@ -36,32 +37,45 @@ def _spark():
     return get_spark("move_forecast_ind_spark.cli")
 
 
-def cmd_forecast(args) -> int:
+def _serving_context(args):
+    """The serving context ``serve`` answers from, built from the CLI args."""
     from .plans.percentages import compute_percentages
-    from .plans.service import RequestError, forecast_request, forecast_response
     from .plans.training import train_models
     from .queries.ml import CUTOFF, _daily_series
+    from .server import ServingContext
     from .sources import load_table
 
     spark = _spark()
-    li = load_table(spark, args.sf_dir, "lineitem")
-    pct = compute_percentages(
-        li, branch_col="l_suppkey", type_col="l_returnflag",
-        date_col="l_shipdate", count_col="l_quantity",
+    li = load_table(spark, args.sf_dir, "lineitem").cache()
+    return ServingContext(
+        spark=spark,
+        models=train_models(_daily_series(spark, args.sf_dir), cutoff=CUTOFF).cache(),
+        pct=compute_percentages(
+            li, branch_col="l_suppkey", type_col="l_returnflag",
+            date_col="l_shipdate", count_col="l_quantity",
+        ).cache(),
+        facts=li,
+        branch_col="l_suppkey",
+        date_col="l_shipdate",
+        count_col="l_quantity",
+        type_col="l_returnflag",
+        today=dt.date.fromisoformat(args.today),
+        max_date=dt.date.fromisoformat(args.max_date),
+        years=(1995, 2000),
     )
-    models = train_models(_daily_series(spark, args.sf_dir), cutoff=CUTOFF)
+
+
+def cmd_forecast(args) -> int:
+    from .plans.service import RequestError
+    from .server import forecast_response_dict
+
+    body = {"date": args.date, "branch": args.branch, "move_type": args.move_type}
     try:
-        daily, summary = forecast_request(
-            spark, models, pct,
-            date=args.date, branch=args.branch, move_type=args.move_type,
-            today=dt.date.fromisoformat(args.today),
-            max_date=dt.date.fromisoformat(args.max_date),
-        )
+        out = forecast_response_dict(_serving_context(args), body)
     except RequestError as e:
         print(json.dumps({"error": str(e)}), file=sys.stderr)
         return 2
-    # collect, not RDD.first(): first() runs a Python worker
-    print(forecast_response(daily, summary).toJSON().collect()[0])
+    print(json.dumps(out))
     return 0
 
 
@@ -105,31 +119,9 @@ def cmd_pct_etl(args) -> int:
 
 
 def cmd_serve(args) -> int:
-    from .plans.percentages import compute_percentages
-    from .plans.training import train_models
-    from .queries.ml import CUTOFF, _daily_series
-    from .server import ServingContext, serve
-    from .sources import load_table
+    from .server import serve
 
-    spark = _spark()
-    li = load_table(spark, args.sf_dir, "lineitem").cache()
-    ctx = ServingContext(
-        spark=spark,
-        models=train_models(_daily_series(spark, args.sf_dir), cutoff=CUTOFF).cache(),
-        pct=compute_percentages(
-            li, branch_col="l_suppkey", type_col="l_returnflag",
-            date_col="l_shipdate", count_col="l_quantity",
-        ).cache(),
-        facts=li,
-        branch_col="l_suppkey",
-        date_col="l_shipdate",
-        count_col="l_quantity",
-        type_col="l_returnflag",
-        today=dt.date.fromisoformat(args.today),
-        max_date=dt.date.fromisoformat(args.max_date),
-        years=(1995, 2000),
-    )
-    srv = serve(ctx, host=args.host, port=args.port)
+    srv = serve(_serving_context(args), host=args.host, port=args.port)
     print(
         json.dumps({"serving": f"http://{srv.server_address[0]}:{srv.server_address[1]}"}),
         flush=True,

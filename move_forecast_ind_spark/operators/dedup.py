@@ -368,45 +368,23 @@ def _finish_pairs(
     )
 
 
-def _pairs_in_row(ds: str) -> F.Column:
-    """All (a < b) combinations of a sorted id array, built in-row: the
-    shared expansion for every bucketed candidate generator (LSH bands,
-    simhash chunks, winnowing fingerprints). Work per bucket is |ds|² —
-    callers bound |ds| (max_df fence / bucket width) before expanding.
-    ``ds`` is a column NAME (every caller passes one); a single expr
-    string replaces the two nested Column-lambda HOFs (one gateway
-    roundtrip to build instead of dozens per lambda).
-
-    Prefer :func:`expand_pairs` on the hot candidate paths: this
-    Column-level form materializes the whole |ds|² struct array per row
-    inside interpreted HOFs before the explode, where the two-generator
-    form streams pairs through codegen (r14 A/B below)."""
-    return F.expr(
-        f"flatten(transform({ds}, (x, i) -> "
-        f"transform(slice({ds}, i + 2, greatest(size({ds}) - i - 1, 0)), "
-        f"y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-
-
 def expand_pairs(
     buckets: DataFrame, ds: str = "ds", a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
-    """All (a < b) combinations of each row's sorted id array — the same
-    pair set :func:`_pairs_in_row` yields, produced by TWO chained
-    generators instead of one interpreted HOF tree:
+    """All (a < b) combinations of each row's sorted id array — element i
+    paired with every later element of the same array — from TWO chained
+    generators:
 
         posexplode(ds) → (i, a);  explode(slice(ds, i+2, ...)) → b
 
-    Why (r14 A/B, sf0.1 ahash buckets, 53 rows / 3.0 M pairs, noop sink,
-    warm min-of-3): the HOF form builds the FULL |ds|²-struct array in
-    memory per row inside interpreted ``flatten(transform(...))``
-    (expression interpreter, no codegen for nested lambdas) before the
-    explode streams it out — 0.57 s expand / 1.99 s with the distinct.
-    The generator form never materializes the pair array (each Generate
-    pipelines row-at-a-time through whole-stage codegen): 0.17 s / 0.79 s.
-    A per-bucket self-join measured between the two (0.70 s / 1.43 s).
-    Values identical: element i paired with every later element of the
-    same sorted array — the exact (a < b) set, row-for-row.
+    The shared expansion for every bucketed candidate generator (LSH
+    bands, simhash chunks, winnowing fingerprints). Work per row is
+    |ds|², so callers bound |ds| (max_df fence / bucket width) first.
+    The generators pipeline row-at-a-time through whole-stage codegen and
+    never materialize the pair array; an in-row ``flatten(transform(...))``
+    form builds the whole |ds|² struct array per row in the expression
+    interpreter (sf0.1 ahash buckets, 3.0 M pairs, noop sink: 0.17 s
+    against 0.57 s; a per-bucket self-join 0.70 s).
 
     Output has exactly the two pair columns; callers ``.distinct()`` or
     aggregate as before."""

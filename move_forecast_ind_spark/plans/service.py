@@ -2,7 +2,7 @@
 
 `forecast_request` is the full POST /forecast/ path (reference
 main.py:187-338) and `trends_request` the full POST /historical_trends/
-(main.py:340-403) — each as ONE Spark job over the lake instead of ~30
+(main.py:340-403) — each one Spark plan over the lake instead of ~30
 (resp. 6) Postgres round-trips, with the clock injected (no hidden
 ``datetime.now()``, SURVEY §5.4) and every validation rule preserved:
 
@@ -14,8 +14,12 @@ main.py:187-338) and `trends_request` the full POST /historical_trends/
 6. per-day forecast → pct fallback chain → comment  main.py:230-288
 7. period summary + average daily moves             main.py:290-332
 
-Output is the nested response DataFrame; ``.toJSON()`` on it yields the
-API-boundary JSON (S7).
+`forecast_batch` is the one forecast planner; a single request is a
+one-row batch. Collecting a request's daily rows, its branch probe
+included, runs 11 Spark jobs with a known move type (AQE runs each
+shuffle stage and broadcast build as its own job), 10 with an unknown
+one and 3 branch-level, where the NULL move type lets the optimizer drop
+the percentage joins (sf0.001 and sf0.01, counted per job group).
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.datetime_fns import forecast_window
+from ..functions.datetime_fns import forecast_window, forecast_window_cols
 from .forecast_tail import forecast_summary, forecast_tail
 from .percentages import month_grain_percentages
 from .training import score
@@ -54,9 +58,8 @@ def forecast_request(
 ) -> tuple[DataFrame, DataFrame]:
     """Full forecast request → (daily rows, summary rows).
 
-    Validation mirrors the reference exactly; the compute is: clamp window →
-    score the branch's model over the date spine → tail (two broadcast
-    joins + fallback chain + banding + phrases) → summary aggregate.
+    The 400s (rules 1-3) raise here, eagerly; the rest is a one-row
+    :func:`forecast_batch`, which also does the silent move-type demotion.
     """
     input_date = parse_date(date)
     if input_date > max_date:
@@ -67,77 +70,13 @@ def forecast_request(
     if models.filter(F.col("branch") == branch).isEmpty():
         raise RequestError(f"unknown branch {branch!r}")
 
-    # unknown move_type → None (100 %), the silent demotion (main.py:204-209)
-    if move_type is not None:
-        unknown = (
-            pct.select("move_type")
-            .filter(F.col("move_type") == move_type)
-            .limit(1)
-            .isEmpty()
-        )
-        if unknown:
-            move_type = None
-
-    start, end = forecast_window(input_date, today, max_date)
-    spine = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(str(start)).cast("date"),
-                F.lit(str(end)).cast("date"),
-                F.expr("interval 1 day"),
-            )
-        ).alias("ds")
-    ).withColumn("branch", F.lit(branch).cast("long"))
-
-    scored = score(models.filter(F.col("branch") == branch), spine)
-    frame = scored.select(
-        "branch",
+    request = spark.range(1).select(
+        F.lit(branch).cast("long").alias("branch"),
         F.lit(move_type).cast("string").alias("move_type"),
-        # The scaling percentage resolves at the REQUEST's input date, even
-        # when the window was clamped to start later (main.py:239-243).
         F.lit(str(input_date)).cast("date").alias("input_date"),
-        "ds",
-        # The reference clips and half-up-rounds the upper bound to an
-        # integer Count BEFORE any scaling (main.py:234-236: clip(0).
-        # round().astype(int)); final = round(pct/100 * Count) and
-        # implied% = final/Count — so the tail must see the integer, not
-        # the raw yhat_upper (score() computes it as `count`). Feeding the
-        # fractional bound shifts predicted_moves by ±1 and can flip the
-        # ±5pp comment band.
-        F.col("count").cast("double").alias("branch_forecast"),
     )
-    mon = month_grain_percentages(pct)
-    daily = forecast_tail(frame, pct, mon)
+    daily = forecast_batch(spark, models, pct, request, today, max_date)
     return daily, forecast_summary(daily)
-
-
-def forecast_response(daily: DataFrame, summary: DataFrame) -> DataFrame:
-    """S7: one nested row — the API response shape (main.py:321-332)."""
-    days = daily.select(
-        "branch",
-        "move_type",
-        F.struct(
-            F.date_format("ds", "yyyy-MM-dd").alias("date"),
-            F.col("predicted_moves").alias("count"),
-            F.col("comment"),
-        ).alias("day"),
-    ).groupBy("branch", "move_type").agg(
-        F.array_sort(F.collect_list("day")).alias("daily_forecast")
-    ).alias("d")
-    s = summary.alias("s")
-    # move_type is NULL for a branch-level request: join null-safely.
-    return s.join(
-        days,
-        (F.col("s.branch") == F.col("d.branch"))
-        & F.col("s.move_type").eqNullSafe(F.col("d.move_type")),
-    ).select(
-        "s.branch",
-        "s.move_type",
-        "d.daily_forecast",
-        F.struct(
-            "total_predicted_moves", "average_daily_moves", "avg_pct_used", "n_days"
-        ).alias("summary"),
-    )
 
 
 def trends_request(
@@ -183,25 +122,20 @@ def forecast_batch(
     today: dt.date,
     max_date: dt.date,
 ) -> DataFrame:
-    """MANY forecast requests as ONE Spark job — the serving-layer scale
-    story. The reference handles one request per HTTP call with ~30 DB
-    round-trips each; here a whole batch plans together:
+    """Many forecast requests as one Spark plan; every forecast, single
+    requests included, goes through here:
 
-    requests → per-row window clamp (column expressions) → explode each
-    window into its date spine → semi-join the registry (drops unknown
-    branches, the reference's 400 path) → score → tail. Cost is one plan
-    regardless of batch size.
+    requests → demote unknown move types → per-row window clamp (column
+    expressions) → explode each window into its date spine → score (its
+    registry join drops unknown branches, the reference's 400 path) → tail.
+    Requests past ``max_date`` are dropped. Cost is one plan regardless of
+    batch size.
     """
-    from pyspark.sql import functions as F
-
-    from ..functions.datetime_fns import forecast_window_cols
-    from .percentages import month_grain_percentages
-
     t = F.lit(str(today)).cast("date")
     m = F.lit(str(max_date)).cast("date")
 
-    # The silent unknown-move_type demotion (main.py:204-209), batched: a
-    # type absent from the percentage table becomes NULL => the 100% path.
+    # The silent unknown-move_type demotion (main.py:204-209): a type
+    # absent from the percentage table becomes NULL => the 100% path.
     known_types = pct.select("move_type").distinct().alias("k")
     requests = (
         requests.alias("q")
@@ -220,39 +154,27 @@ def forecast_batch(
     )
 
     start, end = forecast_window_cols(F.col("input_date"), t, m)
-    windows = requests.filter(F.col("input_date") <= m).select(
+    spine = requests.filter(F.col("input_date") <= m).select(
         "branch",
         "move_type",
         "input_date",
-        start.alias("w_start"),
-        end.alias("w_end"),
+        F.explode(F.sequence(start, end, F.expr("interval 1 day"))).alias("ds"),
     )
-    spine = windows.select(
+    frame = score(models, spine).select(
         "branch",
         "move_type",
+        # The scaling percentage resolves at the REQUEST's input date, even
+        # when the window was clamped to start later (main.py:239-243), so
+        # the tail is keyed by the full request identity.
         "input_date",
-        F.explode(
-            F.sequence(F.col("w_start"), F.col("w_end"), F.expr("interval 1 day"))
-        ).alias("ds"),
+        "ds",
+        # The reference clips and half-up-rounds the upper bound to an
+        # integer Count BEFORE any scaling (main.py:234-236: clip(0).
+        # round().astype(int)); final = round(pct/100 * Count) and
+        # implied% = final/Count — so the tail must see the integer, not
+        # the raw yhat_upper (score() computes it as `count`). Feeding the
+        # fractional bound shifts predicted_moves by ±1 and can flip the
+        # ±5pp comment band.
+        F.col("count").cast("double").alias("branch_forecast"),
     )
-    known = spine.join(
-        models.select("branch"), on="branch", how="left_semi"
-    )
-    scored = score(models, known.select("branch", "ds").distinct())
-    frame = (
-        known.join(scored, on=["branch", "ds"])
-        .select(
-            "branch",
-            "move_type",
-            "input_date",
-            "ds",
-            # integer Count, not raw yhat_upper — see forecast_request
-            F.col("count").cast("double").alias("branch_forecast"),
-        )
-    )
-    # The tail is keyed by the full request identity (branch, move_type,
-    # input_date, ds) — the scaling percentage depends on the request's
-    # input date, so requests with overlapping windows but different input
-    # dates legitimately produce different rows. forecast_tail carries
-    # input_date through, so no re-attach join is needed.
     return forecast_tail(frame, pct, month_grain_percentages(pct))

@@ -189,9 +189,10 @@ def train_models(
 
 
 def score(models: DataFrame, frame: DataFrame) -> DataFrame:
-    """Score a (branch, ds) frame: yhat, yhat_upper, and the reference's
-    final Count post-processing (keep upper bound, clip ≥ 0, half-up round,
-    cast long — main.py:234-236 P1+F8+F9)."""
+    """Score a frame with (branch, ds) columns: its columns plus yhat,
+    yhat_upper, and the reference's final Count post-processing (keep upper
+    bound, clip ≥ 0, half-up round, cast long — main.py:234-236 P1+F8+F9).
+    Rows of branches absent from ``models`` are dropped."""
     from ..functions.rounding import r4, round_count
 
     dot = F.aggregate(
@@ -205,8 +206,7 @@ def score(models: DataFrame, frame: DataFrame) -> DataFrame:
     return (
         frame.join(F.broadcast(models), on="branch")
         .select(
-            "branch",
-            "ds",
+            *frame.columns,
             r4(dot).alias("yhat"),
             r4(upper).alias("yhat_upper"),
             round_count(F.greatest(upper, F.lit(0.0))).alias("count"),

@@ -14,22 +14,24 @@ response JSON over a thread pool:
 Error mapping mirrors the reference: validation failures → 400 with a
 ``detail`` string, unexpected failures → 500 (main.py:425-430). The clock
 and horizon are injected through :class:`ServingContext` (no hidden
-``datetime.now()`` — SURVEY.md §5.4), and every request plans ONE Spark job
-through plans.service instead of ~30 DB round-trips.
+``datetime.now()`` — SURVEY.md §5.4), and every request plans one Spark
+query through plans.service instead of ~30 DB round-trips: a /forecast/
+runs 3 to 11 Spark jobs (see plans.service), a /historical_trends/ 7
+(sf0.001, counted per job group).
 
 The ≤7-row ``.collect()`` per request happens at the API boundary only —
-that is the response payload, not a pipeline stage.
+that is the response payload, and the period totals are summed from it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import math
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .functions.datetime_fns import forecast_window
 from .plans.service import RequestError, forecast_request, parse_date, trends_request
@@ -83,8 +85,6 @@ class ServingContext:
 
 
 def _round_half_up(x: float, scale: int = 1) -> float:
-    import math
-
     p = 10.0**scale
     return math.floor(x * p + 0.5) / p
 
@@ -107,15 +107,20 @@ def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
     """POST /forecast/ — the reference's response shape (main.py:320-332)."""
     date, branch, move_type = _request_fields(body)
 
-    daily, summary = forecast_request(
+    daily, _ = forecast_request(
         ctx.spark, ctx.models, ctx.pct, date=date, branch=branch,
         move_type=move_type, today=ctx.today, max_date=ctx.max_date,
     )
     rows = sorted(daily.collect(), key=lambda r: r.ds)  # ≤7 rows: the payload
     if not rows:
         raise RequestError(f"no forecastable window for {date!r}")
-    srow = summary.collect()[0]
     served_move_type = rows[0].move_type  # None after silent demotion
+
+    # Period totals (main.py:290-291), as plans.forecast_tail.forecast_summary
+    # computes them: Spark's avg of ≤7 small longs is an exact double sum
+    # over an exact double count, half-up rounded.
+    total = sum(r.predicted_moves for r in rows)
+    average = math.floor(total / len(rows) + 0.5)
 
     # Period summary comment (reference main.py:292-318): current share vs
     # the window's mean historical share, banded at ±5 pp.
@@ -123,11 +128,7 @@ def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
     if served_move_type is None:
         summary_comment = SUMMARY_NO_MOVE_TYPE.format(branch=branch)
     else:
-        current = (
-            100.0 * srow.total_predicted_moves / total_forecast
-            if total_forecast > 0
-            else 0.0
-        )
+        current = 100.0 * total / total_forecast if total_forecast > 0 else 0.0
         hist_avg = sum(r.hist_avg for r in rows) / len(rows)
         diff = current - hist_avg
         band = "consistent" if abs(diff) <= 5 else ("stronger" if diff > 5 else "weaker")
@@ -154,8 +155,8 @@ def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
             }
             for r in rows
         ],
-        "total_predicted_moves": int(srow.total_predicted_moves),
-        "average_daily_moves": int(srow.average_daily_moves),
+        "total_predicted_moves": total,
+        "average_daily_moves": average,
         "summary_comment": summary_comment,
     }
 

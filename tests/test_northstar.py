@@ -607,15 +607,13 @@ def test_minhash_verify_cap_explode_branch_matches_broadcast(spark, monkeypatch)
     assert len(broadcast_out) >= 8
 
 
-def test_expand_pairs_matches_in_row_hof(spark):
-    """r14: the two-generator pair expansion (expand_pairs) must yield
-    EXACTLY the pair set of the in-row HOF form (_pairs_in_row) it
-    replaced on the candidate paths — including width-1 arrays (no
-    pairs), width-2, ties in values, and a wide bucket."""
-    from move_forecast_ind_spark.operators.dedup import (
-        _pairs_in_row,
-        expand_pairs,
-    )
+def test_expand_pairs_matches_python_combinations(spark):
+    """expand_pairs yields exactly the (a < b) position pairs of each
+    row's array, as a multiset — including width-1 arrays (no pairs),
+    width-2, ties in values, and a wide bucket."""
+    from itertools import combinations
+
+    from move_forecast_ind_spark.operators.dedup import expand_pairs
 
     rows = [
         (1, [10]),                      # width 1: no pairs
@@ -624,11 +622,8 @@ def test_expand_pairs_matches_in_row_hof(spark):
         (4, list(range(100, 140))),     # wide bucket: 780 pairs
         (5, []),                        # empty: no pairs
     ]
-    buckets = spark.createDataFrame(rows, ["bid", "ds"])
-    new = expand_pairs(buckets)
-    old = buckets.select(F.explode(_pairs_in_row("ds")).alias("p")).select(
-        "p.doc_a", "p.doc_b"
-    )
+    got = expand_pairs(spark.createDataFrame(rows, ["bid", "ds"])).collect()
+    expected = [p for _, ds in rows for p in combinations(ds, 2)]
     # multiset equality: same rows AND same multiplicities
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
-    assert new.count() == 1 + 3 + 780
+    assert sorted(map(tuple, got)) == sorted(expected)
+    assert len(got) == 1 + 3 + 780

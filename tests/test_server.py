@@ -11,7 +11,6 @@ import urllib.error
 import urllib.request
 
 import pytest
-from pyspark.sql import functions as F
 
 from conftest import SF_SMALL
 
@@ -20,15 +19,15 @@ MAX = dt.date(1999, 7, 31)
 
 
 @pytest.fixture(scope="module")
-def server(spark):
+def ctx(spark):
     from move_forecast_ind_spark.plans.percentages import compute_percentages
     from move_forecast_ind_spark.plans.training import train_models
     from move_forecast_ind_spark.queries.ml import _daily_series
-    from move_forecast_ind_spark.server import ServingContext, serve
+    from move_forecast_ind_spark.server import ServingContext
     from move_forecast_ind_spark.sources import load_table
 
     li = load_table(spark, SF_SMALL, "lineitem").cache()
-    ctx = ServingContext(
+    yield ServingContext(
         spark=spark,
         models=train_models(_daily_series(spark, SF_SMALL), cutoff="1998-12-31").cache(),
         pct=compute_percentages(
@@ -43,17 +42,24 @@ def server(spark):
         max_date=MAX,
         years=(1995, 1998),
     )
+    # Uncache everything, the CLI's serving context included: a cached
+    # lineitem would make every later scan of the same parquet an
+    # InMemoryRelation, hiding PushedFilters from the plan-shape tests
+    # (order-dependent cross-test leak).
+    spark.catalog.clearCache()
+
+
+@pytest.fixture(scope="module")
+def server(ctx):
+    from move_forecast_ind_spark.server import serve
+
     srv = serve(ctx)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
     srv.shutdown()
-    # Unpersist: a cached lineitem would make every later scan of the same
-    # parquet an InMemoryRelation, hiding PushedFilters from the
-    # plan-shape tests (order-dependent cross-test leak).
-    ctx.models.unpersist()
-    ctx.pct.unpersist()
-    li.unpersist()
+    t.join(timeout=60)
+    assert not t.is_alive()
 
 
 def _post(url: str, path: str, body: dict):
@@ -101,6 +107,86 @@ def test_forecast_unknown_move_type_demoted(server):
     assert status == 200
     assert out["move_type"] is None
     assert out["summary_comment"].startswith("Branch-level forecast")
+
+
+def _days(counts, comments):
+    return [
+        {"date": f"1999-06-0{i + 1}", "predicted_moves": n, "comment": c}
+        for i, (n, c) in enumerate(zip(counts, comments))
+    ]
+
+
+# Served JSON for branch 7 on 1999-06-03 at sf0.001, captured from the
+# separate single-request planner the one-row batch replaced.
+PINNED_R = {
+    "branch": 7,
+    "move_type": "R",
+    "forecast_window": {"start_date": "1999-06-01", "end_date": "1999-06-07"},
+    "predicted_summary": _days(
+        [27, 28, 27, 27, 28, 27, 27],
+        [
+            "volumes trending below the seasonal average (87.0% hist, 55.1% now)",
+            "demand is running behind the usual pace (100.0% hist, 56.0% now)",
+            "expect a typical day for this season (55.6% hist, 56.3% now)",
+            "volumes trending above the seasonal average (0.0% hist, 56.3% now)",
+            "demand is running behind the usual pace (90.9% hist, 56.0% now)",
+            "expect a quieter day than the historical norm (100.0% hist, 55.1% now)",
+            "volumes trending below the seasonal average (83.3% hist, 56.3% now)",
+        ],
+    ),
+    "total_predicted_moves": 191,
+    "average_daily_moves": 27,
+    "summary_comment": "R volume share is running light at branch 7 (55.8% against 73.8%)",
+}
+PINNED_BRANCH_LEVEL = {
+    "branch": 7,
+    "move_type": None,
+    "forecast_window": {"start_date": "1999-06-01", "end_date": "1999-06-07"},
+    "predicted_summary": _days(
+        [49, 50, 48, 48, 50, 49, 48],
+        ["branch-level forecast; no move type specified"] * 7,
+    ),
+    "total_predicted_moves": 342,
+    "average_daily_moves": 49,
+    "summary_comment": "Branch-level forecast for branch 7, all move types combined.",
+}
+PINNED = {"R": PINNED_R, None: PINNED_BRANCH_LEVEL, "ZZ": PINNED_BRANCH_LEVEL}
+
+
+@pytest.mark.skipif(not SF_SMALL.endswith("sf0.001"), reason="pinned at sf0.001")
+def test_forecast_served_json_pinned(server):
+    """The served bytes for a typed, a branch-level and a demoted request."""
+    for move_type, expected in PINNED.items():
+        body = {"date": "1999-06-03", "branch": 7, "move_type": move_type}
+        req = urllib.request.Request(
+            server + "/forecast/", data=json.dumps(body).encode(), method="POST"
+        )
+        with urllib.request.urlopen(req) as resp:
+            assert resp.read() == json.dumps(expected).encode()
+
+
+def test_cli_forecast_prints_served_json(spark, ctx, capsys):
+    """``forecast`` prints the /forecast/ response JSON; an unknown branch
+    exits 2 with the 400 detail on stderr."""
+    from move_forecast_ind_spark.__main__ import main
+    from move_forecast_ind_spark.server import forecast_response_dict
+
+    argv = ["forecast", "--date", "1999-06-03", "--sf-dir", SF_SMALL,
+            "--today", str(TODAY), "--max-date", str(MAX)]
+    # the CLI builds its session with get_spark's defaults: restore ours
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for move_type in PINNED:
+            extra = [] if move_type is None else ["--move-type", move_type]
+            assert main([*argv, "--branch", "7", *extra]) == 0
+            body = {"date": "1999-06-03", "branch": 7, "move_type": move_type}
+            expected = json.dumps(forecast_response_dict(ctx, body))
+            assert capsys.readouterr().out == expected + "\n"
+        assert main([*argv, "--branch", "999"]) == 2
+        err = capsys.readouterr()
+        assert err.out == "" and "unknown branch" in err.err
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
 
 
 def test_forecast_validation_errors(server):

@@ -34,10 +34,7 @@ def pct(spark):
 
 
 def test_forecast_request_end_to_end(spark, models, pct):
-    from move_forecast_ind_spark.plans.service import (
-        forecast_request,
-        forecast_response,
-    )
+    from move_forecast_ind_spark.plans.service import forecast_request
 
     daily, summary = forecast_request(
         spark, models, pct, date="1999-06-03", branch=7, move_type="R",
@@ -45,39 +42,39 @@ def test_forecast_request_end_to_end(spark, models, pct):
     )
     rows = daily.collect()
     assert len(rows) == 7  # full window fits
+    assert all(r.move_type == "R" for r in rows)
     assert all(r.predicted_moves >= 0 for r in rows)
     assert all(r.band in ("stronger", "consistent", "weaker") for r in rows)
     s = summary.collect()
     assert len(s) == 1 and s[0].n_days == 7
-    resp = forecast_response(daily, summary).collect()
-    assert len(resp) == 1
-    assert len(resp[0].daily_forecast) == 7
-    assert resp[0].summary.total_predicted_moves == sum(r.predicted_moves for r in rows)
-    # JSON boundary (S7)
-    import json
-
-    j = json.loads(forecast_response(daily, summary).toJSON().first())
-    assert set(j) == {"branch", "move_type", "daily_forecast", "summary"}
+    assert s[0].total_predicted_moves == sum(r.predicted_moves for r in rows)
 
 
 def test_forecast_response_branch_level(spark, models, pct):
-    """A branch-level request (move_type None) has a NULL move_type key on
-    both sides of the response join: it must still give one row with the
-    full 7-day window."""
-    from move_forecast_ind_spark.plans.service import (
-        forecast_request,
-        forecast_response,
-    )
+    """A branch-level request (move_type None) serves the full 7-day
+    window, and the server's period totals, computed from the collected
+    rows, equal plans.forecast_tail.forecast_summary's Spark aggregate."""
+    from move_forecast_ind_spark.plans.service import forecast_request
+    from move_forecast_ind_spark.server import ServingContext, forecast_response_dict
 
-    daily, summary = forecast_request(
-        spark, models, pct, date="1999-06-03", branch=7, move_type=None,
-        today=TODAY, max_date=MAX,
+    ctx = ServingContext(
+        spark=spark, models=models, pct=pct, facts=None, branch_col="l_suppkey",
+        date_col="l_shipdate", count_col="l_quantity", type_col="l_returnflag",
+        today=TODAY, max_date=MAX, years=(1995, 1998),
     )
-    resp = forecast_response(daily, summary).collect()
-    assert len(resp) == 1
-    assert resp[0].branch == 7 and resp[0].move_type is None
-    assert len(resp[0].daily_forecast) == 7
-    assert resp[0].summary.n_days == 7
+    for move_type in (None, "R"):
+        out = forecast_response_dict(
+            ctx, {"date": "1999-06-03", "branch": 7, "move_type": move_type}
+        )
+        _, summary = forecast_request(
+            spark, models, pct, date="1999-06-03", branch=7, move_type=move_type,
+            today=TODAY, max_date=MAX,
+        )
+        (s,) = summary.collect()
+        assert out["branch"] == 7 and out["move_type"] == move_type
+        assert len(out["predicted_summary"]) == s.n_days == 7
+        assert out["total_predicted_moves"] == s.total_predicted_moves
+        assert out["average_daily_moves"] == s.average_daily_moves
 
 
 def test_forecast_window_clamps_at_horizon(spark, models, pct):
@@ -138,34 +135,32 @@ def test_trends_request_end_to_end(spark):
 
 
 def test_forecast_batch_matches_single_requests(spark, models, pct):
-    """The batched path must produce the same daily rows as issuing each
-    request singly (same clamp, same scoring, same tail)."""
-    import datetime as dt
+    """A request's rows do not depend on the batch it rides in: a batch
+    equals the union of the same requests run one per batch. The batch
+    mixes overlapping windows, a branch-level request, an unknown move
+    type, a past date and an unknown branch (whose rows are dropped)."""
+    from move_forecast_ind_spark.plans.service import forecast_batch
 
-    from move_forecast_ind_spark.plans.service import (
-        forecast_batch,
-        forecast_request,
-    )
+    reqs = [
+        (7, "R", dt.date(1999, 6, 3)),
+        (7, "R", dt.date(1999, 6, 5)),  # overlaps the window above
+        (3, None, dt.date(1999, 7, 30)),
+        (5, "ZZ", dt.date(1999, 6, 20)),  # unknown type: demoted to NULL
+        (2, "A", dt.date(1999, 5, 1)),  # past date: clamped to today
+        (10**6, "R", dt.date(1999, 6, 3)),  # unknown branch: no rows
+    ]
+    schema = "branch long, move_type string, input_date date"
 
-    reqs = [(3, "R", "1999-06-03"), (7, None, "1999-07-30")]
-    req_df = spark.createDataFrame(
-        [(b, mt, dt.date.fromisoformat(d)) for b, mt, d in reqs],
-        "branch long, move_type string, input_date date",
-    )
-    batch = forecast_batch(spark, models, pct, req_df, today=TODAY, max_date=MAX)
-    got = {
-        (r.branch, r.move_type, str(r.input_date), str(r.ds)): r.predicted_moves
-        for r in batch.collect()
-    }
-    expected = {}
-    for b, mt, d in reqs:
-        daily, _ = forecast_request(
-            spark, models, pct, date=d, branch=b, move_type=mt,
-            today=TODAY, max_date=MAX,
-        )
-        for r in daily.collect():
-            expected[(b, mt, d, str(r.ds))] = r.predicted_moves
-    assert got == expected
+    def run(rows):
+        frame = spark.createDataFrame(rows, schema)
+        out = forecast_batch(spark, models, pct, frame, today=TODAY, max_date=MAX)
+        return out.collect()
+
+    batch = run(reqs)
+    singles = [r for req in reqs for r in run([req])]
+    assert sorted(batch, key=repr) == sorted(singles, key=repr)
+    assert {r.branch for r in batch} == {7, 3, 5, 2}
+    assert len(batch) == 5 * 7
 
 
 def test_forecast_batch_overlapping_windows_no_duplicates(spark, models, pct):
