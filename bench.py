@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # STATIC DuckDB anchor at sf0.1 (BASELINE.md "DuckDB anchor" section):
 # wall-clock of each query's oracle SQL under DuckDB (all cores,
 # COUNT-wrapped to mirror the .count() action, min of 2), re-recorded
-# 2026-08-14 by tools/bench_duckdb.py over the full 22-query set (the
+# 2026-08-14 over the full 22-query set (the
 # 2026-08-13 anchor predated the iterative tier's bench entries;
 # re-recorded again 2026-08-14/r6 when the three round-6 representatives
 # — er_blocking_pairs, corpus_source_overlap, events_label_propagation —
@@ -38,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # 30 → 33; extended 2026-08-15 later the same session with the three
 # r7f representatives — events_decayed_engagement, ml_forecast_reconcile,
 # a_ipf_raking — 33 → 36, anchors measured min-of-3 on this host).
+# `tools/profile.py --duckdb` re-times the same anchors as `duck_s`.
 # Kept for cross-round continuity —
 # but host speed varies by >4× across driver VMs (measured 2026-08-14:
 # the same DuckDB suite took 16.1 s on that day's VM vs 3.99 s recorded),
@@ -112,19 +113,14 @@ def main() -> None:
     first.fn(spark, sf_dir).count()
     warmup_sec = round(time.perf_counter() - t0, 3)
 
-    # Timed runs per query (default 3), report the min: the first execution
-    # of a wide plan pays multi-second Janino codegen compilation that a
+    # Timed runs per query; report the min: the first execution of a wide
+    # plan pays multi-second Janino codegen compilation that a
     # long-running engine amortizes away; min-of-N measures steady state.
-    # Default raised 2 → 3 late round-5 — full-suite re-sweeps showed a
-    # fully warm suite at ~15.0-15.7 s while min-of-2 readings carried
-    # 1-3 s of residual first-run codegen; the DuckDB live anchor takes
-    # the SAME min-of-N, so the instrument stays symmetric (BASELINE.md
-    # addendum 6 records min-of-2 and min-of-3 bands side by side).
-    # Round-9 note: min-of-4 was trialled (a 1.37x live reading under
-    # load — the interleaved anchor cancels drift well) but pushes the
-    # full suite past 10 minutes wall; kept at 3 so the driver's bench
-    # window is never at risk. SPARK_GRAFT_BENCH_RUNS=4 reproduces it.
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
+    # min-of-2 readings carried 1-3 s of residual first-run codegen, and
+    # min-of-4 pushes the full suite past 10 minutes wall; the DuckDB live
+    # anchor takes the SAME min-of-N, so the instrument stays symmetric
+    # (BASELINE.md addendum 6 records min-of-2 and min-of-3 bands).
+    n_runs = 3
 
     # snapshot the recursion guards BEFORE any query can raise them
     _cte_default = spark.conf.get("spark.sql.cteRecursionRowLimit", None)

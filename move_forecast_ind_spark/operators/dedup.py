@@ -569,7 +569,7 @@ def minhash_dedup_pairs(
     )
     # No .distinct() on the id set: left_semi against a broadcast with
     # duplicate keys is identical (existence test), and the dedup shuffle
-    # was one more job on the checkpointed tiny frame (r10 profile_jobs).
+    # was one more job on the checkpointed tiny frame.
     cand_ids = cand.select(F.col("doc_a").alias(id_col)).union(
         cand.select(F.col("doc_b").alias(id_col))
     )

@@ -15,11 +15,12 @@ main.py:187-338) and `trends_request` the full POST /historical_trends/
 7. period summary + average daily moves             main.py:290-332
 
 `forecast_batch` is the one forecast planner; a single request is a
-one-row batch. Collecting a request's daily rows, its branch probe
-included, runs 11 Spark jobs with a known move type (AQE runs each
-shuffle stage and broadcast build as its own job), 10 with an unknown
-one and 3 branch-level, where the NULL move type lets the optimizer drop
-the percentage joins (sf0.001 and sf0.01, counted per job group).
+one-row batch. Collecting a request's daily rows, its branch probe and
+the collect of the known move types included, runs 11 Spark jobs with a
+known move type (AQE runs each shuffle stage and broadcast build as its
+own job), and 5 with an unknown one or branch-level, where the NULL move
+type lets the optimizer drop the percentage joins (sf0.001 and sf0.01,
+counted per job group).
 """
 
 from __future__ import annotations
@@ -135,22 +136,21 @@ def forecast_batch(
     m = F.lit(str(max_date)).cast("date")
 
     # The silent unknown-move_type demotion (main.py:204-209): a type
-    # absent from the percentage table becomes NULL => the 100% path.
-    known_types = pct.select("move_type").distinct().alias("k")
-    requests = (
-        requests.alias("q")
-        .join(
-            F.broadcast(known_types),
-            F.col("q.move_type") == F.col("k.move_type"),
-            "left",
-        )
-        .select(
-            F.col("q.branch").alias("branch"),
-            F.when(F.col("k.move_type").isNotNull(), F.col("q.move_type"))
-            .otherwise(F.lit(None).cast("string"))
-            .alias("move_type"),
-            F.col("q.input_date").alias("input_date"),
-        )
+    # absent from the percentage table becomes NULL => the 100% path. The
+    # known types are literals in the plan, so for a literal request the
+    # demotion folds to a constant and a demoted request plans like a
+    # branch-level one.
+    known = sorted(
+        r.move_type
+        for r in pct.select("move_type").distinct().collect()
+        if r.move_type is not None
+    )
+    requests = requests.select(
+        "branch",
+        F.when(F.col("move_type").isin(*known), F.col("move_type"))
+        .otherwise(F.lit(None).cast("string"))
+        .alias("move_type"),
+        "input_date",
     )
 
     start, end = forecast_window_cols(F.col("input_date"), t, m)

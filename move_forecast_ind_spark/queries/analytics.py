@@ -24,10 +24,8 @@ flip the oracle's value hash.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import reduce
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -3447,23 +3445,6 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PR_ITERS = 8
 _PR_DAMP = 0.85
 
-# Opt-in shared-adjacency materialization (VERDICT r9 item #2). At pipeline
-# scale the co-activity graph compiles ONCE per grain and the whole graph
-# family (pagerank/BFS/LPA on the hour grain; triangles/k-core/link-pred/
-# jaccard/assortativity on the tight grain) reuses the materialized frame,
-# amortizing the adjacency build and its ~14-stage scheduling floor across
-# the family instead of paying it per query. Default OFF (dict empty):
-# single-query runs keep the lazy one-action ReuseExchange plan unchanged.
-# Populated only inside ``shared_coactivity`` below (tools/
-# graph_family_probe.py is the measurement harness; a real pipeline would
-# wrap its graph stage the same way).
-# Keyed by (session, sf_dir, grain): a cached frame is bound to the
-# SparkSession that built it — serving it to another session would fail
-# at analysis time (ADVICE r10). The finally-pop below keeps entries
-# (and their session references) scoped to the context manager.
-_ADJ_CACHE: dict[tuple[SparkSession, str, int | None], DataFrame] = {}
-
-
 # Exact SQL DOUBLE literal — single source of truth lives in
 # functions.rounding (ADVICE r10: two copies of the exponent-form
 # subtlety can drift).
@@ -3558,9 +3539,6 @@ def _coactivity_adjacency(
     hour truncation to an epoch-floored N-second bucket (the "tight"
     graph the triangle tier uses: denser-than-quadratic motif counting
     wants the sparser graph)."""
-    cached = _ADJ_CACHE.get((spark, sf_dir, bucket_seconds))
-    if cached is not None:
-        return cached
     idx, pairs = _coactivity_pairs(spark, sf_dir, bucket_seconds)
     # fanout on the NARROW pair rows, keyed by si (r14): AQE coalesced
     # the byte-tiny aggregate shuffle to ONE partition at fixture SFs,
@@ -3610,14 +3588,7 @@ def _coactivity_sliced(
     consumer (pair expansion, degree broadcasts, id maps) re-reads that
     slim parquet instead of re-deriving the graph — the r10 diagnosis
     was ~6 AQE broadcast jobs each re-running the adjacency subtree
-    inside one action. Pipeline posture: when shared_coactivity has the
-    full adjacency persisted for this grain, slice it in-row instead
-    (no second aggregate, no checkpoint)."""
-    cached = _ADJ_CACHE.get((spark, sf_dir, bucket_seconds))
-    if cached is not None:
-        return cached.filter(F.col("deg") > 0).select(
-            "user_id", "i", "deg", F.slice("nbrs", 1, cap).alias("sn")
-        )
+    inside one action."""
     from ..operators.materialize import checkpoint_parquet
 
     idx, pairs = _coactivity_pairs(spark, sf_dir, bucket_seconds)
@@ -3894,36 +3865,6 @@ def events_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- graph motifs: triangle counting / clustering coefficient ---------------
 
 _TRI_BUCKET_S = 300  # "tight" co-activity: same (event_type, 300 s bucket)
-
-
-@contextmanager
-def shared_coactivity(
-    spark: SparkSession,
-    sf_dir: str,
-    grains: tuple[int | None, ...] = (None, _TRI_BUCKET_S),
-):
-    """Materialize the co-activity adjacency once per grain and serve it to
-    every ``_coactivity_adjacency`` caller for the duration of the block —
-    the pipeline posture for the graph family (VERDICT r9 item #2): the
-    graph compiles once, and pagerank/BFS/LPA (hour grain) plus triangles/
-    k-core/link-pred/jaccard/assortativity (tight grain) each start from
-    the built frame instead of re-deriving it. The adjacency is |V| rows
-    (one per user, nbrs bounded by the hot-bucket fence), so MEMORY_AND_DISK
-    persistence is executor-local and spill-safe at any scale."""
-    frames: list[DataFrame] = []
-    try:
-        for g in grains:
-            adj = _coactivity_adjacency(spark, sf_dir, bucket_seconds=g)
-            adj = adj.persist(StorageLevel.MEMORY_AND_DISK)
-            adj.count()  # build now; the family amortizes this one action
-            _ADJ_CACHE[(spark, sf_dir, g)] = adj
-            frames.append(adj)
-        yield
-    finally:
-        for g in grains:
-            _ADJ_CACHE.pop((spark, sf_dir, g), None)
-        for fr in frames:
-            fr.unpersist()
 
 
 @register(
@@ -5903,12 +5844,10 @@ def events_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst-case, the fence's purpose; the raw-pair stream is map-side
     only; everything else shuffles one row per surviving candidate."""
     sl0 = _coactivity_sliced(spark, sf_dir, _TRI_BUCKET_S, _LINKPRED_MAX_NBRS)
-    # fanout before the per-user pair expansion: sl0 arrives either as
-    # the 8-file slim checkpoint (solo path) or as a lazy slice over the
-    # persisted shared adjacency (_ADJ_CACHE pipeline path) — both
-    # shapes are narrow-partitioned, so unpinned the cap^2 pair fan-out
-    # would run on a handful of tasks (r9 10x probe: 73 s serialized
-    # before the pin). fanout repartitions either way.
+    # fanout before the per-user pair expansion: sl0 arrives as the
+    # 8-file slim checkpoint, so unpinned the cap^2 pair fan-out would
+    # run on a handful of tasks (r9 10x probe: 73 s serialized before
+    # the pin).
     sl = fanout(sl0, F.col("i")).select("i", "deg", "sn")
     # two-generator expansion (operators.dedup.expand_pairs rationale,
     # r14 A/B): same unordered (ia < ib) pair stream in the same order —

@@ -7,7 +7,8 @@ equivalent ANSI SQL the DuckDB oracle runs on the same parquet tables.
 :func:`register` wraps each body so the stored callable first applies
 ``session.tune`` to whatever session it is handed — the driver calls with
 its own vanilla ``SparkSession``, so the runtime configs (UTC timezone, AQE,
-``nanosAsLong`` for events.ts) are set here once, not in every body.
+``nanosAsLong`` for events.ts) are set here once, not in every body — and
+sets the query's name as the Spark job description.
 
 Parity contract (enforced by tests/test_oracle.py, same comparison the
 driver makes): identical column names (alias everything, both sides),
@@ -66,7 +67,11 @@ def register(
 
     Stores and returns a wrapper that runs ``body(tune(session), ...)``, so
     each call, from the driver, a test, the bench or another query, tunes
-    the session it is given.
+    the session it is given. The wrapper first sets ``name`` as the
+    calling thread's Spark job description, so the jobs fired inside the
+    body, and those of the action the caller then runs, carry the query's
+    name in the UI, the event log and ``statusTracker``. The job group is
+    left to the caller.
     """
 
     def deco(body: QueryFn) -> QueryFn:
@@ -75,6 +80,7 @@ def register(
 
         @functools.wraps(body)
         def fn(session, *args, **kwargs):
+            session.sparkContext.setJobDescription(name)
             return body(tune(session), *args, **kwargs)
 
         REGISTRY[name] = QuerySpec(

@@ -801,35 +801,6 @@ def test_bootstrap_ci_matches_python_replica(spark):
     assert row.ci_lo <= row.mean_value <= row.ci_hi
 
 
-def test_shared_coactivity_preserves_results_and_cleans_up(spark):
-    """The r10 opt-in graph-family adjacency cache (VERDICT r9 item #2):
-    inside ``shared_coactivity`` every ``_coactivity_adjacency`` caller
-    gets the materialized frame and query results are IDENTICAL to the
-    lazy default; on exit the cache is empty again so single-query plans
-    are untouched. One hour-grain and one tight-grain family member each
-    (pagerank / jaccard-neighbors) keep the runtime bounded."""
-    from conftest import SF_SMALL
-
-    from move_forecast_ind_spark.queries import REGISTRY
-    from move_forecast_ind_spark.queries.analytics import (
-        _ADJ_CACHE,
-        shared_coactivity,
-    )
-
-    names = ("events_pagerank", "events_jaccard_neighbors")
-    base = {
-        n: sorted(map(str, REGISTRY[n].fn(spark, SF_SMALL).collect()))
-        for n in names
-    }
-    assert not _ADJ_CACHE
-    with shared_coactivity(spark, SF_SMALL):
-        assert len(_ADJ_CACHE) == 2  # one entry per grain
-        for n in names:
-            got = sorted(map(str, REGISTRY[n].fn(spark, SF_SMALL).collect()))
-            assert got == base[n], f"{n} diverged under shared adjacency"
-    assert not _ADJ_CACHE  # cache cleared and frames unpersisted on exit
-
-
 def test_group_percentiles_bit_identical(spark):
     """The sort-based exact percentile (functions.percentiles, r14) must be
     bit-identical to Spark's buffering `percentile` aggregate — ties,

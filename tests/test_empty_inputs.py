@@ -26,11 +26,7 @@ change is a deliberate decision:
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo/tools")
 
 from move_forecast_ind_spark.queries import REGISTRY
 
@@ -94,7 +90,7 @@ def empty_duck(empty_dir):
 
 @pytest.mark.parametrize("name", FIXED + REPRESENTATIVE)
 def test_empty_input_matches_oracle(name, spark, empty_dir, empty_duck):
-    from check_oracle import _norm_value, run_spark_query
+    from tools.check_oracle import _norm_value, run_spark_query
 
     spec = REGISTRY[name]
     cols, types, rows = run_spark_query(spark, spec, empty_dir)
@@ -111,7 +107,7 @@ def test_empty_input_matches_oracle(name, spark, empty_dir, empty_duck):
 def test_empty_input_adjudicated_divergences(spark, empty_dir, empty_duck):
     """Pin the ADJUDICATED shapes (module docstring): if any of these
     moves, it must be a deliberate decision, not drift."""
-    from check_oracle import run_spark_query
+    from tools.check_oracle import run_spark_query
 
     # grand-total grouping set: Spark 0 rows, standard/DuckDB 1 row
     for name in ("a_cube", "a_rollup", "a_grouping_sets",
@@ -213,7 +209,7 @@ def degen_duck(degen_dir):
 
 @pytest.mark.parametrize("name", DEGEN_FIXED + DEGEN_REPRESENTATIVE)
 def test_degenerate_documents_match_oracle(name, spark, degen_dir, degen_duck):
-    from check_oracle import _norm_value, run_spark_query
+    from tools.check_oracle import _norm_value, run_spark_query
 
     spec = REGISTRY[name]
     cols, types, rows = run_spark_query(spark, spec, degen_dir)

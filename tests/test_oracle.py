@@ -115,6 +115,28 @@ def test_registry_wrapper_applies_tune(spark):
     assert not offenders, f"register bodies calling tune: {offenders}"
 
 
+def test_registry_wrapper_names_jobs(spark):
+    """``register`` sets the query's name as the job description, and leaves
+    the caller's job group alone: the eager jobs ``dedup_minhash_lsh`` fires
+    while its plan is built (its checkpoints) are found under the caller's
+    group and carry the query's name."""
+    sc = spark.sparkContext
+    group = "test-registry-job-names"
+    sc.setJobGroup(group, "caller", False)
+    try:
+        REGISTRY["dedup_minhash_lsh"].fn(spark, SF_ORACLE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    store = sc._jsc.sc().statusStore()
+    assert ids, "building dedup_minhash_lsh fired no job"
+    assert {store.job(j).description().getOrElse(None) for j in ids} == {
+        "dedup_minhash_lsh"
+    }
+
+
 def test_runner_vanilla_posture_end_to_end():
     """``tools/check_oracle.py`` run as users run it, on the driver's bare
     session: an oracle-bearing query PASSes, the rows-only query reports

@@ -24,13 +24,22 @@ statements that lived only in a session's shell history; /tmp clearing
 erased them. This script IS now the recipe (VERDICT r7 asked for scale
 evidence reproducibility).
 
-    python tools/build_sfx1.py [--src /root/testdata/sf0.1] [--dst /tmp/sfx1]
+    python tools/build_sfx1.py [--src DIR] [--dst /tmp/sfx1]
+
+``--src`` defaults to sf0.1 under ``tools.DATA_ROOT``.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import sys
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+
+from tools import DATA_ROOT  # noqa: E402
 
 COPIES = 10
 
@@ -68,7 +77,7 @@ def main() -> None:
     import duckdb
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("--src", default="/root/testdata/sf0.1")
+    ap.add_argument("--src", default=f"{DATA_ROOT}/sf0.1")
     ap.add_argument("--dst", default="/tmp/sfx1")
     args = ap.parse_args()
     os.makedirs(args.dst, exist_ok=True)

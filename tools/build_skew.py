@@ -26,13 +26,22 @@ build is reproducible, per the build_sfx1 doctrine):
   case.
 - everything else copies through unchanged.
 
-    python tools/build_skew.py [--src /root/testdata/sf0.01] [--dst /tmp/sf_skew01]
+    python tools/build_skew.py [--src DIR] [--dst /tmp/sf_skew01]
+
+``--src`` defaults to sf0.01 under ``tools.DATA_ROOT``.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import sys
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+
+from tools import DATA_ROOT  # noqa: E402
 
 PREAMBLE = " ".join(f"hotgram{i}" for i in range(12))
 
@@ -41,7 +50,7 @@ def main() -> None:
     import duckdb
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("--src", default="/root/testdata/sf0.01")
+    ap.add_argument("--src", default=f"{DATA_ROOT}/sf0.01")
     ap.add_argument("--dst", default="/tmp/sf_skew01")
     args = ap.parse_args()
     os.makedirs(args.dst, exist_ok=True)

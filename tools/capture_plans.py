@@ -7,7 +7,9 @@ queries; AQE runtime re-plans are additive) plus a short automatic audit:
 broadcast vs sort-merge joins, cartesian products, pushed filters,
 whole-stage codegen coverage.
 
-    python tools/capture_plans.py [--sf /root/testdata/sf0.001] [--out PLANS.md]
+    python tools/capture_plans.py [--sf DIR] [--out PLANS.md]
+
+``--sf`` defaults to sf0.001 under ``tools.DATA_ROOT``.
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ from pathlib import Path
 
 ROOT = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, ROOT)
+
+from tools import DATA_ROOT  # noqa: E402
 
 
 def _audit(plan: str) -> list[str]:
@@ -47,7 +51,7 @@ def _audit(plan: str) -> list[str]:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
+    ap.add_argument("--sf", default=f"{DATA_ROOT}/sf0.001")
     ap.add_argument("--out", default=f"{ROOT}/PLANS.md")
     args = ap.parse_args()
 

@@ -36,6 +36,8 @@ from pathlib import Path
 ROOT = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, ROOT)
 
+from tools import DATA_ROOT  # noqa: E402
+
 POSTURES = ("tuned", "vanilla", "cluster")
 
 # Every cluster run pays executor spawn and cross-JVM shuffles, so that
@@ -339,7 +341,7 @@ def main() -> None:
         help="query names (default: the whole registry; the cluster "
         "posture defaults to its sample)",
     )
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--sf", default=f"{DATA_ROOT}/sf0.01")
     ap.add_argument("--posture", choices=POSTURES, default="tuned")
     args = ap.parse_args()
 

@@ -43,7 +43,6 @@ from pathlib import Path
 
 ROOT = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, ROOT)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_NAMES = ["dedup_winnow_pairs", "corpus_bigram_lm_score"]
 
@@ -58,7 +57,7 @@ def _executor_pids() -> set[int]:
 
 
 def main() -> None:
-    from check_oracle import (
+    from tools.check_oracle import (
         cluster_session,
         compare,
         oracle_connection,

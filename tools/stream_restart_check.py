@@ -28,7 +28,7 @@ as three subprocesses (kill run → restart run → the parent compares), so
 the SIGKILL takes down a real driver JVM and the restart starts from
 nothing but the checkpoint directory.
 
-    python tools/stream_restart_check.py [--sf /root/testdata/sf0.01]
+    python tools/stream_restart_check.py [--sf DIR]
         [--scenarios tumbling,session,cdc_latest,sliding,incremental]
         [--nfiles 8] [--kill-batch 3] [--kill-points pre,post]
 
@@ -44,7 +44,7 @@ the batch twin. Pair with ``--sf <sf0.1> --nfiles 32`` for a
 32-micro-batch horizon::
 
     python tools/stream_restart_check.py --two-kill \
-        --sf /root/testdata/sf0.1 --nfiles 32 \
+        --sf <DATA_ROOT>/sf0.1 --nfiles 32 \
         --scenarios tumbling,incremental --kill-batch 8 --kill-batch2 20
 """
 
@@ -63,6 +63,8 @@ from pathlib import Path
 
 ROOT = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, ROOT)
+
+from tools import DATA_ROOT  # noqa: E402
 
 SCENARIOS = ("tumbling", "sliding", "session", "cdc_latest", "incremental")
 
@@ -229,7 +231,7 @@ def _spawn(extra: list[str]) -> int:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--sf", default=f"{DATA_ROOT}/sf0.01")
     ap.add_argument("--scenarios", default="tumbling,sliding,session,cdc_latest,incremental")
     ap.add_argument("--nfiles", type=int, default=8)
     ap.add_argument("--kill-batch", type=int, default=3)
