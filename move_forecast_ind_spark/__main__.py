@@ -15,12 +15,16 @@ two ways: a CLI over the request shapes, and a real HTTP server
 
 Output is one JSON document on stdout; ``forecast`` prints exactly the
 POST /forecast/ response body ``serve`` would send for the same request.
-Errors exit 2 with the validation message (the HTTP-400 analog).
+Errors exit 2 with the validation message (the HTTP-400 analog). ``serve``
+builds its forecast surface before it binds, then prints one line,
+``{"serving": url, "surface_rows": n, "surface_s": s}``, and writes a JSON
+access-log line per request to stderr.
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import datetime as dt
 import json
 import sys
@@ -119,11 +123,17 @@ def cmd_pct_etl(args) -> int:
 
 
 def cmd_serve(args) -> int:
-    from .server import serve
+    from .server import ForecastSurface, serve
 
-    srv = serve(_serving_context(args), host=args.host, port=args.port)
+    ctx = _serving_context(args)
+    surface = ForecastSurface.build(ctx)
+    srv = serve(dataclasses.replace(ctx, surface=surface), host=args.host, port=args.port)
     print(
-        json.dumps({"serving": f"http://{srv.server_address[0]}:{srv.server_address[1]}"}),
+        json.dumps({
+            "serving": f"http://{srv.server_address[0]}:{srv.server_address[1]}",
+            "surface_rows": surface.rows.num_rows,
+            "surface_s": round(surface.build_s, 3),
+        }),
         flush=True,
     )
     try:

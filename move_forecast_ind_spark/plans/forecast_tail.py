@@ -150,53 +150,44 @@ def forecast_tail(
         .join(F.broadcast(day_pct), on=["branch", "move_type", "month", "day"], how="left")
         .join(F.broadcast(month_pct), on=["branch", "move_type", "month"], how="left")
     )
-    # The whole post-join computation as composed expr strings (round-9
-    # construction-cost pass: this tree was ~60 Column ops ≈ 2.4 k gateway
-    # roundtrips, ~0.67 s of the query's 0.84 s bench row; ONE selectExpr
-    # parses the identical tree server-side in one roundtrip). FP literals
-    # use exponent notation (`1e2`, `0e0`, `5e0`) because bare decimals
-    # parse as DECIMAL in Spark SQL and would switch the arithmetic; the
-    # parsed trees and every intermediate type match the old Column build
+    # The post-join computation as expr strings, which parse server-side
+    # in one gateway roundtrip each (a Column build is ~60 ops ≈ 2.4 k
+    # roundtrips). Each intermediate is its own column, computed once per
+    # row: inlined into the band's CASE, diff_pp and everything under it
+    # would be re-evaluated in each conditional branch. FP literals use
+    # exponent notation (`1e2`, `0e0`, `5e0`) because bare decimals parse
+    # as DECIMAL in Spark SQL and would switch the arithmetic
     # (oracle-hash-checked for the whole tail family at 3 SFs).
     #
     # NULL move_type = the reference's silent demotion of an unknown type
     # (reference main.py:204-209): no percentage split, the full branch
     # forecast applies (100%). Otherwise: day → month → 1.0 fallback chain
-    # resolved at the INPUT date (main.py:239-243).
-    pct_used = (
-        "CASE WHEN move_type IS NULL THEN 1e2 "
-        "ELSE COALESCE(scale_day_avg, scale_month_avg, 1e0) END"
-    )
-    predicted = sql_round_count(
-        f"GREATEST(({pct_used}) / 1e2 * branch_forecast, 0e0)"
-    )
-    # Per-day historical average — the comment band's yardstick
-    # (main.py:258-265). The reference's per-day fetch uses the same full
-    # fallback chain, so hist_avg is never null for a known move type.
-    hist_avg = (
-        "CASE WHEN move_type IS NULL THEN CAST(NULL AS DOUBLE) "
-        "ELSE COALESCE(avg_percentage, month_avg_percentage, 1e0) END"
-    )
-    implied = (
-        f"CASE WHEN branch_forecast > 0 "
-        f"THEN ({predicted}) / branch_forecast * 1e2 ELSE 0e0 END"
-    )
-    diff_pp = (
-        "CASE WHEN move_type IS NULL THEN 0e0 "
-        f"ELSE {sql_round_half_up(f'({implied}) - ({hist_avg})', 4)} END"
-    )
-    band = (
-        f"CASE WHEN ABS({diff_pp}) <= 5e0 THEN 'consistent' "
-        f"WHEN ({diff_pp}) > 5e0 THEN 'stronger' ELSE 'weaker' END"
-    )
-    idx = "CAST(pmod(branch * 31 + month * 7 + day, 3) AS INT)"
-    phrase = sql_phrase_pick(band, idx)
+    # resolved at the INPUT date (main.py:239-243). hist_avg is the
+    # per-day historical average, the comment band's yardstick
+    # (main.py:258-265); the reference's per-day fetch uses the same full
+    # fallback chain, so it is never null for a known move type.
+    stages = {
+        "pct_used_raw": "CASE WHEN move_type IS NULL THEN 1e2 "
+        "ELSE COALESCE(scale_day_avg, scale_month_avg, 1e0) END",
+        "hist_avg_raw": "CASE WHEN move_type IS NULL THEN CAST(NULL AS DOUBLE) "
+        "ELSE COALESCE(avg_percentage, month_avg_percentage, 1e0) END",
+        "predicted": sql_round_count("GREATEST((pct_used_raw) / 1e2 * branch_forecast, 0e0)"),
+        "implied": "CASE WHEN branch_forecast > 0 "
+        "THEN (predicted) / branch_forecast * 1e2 ELSE 0e0 END",
+        "diff_raw": "CASE WHEN move_type IS NULL THEN 0e0 "
+        f"ELSE {sql_round_half_up('(implied) - (hist_avg_raw)', 4)} END",
+        "band_raw": "CASE WHEN ABS(diff_raw) <= 5e0 THEN 'consistent' "
+        "WHEN diff_raw > 5e0 THEN 'stronger' ELSE 'weaker' END",
+    }
+    for name, expr in stages.items():
+        j = j.selectExpr("*", f"{expr} AS {name}")
+    phrase = sql_phrase_pick("band_raw", "CAST(pmod(branch * 31 + month * 7 + day, 3) AS INT)")
     comment = (
         f"CASE WHEN move_type IS NULL THEN {_sql_str(NO_MOVE_TYPE_PHRASE)} "
         f"ELSE concat({phrase}, ' (', "
-        f"format_string('%.1f', {sql_round_half_up(hist_avg, 1)}), "
+        f"format_string('%.1f', {sql_round_half_up('hist_avg_raw', 1)}), "
         f"'% hist, ', "
-        f"format_string('%.1f', {sql_round_half_up(implied, 1)}), "
+        f"format_string('%.1f', {sql_round_half_up('implied', 1)}), "
         f"'% now)') END"
     )
     return j.selectExpr(
@@ -205,11 +196,11 @@ def forecast_tail(
         "input_date",
         "ds",
         f"{sql_round_half_up('branch_forecast', 2)} AS branch_forecast",
-        f"{sql_round_half_up(pct_used, 4)} AS pct_used",
-        f"{predicted} AS predicted_moves",
-        f"{sql_round_half_up(hist_avg, 4)} AS hist_avg",
-        f"{diff_pp} AS diff_pp",
-        f"{band} AS band",
+        f"{sql_round_half_up('pct_used_raw', 4)} AS pct_used",
+        "predicted AS predicted_moves",
+        f"{sql_round_half_up('hist_avg_raw', 4)} AS hist_avg",
+        "diff_raw AS diff_pp",
+        "band_raw AS band",
         f"{comment} AS comment",
     )
 

@@ -23,8 +23,8 @@ Spark-first redesign:
   and the DuckDB oracle (queries/ml.py ``_fourier_model_ctes``)
   reproduces it bit-for-bit.
 - **The model registry is a DataFrame** (branch, coeffs array<double>,
-  sigma, n_obs) — not 110 pickle files. It broadcasts to the scorer; at
-  scale it persists as one parquet file (S4/S6 analog).
+  sigma, n_obs) — not 110 pickle files. The scorer reads its rows
+  directly; at scale it persists as one parquet file (S4/S6 analog).
 - **Scoring is pure column arithmetic**: rebuild the feature vector with
   built-in functions and dot it with the coefficient array via
   ``zip_with``+``aggregate`` — no Python on the hot path.
@@ -35,7 +35,7 @@ from __future__ import annotations
 import math
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 EPOCH = "1995-01-01"  # t origin for the trend feature
@@ -188,11 +188,11 @@ def train_models(
     return daily.sparkSession.createDataFrame(pa.table(cols), MODEL_SCHEMA)
 
 
-def score(models: DataFrame, frame: DataFrame) -> DataFrame:
-    """Score a frame with (branch, ds) columns: its columns plus yhat,
-    yhat_upper, and the reference's final Count post-processing (keep upper
-    bound, clip ≥ 0, half-up round, cast long — main.py:234-236 P1+F8+F9).
-    Rows of branches absent from ``models`` are dropped."""
+def score(models: DataFrame, start: Column, end: Column) -> DataFrame:
+    """Every model branch scored on each day of [start, end], straight off
+    the registry rows: (branch, ds, yhat, yhat_upper, count), where count is
+    the reference's final Count post-processing (keep upper bound, clip
+    ≥ 0, half-up round, cast long — main.py:234-236 P1+F8+F9)."""
     from ..functions.rounding import r4, round_count
 
     dot = F.aggregate(
@@ -203,12 +203,12 @@ def score(models: DataFrame, frame: DataFrame) -> DataFrame:
         lambda acc, x: acc + x,
     )
     upper = dot + F.lit(Z80) * F.col("sigma")
-    return (
-        frame.join(F.broadcast(models), on="branch")
-        .select(
-            *frame.columns,
-            r4(dot).alias("yhat"),
-            r4(upper).alias("yhat_upper"),
-            round_count(F.greatest(upper, F.lit(0.0))).alias("count"),
-        )
+    return models.select(
+        "branch", "coeffs", "sigma", F.explode(F.sequence(start, end)).alias("ds")
+    ).select(
+        "branch",
+        "ds",
+        r4(dot).alias("yhat"),
+        r4(upper).alias("yhat_upper"),
+        round_count(F.greatest(upper, F.lit(0.0))).alias("count"),
     )

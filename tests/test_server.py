@@ -4,9 +4,12 @@ server.py), against the sf0.001 lake."""
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
 import json
+import random
 import threading
+import time
 import urllib.error
 import urllib.request
 
@@ -50,10 +53,18 @@ def ctx(spark):
 
 
 @pytest.fixture(scope="module")
-def server(ctx):
+def surface_ctx(ctx):
+    """``ctx`` with the live forecast surface built, as ``serve`` builds it."""
+    from move_forecast_ind_spark.server import ForecastSurface
+
+    return dataclasses.replace(ctx, surface=ForecastSurface.build(ctx))
+
+
+@pytest.fixture(scope="module")
+def server(surface_ctx):
     from move_forecast_ind_spark.server import serve
 
-    srv = serve(ctx)
+    srv = serve(surface_ctx)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
@@ -187,6 +198,104 @@ def test_cli_forecast_prints_served_json(spark, ctx, capsys):
         assert err.out == "" and "unknown branch" in err.err
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", partitions)
+
+
+def _forecast_or_400(ctx, body) -> tuple[str, bool]:
+    """The /forecast/ response as served (its JSON bytes, or its 400
+    detail), and whether the surface answered it."""
+    from move_forecast_ind_spark.plans.service import RequestError
+    from move_forecast_ind_spark.server import forecast_response
+
+    try:
+        payload, hit = forecast_response(ctx, body)
+        return json.dumps(payload), hit
+    except RequestError as e:
+        return f"400 {e}", False
+
+
+def _equivalence_sample(surface, n: int = 300) -> list[tuple[str, dict]]:
+    """A seeded sample of (kind, body): live dates (uniform, today-clamped,
+    max-clamped), past dates and the three 400s, crossed with known, None,
+    unknown-letter, empty and non-string move types."""
+    rng = random.Random(20261019)
+    branches = sorted(surface.branches)
+    unknown = next(c for c in "ZYXWVUTS" if c not in surface.move_types)
+    types = [*surface.move_types, None, unknown, "", 5]
+    span = (MAX - TODAY).days
+    # input-date offsets from today, per kind; the 400 kinds use live dates
+    offsets = {"today_clamped": (0, 2), "max_clamped": (span - 2, span),
+               "past": (-400, -1), "capped": (span + 1, span + 365)}
+    sample = []
+    for i in range(n):
+        kind = rng.choices(
+            ["live", "today_clamped", "max_clamped", "past", "bad_date", "capped",
+             "unknown_branch"],
+            weights=[50, 10, 10, 10, 5, 5, 10],
+        )[0]
+        day = TODAY + dt.timedelta(rng.randint(*offsets.get(kind, (0, span))))
+        body = {
+            "date": str(day).replace("-", "/") if kind == "bad_date" else str(day),
+            "branch": max(branches) + rng.randint(1, 1000)
+            if kind == "unknown_branch" else rng.choice(branches),
+            "move_type": types[i % len(types)],
+        }
+        sample.append((kind, body))
+    return sample
+
+
+def test_surface_matches_per_request_path(ctx, surface_ctx):
+    """Every request in a seeded sample gets the same bytes, or the same
+    400 detail, from the surface as from the per-request Spark path."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    sample = _equivalence_sample(surface_ctx.surface)
+    kinds = {k for k, _ in sample}
+    assert kinds == {"live", "today_clamped", "max_clamped", "past", "bad_date",
+                     "capped", "unknown_branch"}
+    with ThreadPoolExecutor(4) as pool:  # the per-request path costs ~0.5 s
+        served = list(pool.map(lambda kb: _forecast_or_400(surface_ctx, kb[1]), sample))
+        planned = list(pool.map(lambda kb: _forecast_or_400(ctx, kb[1]), sample))
+    assert [out for out, _ in served] == [out for out, _ in planned]
+    assert not any(hit for _, hit in planned)
+    for (kind, body), (out, hit) in zip(sample, served):
+        answered = not out.startswith("400")
+        in_domain = kind != "past" and not isinstance(body["move_type"], int)
+        assert hit == (answered and in_domain), (kind, body)
+    assert {out.split(" ", 2)[1] for out, _ in served if out.startswith("400")} == {
+        "date", "forecasts", "unknown"
+    }  # all three 400s
+    known = surface_ctx.surface.move_types
+    demoted = [
+        json.loads(out) for (_, body), (out, _) in zip(sample, served)
+        if isinstance(body["move_type"], str) and body["move_type"] not in known
+        and not out.startswith("400")
+    ]
+    assert demoted and all(d["move_type"] is None for d in demoted)
+
+
+def _access_log(capsys, n: int) -> list[dict]:
+    """The next ``n`` access-log lines the server writes to stderr (each
+    is written once its response has been sent)."""
+    lines, deadline = [], time.monotonic() + 60
+    while len(lines) < n and time.monotonic() < deadline:
+        lines += [json.loads(x) for x in capsys.readouterr().err.splitlines()
+                  if x.startswith('{"path"')]
+        time.sleep(0.05)
+    return lines
+
+
+def test_surface_hit_fires_no_spark_job(server, capsys):
+    """A live-domain /forecast/ is answered from the surface under its own
+    job group with 0 Spark jobs; a past date plans in Spark."""
+    capsys.readouterr()
+    for date in ("1999-06-20", "1999-05-20"):
+        status, _ = _post(server, "/forecast/", {"date": date, "branch": 7, "move_type": "R"})
+        assert status == 200
+    hit, miss = _access_log(capsys, 2)
+    assert hit["surface_hit"] is True and hit["spark_jobs"] == 0
+    assert miss["surface_hit"] is False and miss["spark_jobs"] > 0
+    assert hit["path"] == miss["path"] == "/forecast/"
+    assert hit["status"] == miss["status"] == 200 and hit["ms"] >= 0
 
 
 def test_forecast_validation_errors(server):

@@ -120,8 +120,10 @@ def test_bucketed_join_has_no_exchange(spark, tmpdir):
 def test_model_registry_roundtrip(spark, tmpdir):
     """S4/S6: train → save registry parquet → reload → score produces
     identical forecasts to scoring the in-memory registry."""
+    from pyspark.sql import functions as F
+
     from move_forecast_ind_spark.plans.training import score, train_models
-    from move_forecast_ind_spark.queries.ml import _daily_series, _future_frame
+    from move_forecast_ind_spark.queries.ml import _daily_series
     from move_forecast_ind_spark.sources.models import load_registry, save_registry
 
     daily = _daily_series(spark, SF_SMALL)
@@ -129,9 +131,9 @@ def test_model_registry_roundtrip(spark, tmpdir):
     path = os.path.join(tmpdir, "registry")
     save_registry(models, path)
     reloaded = load_registry(spark, path)
-    frame = _future_frame(spark, "1999-06-01", "1999-06-03", n_branches=5)
-    direct = sorted(map(tuple, score(models, frame).collect()))
-    via_disk = sorted(map(tuple, score(reloaded, frame).collect()))
+    days = F.lit("1999-06-01").cast("date"), F.lit("1999-06-03").cast("date")
+    direct = sorted(map(tuple, score(models, *days).collect()))
+    via_disk = sorted(map(tuple, score(reloaded, *days).collect()))
     assert direct == via_disk
     assert len(direct) > 0
 
