@@ -16,9 +16,10 @@ two ways: a CLI over the request shapes, and a real HTTP server
 Output is one JSON document on stdout; ``forecast`` prints exactly the
 POST /forecast/ response body ``serve`` would send for the same request.
 Errors exit 2 with the validation message (the HTTP-400 analog). ``serve``
-builds its forecast surface before it binds, then prints one line,
-``{"serving": url, "surface_rows": n, "surface_s": s}``, and writes a JSON
-access-log line per request to stderr.
+builds its forecast and trends surfaces before it binds, then prints one
+line, ``{"serving": url, "surface_rows": n, "surface_s": s, "trends_rows":
+n, "trends_s": s}``, and writes a JSON access-log line per request to
+stderr.
 """
 
 from __future__ import annotations
@@ -123,16 +124,22 @@ def cmd_pct_etl(args) -> int:
 
 
 def cmd_serve(args) -> int:
-    from .server import ForecastSurface, serve
+    from .server import ForecastSurface, TrendsSurface, serve
 
     ctx = _serving_context(args)
     surface = ForecastSurface.build(ctx)
-    srv = serve(dataclasses.replace(ctx, surface=surface), host=args.host, port=args.port)
+    trends = TrendsSurface.build(ctx)
+    srv = serve(
+        dataclasses.replace(ctx, surface=surface, trends_surface=trends),
+        host=args.host, port=args.port,
+    )
     print(
         json.dumps({
             "serving": f"http://{srv.server_address[0]}:{srv.server_address[1]}",
             "surface_rows": surface.rows.num_rows,
             "surface_s": round(surface.build_s, 3),
+            "trends_rows": trends.num_rows,
+            "trends_s": round(trends.build_s, 3),
         }),
         flush=True,
     )

@@ -16,20 +16,23 @@ Error mapping mirrors the reference: validation failures → 400 with a
 and horizon are injected through :class:`ServingContext` (no hidden
 ``datetime.now()`` — SURVEY.md §5.4).
 
-Before :func:`serve` binds its port it builds a :class:`ForecastSurface`:
-every live forecast (each model branch × each known move type and
-``None`` × each input date in [today, max_date]) as one
-plans.service.forecast_batch, collected once into an Arrow table. A
-/forecast/ in that domain is answered from the table and runs no Spark
-job. A past date or a non-string move type, and any forecast from a
-context without a surface (the CLI ``forecast`` command), plans one Spark
-query through plans.service instead of ~30 DB round-trips (see
-plans.service for its job count); a /historical_trends/ always does.
+Before :func:`serve` binds its port it builds two surfaces. The
+:class:`ForecastSurface` holds every live forecast (each model branch ×
+each known move type and ``None`` × each input date in [today,
+max_date]) as one plans.service.forecast_batch, collected once into an
+Arrow table. The :class:`TrendsSurface` holds every fact-table day row a
+live /historical_trends/ window can ask for, from one aggregate over the
+cached fact table. A request on either endpoint whose move type is a
+string or null is answered from its surface: it fires no Spark job and
+makes no py4j call. A past-date forecast, a non-string move type, and
+any request on a context without a surface (the CLI ``forecast``
+command) plans one Spark query through plans.service instead of ~30
+(resp. 6) DB round-trips (see plans.service for its job count).
 
-Each request runs under a Spark job group of its own, and the server
-writes one JSON access-log line per request to stderr: ``path``,
-``status``, ``ms``, ``spark_jobs`` (the jobs of its job group) and
-``surface_hit``.
+A request that plans in Spark sets a Spark job group of its own right
+before its first Spark call. The server writes one JSON access-log line
+per request to stderr: ``path``, ``status``, ``ms``, ``spark_jobs`` (the
+jobs of its job group; 0 when it set none) and ``surface_hit``.
 """
 
 from __future__ import annotations
@@ -41,6 +44,7 @@ import json
 import math
 import sys
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -52,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.datetime_fns import forecast_window
+from .functions.rounding import r2
 from .plans.service import (
     RequestError,
     check_request,
@@ -180,10 +185,84 @@ class ForecastSurface:
         return None if span is None else self.rows.slice(*span).to_pylist()
 
 
+def _in_window(md, start: dt.date, end: dt.date):
+    """plans.trends.historical_trends's calendar-window predicate on a
+    ``month * 100 + day`` value (a Column or an int): the (month, day)
+    tuple range from ``start`` to ``end``, which wraps past Dec 31 when
+    ``end`` is the earlier tuple."""
+    lo = start.month * 100 + start.day
+    hi = end.month * 100 + end.day
+    return (md >= lo) & (md <= hi) if lo <= hi else (md >= lo) | (md <= hi)
+
+
+@dataclass(frozen=True)
+class TrendsSurface:
+    """Every fact-table day row a live /historical_trends/ window can
+    admit, computed before the server binds: one aggregate over the cached
+    fact table, filtered to ``years`` and to the (month, day) span of
+    [today, max_date], grouped by the grouping sets (branch, type, ds) and
+    (branch, ds). ``index`` maps (branch, move type, or None for the
+    branch level) to its rows, sorted by ``ds``, each ``(month * 100 +
+    day, year, 'MM-dd', moves)``. Read-only once built, so request threads
+    share it without a lock."""
+
+    index: dict[tuple[int, str | None], list[tuple[int, int, str, float]]]
+    num_rows: int
+    build_s: float
+
+    @classmethod
+    def build(cls, ctx: ServingContext) -> TrendsSurface:
+        t0 = time.perf_counter()
+        date = F.col(ctx.date_col)
+        facts = ctx.facts.filter(F.year(date).between(*ctx.years))
+        # Every window lies in [today, max_date]; a span shorter than a
+        # year visits each (month, day) at most once, so its tuple range
+        # holds every window's. A longer one needs no filter.
+        if (ctx.max_date - ctx.today).days < 365:
+            md = F.month(date) * 100 + F.dayofmonth(date)
+            facts = facts.filter(_in_window(md, ctx.today, ctx.max_date))
+        table = (
+            facts.select(
+                F.col(ctx.branch_col).alias("branch"),
+                F.col(ctx.type_col).alias("move_type"),
+                date.cast("date").alias("ds"),
+                F.col(ctx.count_col).alias("n"),
+            )
+            .groupingSets(
+                [["branch", "move_type", "ds"], ["branch", "ds"]], "branch", "move_type", "ds"
+            )
+            .agg(r2(F.sum("n")).alias("moves"), F.grouping("move_type").alias("branch_level"))
+            .toArrow()
+            .sort_by("ds")
+        )
+        index: dict = {}
+        columns = ("branch", "move_type", "branch_level", "ds", "moves")
+        for branch, move_type, branch_level, ds, moves in zip(
+            *(table[c].to_pylist() for c in columns)
+        ):
+            if move_type is None and not branch_level:
+                continue  # a NULL-type fact group: no request names it
+            index.setdefault((branch, move_type), []).append(
+                (ds.month * 100 + ds.day, ds.year, ds.strftime("%m-%d"), moves)
+            )
+        return cls(index=index, num_rows=table.num_rows, build_s=time.perf_counter() - t0)
+
+    def lookup(self, branch: int, move_type: str | None, start: dt.date, end: dt.date) -> dict:
+        """The window's day rows per year, each year's in ``ds`` order, as
+        trends_request answers them; an unknown branch or type has none."""
+        per_year: dict[int, list[dict]] = {}
+        for md, year, month_day, moves in self.index.get((branch, move_type), ()):
+            if _in_window(md, start, end):
+                per_year.setdefault(year, []).append({"date": month_day, "moves": moves})
+        return per_year
+
+
 @dataclass
 class ServingContext:
     """Everything a request needs, injected once at server start. Without
-    a ``surface`` every forecast plans in Spark; :func:`serve` builds one."""
+    a ``surface`` every forecast plans in Spark, and without a
+    ``trends_surface`` every trends request does; :func:`serve` builds
+    both."""
 
     spark: SparkSession
     models: DataFrame  # plans.training registry
@@ -197,6 +276,7 @@ class ServingContext:
     max_date: dt.date
     years: tuple[int, int]
     surface: ForecastSurface | None = None
+    trends_surface: TrendsSurface | None = None
 
 
 def _round_half_up(x: float, scale: int = 1) -> float:
@@ -218,19 +298,27 @@ def _request_fields(body: dict) -> tuple[str, int, str | None]:
     return date, branch, body.get("move_type")
 
 
+def _no_job_group() -> None:
+    pass
+
+
 def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
     """POST /forecast/ — the reference's response shape (main.py:320-332)."""
     return forecast_response(ctx, body)[0]
 
 
-def forecast_response(ctx: ServingContext, body: dict) -> tuple[dict, bool]:
-    """The /forecast/ response, and whether the surface answered it."""
+def forecast_response(
+    ctx: ServingContext, body: dict, job_group: Callable[[], None] = _no_job_group
+) -> tuple[dict, bool]:
+    """The /forecast/ response, and whether the surface answered it.
+    ``job_group`` runs right before the first Spark call, if any."""
     date, branch, move_type = _request_fields(body)
 
     surface = ctx.surface
     rows = None if surface is None else surface.lookup(date, branch, move_type)
     hit = rows is not None
     if not hit:
+        job_group()
         daily, _ = forecast_request(
             ctx.spark, ctx.models, ctx.pct, date=date, branch=branch,
             move_type=move_type, today=ctx.today, max_date=ctx.max_date,
@@ -288,21 +376,36 @@ def forecast_response(ctx: ServingContext, body: dict) -> tuple[dict, bool]:
 
 def trends_response_dict(ctx: ServingContext, body: dict) -> dict:
     """POST /historical_trends/ — per-year window rows (main.py:340-403)."""
-    date, branch, move_type = _request_fields(body)
+    return trends_response(ctx, body)[0]
 
-    nested = trends_request(
-        ctx.spark, ctx.facts, branch_col=ctx.branch_col, date_col=ctx.date_col,
-        count_col=ctx.count_col, date=date, branch=branch, move_type=move_type,
-        type_col=ctx.type_col, today=ctx.today, max_date=ctx.max_date,
-        years=ctx.years,
-    )
+
+def trends_response(
+    ctx: ServingContext, body: dict, job_group: Callable[[], None] = _no_job_group
+) -> tuple[dict, bool]:
+    """The /historical_trends/ response, and whether the trends surface
+    answered it. ``job_group`` runs right before the first Spark call, if
+    any."""
+    date, branch, move_type = _request_fields(body)
     start, end = forecast_window(parse_date(date), ctx.today, ctx.max_date)
-    per_year = {}
-    for r in nested.collect():  # one row per year: the payload
-        per_year[int(r.year)] = [
-            {"date": d.split(":")[0], "moves": float(d.split(":")[1])}
-            for d in (r.days.split(",") if r.days else [])
-        ]
+
+    surface = ctx.trends_surface
+    hit = surface is not None and (move_type is None or isinstance(move_type, str))
+    if hit:
+        per_year = surface.lookup(branch, move_type, start, end)
+    else:
+        job_group()
+        nested = trends_request(
+            ctx.spark, ctx.facts, branch_col=ctx.branch_col, date_col=ctx.date_col,
+            count_col=ctx.count_col, date=date, branch=branch, move_type=move_type,
+            type_col=ctx.type_col, today=ctx.today, max_date=ctx.max_date,
+            years=ctx.years,
+        )
+        per_year = {}
+        for r in nested.collect():  # one row per year: the payload
+            per_year[int(r.year)] = [
+                {"date": d.split(":")[0], "moves": float(d.split(":")[1])}
+                for d in (r.days.split(",") if r.days else [])
+            ]
     return {
         "branch": branch,
         "move_type": move_type,
@@ -314,14 +417,35 @@ def trends_response_dict(ctx: ServingContext, body: dict) -> dict:
             "start_date": str(start),
             "end_date": str(end),
         },
-    }
+    }, hit
+
+
+class _JobGroup:
+    """A request's Spark job group, set when the request first calls it:
+    a request that makes no Spark call makes no py4j call either."""
+
+    def __init__(self, sc, group: str, description: str) -> None:
+        self.sc, self.group, self.description = sc, group, description
+        self.is_set = False
+
+    def __call__(self) -> None:
+        if not self.is_set:
+            self.sc.setJobGroup(self.group, self.description, False)
+            self.is_set = True
+
+    def close(self) -> int | None:
+        """Clear the group and count its jobs (0 if it was never set)."""
+        if not self.is_set:
+            return 0
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        return _jobs_in_group(self.sc, self.group)
 
 
 def make_handler(ctx: ServingContext):
     request_ids = itertools.count(1)  # names each request's job group
     routes = {
         "/forecast/": forecast_response,
-        "/historical_trends/": lambda c, body: (trends_response_dict(c, body), False),
+        "/historical_trends/": trends_response,
     }
     sc = ctx.spark.sparkContext
 
@@ -339,29 +463,27 @@ def make_handler(ctx: ServingContext):
                 self.wfile.write(data)
 
         def _respond(self, method: str) -> None:
-            """Answer one request under a Spark job group of its own, then
-            write its JSON access-log line to stderr."""
+            """Answer one request, under a Spark job group of its own if it
+            calls Spark, then write its JSON access-log line to stderr."""
             t0 = time.perf_counter()
-            group = f"http-{next(request_ids)}"
-            sc.setJobGroup(group, f"{method} {self.path}", False)
+            job_group = _JobGroup(sc, f"http-{next(request_ids)}", f"{method} {self.path}")
             status, hit = 500, False
             try:
-                status, payload, hit = self._route(method)
+                status, payload, hit = self._route(method, job_group)
                 self._send(status, payload, head_only=method == "HEAD")
             finally:
                 ms = 1000.0 * (time.perf_counter() - t0)
-                sc.setLocalProperty("spark.jobGroup.id", None)
                 entry = {
                     "path": self.path,
                     "status": status,
                     "ms": round(ms, 3),
-                    "spark_jobs": _jobs_in_group(sc, group, drain=not hit),
+                    "spark_jobs": job_group.close(),
                     "surface_hit": hit,
                 }
                 sys.stderr.write(json.dumps(entry) + "\n")
                 sys.stderr.flush()
 
-        def _route(self, method: str) -> tuple[int, dict, bool]:
+        def _route(self, method: str, job_group: _JobGroup) -> tuple[int, dict, bool]:
             if method in ("GET", "HEAD"):
                 if self.path != "/":
                     return 404, {"detail": "not found"}, False
@@ -375,7 +497,7 @@ def make_handler(ctx: ServingContext):
                 body = json.loads(self.rfile.read(length) or b"{}")
                 if not isinstance(body, dict):
                     raise RequestError("body must be a JSON object")
-                payload, hit = fn(ctx, body)
+                payload, hit = fn(ctx, body, job_group)
                 return 200, payload, hit
             except (RequestError, json.JSONDecodeError) as e:
                 return 400, {"detail": str(e)}, False  # main.py:425-427
@@ -394,23 +516,23 @@ def make_handler(ctx: ServingContext):
     return Handler
 
 
-def _jobs_in_group(sc, group: str, drain: bool) -> int | None:
-    """Spark jobs started under ``group``. ``drain`` first waits (at most
-    5 s) for the listener bus, so the jobs of a call that just returned are
-    all counted; a request that made no Spark call needs no wait. None when
-    the bus did not drain in time."""
-    if drain:
-        try:
-            sc._jsc.sc().listenerBus().waitUntilEmpty(5000)
-        except Py4JJavaError:  # the bus's TimeoutException
-            return None
+def _jobs_in_group(sc, group: str) -> int | None:
+    """Spark jobs started under ``group``, after waiting (at most 5 s) for
+    the listener bus, so the jobs of a call that just returned are all
+    counted. None when the bus did not drain in time."""
+    try:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(5000)
+    except Py4JJavaError:  # the bus's TimeoutException
+        return None
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def serve(ctx: ServingContext, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTPServer:
-    """Build the forecast surface unless ``ctx`` carries one, then bind and
-    return the server (call ``serve_forever`` yourself, or use a daemon
+    """Build the forecast and trends surfaces that ``ctx`` lacks, then bind
+    and return the server (call ``serve_forever`` yourself, or use a daemon
     thread in tests/CLI). Port 0 picks a free port."""
     if ctx.surface is None:
         ctx = dataclasses.replace(ctx, surface=ForecastSurface.build(ctx))
+    if ctx.trends_surface is None:
+        ctx = dataclasses.replace(ctx, trends_surface=TrendsSurface.build(ctx))
     return ThreadingHTTPServer((host, port), make_handler(ctx))

@@ -133,6 +133,9 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEMORY", f"{half_ram_mb}m"),
         )
         .config("spark.ui.enabled", "false")
+        # The progress bar's carriage-return lines would share stderr with
+        # the server's one-JSON-line-per-request access log.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # LOCAL-ONLY (this builder always constructs local[N]): shuffle
         # blocks live on one machine's page cache — lz4 round-trips and

@@ -54,10 +54,13 @@ def ctx(spark):
 
 @pytest.fixture(scope="module")
 def surface_ctx(ctx):
-    """``ctx`` with the live forecast surface built, as ``serve`` builds it."""
-    from move_forecast_ind_spark.server import ForecastSurface
+    """``ctx`` with the forecast and trends surfaces built, as ``serve``
+    builds them."""
+    from move_forecast_ind_spark.server import ForecastSurface, TrendsSurface
 
-    return dataclasses.replace(ctx, surface=ForecastSurface.build(ctx))
+    return dataclasses.replace(
+        ctx, surface=ForecastSurface.build(ctx), trends_surface=TrendsSurface.build(ctx)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -284,18 +287,178 @@ def _access_log(capsys, n: int) -> list[dict]:
     return lines
 
 
-def test_surface_hit_fires_no_spark_job(server, capsys):
-    """A live-domain /forecast/ is answered from the surface under its own
-    job group with 0 Spark jobs; a past date plans in Spark."""
+def _jvm_jobs(spark) -> int:
+    """Spark jobs the JVM has started so far: the DAG scheduler's next job
+    id, which a job submitted from any thread or job group advances."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_surface_hit_fires_no_spark_job(server, spark, capsys):
+    """A live-domain /historical_trends/ and /forecast/ are answered from
+    their surfaces: the JVM starts no job for them, and their access-log
+    lines read 0 jobs. A past-date forecast plans in Spark and logs the
+    jobs of its own job group."""
     capsys.readouterr()
-    for date in ("1999-06-20", "1999-05-20"):
-        status, _ = _post(server, "/forecast/", {"date": date, "branch": 7, "move_type": "R"})
-        assert status == 200
-    hit, miss = _access_log(capsys, 2)
-    assert hit["surface_hit"] is True and hit["spark_jobs"] == 0
-    assert miss["surface_hit"] is False and miss["spark_jobs"] > 0
+    body = {"date": "1999-06-20", "branch": 7, "move_type": "R"}
+    jobs = _jvm_jobs(spark)
+    for path in ("/historical_trends/", "/forecast/"):
+        assert _post(server, path, body)[0] == 200
+    assert _jvm_jobs(spark) == jobs
+    assert _post(server, "/forecast/", {**body, "date": "1999-05-20"})[0] == 200
+    trends, hit, miss = _access_log(capsys, 3)
+    assert trends["path"] == "/historical_trends/"
     assert hit["path"] == miss["path"] == "/forecast/"
-    assert hit["status"] == miss["status"] == 200 and hit["ms"] >= 0
+    for entry in (trends, hit):
+        assert entry["surface_hit"] is True and entry["spark_jobs"] == 0
+    assert miss["surface_hit"] is False and miss["spark_jobs"] > 0
+    assert trends["status"] == hit["status"] == miss["status"] == 200 and hit["ms"] >= 0
+
+
+def _trends_served(ctx, body) -> tuple[str, bool]:
+    """The /historical_trends/ response as served (its JSON bytes, the 400
+    detail, or the error class of a 500), and whether it planned in Spark,
+    i.e. called its job-group hook."""
+    from move_forecast_ind_spark.plans.service import RequestError
+    from move_forecast_ind_spark.server import trends_response
+
+    planned, hit = [], None
+    try:
+        payload, hit = trends_response(ctx, body, lambda: planned.append(True))
+        out = json.dumps(payload)
+    except RequestError as e:
+        out = f"400 {e}"
+    except Exception as e:  # a non-string move type can fail in Spark's cast
+        out = f"500 {type(e).__name__}"
+    assert hit is None or hit != bool(planned)
+    return out, bool(planned)
+
+
+def _trends_sample(ctx, surface, n: int, anchors: list[str]) -> list[dict]:
+    """A seeded sample of trends bodies: ``anchors`` dates on every branch,
+    then dates in [today, max_date], past dates, dates after max_date
+    (trends has no horizon cap), unknown branches and the two 400s of a
+    bad date and a missing branch, crossed with the known types, None,
+    "ZZ", "" and an integer type."""
+    rng = random.Random(20261020)
+    branches = sorted({b for b, _ in surface.index})
+    known = sorted({t for _, t in surface.index if t is not None})
+    types = [*known, None, "ZZ", "", 5]
+    span = (ctx.max_date - ctx.today).days
+    offsets = {"live": (0, span), "past": (-400, -1), "future": (span + 1, span + 400)}
+    sample = [{"date": a, "branch": b, "move_type": None} for a in anchors for b in branches]
+    for i in range(n):
+        kind = rng.choices([*offsets, "unknown_branch", "bad_date", "no_branch"],
+                           weights=[55, 15, 10, 10, 5, 5])[0]
+        day = ctx.today + dt.timedelta(rng.randint(*offsets.get(kind, offsets["live"])))
+        body = {
+            "date": str(day).replace("-", "/") if kind == "bad_date" else str(day),
+            "branch": max(branches) + rng.randint(1, 1000)
+            if kind == "unknown_branch" else rng.choice(branches),
+            "move_type": types[i % len(types)],
+        }
+        if kind == "no_branch":
+            del body["branch"]
+        sample.append(body)
+    return sample
+
+
+@pytest.mark.parametrize(
+    "today, max_date, anchors",
+    [
+        (TODAY, MAX, []),
+        # [today, max_date] crosses Dec 31: windows Dec 28 -> Jan 3 wrap
+        (dt.date(1998, 12, 20), dt.date(1999, 1, 20), ["1998-12-31"]),
+        # crosses February of a non-leap year: the Feb 26 -> Mar 4 window
+        # admits 1996-02-29 on the Spark path
+        (dt.date(1999, 2, 20), dt.date(1999, 3, 10), ["1999-03-01"]),
+    ],
+    ids=["live", "year_wrap", "feb29"],
+)
+def test_trends_surface_matches_per_request_path(ctx, today, max_date, anchors):
+    """Every request in a seeded sample gets the same bytes, the same 400
+    detail or the same 500 from the trends surface as from the per-request
+    Spark path. Only a request with an integer move type falls back to
+    Spark; the rest are surface hits."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from move_forecast_ind_spark.server import TrendsSurface
+
+    base = dataclasses.replace(ctx, today=today, max_date=max_date)
+    surface = TrendsSurface.build(base)
+    served_ctx = dataclasses.replace(base, trends_surface=surface)
+    sample = _trends_sample(base, surface, 80 if not anchors else 40, anchors)
+    with ThreadPoolExecutor(4) as pool:  # the per-request path costs ~0.3 s
+        served = list(pool.map(lambda b: _trends_served(served_ctx, b), sample))
+        planned = list(pool.map(lambda b: _trends_served(base, b), sample))
+    assert [out for out, _ in served] == [out for out, _ in planned]
+    for body, (out, served_planned), (_, base_planned) in zip(sample, served, planned):
+        rejected = out.startswith("400")
+        assert base_planned == (not rejected)
+        assert served_planned == (not rejected and isinstance(body["move_type"], int))
+    details = {out.split(" ", 2)[1] for out, _ in served if out.startswith("400")}
+    assert details == {"date", "body"}  # the bad date, the missing branch
+    answers = [json.loads(out) for out, _ in served if out.startswith("{")]
+    assert any(a["move_type"] == "ZZ" for a in answers) and any(a["move_type"] == "" for a in answers)
+    days = {(y["year"], d["date"]) for a in answers for y in a["historical_trends"] for d in y["data"]}
+    if "1999-03-01" in anchors:
+        assert (1996, "02-29") in days
+    if "1998-12-31" in anchors:
+        wrapped = [y for a in answers if a["window"]["start_date"] == "1998-12-28"
+                   for y in a["historical_trends"]]
+        assert any({d["date"][:2] for d in y["data"]} == {"12", "01"} for y in wrapped)
+
+
+def test_serve_stderr_is_one_json_line_per_request(tmp_path):
+    """``serve`` as users start it: its first stdout line reports both
+    surfaces, and each access-log line of its stderr parses as JSON from
+    column 0, with no console progress bar sharing the line."""
+    import os
+    import select
+    import signal
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    err_path = tmp_path / "serve.err"
+    with open(err_path, "w") as err:
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "move_forecast_ind_spark", "serve", "--sf-dir", SF_SMALL,
+             "--port", "0", "--today", str(TODAY), "--max-date", str(MAX)],
+            cwd=repo, stdout=subprocess.PIPE, stderr=err, stdin=subprocess.DEVNULL,
+            text=True, start_new_session=True,
+        )
+    try:
+        assert select.select([proc.stdout], [], [], 600)[0], "serve did not start"
+        started = json.loads(proc.stdout.readline())
+        assert list(started) == ["serving", "surface_rows", "surface_s", "trends_rows", "trends_s"]
+        assert started["trends_rows"] > 0 and started["trends_s"] > 0
+        requests = [
+            ("/forecast/", {"date": "1999-05-20", "branch": 7, "move_type": "R"}),  # Spark
+            ("/historical_trends/", {"date": "1999-06-03", "branch": 7}),
+            ("/forecast/", {"date": "1999-06-03", "branch": 7}),
+            ("/historical_trends/", {"date": "1999/06/03", "branch": 7}),  # 400
+        ]
+        for path, body in requests:
+            try:
+                _post(started["serving"], path, body)
+            except urllib.error.HTTPError as e:
+                assert e.code == 400
+        deadline = time.monotonic() + 60  # a line is written after its response
+        while err_path.read_text().count('"path"') < len(requests) and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        proc.send_signal(signal.SIGINT)
+        try:
+            proc.wait(timeout=120)
+        except subprocess.TimeoutExpired:
+            os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait(timeout=60)
+        proc.stdout.close()
+    logged = [line for line in err_path.read_bytes().decode().split("\n") if '"path"' in line]
+    assert [line[:9] for line in logged] == ['{"path": '] * len(requests), logged
+    # a line is written once its response is sent: not always in order
+    entries = sorted((e["path"], e["surface_hit"]) for e in map(json.loads, logged))
+    assert entries == sorted(zip((path for path, _ in requests), [False, True, True, False]))
 
 
 def test_forecast_validation_errors(server):
