@@ -3,8 +3,9 @@
 The reference exposes POST /forecast/ and POST /historical_trends/ over
 uvicorn (reference main.py:415-447). This engine offers the same surface
 two ways: a CLI over the request shapes, and a real HTTP server
-(``serve`` → move_forecast_ind_spark/server.py, stdlib ThreadingHTTPServer
-— no web framework exists in this environment and none is required):
+(``serve`` → move_forecast_ind_spark/server.py, an asyncio event loop that
+answers surface hits inline and runs Spark-path requests on a small thread
+pool — no web framework exists in this environment and none is required):
 
     python -m move_forecast_ind_spark forecast --date 1999-06-03 --branch 7 \
         [--move-type R] [--sf-dir /root/testdata/sf0.01]
@@ -72,15 +73,15 @@ def _serving_context(args):
 
 def cmd_forecast(args) -> int:
     from .plans.service import RequestError
-    from .server import forecast_response_dict
+    from .server import forecast_response
 
     body = {"date": args.date, "branch": args.branch, "move_type": args.move_type}
     try:
-        out = forecast_response_dict(_serving_context(args), body)
+        data, _ = forecast_response(_serving_context(args), body)
     except RequestError as e:
         print(json.dumps({"error": str(e)}), file=sys.stderr)
         return 2
-    print(json.dumps(out))
+    print(data.decode())
     return 0
 
 
@@ -136,7 +137,7 @@ def cmd_serve(args) -> int:
     print(
         json.dumps({
             "serving": f"http://{srv.server_address[0]}:{srv.server_address[1]}",
-            "surface_rows": surface.rows.num_rows,
+            "surface_rows": surface.num_rows,
             "surface_s": round(surface.build_s, 3),
             "trends_rows": trends.num_rows,
             "trends_s": round(trends.build_s, 3),
@@ -147,6 +148,8 @@ def cmd_serve(args) -> int:
         srv.serve_forever()
     except KeyboardInterrupt:
         pass
+    finally:
+        srv.server_close()
     return 0
 
 

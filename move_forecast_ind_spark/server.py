@@ -3,9 +3,8 @@
 The reference serves POST /forecast/ and POST /historical_trends/ via
 FastAPI+uvicorn with pydantic validation (reference main.py:124-127,
 410-447). This module provides the same three endpoints on the Python
-standard library only (``http.server.ThreadingHTTPServer``) — no external
-web framework exists in this environment, and none is needed for request/
-response JSON over a thread pool:
+standard library only — no external web framework exists in this
+environment, and none is needed for request/response JSON:
 
 - ``GET|HEAD /``                → welcome message          (main.py:410-413)
 - ``POST /forecast/``           → forecast response        (main.py:415-430)
@@ -19,34 +18,43 @@ and horizon are injected through :class:`ServingContext` (no hidden
 Before :func:`serve` binds its port it builds two surfaces. The
 :class:`ForecastSurface` holds every live forecast (each model branch ×
 each known move type and ``None`` × each input date in [today,
-max_date]) as one plans.service.forecast_batch, collected once into an
-Arrow table. The :class:`TrendsSurface` holds every fact-table day row a
-live /historical_trends/ window can ask for, from one aggregate over the
-cached fact table. A request on either endpoint whose move type is a
-string or null is answered from its surface: it fires no Spark job and
-makes no py4j call. A past-date forecast, a non-string move type, and
-any request on a context without a surface (the CLI ``forecast``
-command) plans one Spark query through plans.service instead of ~30
-(resp. 6) DB round-trips (see plans.service for its job count).
+max_date]) as its finished response body, encoded once from one
+plans.service.forecast_batch. The :class:`TrendsSurface` holds every
+fact-table day row a live /historical_trends/ window can ask for, from
+one aggregate over the cached fact table. A request on either endpoint
+whose move type is a string or null is answered from its surface: it
+fires no Spark job and makes no py4j call. A past-date forecast, a
+non-string forecast move type, and any request on a context without a
+surface (the CLI ``forecast`` command) plans one Spark query through
+plans.service instead of ~30 (resp. 6) DB round-trips (see plans.service
+for its job count). A non-string trends move type is a 400.
 
-A request that plans in Spark sets a Spark job group of its own right
-before its first Spark call. The server writes one JSON access-log line
-per request to stderr: ``path``, ``status``, ``ms``, ``spark_jobs`` (the
-jobs of its job group; 0 when it set none) and ``surface_hit``.
+:class:`Server` runs on one asyncio event loop (where the reference's
+uvicorn loop blocks on every DB call): it parses each HTTP/1.0 request
+itself and answers surface hits and 400s inline, while a request that
+plans in Spark runs on a small thread pool under a Spark job group of its
+own, set right before its first Spark call. The server writes one JSON
+access-log line per request to stderr, before the response: ``path``,
+``status``, ``ms``, ``spark_jobs`` (the jobs of its job group; 0 when it
+set none) and ``surface_hit``.
 """
 
 from __future__ import annotations
 
+import asyncio
 import dataclasses
 import datetime as dt
 import itertools
 import json
 import math
+import socket
 import sys
+import threading
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http import HTTPStatus
 
 import numpy as np
 import pyarrow as pa
@@ -103,16 +111,17 @@ class ForecastSurface:
     """Every live /forecast/ answer, computed before the server binds: one
     :func:`forecast_batch` over all model branches × (known move types and
     ``None``) × input dates ``today..max_date``, collected as one Arrow
-    table. ``index`` maps (branch, move type, input date) to its rows'
-    (offset, length) in ``rows``, which is sorted by that key and ``ds``.
-    Read-only once built, so request threads share it without a lock."""
+    table and encoded into finished response bodies. ``bodies`` maps
+    (branch, move type, input date) to the JSON bytes a hit sends, each
+    equal to ``json.dumps`` of :func:`forecast_payload` on that key's rows.
+    Read-only once built, so it is shared without a lock."""
 
     branches: frozenset[int]
     move_types: tuple[str, ...]
     today: dt.date
     max_date: dt.date
-    rows: pa.Table
-    index: dict[tuple[int, str | None, dt.date], tuple[int, int]]
+    bodies: dict[tuple[int, str | None, dt.date], bytes]
+    num_rows: int
     build_s: float
 
     @classmethod
@@ -138,51 +147,93 @@ class ForecastSurface:
         daily = forecast_batch(
             ctx.spark, ctx.models, live_pct, requests, ctx.today, ctx.max_date, move_types
         )
-        keys = ["branch", "move_type", "input_date"]
-        table = daily.select(
-            *keys, "ds", "predicted_moves", "comment", "branch_forecast", "hist_avg"
-        ).toArrow()
-        table = table.sort_by([(k, "ascending") for k in [*keys, "ds"]])
-        # Each key's rows are contiguous after the sort: a key starts
-        # where any key column differs from the row before.
-        codes = [
-            table["branch"].to_numpy(),
-            pc.fill_null(pc.index_in(table["move_type"], pa.array(move_types, pa.string())), -1)
-            .to_numpy(),
-            table["input_date"].cast(pa.int32()).to_numpy(),
-        ]
-        change = np.logical_or.reduce([c[1:] != c[:-1] for c in codes])
-        starts = np.flatnonzero(np.r_[table.num_rows > 0, change])
-        counts = np.diff(np.r_[starts, table.num_rows])
-        first = table.select(keys).take(starts)
-        index = dict(
-            zip(
-                zip(*(first[k].to_pylist() for k in keys)),
-                zip(starts.tolist(), counts.tolist()),
-            )
-        )
+        table = daily.select(*FORECAST_KEY, *FORECAST_COLUMNS).toArrow()
+        bodies = _forecast_bodies(table)
         return cls(
-            branches=frozenset(branch for branch, _, _ in index),
+            branches=frozenset(branch for branch, _, _ in bodies),
             move_types=move_types,
             today=ctx.today,
             max_date=ctx.max_date,
-            rows=table,
-            index=index,
+            bodies=bodies,
+            num_rows=table.num_rows,
             build_s=time.perf_counter() - t0,
         )
 
-    def lookup(self, date: str, branch: int, move_type) -> list[dict] | None:
-        """A request's daily rows, sorted by ``ds``, or None when the
-        request is outside the surface (a past date, a move type that is
-        neither a string nor None). The 400s raise as forecast_request
-        raises them, and an unknown string type is demoted to None."""
+    def lookup(self, date: str, branch: int, move_type) -> bytes | None:
+        """A request's response body, or None when the request is outside
+        the surface (a past date, a move type that is neither a string nor
+        None). The 400s raise as forecast_request raises them, and an
+        unknown string type is demoted to None."""
         input_date = check_request(date, branch, self.max_date, self.branches.__contains__)
         if input_date < self.today or not (move_type is None or isinstance(move_type, str)):
             return None
         if move_type not in self.move_types:
             move_type = None
-        span = self.index.get((branch, move_type, input_date))
-        return None if span is None else self.rows.slice(*span).to_pylist()
+        return self.bodies.get((branch, move_type, input_date))
+
+
+FORECAST_KEY = ("branch", "move_type", "input_date")
+FORECAST_COLUMNS = ("ds", "predicted_moves", "comment", "branch_forecast", "hist_avg")
+# json.dumps of a str, without its per-call dispatch.
+_json_str = json.encoder.encode_basestring_ascii
+
+
+def _forecast_bodies(table: pa.Table) -> dict[tuple[int, str | None, dt.date], bytes]:
+    """The /forecast/ body of every key of ``table`` (forecast_batch's rows,
+    :data:`FORECAST_KEY` and :data:`FORECAST_COLUMNS`), byte-identical to
+    ``json.dumps(forecast_payload(branch, rows))`` of the key's rows. The
+    ``predicted_summary`` entries are built column by column, each distinct
+    comment JSON-escaped once; only each key's period summary is Python."""
+    table = table.sort_by([(k, "ascending") for k in (*FORECAST_KEY, "ds")])
+    col = {c: table[c].combine_chunks() for c in table.column_names}
+    # Each key's rows are contiguous after the sort: a key starts where any
+    # key column differs from the row before.
+    codes = [
+        col["branch"].to_numpy(),
+        pc.fill_null(pc.index_in(col["move_type"], pc.unique(col["move_type"])), -1).to_numpy(),
+        col["input_date"].cast(pa.int32()).to_numpy(),
+    ]
+    change = np.logical_or.reduce([c[1:] != c[:-1] for c in codes])
+    starts = np.flatnonzero(np.r_[table.num_rows > 0, change])
+    ends = np.r_[starts[1:], table.num_rows]
+
+    comment = col["comment"].dictionary_encode()
+    escaped = pa.array([_json_str(c) for c in comment.dictionary.to_pylist()], pa.string())
+    entries = pc.binary_join_element_wise(
+        '{"date": "', col["ds"].cast(pa.string()), '", "predicted_moves": ',
+        col["predicted_moves"].cast(pa.string()), ', "comment": ',
+        escaped.take(comment.indices), "}", "",
+    )
+    offsets = pa.array(np.r_[starts, table.num_rows], pa.int32())
+    summaries = pc.binary_join(pa.ListArray.from_arrays(offsets, entries), ", ")
+
+    # Python values through numpy, which converts far faster than
+    # to_pylist; hist_avg's nulls (branch-level rows only) become NaN and
+    # are never read, since a branch-level summary does not use them.
+    def values(array) -> list:
+        return array.to_numpy(zero_copy_only=False).tolist()
+
+    first = table.select([*FORECAST_KEY, "ds"]).take(starts)
+    predicted, branch_forecast, hist_avg = (
+        values(col[c]) for c in ("predicted_moves", "branch_forecast", "hist_avg")
+    )
+    type_json = {t: json.dumps(t) for t in set(values(first["move_type"].combine_chunks()))}
+    bodies = {}
+    for branch, move_type, input_date, first_ds, end_date, s, e, days in zip(
+        *(values(first[c].combine_chunks()) for c in first.column_names),
+        values(col["ds"].take(ends - 1).cast(pa.string())),
+        starts.tolist(), ends.tolist(), values(summaries),
+    ):
+        total, average, summary_comment = _period_summary(
+            branch, move_type, first_ds, predicted[s:e], branch_forecast[s:e], hist_avg[s:e]
+        )
+        bodies[branch, move_type, input_date] = (
+            f'{{"branch": {branch}, "move_type": {type_json[move_type]}, '
+            f'"forecast_window": {{"start_date": "{first_ds}", "end_date": "{end_date}"}}, '
+            f'"predicted_summary": [{days}], "total_predicted_moves": {total}, '
+            f'"average_daily_moves": {average}, "summary_comment": {_json_str(summary_comment)}}}'
+        ).encode()
+    return bodies
 
 
 def _in_window(md, start: dt.date, end: dt.date):
@@ -302,60 +353,53 @@ def _no_job_group() -> None:
     pass
 
 
-def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
-    """POST /forecast/ — the reference's response shape (main.py:320-332)."""
-    return forecast_response(ctx, body)[0]
-
-
-def forecast_response(
-    ctx: ServingContext, body: dict, job_group: Callable[[], None] = _no_job_group
-) -> tuple[dict, bool]:
-    """The /forecast/ response, and whether the surface answered it.
-    ``job_group`` runs right before the first Spark call, if any."""
-    date, branch, move_type = _request_fields(body)
-
-    surface = ctx.surface
-    rows = None if surface is None else surface.lookup(date, branch, move_type)
-    hit = rows is not None
-    if not hit:
-        job_group()
-        daily, _ = forecast_request(
-            ctx.spark, ctx.models, ctx.pct, date=date, branch=branch,
-            move_type=move_type, today=ctx.today, max_date=ctx.max_date,
-            move_types=None if surface is None else surface.move_types,
-        )
-        rows = sorted(daily.collect(), key=lambda r: r.ds)  # ≤7 rows: the payload
-    if not rows:
-        raise RequestError(f"no forecastable window for {date!r}")
-    served_move_type = rows[0]["move_type"]  # None after silent demotion
-
+def _period_summary(
+    branch: int,
+    move_type: str | None,
+    first_ds: dt.date,
+    predicted: list[int],
+    branch_forecast: list[float],
+    hist_avg: list[float],
+) -> tuple[int, int, str]:
+    """``(total_predicted_moves, average_daily_moves, summary_comment)`` of
+    a window's daily rows (``move_type`` is the served one, None after the
+    silent demotion)."""
     # Period totals (main.py:290-291), as plans.forecast_tail.forecast_summary
     # computes them: Spark's avg of ≤7 small longs is an exact double sum
     # over an exact double count, half-up rounded.
-    total = sum(r["predicted_moves"] for r in rows)
-    average = math.floor(total / len(rows) + 0.5)
+    total = sum(predicted)
+    average = math.floor(total / len(predicted) + 0.5)
+    if move_type is None:
+        return total, average, SUMMARY_NO_MOVE_TYPE.format(branch=branch)
 
     # Period summary comment (reference main.py:292-318): current share vs
     # the window's mean historical share, banded at ±5 pp.
-    total_forecast = sum(r["branch_forecast"] for r in rows)
-    if served_move_type is None:
-        summary_comment = SUMMARY_NO_MOVE_TYPE.format(branch=branch)
-    else:
-        current = 100.0 * total / total_forecast if total_forecast > 0 else 0.0
-        hist_avg = sum(r["hist_avg"] for r in rows) / len(rows)
-        diff = current - hist_avg
-        band = "consistent" if abs(diff) <= 5 else ("stronger" if diff > 5 else "weaker")
-        idx = (branch * 31 + rows[0]["ds"].month * 7 + rows[0]["ds"].day) % 3
-        summary_comment = SUMMARY_BANKS[band][idx].format(
-            move_type=served_move_type,
-            branch=branch,
-            current=_round_half_up(current),
-            hist_avg=_round_half_up(hist_avg),
-        )
+    total_forecast = sum(branch_forecast)
+    current = 100.0 * total / total_forecast if total_forecast > 0 else 0.0
+    hist = sum(hist_avg) / len(hist_avg)
+    diff = current - hist
+    band = "consistent" if abs(diff) <= 5 else ("stronger" if diff > 5 else "weaker")
+    idx = (branch * 31 + first_ds.month * 7 + first_ds.day) % 3
+    return total, average, SUMMARY_BANKS[band][idx].format(
+        move_type=move_type,
+        branch=branch,
+        current=_round_half_up(current),
+        hist_avg=_round_half_up(hist),
+    )
 
+
+def forecast_payload(branch: int, rows) -> dict:
+    """The /forecast/ response (the reference's shape, main.py:320-332) for
+    one request's daily rows, sorted by ``ds``."""
+    total, average, summary_comment = _period_summary(
+        branch, rows[0]["move_type"], rows[0]["ds"],
+        [r["predicted_moves"] for r in rows],
+        [r["branch_forecast"] for r in rows],
+        [r["hist_avg"] for r in rows],
+    )
     return {
         "branch": branch,
-        "move_type": served_move_type,
+        "move_type": rows[0]["move_type"],
         "forecast_window": {
             "start_date": rows[0]["ds"].strftime("%Y-%m-%d"),
             "end_date": rows[-1]["ds"].strftime("%Y-%m-%d"),
@@ -371,26 +415,56 @@ def forecast_response(
         "total_predicted_moves": total,
         "average_daily_moves": average,
         "summary_comment": summary_comment,
-    }, hit
+    }
+
+
+def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
+    """POST /forecast/ — the reference's response shape (main.py:320-332)."""
+    return json.loads(forecast_response(ctx, body)[0])
+
+
+def forecast_response(
+    ctx: ServingContext, body: dict, job_group: Callable[[], None] = _no_job_group
+) -> tuple[bytes, bool]:
+    """The /forecast/ response body, and whether the surface answered it.
+    ``job_group`` runs right before the first Spark call, if any."""
+    date, branch, move_type = _request_fields(body)
+
+    surface = ctx.surface
+    data = None if surface is None else surface.lookup(date, branch, move_type)
+    if data is not None:
+        return data, True
+    job_group()
+    daily, _ = forecast_request(
+        ctx.spark, ctx.models, ctx.pct, date=date, branch=branch,
+        move_type=move_type, today=ctx.today, max_date=ctx.max_date,
+        move_types=None if surface is None else surface.move_types,
+    )
+    rows = sorted(daily.collect(), key=lambda r: r.ds)  # ≤7 rows: the payload
+    if not rows:
+        raise RequestError(f"no forecastable window for {date!r}")
+    return json.dumps(forecast_payload(branch, rows)).encode(), False
 
 
 def trends_response_dict(ctx: ServingContext, body: dict) -> dict:
     """POST /historical_trends/ — per-year window rows (main.py:340-403)."""
-    return trends_response(ctx, body)[0]
+    return json.loads(trends_response(ctx, body)[0])
 
 
 def trends_response(
     ctx: ServingContext, body: dict, job_group: Callable[[], None] = _no_job_group
-) -> tuple[dict, bool]:
-    """The /historical_trends/ response, and whether the trends surface
-    answered it. ``job_group`` runs right before the first Spark call, if
-    any."""
+) -> tuple[bytes, bool]:
+    """The /historical_trends/ response body, and whether the trends
+    surface answered it. A move type that is neither a string nor null is a
+    400, as the reference's ``Optional[str]`` field rejects it. ``job_group``
+    runs right before the first Spark call, if any."""
     date, branch, move_type = _request_fields(body)
     start, end = forecast_window(parse_date(date), ctx.today, ctx.max_date)
+    if not (move_type is None or isinstance(move_type, str)):
+        raise RequestError(f"move_type must be a string or null, got {move_type!r}")
 
     surface = ctx.trends_surface
-    hit = surface is not None and (move_type is None or isinstance(move_type, str))
-    if hit:
+    if surface is not None:
         per_year = surface.lookup(branch, move_type, start, end)
     else:
         job_group()
@@ -406,7 +480,7 @@ def trends_response(
                 {"date": d.split(":")[0], "moves": float(d.split(":")[1])}
                 for d in (r.days.split(",") if r.days else [])
             ]
-    return {
+    payload = {
         "branch": branch,
         "move_type": move_type,
         "historical_trends": [
@@ -417,7 +491,8 @@ def trends_response(
             "start_date": str(start),
             "end_date": str(end),
         },
-    }, hit
+    }
+    return json.dumps(payload).encode(), surface is not None
 
 
 class _JobGroup:
@@ -441,81 +516,6 @@ class _JobGroup:
         return _jobs_in_group(self.sc, self.group)
 
 
-def make_handler(ctx: ServingContext):
-    request_ids = itertools.count(1)  # names each request's job group
-    routes = {
-        "/forecast/": forecast_response,
-        "/historical_trends/": trends_response,
-    }
-    sc = ctx.spark.sparkContext
-
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, fmt, *args):  # the access log replaces it
-            pass
-
-        def _send(self, code: int, payload: dict, head_only: bool = False) -> None:
-            data = json.dumps(payload).encode("utf-8")
-            self.send_response(code)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            if not head_only:
-                self.wfile.write(data)
-
-        def _respond(self, method: str) -> None:
-            """Answer one request, under a Spark job group of its own if it
-            calls Spark, then write its JSON access-log line to stderr."""
-            t0 = time.perf_counter()
-            job_group = _JobGroup(sc, f"http-{next(request_ids)}", f"{method} {self.path}")
-            status, hit = 500, False
-            try:
-                status, payload, hit = self._route(method, job_group)
-                self._send(status, payload, head_only=method == "HEAD")
-            finally:
-                ms = 1000.0 * (time.perf_counter() - t0)
-                entry = {
-                    "path": self.path,
-                    "status": status,
-                    "ms": round(ms, 3),
-                    "spark_jobs": job_group.close(),
-                    "surface_hit": hit,
-                }
-                sys.stderr.write(json.dumps(entry) + "\n")
-                sys.stderr.flush()
-
-        def _route(self, method: str, job_group: _JobGroup) -> tuple[int, dict, bool]:
-            if method in ("GET", "HEAD"):
-                if self.path != "/":
-                    return 404, {"detail": "not found"}, False
-                message = "Move Forecast engine (Spark). POST /forecast/ or /historical_trends/."
-                return 200, {"message": message}, False
-            fn = routes.get(self.path)
-            if fn is None:
-                return 404, {"detail": "not found"}, False
-            try:
-                length = int(self.headers.get("Content-Length") or 0)
-                body = json.loads(self.rfile.read(length) or b"{}")
-                if not isinstance(body, dict):
-                    raise RequestError("body must be a JSON object")
-                payload, hit = fn(ctx, body, job_group)
-                return 200, payload, hit
-            except (RequestError, json.JSONDecodeError) as e:
-                return 400, {"detail": str(e)}, False  # main.py:425-427
-            except Exception as e:  # pragma: no cover - 500 path
-                return 500, {"detail": f"Server error: {e}"}, False
-
-        def do_GET(self) -> None:  # noqa: N802 (http.server API)
-            self._respond("GET")
-
-        def do_HEAD(self) -> None:  # noqa: N802
-            self._respond("HEAD")
-
-        def do_POST(self) -> None:  # noqa: N802
-            self._respond("POST")
-
-    return Handler
-
-
 def _jobs_in_group(sc, group: str) -> int | None:
     """Spark jobs started under ``group``, after waiting (at most 5 s) for
     the listener bus, so the jobs of a call that just returned are all
@@ -527,7 +527,197 @@ def _jobs_in_group(sc, group: str) -> int | None:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def serve(ctx: ServingContext, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTPServer:
+class _NeedsSpark(Exception):
+    """Raised by the event loop's job-group hook: the request is about to
+    call Spark, so it is answered again on the Spark executor."""
+
+
+def _needs_spark() -> None:
+    raise _NeedsSpark
+
+
+# Threads for the requests that plan in Spark. Surface hits and 400s are
+# answered on the event loop and never wait for them.
+SPARK_THREADS = 4
+# The most a request line with its headers, and a request body, may take.
+HEADER_LIMIT = 64 * 1024
+BODY_LIMIT = 1024 * 1024
+WELCOME = json.dumps(
+    {"message": "Move Forecast engine (Spark). POST /forecast/ or /historical_trends/."}
+).encode()
+
+
+def _detail(message: str) -> bytes:
+    return json.dumps({"detail": message}).encode()
+
+
+def _parse_head(head: bytes) -> tuple[str, str, dict[bytes, bytes]] | None:
+    """``(method, path, headers)`` of an HTTP/1.x request head (the bytes up
+    to and including the blank line, lines ending in CRLF), header names
+    lower-cased; None when the request line or a header line is
+    malformed."""
+    request_line, *lines = head[:-4].split(b"\r\n")
+    parts = request_line.split()
+    if len(parts) != 3 or not parts[2].startswith(b"HTTP/"):
+        return None
+    headers = {}
+    for line in lines:
+        name, colon, value = line.partition(b":")
+        if not colon:
+            return None
+        headers[name.strip().lower()] = value.strip()
+    return parts[0].decode("latin-1"), parts[1].decode("latin-1"), headers
+
+
+class Server:
+    """The HTTP/1.0 server :func:`serve` returns: one asyncio event loop
+    accepts every connection, reads its request (request line, headers up
+    to the blank line, a ``Content-Length`` body) and answers surface hits,
+    400s and the other statuses inline. A request that plans in Spark runs
+    on a pool of :data:`SPARK_THREADS` threads under a job group of its
+    own. Each request writes its JSON access-log line to stderr right
+    before its response; the connection closes after it.
+
+    Used like the stdlib servers: ``serve_forever()`` runs the loop in the
+    calling thread until ``shutdown()`` (from another thread) stops it;
+    ``server_close()`` releases the socket and the thread pool."""
+
+    def __init__(self, ctx: ServingContext, host: str, port: int) -> None:
+        self.ctx = ctx
+        self.routes = {"/forecast/": forecast_response, "/historical_trends/": trends_response}
+        self.socket = socket.create_server((host, port))
+        self.server_address = self.socket.getsockname()[:2]
+        self.pool = ThreadPoolExecutor(SPARK_THREADS, thread_name_prefix="spark-request")
+        self.request_ids = itertools.count(1)  # names each Spark request's job group
+        self._loop: asyncio.AbstractEventLoop | None = None
+        self._stop: asyncio.Event | None = None
+        self._stop_requested = threading.Event()
+        self._stopped = threading.Event()
+        self._stopped.set()
+
+    def serve_forever(self) -> None:
+        self._stopped.clear()
+        try:
+            asyncio.run(self._serve())
+        finally:
+            self._loop = None
+            self._stop_requested.clear()
+            self._stopped.set()
+
+    def shutdown(self) -> None:
+        """Stop ``serve_forever`` and wait for it to return; call it from
+        another thread."""
+        self._stop_requested.set()
+        loop, stop = self._loop, self._stop
+        if loop is not None:
+            try:
+                loop.call_soon_threadsafe(stop.set)
+            except RuntimeError:  # the loop has already closed
+                pass
+        self._stopped.wait()
+
+    def server_close(self) -> None:
+        self.socket.close()
+        self.pool.shutdown(wait=False, cancel_futures=True)
+
+    async def _serve(self) -> None:
+        self._loop, self._stop = asyncio.get_running_loop(), asyncio.Event()
+        if self._stop_requested.is_set():  # shutdown() came before the loop
+            return
+        server = await asyncio.start_server(self._connection, sock=self.socket, limit=HEADER_LIMIT)
+        async with server:
+            await self._stop.wait()
+
+    async def _connection(self, reader: asyncio.StreamReader, writer: asyncio.StreamWriter) -> None:
+        try:
+            await self._exchange(reader, writer)
+        except (asyncio.IncompleteReadError, asyncio.LimitOverrunError, ConnectionError):
+            pass  # the client left mid-request, or its head is over HEADER_LIMIT: no response
+        finally:
+            writer.close()
+
+    async def _exchange(self, reader: asyncio.StreamReader, writer: asyncio.StreamWriter) -> None:
+        head = await reader.readuntil(b"\r\n\r\n")
+        t0 = time.perf_counter()
+        request = _parse_head(head)
+        method, path, hit, jobs = "", None, False, 0
+        if request is None:
+            status, data = 400, _detail("malformed request line or header")
+        else:
+            method, path, headers = request
+            if method in ("GET", "HEAD"):
+                status, data = (200, WELCOME) if path == "/" else (404, _detail("not found"))
+            elif method != "POST":
+                status, data = 501, _detail(f"unsupported method {method!r}")
+            elif path not in self.routes:
+                status, data = 404, _detail("not found")
+            elif not headers.get(b"content-length", b"").isdigit():
+                status, data = 400, _detail("a POST needs a numeric Content-Length")
+            elif int(headers[b"content-length"]) > BODY_LIMIT:
+                status, data = 413, _detail(f"bodies are capped at {BODY_LIMIT} bytes")
+            else:
+                body = await reader.readexactly(int(headers[b"content-length"]))
+                status, data, hit, jobs = await self._answer(path, body)
+        entry = {
+            "path": path,
+            "status": status,
+            "ms": round(1000.0 * (time.perf_counter() - t0), 3),
+            "spark_jobs": jobs,
+            "surface_hit": hit,
+        }
+        sys.stderr.write(json.dumps(entry) + "\n")
+        sys.stderr.flush()
+        writer.write(
+            f"HTTP/1.0 {status} {HTTPStatus(status).phrase}\r\n"
+            f"Content-Type: application/json\r\nContent-Length: {len(data)}\r\n\r\n".encode()
+        )
+        if method != "HEAD":
+            writer.write(data)
+        await writer.drain()
+
+    async def _answer(self, path: str, body: bytes) -> tuple[int, bytes, bool, int | None]:
+        """``(status, body, surface hit, Spark jobs)`` of a POST: on the
+        loop when the request makes no Spark call, else on the pool."""
+        try:
+            request = json.loads(body or b"{}")
+        except ValueError as e:  # not JSON, or not UTF-8
+            return 400, _detail(str(e)), False, 0
+        if not isinstance(request, dict):
+            return 400, _detail("body must be a JSON object"), False, 0
+        try:
+            return (*self._route(path, request, _needs_spark), 0)
+        except _NeedsSpark:
+            pass
+        job_group = _JobGroup(
+            self.ctx.spark.sparkContext, f"http-{next(self.request_ids)}", f"POST {path}"
+        )
+        return await asyncio.get_running_loop().run_in_executor(
+            self.pool, self._answer_in_spark, path, request, job_group
+        )
+
+    def _answer_in_spark(
+        self, path: str, request: dict, job_group: _JobGroup
+    ) -> tuple[int, bytes, bool, int | None]:
+        """:meth:`_answer` for a request that calls Spark, on a pool thread:
+        its jobs are counted before the loop sends its response."""
+        return (*self._route(path, request, job_group), job_group.close())
+
+    def _route(
+        self, path: str, request: dict, job_group: Callable[[], None]
+    ) -> tuple[int, bytes, bool]:
+        """``(status, body, surface hit)`` of a POST body; a
+        :class:`_NeedsSpark` from ``job_group`` propagates."""
+        try:
+            return (200, *self.routes[path](self.ctx, request, job_group))
+        except _NeedsSpark:
+            raise
+        except RequestError as e:
+            return 400, _detail(str(e)), False  # main.py:425-427
+        except Exception as e:  # pragma: no cover - 500 path
+            return 500, _detail(f"Server error: {e}"), False
+
+
+def serve(ctx: ServingContext, host: str = "127.0.0.1", port: int = 0) -> Server:
     """Build the forecast and trends surfaces that ``ctx`` lacks, then bind
     and return the server (call ``serve_forever`` yourself, or use a daemon
     thread in tests/CLI). Port 0 picks a free port."""
@@ -535,4 +725,4 @@ def serve(ctx: ServingContext, host: str = "127.0.0.1", port: int = 0) -> Thread
         ctx = dataclasses.replace(ctx, surface=ForecastSurface.build(ctx))
     if ctx.trends_surface is None:
         ctx = dataclasses.replace(ctx, trends_surface=TrendsSurface.build(ctx))
-    return ThreadingHTTPServer((host, port), make_handler(ctx))
+    return Server(ctx, host, port)

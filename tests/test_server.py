@@ -1,6 +1,6 @@
-"""HTTP facade tests: the reference's FastAPI surface served by the stdlib
-ThreadingHTTPServer over real request/response JSON (move_forecast_ind_spark/
-server.py), against the sf0.001 lake."""
+"""HTTP facade tests: the reference's FastAPI surface served by the
+package's asyncio event-loop server over real request/response JSON
+(move_forecast_ind_spark/server.py), against the sf0.001 lake."""
 
 from __future__ import annotations
 
@@ -210,8 +210,8 @@ def _forecast_or_400(ctx, body) -> tuple[str, bool]:
     from move_forecast_ind_spark.server import forecast_response
 
     try:
-        payload, hit = forecast_response(ctx, body)
-        return json.dumps(payload), hit
+        data, hit = forecast_response(ctx, body)
+        return data.decode(), hit
     except RequestError as e:
         return f"400 {e}", False
 
@@ -276,15 +276,11 @@ def test_surface_matches_per_request_path(ctx, surface_ctx):
     assert demoted and all(d["move_type"] is None for d in demoted)
 
 
-def _access_log(capsys, n: int) -> list[dict]:
-    """The next ``n`` access-log lines the server writes to stderr (each
-    is written once its response has been sent)."""
-    lines, deadline = [], time.monotonic() + 60
-    while len(lines) < n and time.monotonic() < deadline:
-        lines += [json.loads(x) for x in capsys.readouterr().err.splitlines()
-                  if x.startswith('{"path"')]
-        time.sleep(0.05)
-    return lines
+def _access_log(capsys) -> list[dict]:
+    """The access-log lines the server wrote to stderr since the last read
+    (each is written before its response is sent)."""
+    return [json.loads(x) for x in capsys.readouterr().err.splitlines()
+            if x.startswith('{"path"')]
 
 
 def _jvm_jobs(spark) -> int:
@@ -305,7 +301,7 @@ def test_surface_hit_fires_no_spark_job(server, spark, capsys):
         assert _post(server, path, body)[0] == 200
     assert _jvm_jobs(spark) == jobs
     assert _post(server, "/forecast/", {**body, "date": "1999-05-20"})[0] == 200
-    trends, hit, miss = _access_log(capsys, 3)
+    trends, hit, miss = _access_log(capsys)
     assert trends["path"] == "/historical_trends/"
     assert hit["path"] == miss["path"] == "/forecast/"
     for entry in (trends, hit):
@@ -315,20 +311,18 @@ def test_surface_hit_fires_no_spark_job(server, spark, capsys):
 
 
 def _trends_served(ctx, body) -> tuple[str, bool]:
-    """The /historical_trends/ response as served (its JSON bytes, the 400
-    detail, or the error class of a 500), and whether it planned in Spark,
-    i.e. called its job-group hook."""
+    """The /historical_trends/ response as served (its JSON bytes, or the
+    400 detail), and whether it planned in Spark, i.e. called its job-group
+    hook."""
     from move_forecast_ind_spark.plans.service import RequestError
     from move_forecast_ind_spark.server import trends_response
 
     planned, hit = [], None
     try:
-        payload, hit = trends_response(ctx, body, lambda: planned.append(True))
-        out = json.dumps(payload)
+        data, hit = trends_response(ctx, body, lambda: planned.append(True))
+        out = data.decode()
     except RequestError as e:
         out = f"400 {e}"
-    except Exception as e:  # a non-string move type can fail in Spark's cast
-        out = f"500 {type(e).__name__}"
     assert hit is None or hit != bool(planned)
     return out, bool(planned)
 
@@ -338,11 +332,11 @@ def _trends_sample(ctx, surface, n: int, anchors: list[str]) -> list[dict]:
     then dates in [today, max_date], past dates, dates after max_date
     (trends has no horizon cap), unknown branches and the two 400s of a
     bad date and a missing branch, crossed with the known types, None,
-    "ZZ", "" and an integer type."""
+    "ZZ", "" and the non-string types 5, 5.0 and true."""
     rng = random.Random(20261020)
     branches = sorted({b for b, _ in surface.index})
     known = sorted({t for _, t in surface.index if t is not None})
-    types = [*known, None, "ZZ", "", 5]
+    types = [*known, None, "ZZ", "", 5, 5.0, True]
     span = (ctx.max_date - ctx.today).days
     offsets = {"live": (0, span), "past": (-400, -1), "future": (span + 1, span + 400)}
     sample = [{"date": a, "branch": b, "move_type": None} for a in anchors for b in branches]
@@ -375,10 +369,10 @@ def _trends_sample(ctx, surface, n: int, anchors: list[str]) -> list[dict]:
     ids=["live", "year_wrap", "feb29"],
 )
 def test_trends_surface_matches_per_request_path(ctx, today, max_date, anchors):
-    """Every request in a seeded sample gets the same bytes, the same 400
-    detail or the same 500 from the trends surface as from the per-request
-    Spark path. Only a request with an integer move type falls back to
-    Spark; the rest are surface hits."""
+    """Every request in a seeded sample gets the same bytes or the same 400
+    detail from the trends surface as from the per-request Spark path. A
+    non-string move type is a 400 on both paths, before any Spark call, so
+    no request on the surface plans in Spark."""
     from concurrent.futures import ThreadPoolExecutor
 
     from move_forecast_ind_spark.server import TrendsSurface
@@ -393,10 +387,11 @@ def test_trends_surface_matches_per_request_path(ctx, today, max_date, anchors):
     assert [out for out, _ in served] == [out for out, _ in planned]
     for body, (out, served_planned), (_, base_planned) in zip(sample, served, planned):
         rejected = out.startswith("400")
+        assert rejected or not isinstance(body["move_type"], (int, float))
         assert base_planned == (not rejected)
-        assert served_planned == (not rejected and isinstance(body["move_type"], int))
+        assert not served_planned
     details = {out.split(" ", 2)[1] for out, _ in served if out.startswith("400")}
-    assert details == {"date", "body"}  # the bad date, the missing branch
+    assert details == {"date", "body", "move_type"}  # bad date, no branch, non-string type
     answers = [json.loads(out) for out, _ in served if out.startswith("{")]
     assert any(a["move_type"] == "ZZ" for a in answers) and any(a["move_type"] == "" for a in answers)
     days = {(y["year"], d["date"]) for a in answers for y in a["historical_trends"] for d in y["data"]}
@@ -411,7 +406,9 @@ def test_trends_surface_matches_per_request_path(ctx, today, max_date, anchors):
 def test_serve_stderr_is_one_json_line_per_request(tmp_path):
     """``serve`` as users start it: its first stdout line reports both
     surfaces, and each access-log line of its stderr parses as JSON from
-    column 0, with no console progress bar sharing the line."""
+    column 0, with no console progress bar sharing the line. Each line is
+    written before its response, so right after the last response the log
+    holds every request's line, in request order."""
     import os
     import select
     import signal
@@ -443,9 +440,7 @@ def test_serve_stderr_is_one_json_line_per_request(tmp_path):
                 _post(started["serving"], path, body)
             except urllib.error.HTTPError as e:
                 assert e.code == 400
-        deadline = time.monotonic() + 60  # a line is written after its response
-        while err_path.read_text().count('"path"') < len(requests) and time.monotonic() < deadline:
-            time.sleep(0.05)
+        logged = [line for line in err_path.read_bytes().decode().split("\n") if '"path"' in line]
     finally:
         proc.send_signal(signal.SIGINT)
         try:
@@ -454,11 +449,9 @@ def test_serve_stderr_is_one_json_line_per_request(tmp_path):
             os.killpg(proc.pid, signal.SIGKILL)
             proc.wait(timeout=60)
         proc.stdout.close()
-    logged = [line for line in err_path.read_bytes().decode().split("\n") if '"path"' in line]
     assert [line[:9] for line in logged] == ['{"path": '] * len(requests), logged
-    # a line is written once its response is sent: not always in order
-    entries = sorted((e["path"], e["surface_hit"]) for e in map(json.loads, logged))
-    assert entries == sorted(zip((path for path, _ in requests), [False, True, True, False]))
+    entries = [(e["path"], e["surface_hit"]) for e in map(json.loads, logged)]
+    assert entries == list(zip((path for path, _ in requests), [False, True, True, False]))
 
 
 def test_forecast_validation_errors(server):
@@ -493,6 +486,104 @@ def test_unknown_path_404(server):
     with pytest.raises(urllib.error.HTTPError) as e:
         _post(server, "/nope/", {})
     assert e.value.code == 404
+
+
+def test_surface_hits_never_wait_for_spark(server, spark, capsys):
+    """A past-date /forecast/ plans in Spark on the server's thread pool.
+    40 concurrent surface hits sent while its jobs run all return 200
+    before it does, and their access-log lines read 0 Spark jobs: the event
+    loop never waits for Spark."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def timed_post(path: str, body: dict) -> tuple[int, float]:
+        status = _post(server, path, body)[0]
+        return status, time.monotonic()
+
+    capsys.readouterr()
+    hits = [
+        (path, {"date": f"1999-06-{1 + i % 30:02d}", "branch": 7, "move_type": move_type})
+        for i, (path, move_type) in enumerate(
+            [("/forecast/", "R"), ("/forecast/", None), ("/historical_trends/", "N")] * 14
+        )
+    ][:40]
+    jobs = _jvm_jobs(spark)
+    with ThreadPoolExecutor(len(hits) + 1) as pool:
+        slow = pool.submit(timed_post, "/forecast/", {"date": "1999-04-11", "branch": 3, "move_type": "R"})
+        deadline = time.monotonic() + 60
+        while _jvm_jobs(spark) == jobs and time.monotonic() < deadline:
+            time.sleep(0.002)  # until the Spark request has started a job
+        fast = [pool.submit(timed_post, path, body) for path, body in hits]
+        fast_results = [f.result(timeout=60) for f in fast]
+        slow_status, slow_end = slow.result(timeout=120)
+    assert slow_status == 200 and [status for status, _ in fast_results] == [200] * len(hits)
+    assert max(end for _, end in fast_results) < slow_end
+    log = _access_log(capsys)
+    assert len(log) == len(hits) + 1
+    planned = [e for e in log if not e["surface_hit"]]
+    assert len(planned) == 1 and planned[0]["spark_jobs"] > 0
+    assert all(e["spark_jobs"] == 0 for e in log if e["surface_hit"])
+
+
+def _raw_exchange(url: str, data: bytes, close_write: bool = False) -> bytes:
+    """Send ``data`` on a new connection and return every byte the server
+    answers until it closes the connection (b"" for no response)."""
+    import socket
+
+    host, port = url.removeprefix("http://").rsplit(":", 1)
+    with socket.create_connection((host, int(port)), timeout=30) as sock:
+        try:
+            sock.sendall(data)
+            if close_write:
+                sock.shutdown(socket.SHUT_WR)
+        except OSError:  # the server closed before reading it all
+            pass
+        chunks = []
+        try:
+            while chunk := sock.recv(65536):
+                chunks.append(chunk)
+        except ConnectionResetError:
+            pass
+    return b"".join(chunks)
+
+
+@pytest.mark.parametrize(
+    "data, close_write, status",
+    [
+        (b"POST /forecast/ HTTP/1.0\r\n\r\n", False, 400),
+        (b"POST /forecast/ HTTP/1.0\r\nContent-Length: ten\r\n\r\n", False, 400),
+        (b"POST /forecast/ HTTP/1.0\r\nContent-Length: -1\r\n\r\n", False, 400),
+        # the body is never sent: the 413 comes without reading it
+        (b"POST /forecast/ HTTP/1.0\r\nContent-Length: 2097152\r\n\r\n", False, 413),
+        (b"GET / HTTP/1.0\r\nX-Pad: " + b"a" * 70_000 + b"\r\n\r\n", False, None),
+        (b"POST /forecast/ HTTP/1.0\r\nContent-Length: 100\r\n\r\n{\"date\"", True, None),
+        (b"GET /", True, None),
+        (b"NOT-HTTP\r\n\r\n", False, 400),
+        (b"GET / HTTP/1.0\r\nno colon\r\n\r\n", False, 400),
+        (b"PUT / HTTP/1.0\r\n\r\n", False, 501),
+        (b"DELETE /forecast/ HTTP/1.1\r\nHost: x\r\n\r\n", False, 501),
+    ],
+    ids=["no_length", "text_length", "negative_length", "body_over_cap", "head_over_limit",
+         "closed_mid_body", "closed_mid_head", "bad_request_line", "bad_header", "put", "delete"],
+)
+def test_http_parser_edges(server, data, close_write, status):
+    """Malformed or oversized requests get their 4xx/501 (None: the server
+    closes without a response), and the server keeps serving."""
+    response = _raw_exchange(server, data, close_write)
+    if status is None:
+        assert response == b""
+    else:
+        assert response.startswith(f"HTTP/1.0 {status} ".encode()), response[:100]
+        assert "detail" in json.loads(response.partition(b"\r\n\r\n")[2])
+    with urllib.request.urlopen(server + "/") as resp:
+        assert resp.status == 200
+
+
+def test_head_sends_headers_only(server):
+    head, sep, rest = _raw_exchange(server, b"HEAD / HTTP/1.0\r\n\r\n").partition(b"\r\n\r\n")
+    assert head.startswith(b"HTTP/1.0 200 OK") and sep and rest == b""
+    lines = dict(line.split(b": ", 1) for line in head.split(b"\r\n")[1:])
+    with urllib.request.urlopen(server + "/") as resp:
+        assert int(lines[b"Content-Length"]) == len(resp.read())
 
 
 # Builds the serving context the way `serve` does, from a cwd outside the
