@@ -14,8 +14,9 @@ pool — no web framework exists in this environment and none is required):
     python -m move_forecast_ind_spark serve    --port 8000
     python -m move_forecast_ind_spark list-queries
 
-Output is one JSON document on stdout; ``forecast`` prints exactly the
-POST /forecast/ response body ``serve`` would send for the same request.
+Output is one JSON document on stdout; ``forecast`` and ``trends`` print
+exactly the POST /forecast/ and POST /historical_trends/ response body
+``serve`` would send for the same request.
 Errors exit 2 with the validation message (the HTTP-400 analog). ``serve``
 builds its forecast and trends surfaces before it binds, then prints one
 line, ``{"serving": url, "surface_rows": n, "surface_s": s, "trends_rows":
@@ -26,7 +27,6 @@ stderr.
 from __future__ import annotations
 
 import argparse
-import dataclasses
 import datetime as dt
 import json
 import sys
@@ -86,25 +86,16 @@ def cmd_forecast(args) -> int:
 
 
 def cmd_trends(args) -> int:
-    from .plans.service import RequestError, trends_request
-    from .sources import load_table
+    from .plans.service import RequestError
+    from .server import trends_response
 
-    spark = _spark()
-    li = load_table(spark, args.sf_dir, "lineitem")
+    body = {"date": args.date, "branch": args.branch, "move_type": args.move_type}
     try:
-        nested = trends_request(
-            spark, li, branch_col="l_suppkey", date_col="l_shipdate",
-            count_col="l_quantity", date=args.date, branch=args.branch,
-            move_type=args.move_type,
-            type_col="l_returnflag" if args.move_type else None,
-            today=dt.date.fromisoformat(args.today),
-            max_date=dt.date.fromisoformat(args.max_date),
-            years=(1995, 2000),
-        )
+        data, _ = trends_response(_serving_context(args), body)
     except RequestError as e:
         print(json.dumps({"error": str(e)}), file=sys.stderr)
         return 2
-    print(json.dumps([json.loads(r) for r in nested.toJSON().collect()]))
+    print(data.decode())
     return 0
 
 
@@ -125,15 +116,10 @@ def cmd_pct_etl(args) -> int:
 
 
 def cmd_serve(args) -> int:
-    from .server import ForecastSurface, TrendsSurface, serve
+    from .server import serve
 
-    ctx = _serving_context(args)
-    surface = ForecastSurface.build(ctx)
-    trends = TrendsSurface.build(ctx)
-    srv = serve(
-        dataclasses.replace(ctx, surface=surface, trends_surface=trends),
-        host=args.host, port=args.port,
-    )
+    srv = serve(_serving_context(args), host=args.host, port=args.port)
+    surface, trends = srv.ctx.surface, srv.ctx.trends_surface
     print(
         json.dumps({
             "serving": f"http://{srv.server_address[0]}:{srv.server_address[1]}",

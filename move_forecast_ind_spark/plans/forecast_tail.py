@@ -35,14 +35,12 @@ index = (branch*31 + month*7 + day) % 3 — replayable and hash-checkable
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import (
-    r2,
     r4,
     round_count,
-    round_half_up,
     sql_round_count,
     sql_round_half_up,
 )
@@ -71,15 +69,6 @@ PHRASES: dict[str, tuple[str, str, str]] = {
 NO_MOVE_TYPE_PHRASE = "branch-level forecast; no move type specified"
 
 
-def phrase_pick(band: Column, idx: Column) -> Column:
-    """Deterministic phrase selection: CASE over band × (idx % 3)."""
-    expr = None
-    for b, bank in PHRASES.items():
-        pick = F.element_at(F.array(*[F.lit(p) for p in bank]), idx + 1)
-        expr = F.when(band == b, pick) if expr is None else expr.when(band == b, pick)
-    return expr
-
-
 def _sql_str(s: str) -> str:
     """Single-quoted SQL string literal with '' escaping (ADVICE r9: the
     phrase banks are interpolated into expr strings — escape rather than
@@ -88,10 +77,11 @@ def _sql_str(s: str) -> str:
 
 
 def sql_phrase_pick(band: str, idx: str) -> str:
-    """Expr-string twin of :func:`phrase_pick` (same CASE order, same
-    ELSE-NULL tail) — the construction-cost doctrine applied to the tail's
-    phrase bank. Phrases are SQL-escaped ('' doubling), so a future bank
-    entry containing an apostrophe cannot break the parse (ADVICE r9)."""
+    """Deterministic phrase selection as one expr string: a CASE over the
+    band that picks phrase ``idx`` (from 0) of its bank (NULL for any other
+    band) — the construction-cost doctrine applied to the tail's phrase
+    bank. Phrases are SQL-escaped ('' doubling), so a future bank entry
+    containing an apostrophe cannot break the parse (ADVICE r9)."""
     whens = " ".join(
         "WHEN ({band}) = '{b}' THEN element_at(array({bank}), ({idx}) + 1)".format(
             band=band,

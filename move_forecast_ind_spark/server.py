@@ -21,13 +21,15 @@ each known move type and ``None`` × each input date in [today,
 max_date]) as its finished response body, encoded once from one
 plans.service.forecast_batch. The :class:`TrendsSurface` holds every
 fact-table day row a live /historical_trends/ window can ask for, from
-one aggregate over the cached fact table. A request on either endpoint
-whose move type is a string or null is answered from its surface: it
-fires no Spark job and makes no py4j call. A past-date forecast, a
-non-string forecast move type, and any request on a context without a
-surface (the CLI ``forecast`` command) plans one Spark query through
-plans.service instead of ~30 (resp. 6) DB round-trips (see plans.service
-for its job count). A non-string trends move type is a 400.
+one aggregate over the cached fact table. A move type that is neither a
+string nor null is a 400 on both endpoints. A live request on either
+endpoint is answered from its surface: it fires no Spark job and makes
+no py4j call. A past-date forecast, and a forecast on a context without
+a surface (the CLI), plans one Spark query through plans.service instead
+of ~30 DB round-trips (see plans.service for its job count), and its
+rows go through the surface's encoder. A trends request on a context
+without a trends surface builds one for the request's branch and
+answers from it.
 
 :class:`Server` runs on one asyncio event loop (where the reference's
 uvicorn loop blocks on every DB call): it parses each HTTP/1.0 request
@@ -72,7 +74,6 @@ from .plans.service import (
     forecast_request,
     known_move_types,
     parse_date,
-    trends_request,
 )
 
 # Summary-comment banks (shape of reference main.py:305-318 SUMMARY_*_PHRASES;
@@ -111,10 +112,10 @@ class ForecastSurface:
     """Every live /forecast/ answer, computed before the server binds: one
     :func:`forecast_batch` over all model branches × (known move types and
     ``None``) × input dates ``today..max_date``, collected as one Arrow
-    table and encoded into finished response bodies. ``bodies`` maps
-    (branch, move type, input date) to the JSON bytes a hit sends, each
-    equal to ``json.dumps`` of :func:`forecast_payload` on that key's rows.
-    Read-only once built, so it is shared without a lock."""
+    table and encoded by :func:`_forecast_bodies` into finished response
+    bodies. ``bodies`` maps (branch, move type, input date) to the JSON
+    bytes a hit sends. Read-only once built, so it is shared without a
+    lock."""
 
     branches: frozenset[int]
     move_types: tuple[str, ...]
@@ -159,13 +160,12 @@ class ForecastSurface:
             build_s=time.perf_counter() - t0,
         )
 
-    def lookup(self, date: str, branch: int, move_type) -> bytes | None:
-        """A request's response body, or None when the request is outside
-        the surface (a past date, a move type that is neither a string nor
-        None). The 400s raise as forecast_request raises them, and an
-        unknown string type is demoted to None."""
+    def lookup(self, date: str, branch: int, move_type: str | None) -> bytes | None:
+        """A request's response body, or None for a past date. The 400s
+        raise as forecast_request raises them, and an unknown type is
+        demoted to None."""
         input_date = check_request(date, branch, self.max_date, self.branches.__contains__)
-        if input_date < self.today or not (move_type is None or isinstance(move_type, str)):
+        if input_date < self.today:
             return None
         if move_type not in self.move_types:
             move_type = None
@@ -179,9 +179,9 @@ _json_str = json.encoder.encode_basestring_ascii
 
 
 def _forecast_bodies(table: pa.Table) -> dict[tuple[int, str | None, dt.date], bytes]:
-    """The /forecast/ body of every key of ``table`` (forecast_batch's rows,
-    :data:`FORECAST_KEY` and :data:`FORECAST_COLUMNS`), byte-identical to
-    ``json.dumps(forecast_payload(branch, rows))`` of the key's rows. The
+    """The /forecast/ body (the reference's shape, main.py:320-332) of
+    every key of ``table`` (forecast_batch's rows, :data:`FORECAST_KEY` and
+    :data:`FORECAST_COLUMNS`), as ``json.dumps`` would write it. The
     ``predicted_summary`` entries are built column by column, each distinct
     comment JSON-escaped once; only each key's period summary is Python."""
     table = table.sort_by([(k, "ascending") for k in (*FORECAST_KEY, "ds")])
@@ -312,8 +312,8 @@ class TrendsSurface:
 class ServingContext:
     """Everything a request needs, injected once at server start. Without
     a ``surface`` every forecast plans in Spark, and without a
-    ``trends_surface`` every trends request does; :func:`serve` builds
-    both."""
+    ``trends_surface`` every trends request builds a one-branch trends
+    surface; :func:`serve` builds both."""
 
     spark: SparkSession
     models: DataFrame  # plans.training registry
@@ -337,16 +337,20 @@ def _round_half_up(x: float, scale: int = 1) -> float:
 
 def _request_fields(body: dict) -> tuple[str, int, str | None]:
     """``(date, branch, move_type)`` of a POST body; a missing date or
-    branch, or a branch that is not an integer, is a 400."""
+    branch, a branch that is not an integer, or a move type that is neither
+    a string nor null (the reference's ``Optional[str]``) is a 400."""
     date = body.get("date")
     branch = body.get("branch")
+    move_type = body.get("move_type")
     if not isinstance(date, str) or branch is None:
         raise RequestError("body must carry 'date' (YYYY-MM-DD) and 'branch'")
     try:
         branch = int(branch)
     except (TypeError, ValueError) as e:
         raise RequestError(f"branch must be an integer id, got {branch!r}") from e
-    return date, branch, body.get("move_type")
+    if not (move_type is None or isinstance(move_type, str)):
+        raise RequestError(f"move_type must be a string or null, got {move_type!r}")
+    return date, branch, move_type
 
 
 def _no_job_group() -> None:
@@ -388,36 +392,6 @@ def _period_summary(
     )
 
 
-def forecast_payload(branch: int, rows) -> dict:
-    """The /forecast/ response (the reference's shape, main.py:320-332) for
-    one request's daily rows, sorted by ``ds``."""
-    total, average, summary_comment = _period_summary(
-        branch, rows[0]["move_type"], rows[0]["ds"],
-        [r["predicted_moves"] for r in rows],
-        [r["branch_forecast"] for r in rows],
-        [r["hist_avg"] for r in rows],
-    )
-    return {
-        "branch": branch,
-        "move_type": rows[0]["move_type"],
-        "forecast_window": {
-            "start_date": rows[0]["ds"].strftime("%Y-%m-%d"),
-            "end_date": rows[-1]["ds"].strftime("%Y-%m-%d"),
-        },
-        "predicted_summary": [
-            {
-                "date": r["ds"].strftime("%Y-%m-%d"),
-                "predicted_moves": int(r["predicted_moves"]),
-                "comment": r["comment"],
-            }
-            for r in rows
-        ],
-        "total_predicted_moves": total,
-        "average_daily_moves": average,
-        "summary_comment": summary_comment,
-    }
-
-
 def forecast_response_dict(ctx: ServingContext, body: dict) -> dict:
     """POST /forecast/ — the reference's response shape (main.py:320-332)."""
     return json.loads(forecast_response(ctx, body)[0])
@@ -440,10 +414,11 @@ def forecast_response(
         move_type=move_type, today=ctx.today, max_date=ctx.max_date,
         move_types=None if surface is None else surface.move_types,
     )
-    rows = sorted(daily.collect(), key=lambda r: r.ds)  # ≤7 rows: the payload
-    if not rows:
+    bodies = _forecast_bodies(daily.select(*FORECAST_KEY, *FORECAST_COLUMNS).toArrow())
+    if not bodies:
         raise RequestError(f"no forecastable window for {date!r}")
-    return json.dumps(forecast_payload(branch, rows)).encode(), False
+    (data,) = bodies.values()
+    return data, False
 
 
 def trends_response_dict(ctx: ServingContext, body: dict) -> dict:
@@ -455,31 +430,18 @@ def trends_response(
     ctx: ServingContext, body: dict, job_group: Callable[[], None] = _no_job_group
 ) -> tuple[bytes, bool]:
     """The /historical_trends/ response body, and whether the trends
-    surface answered it. A move type that is neither a string nor null is a
-    400, as the reference's ``Optional[str]`` field rejects it. ``job_group``
-    runs right before the first Spark call, if any."""
+    surface answered it. Without one, a trends surface of the request's
+    branch is built for it. ``job_group`` runs right before the first Spark
+    call, if any."""
     date, branch, move_type = _request_fields(body)
     start, end = forecast_window(parse_date(date), ctx.today, ctx.max_date)
-    if not (move_type is None or isinstance(move_type, str)):
-        raise RequestError(f"move_type must be a string or null, got {move_type!r}")
-
     surface = ctx.trends_surface
-    if surface is not None:
-        per_year = surface.lookup(branch, move_type, start, end)
-    else:
+    hit = surface is not None
+    if not hit:
         job_group()
-        nested = trends_request(
-            ctx.spark, ctx.facts, branch_col=ctx.branch_col, date_col=ctx.date_col,
-            count_col=ctx.count_col, date=date, branch=branch, move_type=move_type,
-            type_col=ctx.type_col, today=ctx.today, max_date=ctx.max_date,
-            years=ctx.years,
-        )
-        per_year = {}
-        for r in nested.collect():  # one row per year: the payload
-            per_year[int(r.year)] = [
-                {"date": d.split(":")[0], "moves": float(d.split(":")[1])}
-                for d in (r.days.split(",") if r.days else [])
-            ]
+        branch_facts = ctx.facts.filter(F.col(ctx.branch_col) == branch)
+        surface = TrendsSurface.build(dataclasses.replace(ctx, facts=branch_facts))
+    per_year = surface.lookup(branch, move_type, start, end)
     payload = {
         "branch": branch,
         "move_type": move_type,
@@ -492,7 +454,7 @@ def trends_response(
             "end_date": str(end),
         },
     }
-    return json.dumps(payload).encode(), surface is not None
+    return json.dumps(payload).encode(), hit
 
 
 class _JobGroup:

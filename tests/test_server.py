@@ -179,11 +179,26 @@ def test_forecast_served_json_pinned(server):
             assert resp.read() == json.dumps(expected).encode()
 
 
+def test_surface_bodies_are_canonical_json(surface_ctx):
+    """Every body of the forecast surface is the JSON ``json.dumps`` writes
+    for its own value, and its days run one by one inside [today,
+    max_date]; the pinned bodies above fix the values."""
+    surface = surface_ctx.surface
+    assert surface.bodies
+    for key, body in surface.bodies.items():
+        out = json.loads(body)
+        assert json.dumps(out).encode() == body, key
+        days = [dt.date.fromisoformat(d["date"]) for d in out["predicted_summary"]]
+        assert surface.today <= days[0] and days[-1] <= surface.max_date, key
+        assert all((b - a).days == 1 for a, b in zip(days, days[1:])), key
+
+
 def test_cli_forecast_prints_served_json(spark, ctx, capsys):
-    """``forecast`` prints the /forecast/ response JSON; an unknown branch
-    exits 2 with the 400 detail on stderr."""
+    """``forecast`` and ``trends`` print the /forecast/ and
+    /historical_trends/ response JSON; an unknown branch and a bad date
+    exit 2 with the 400 detail on stderr."""
     from move_forecast_ind_spark.__main__ import main
-    from move_forecast_ind_spark.server import forecast_response_dict
+    from move_forecast_ind_spark.server import forecast_response_dict, trends_response_dict
 
     argv = ["forecast", "--date", "1999-06-03", "--sf-dir", SF_SMALL,
             "--today", str(TODAY), "--max-date", str(MAX)]
@@ -199,6 +214,16 @@ def test_cli_forecast_prints_served_json(spark, ctx, capsys):
         assert main([*argv, "--branch", "999"]) == 2
         err = capsys.readouterr()
         assert err.out == "" and "unknown branch" in err.err
+        trends = ["trends", *argv[1:], "--branch", "7"]
+        assert main([*trends, "--move-type", "R"]) == 0
+        body = {"date": "1999-06-03", "branch": 7, "move_type": "R"}
+        cli_ctx = dataclasses.replace(ctx, years=(1995, 2000))  # the CLI's years
+        expected = json.dumps(trends_response_dict(cli_ctx, body))
+        assert capsys.readouterr().out == expected + "\n"
+        trends[trends.index("--date") + 1] = "1999/06/03"
+        assert main(trends) == 2
+        err = capsys.readouterr()
+        assert err.out == "" and "YYYY-MM-DD" in err.err
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", partitions)
 
@@ -262,11 +287,10 @@ def test_surface_matches_per_request_path(ctx, surface_ctx):
     assert not any(hit for _, hit in planned)
     for (kind, body), (out, hit) in zip(sample, served):
         answered = not out.startswith("400")
-        in_domain = kind != "past" and not isinstance(body["move_type"], int)
-        assert hit == (answered and in_domain), (kind, body)
+        assert hit == (answered and kind != "past"), (kind, body)
     assert {out.split(" ", 2)[1] for out, _ in served if out.startswith("400")} == {
-        "date", "forecasts", "unknown"
-    }  # all three 400s
+        "date", "forecasts", "unknown", "move_type"
+    }  # all four 400s
     known = surface_ctx.surface.move_types
     demoted = [
         json.loads(out) for (_, body), (out, _) in zip(sample, served)
@@ -327,12 +351,49 @@ def _trends_served(ctx, body) -> tuple[str, bool]:
     return out, bool(planned)
 
 
+def _trends_reference(ctx, body) -> str:
+    """The /historical_trends/ response (its JSON, or the 400 detail) from
+    the registered per-request query plans.service.trends_request, its
+    nested ``"MM-dd:moves,…"`` rows shaped into the reference's payload."""
+    from move_forecast_ind_spark.functions.datetime_fns import forecast_window
+    from move_forecast_ind_spark.plans.service import RequestError, parse_date, trends_request
+    from move_forecast_ind_spark.server import _request_fields
+
+    try:
+        date, branch, move_type = _request_fields(body)
+        nested = trends_request(
+            ctx.spark, ctx.facts, branch_col=ctx.branch_col, date_col=ctx.date_col,
+            count_col=ctx.count_col, date=date, branch=branch, move_type=move_type,
+            type_col=ctx.type_col, today=ctx.today, max_date=ctx.max_date, years=ctx.years,
+        )
+    except RequestError as e:
+        return f"400 {e}"
+    start, end = forecast_window(parse_date(date), ctx.today, ctx.max_date)
+    per_year = {
+        int(r.year): [
+            {"date": day, "moves": float(moves)}
+            for day, moves in (d.split(":") for d in (r.days.split(",") if r.days else []))
+        ]
+        for r in nested.collect()  # one row per year
+    }
+    return json.dumps({
+        "branch": branch,
+        "move_type": move_type,
+        "historical_trends": [
+            {"year": y, "data": per_year.get(y, [])}
+            for y in range(ctx.years[0], ctx.years[1] + 1)
+        ],
+        "window": {"start_date": str(start), "end_date": str(end)},
+    })
+
+
 def _trends_sample(ctx, surface, n: int, anchors: list[str]) -> list[dict]:
     """A seeded sample of trends bodies: ``anchors`` dates on every branch,
     then dates in [today, max_date], past dates, dates after max_date
     (trends has no horizon cap), unknown branches and the two 400s of a
     bad date and a missing branch, crossed with the known types, None,
-    "ZZ", "" and the non-string types 5, 5.0 and true."""
+    "ZZ", "" and the non-string types 5, 5.0 and true; last, a bad date
+    with a null and with a non-string type (the type is checked first)."""
     rng = random.Random(20261020)
     branches = sorted({b for b, _ in surface.index})
     known = sorted({t for _, t in surface.index if t is not None})
@@ -353,6 +414,8 @@ def _trends_sample(ctx, surface, n: int, anchors: list[str]) -> list[dict]:
         if kind == "no_branch":
             del body["branch"]
         sample.append(body)
+    bad_date = str(ctx.today).replace("-", "/")
+    sample += [{"date": bad_date, "branch": branches[0], "move_type": t} for t in (None, 5)]
     return sample
 
 
@@ -370,9 +433,11 @@ def _trends_sample(ctx, surface, n: int, anchors: list[str]) -> list[dict]:
 )
 def test_trends_surface_matches_per_request_path(ctx, today, max_date, anchors):
     """Every request in a seeded sample gets the same bytes or the same 400
-    detail from the trends surface as from the per-request Spark path. A
-    non-string move type is a 400 on both paths, before any Spark call, so
-    no request on the surface plans in Spark."""
+    detail from the full trends surface, and from the one-branch surface a
+    context without one builds per request, as from the registered
+    per-request query trends_request. A non-string move type is a 400
+    before any Spark call, so no request on the full surface plans in
+    Spark."""
     from concurrent.futures import ThreadPoolExecutor
 
     from move_forecast_ind_spark.server import TrendsSurface
@@ -381,10 +446,12 @@ def test_trends_surface_matches_per_request_path(ctx, today, max_date, anchors):
     surface = TrendsSurface.build(base)
     served_ctx = dataclasses.replace(base, trends_surface=surface)
     sample = _trends_sample(base, surface, 80 if not anchors else 40, anchors)
-    with ThreadPoolExecutor(4) as pool:  # the per-request path costs ~0.3 s
+    with ThreadPoolExecutor(4) as pool:  # each Spark-path request costs ~0.3 s
         served = list(pool.map(lambda b: _trends_served(served_ctx, b), sample))
         planned = list(pool.map(lambda b: _trends_served(base, b), sample))
-    assert [out for out, _ in served] == [out for out, _ in planned]
+        reference = list(pool.map(lambda b: _trends_reference(base, b), sample))
+    assert [out for out, _ in served] == reference
+    assert [out for out, _ in planned] == reference
     for body, (out, served_planned), (_, base_planned) in zip(sample, served, planned):
         rejected = out.startswith("400")
         assert rejected or not isinstance(body["move_type"], (int, float))
@@ -392,6 +459,7 @@ def test_trends_surface_matches_per_request_path(ctx, today, max_date, anchors):
         assert not served_planned
     details = {out.split(" ", 2)[1] for out, _ in served if out.startswith("400")}
     assert details == {"date", "body", "move_type"}  # bad date, no branch, non-string type
+    assert [out.split(" ", 2)[1] for out, _ in served[-2:]] == ["date", "move_type"]
     answers = [json.loads(out) for out, _ in served if out.startswith("{")]
     assert any(a["move_type"] == "ZZ" for a in answers) and any(a["move_type"] == "" for a in answers)
     days = {(y["year"], d["date"]) for a in answers for y in a["historical_trends"] for d in y["data"]}
