@@ -122,10 +122,6 @@ def main() -> None:
     # (BASELINE.md addendum 6 records min-of-2 and min-of-3 bands).
     n_runs = 3
 
-    # snapshot the recursion guards BEFORE any query can raise them
-    _cte_default = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    _lvl_default = spark.conf.get("spark.sql.cteRecursionLevelLimit", None)
-
     # Live DuckDB anchor: same parquet, same host, same minute — timed
     # interleaved with each query's Spark runs so host-speed drift (the
     # dominant noise across driver VMs, see BASELINE.md) cancels out of
@@ -160,21 +156,6 @@ def main() -> None:
                 except Exception as exc:  # pragma: no cover
                     print(f"# {name}: duckdb anchor failed: {exc}", file=sys.stderr)
         spark.catalog.clearCache()
-        # restore the recursion guard if the query raised it (ADVICE r9:
-        # sql_recursive_session_roots sets an input-sized
-        # cteRecursionRowLimit that must not leak to later queries)
-        for _cte, _dflt in (
-            ("spark.sql.cteRecursionRowLimit", _cte_default),
-            ("spark.sql.cteRecursionLevelLimit", _lvl_default),  # r12
-        ):
-            if spark.conf.get(_cte, None) != _dflt:
-                # conf.set(None) throws; when the session never set the
-                # conf the restore is an unset (ADVICE r10, mirrors
-                # check_oracle.py)
-                if _dflt is None:
-                    spark.conf.unset(_cte)
-                else:
-                    spark.conf.set(_cte, _dflt)
         return n, best, duck_best
 
     def anomalous(name: str) -> bool:

@@ -36,6 +36,15 @@ from ..sources import load_table
 from .registry import fmt_doc, register
 from ..operators.dedup import fanout
 from ..operators.materialize import materialize
+from ..operators.graph import (
+    TIGHT_BUCKET_S,
+    coactivity_adjacency,
+    coactivity_cte,
+    coactivity_pairs,
+    coactivity_sliced,
+    iterate,
+    vertex_array,
+)
 
 # --- time-series: dense-grid resampling -------------------------------------
 
@@ -3222,7 +3231,7 @@ def semdedup_drop_pairs(
             b,
             F.expr("ca = cb AND bka = bkb AND va < vb"),
         )
-        .filter(f"{dot_sql} / (na * nb) >= {_dlit(threshold)}")
+        .filter(f"{dot_sql} / (na * nb) >= {sql_double(threshold)}")
         .selectExpr("vb AS vec_id")
         .distinct()
     )
@@ -3445,181 +3454,14 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PR_ITERS = 8
 _PR_DAMP = 0.85
 
-# Exact SQL DOUBLE literal — single source of truth lives in
-# functions.rounding (ADVICE r10: two copies of the exponent-form
-# subtlety can drift).
-_dlit = sql_double
-
-
-def _coactivity_pairs(
-    spark: SparkSession, sf_dir: str, bucket_seconds: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """(idx, pairs): the user index frame (user_id, i) and the RAW
-    in-bucket ordered co-activity pair frame (si, di) — both directions
-    per edge, duplicates across buckets retained (dedup is the caller's
-    aggregate). Shared by the adjacency compiler below and by the
-    link-prediction tier's membership pass, which streams these raw rows
-    through a broadcast semi join instead of paying a second |E|-sized
-    aggregate (r11 rebuild)."""
-    if bucket_seconds is None:
-        bucket = F.date_trunc("hour", F.col("ts"))
-    else:
-        bucket = F.floor(F.unix_timestamp(F.col("ts")) / bucket_seconds).cast(
-            "long"
-        )
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", bucket.alias("h")
-    )
-    idx = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
-        .selectExpr(
-            "user_id", "row_number() OVER (ORDER BY user_id) - 1 AS i"
-        )
-    )
-    # collect_set dedups (user, type, hour) inside the bucket aggregate,
-    # so no standalone ev.distinct() shuffle is needed; the idx joins are
-    # broadcast (map-side) BEFORE any pair shuffle.
-    pairs = (
-        # fanout between the bucket aggregate and the |us|²-per-bucket
-        # expansion: post-shuffle AQE byte-coalescing left the expansion
-        # (and the map-side idx joins above it) on 1-2 tasks (round-8
-        # profile); the bucket frame is tiny (one row per (type, bucket))
-        # so the pinned exchange is bytes-free and the quadratic in-row
-        # work spreads cluster-wide.
-        fanout(
-            ev.groupBy("event_type", "h").agg(
-                F.expr("collect_set(user_id) AS us")
-            )
-        )
-        .selectExpr(
-            "explode(flatten(transform(us, a -> "
-            "transform(filter(us, b -> b != a), "
-            "b -> struct(a as src, b as dst))))) AS p"
-        )
-        .select("p.src", "p.dst")
-        .join(
-            F.broadcast(idx).withColumnsRenamed({"user_id": "src", "i": "si"}),
-            "src",
-        )
-        .join(
-            F.broadcast(idx).withColumnsRenamed({"user_id": "dst", "i": "di"}),
-            "dst",
-        )
-        .select("si", "di")
-    )
-    return idx, pairs
-
-
-def _coactivity_adjacency(
-    spark: SparkSession, sf_dir: str, bucket_seconds: int | None = None
-) -> DataFrame:
-    """Index-encoded adjacency of the user co-activity graph (users
-    sharing an (event_type, hour) bucket are linked, symmetric,
-    distinct) — the shared graph compiler behind events_pagerank,
-    events_bfs_hops, and events_triangle_count. One frame:
-    (user_id, i, nbrs array<int of i>, deg),
-    built with a single collect_set shuffle (raw in-bucket ordered
-    pairs, idx-mapped by map-side broadcast joins). Stays LAZY: every
-    caller's consumers sit inside one action where ReuseExchange
-    dedupes the adjacency exchange subtree (A/B in events_pagerank's
-    docstring). Pair expansion is bounded per bucket — the hot-bucket
-    fence from jaccard_pairs applies verbatim at 100 TB.
-
-    Scale caveat (measured at the 100× probe, r11): the collect_set
-    aggregate itself is CHEAP (~8 s for a 212 M-pair / 149 M-edge
-    graph), but the wide nbrs arrays are expensive to move through any
-    FURTHER exchange — a join/sort/broadcast that carries them costs
-    40-80 s at that size. Consumers should reduce the arrays in-row
-    (explode/slice/size) before the next shuffle; the link-prediction
-    tier no longer consumes this frame at all (see _coactivity_sliced).
-
-    ``bucket_seconds`` narrows the co-activity window from the default
-    hour truncation to an epoch-floored N-second bucket (the "tight"
-    graph the triangle tier uses: denser-than-quadratic motif counting
-    wants the sparser graph)."""
-    idx, pairs = _coactivity_pairs(spark, sf_dir, bucket_seconds)
-    # fanout on the NARROW pair rows, keyed by si (r14): AQE coalesced
-    # the byte-tiny aggregate shuffle to ONE partition at fixture SFs,
-    # serializing every consumer's per-round in-row pass on one core
-    # (noop profile: LPA's 3 rounds were one 35 s single-task stage —
-    # invisible to count-based A/Bs, which prune the label/rank math,
-    # guide §1.4). The explicit si-keyed repartition is AQE-exempt, the
-    # groupBy below REUSES its partitioning (no second exchange), and —
-    # unlike fanning out the aggregated frame — the wide nbrs arrays
-    # never cross an extra exchange (the r11 100× caveat above: moving
-    # them costs 40-80 s at that scale; the pair rows moved here are the
-    # same narrow rows the aggregate was about to shuffle anyway).
-    from ..operators.dedup import fanout
-
-    adj = fanout(pairs, F.col("si")).groupBy("si").agg(
-        F.expr("array_sort(collect_set(di)) AS nbrs")
-    )
-    return (
-        idx.join(adj, idx["i"] == adj["si"], "left")
-        .selectExpr(
-            "user_id",
-            "i",
-            "coalesce(nbrs, CAST(array() AS ARRAY<INT>)) AS nbrs",
-        )
-        .selectExpr("user_id", "i", "nbrs", "size(nbrs) AS deg")
-    )
-
-
-def _coactivity_sliced(
-    spark: SparkSession, sf_dir: str, bucket_seconds: int | None, cap: int
-) -> DataFrame:
-    """Slim checkpointed projection of the co-activity graph for the
-    link-prediction tier: (user_id, i, deg, sn) with deg the FULL
-    distinct degree and sn the first ``cap`` neighbors ascending —
-    exactly the oracle's ROW_NUMBER() <= cap slice over sorted distinct
-    edges. Users with deg 0 are dropped (they can appear in no candidate
-    pair).
-
-    Why this exists instead of slicing _coactivity_adjacency: at the
-    100× probe the tight graph has avg degree ~1000, so the full nbrs
-    arrays are ~600 MB — cheap to BUILD (one object-hash collect_set
-    pass, ~8 s) but 40-80 s to push through any further join, sort,
-    broadcast, or checkpoint. Here the arrays are reduced to
-    (deg, cap-slice) IN-ROW, inside the same stage as the aggregate, so
-    the wide form never crosses an exchange; the checkpoint then holds
-    ~cap ints per user (19 MB vs 600 MB at 100×) and every downstream
-    consumer (pair expansion, degree broadcasts, id maps) re-reads that
-    slim parquet instead of re-deriving the graph — the r10 diagnosis
-    was ~6 AQE broadcast jobs each re-running the adjacency subtree
-    inside one action."""
-    from ..operators.materialize import checkpoint_parquet
-
-    idx, pairs = _coactivity_pairs(spark, sf_dir, bucket_seconds)
-    agg = pairs.groupBy("si").agg(
-        F.expr("array_sort(collect_set(di)) AS nbrs")
-    )
-    sliced = agg.selectExpr(
-        "si AS i", "size(nbrs) AS deg", f"slice(nbrs, 1, {cap}) AS sn"
-    ).join(F.broadcast(idx), "i")
-    return checkpoint_parquet(
-        sliced, f"coact-sliced-{bucket_seconds}", npartitions=8
-    )
-
-
 def _pagerank_oracle() -> str:
     """Unrolled power-iteration replica: same graph construction, same
     1e-9 fixed-point quantization per iteration, same dangling-mass
     teleport redistribution."""
     d = _PR_DAMP
     parts = [
-        """
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS h
-      FROM events
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+        f"""
+    {coactivity_cte()},
     nodes AS MATERIALIZED (SELECT DISTINCT user_id FROM events),
     nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
     deg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
@@ -3665,90 +3507,42 @@ def _pagerank_oracle() -> str:
 
 @register(
     "events_pagerank",
-    bench=True,  # iterative tier measured officially since r5 (VERDICT r4 item #3)
+    bench=True,
     tags=("events", "graph", "iterative"),
     oracle=_pagerank_oracle(),
 )
 def events_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank centrality over the user co-activity graph (users sharing
-    an (event_type, hour) bucket are linked, symmetric, distinct): 8
-    power iterations at damping 0.85 with dangling-rank mass
-    redistributed through the teleport term, ranks snapped to a 1e-9
-    fixed-point grid per iteration so the DuckDB replica walks the
-    bit-identical vector — the same engine-native iterative doctrine as
-    lloyd_assign / ml_pca_power_iteration, extended to graphs.
+    """PageRank centrality over the user co-activity graph: 8 power
+    iterations at damping 0.85 with dangling-rank mass redistributed
+    through the teleport term, ranks snapped to a 1e-9 fixed-point grid
+    per iteration so the DuckDB replica walks the bit-identical vector.
 
-    Round-5 re-topology (A/B at sf0.1: join-per-iteration 5.8 s → 3.3 s,
-    bit-exact vs the oracle at all three SFs): the graph is compiled ONCE
-    into an index-encoded adjacency-list frame — raw in-bucket ordered
-    pairs, idx-mapped by two map-side broadcast joins, deduped inside a
-    single ``collect_set`` shuffle — and each iteration is then (a) a
-    one-row stats aggregate over the |V|-row rank frame (the sorted
-    contribution array r/deg, the dangling mass, and N, all in ONE
-    broadcast) and (b) a map-only in-row pass over the adjacency arrays
-    (O(1) ``element_at`` per neighbor). Zero joins, zero shuffles per
-    iteration, and the whole 8-round chain stays LAZY — like
-    ``lloyd_assign``, checkpoint cadences were measured and lost
-    (every-2nd 4.2 s, every-4th 3.8 s, lazy 3.3 s). The adjacency frame
-    itself also stays UNmaterialized: all ~11 consumers sit inside the
-    one final action, where ReuseExchange dedupes the identical
-    adjacency exchange subtree — A/B at sf0.1: localCheckpoint 4.2 s,
-    lazy 1.7-2.2 s (the checkpoint write was pure cost; this is the
-    opposite outcome from semdedup's vector frame, whose consumers span
-    SEPARATE actions). A multi-action cluster variant should restore
-    the checkpoint.
-
-    100 TB posture: pair expansion is blocked per (type, hour) bucket,
-    never all-pairs (cap bucket width — the hot-bucket fence from
-    jaccard_pairs applies verbatim); the adjacency build is one
-    raw-pair-volume shuffle. The per-iteration rank broadcast is
-    |V|-sized — the same assumption the previous formulation's
-    ``F.broadcast(r)`` join already made (|V| ≪ |E|, vector fits an
-    executor); for billion-node graphs swap the stats broadcast for the
-    shuffle-join-on-src formulation and checkpoint each round (the
-    generic iterate pattern this replaced)."""
-    # multi-partition adjacency (r14, via _coactivity_adjacency's
-    # si-keyed pair fanout): the per-round in-row contribution pass ran
-    # on ONE task (noop 5.2-5.9 s; count() prunes the rank values, so
-    # count-based A/Bs never saw it). Per-node updates are pure row
-    # functions, carr/dm/n are order-insensitive aggregates, and ranks
-    # snap to the 1e-9 grid per round — partitioning cannot change any
-    # value (hash-exact oracle PASS confirms).
-    full = _coactivity_adjacency(spark, sf_dir)
+    Each iteration is one :func:`iterate` round: the broadcast row holds
+    the contribution vector r/deg, the dangling mass and N, and every
+    node sums its neighbours' contributions in-row. Per-node updates are
+    pure row functions and the stats are order-insensitive aggregates,
+    so partitioning cannot change any value. The adjacency stays lazy:
+    its consumers sit inside the one final action, where ReuseExchange
+    dedupes the adjacency subtree."""
+    full = coactivity_adjacency(spark, sf_dir)
     n0 = full.agg(F.count(F.lit(1)).cast("double").alias("n"))
     r = full.crossJoin(F.broadcast(n0)).selectExpr("i", "deg", "1e0 / n AS r")
-    # WHOLE iteration body as expr strings (construction-cost doctrine —
-    # lloyd_assign; extended r9 from the HOFs to the full update: the
-    # remaining Column-algebra update cost ~250 gateway roundtrips per
-    # round x 8 rounds — cProfile'd at ~1.3 s of the query's 1.5 s
-    # construction). Same parsed trees: FP constants use exponent
-    # notation (`0.85E0` parses as DOUBLE via Double.parseDouble, exact
-    # repr round-trip — a bare `0.85` would parse as DECIMAL), and
-    # `1 - _PR_DAMP` is pre-computed in Python so the literal is the
-    # IEEE double 1-0.85, identical to the old F.lit(1 - _PR_DAMP).
-    _CARR = (
-        "transform(array_sort(collect_list(struct(i, deg, r))), "
-        "s -> CASE WHEN s.deg > 0 THEN s.r / s.deg ELSE 0D END) AS carr"
-    )
+    # sql_double writes exponent-form literals that parse as DOUBLE (a
+    # bare 0.85 parses as DECIMAL); 1 - _PR_DAMP is the IEEE double.
     _CONTRIB = "aggregate(nbrs, 0D, (acc, nb) -> acc + element_at(carr, nb + 1))"
     _UPDATE = (
-        f"floor(({_dlit(1 - _PR_DAMP)} / n + {_dlit(_PR_DAMP)} * ({_CONTRIB} "
-        "+ dm / n)) * 1e9 + 0.5E0) / 1e9 AS r"
+        f"floor(({sql_double(1 - _PR_DAMP)} / n + {sql_double(_PR_DAMP)} "
+        f"* ({_CONTRIB} + dm / n)) * 1e9 + 0.5E0) / 1e9 AS r"
     )
-    # Parse each expr string ONCE and reuse the Column across rounds
-    # (Columns are immutable unresolved trees, name-bound at analysis —
-    # identical plans, and the server-side SQL-parser cost drops from
-    # per-round to once).
-    c_carr = F.expr(_CARR)
-    c_dm = F.expr("sum(CASE WHEN deg = 0 THEN r ELSE 0D END) AS dm")
-    c_n = F.expr("CAST(count(1) AS DOUBLE) AS n")
-    c_i, c_deg, c_upd = F.col("i"), F.col("deg"), F.expr(_UPDATE)
-    for _t in range(_PR_ITERS):
-        # ONE one-row broadcast per round: carr[i] = r/deg contribution
-        # (0 for dangling nodes — their index is never referenced since
-        # the graph is symmetric), dm = dangling mass, n = |V|.
-        stats = r.agg(c_carr, c_dm, c_n)
-        r = full.crossJoin(F.broadcast(stats)).select(c_i, c_deg, c_upd)
+    # carr[i] = r/deg (0 for dangling nodes, whose index no neighbour
+    # list references since the graph is symmetric), dm = dangling mass
+    stats = (
+        vertex_array("CASE WHEN deg > 0 THEN r / deg ELSE 0D END", "carr"),
+        F.expr("sum(CASE WHEN deg = 0 THEN r ELSE 0D END) AS dm"),
+        F.expr("CAST(count(1) AS DOUBLE) AS n"),
+    )
+    step = (F.col("i"), F.col("deg"), F.expr(_UPDATE))
+    r = iterate(full, r, stats, lambda _t: step, _PR_ITERS)
     return full.join(r.drop("deg"), "i").select(
         "user_id",
         F.col("deg").cast("long").alias("out_degree"),
@@ -3762,22 +3556,28 @@ _BFS_SRC = 0  # source user_id (exists at every fixture SF)
 _BFS_ROUNDS = 4  # ≥ graph diameter at every fixture SF (dense co-activity)
 
 
+def _bfs_step(t: int) -> tuple:
+    """Round t's relaxation over the distance vector darr (-1 = unvisited).
+    It names the round number, so it is parsed once per round."""
+    return (
+        F.col("i"),
+        F.col("user_id"),
+        F.expr(
+            "CASE WHEN element_at(darr, i + 1) != -1 "
+            "THEN element_at(darr, i + 1) "
+            f"WHEN exists(nbrs, nb -> element_at(darr, nb + 1) = {t - 1}) "
+            f"THEN {t} ELSE -1 END AS dist"
+        ),
+    )
+
+
 def _bfs_oracle() -> str:
     """Unrolled frontier replica: same graph construction as the
     pagerank oracle, then _BFS_ROUNDS relaxation rounds over the -1
     sentinel distance vector — pure integer arithmetic, exact."""
     parts = [
         f"""
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS h
-      FROM events
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+    {coactivity_cte()},
     nodes AS MATERIALIZED (SELECT DISTINCT user_id FROM events),
     d0 AS (
       SELECT user_id,
@@ -3818,20 +3618,11 @@ def events_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source BFS over the user co-activity graph: hop distance
     from user _BFS_SRC (=0) for every user, _BFS_ROUNDS (=4) relaxation
     rounds (≥ the dense fixture graph's diameter), unreachable → NULL.
-    The traversal
-    complement to events_pagerank's centrality and dedup_clusters'
-    connected components, on the same engine-native iterative doctrine:
-    the graph compiles once into the shared index-encoded adjacency
-    (``_coactivity_adjacency``), and each round is ONE one-row broadcast
-    of the distance vector plus a map-only in-row relaxation
-    (``F.exists`` over the adjacency array) — zero joins, zero shuffles
-    per round, all-integer state so the DuckDB frontier replica is
-    exact with no quantization step at all. 100 TB posture: identical
-    to pagerank's (|V|-sized vector broadcast with the
-    shuffle-join-on-frontier formulation as the billion-node fallback);
-    rounds are bounded by the declared constant, and each round's cost
-    is one adjacency scan."""
-    full = _coactivity_adjacency(spark, sf_dir)
+    Each round is one :func:`iterate` round over the distance vector
+    (-1 = unvisited) with the relaxation run in-row by ``exists`` over
+    the neighbour list. All-integer state, so the DuckDB frontier replica
+    is exact with no quantization step."""
+    full = coactivity_adjacency(spark, sf_dir)
     dist = full.select(
         "i",
         "user_id",
@@ -3839,24 +3630,9 @@ def events_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(-1))
         .alias("dist"),
     )
-    # Round exprs as strings, the vector agg hoisted (pagerank's r9
-    # construction-cost pattern); the relaxation references the round
-    # number t, so it formats per round — still one parse per round
-    # instead of ~25 Column roundtrips.
-    c_darr = F.expr(
-        "transform(array_sort(collect_list(struct(i, dist))), "
-        "s -> s.dist) AS darr"
+    dist = iterate(
+        full, dist, [vertex_array("dist", "darr")], _bfs_step, _BFS_ROUNDS
     )
-    _RELAX = (
-        "CASE WHEN element_at(darr, i + 1) != -1 THEN element_at(darr, i + 1) "
-        "WHEN exists(nbrs, nb -> element_at(darr, nb + 1) = {tm1}) THEN {t} "
-        "ELSE -1 END AS dist"
-    )
-    for t in range(1, _BFS_ROUNDS + 1):
-        darr = dist.agg(c_darr)
-        dist = full.crossJoin(F.broadcast(darr)).selectExpr(
-            "i", "user_id", _RELAX.format(t=t, tm1=t - 1)
-        )
     return dist.selectExpr(
         "user_id", "CAST(nullif(dist, -1) AS INT) AS hops"
     )
@@ -3864,24 +3640,11 @@ def events_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- graph motifs: triangle counting / clustering coefficient ---------------
 
-_TRI_BUCKET_S = 300  # "tight" co-activity: same (event_type, 300 s bucket)
-
-
 @register(
     "events_triangle_count",
     tags=("events", "graph"),
     oracle=f"""
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type,
-             CAST(FLOOR(epoch(ts) / {_TRI_BUCKET_S}) AS BIGINT) AS h
-      FROM events
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+    {coactivity_cte(TIGHT_BUCKET_S)},
     deg AS MATERIALIZED (
       SELECT src AS v, CAST(COUNT(*) AS INT) AS d FROM edges GROUP BY 1
     ),
@@ -3934,13 +3697,8 @@ def events_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oriented edge list with the oriented adjacency on the head
     vertex, plus the per-node contribution aggregate. All-integer state
     (tri, deg exact; lcc rounded 1e-4) → the SQL oracle is exact."""
-    adj = _coactivity_adjacency(spark, sf_dir, bucket_seconds=_TRI_BUCKET_S)
-    darr = adj.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "deg"))),
-            lambda s: s["deg"],
-        ).alias("degs")
-    )
+    adj = coactivity_adjacency(spark, sf_dir, bucket_seconds=TIGHT_BUCKET_S)
+    darr = adj.agg(vertex_array("deg", "degs"))
     # orientation: keep neighbors strictly (deg, i)-greater than self
     orient = adj.crossJoin(F.broadcast(darr)).select(
         "user_id",
@@ -5004,17 +4762,8 @@ def _labelprop_oracle() -> str:
     neighbors' most frequent label (count DESC, label ASC tie-break) —
     pure integer label arithmetic, exact."""
     parts = [
-        """
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS h
-      FROM events
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+        f"""
+    {coactivity_cte()},
     nodes AS MATERIALIZED (SELECT DISTINCT user_id FROM events),
     lab0 AS (SELECT user_id, user_id AS lab FROM nodes)"""
     ]
@@ -5047,7 +4796,7 @@ def _labelprop_oracle() -> str:
 
 @register(
     "events_label_propagation",
-    bench=True,  # round-6 representative of the zero-join-per-round graph tier
+    bench=True,
     tags=("events", "graph", "iterative"),
     oracle=_labelprop_oracle(),
 )
@@ -5063,50 +4812,20 @@ def events_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     family: connected components finds reachability classes,
     LPA finds DENSITY clusters inside them.
 
-    Engine shape (the pagerank idiom): the shared index-encoded
-    adjacency compiles once (_coactivity_adjacency); each round is ONE
-    |V|-sized one-row broadcast (the sorted label vector) plus a
-    map-only in-row pass — the per-node neighbor-label mode runs over
-    the sorted neighbor-label array with an ascending-distinct fold
-    (strict > keeps the smallest label on count ties). Zero joins, zero
-    shuffles per round. At 100 TB: per-round state is the |V| label
-    vector (same |V| ≪ |E| broadcast assumption as pagerank; swap for a
-    shuffle join on billion-node graphs); the mode fold is O(deg²) per
-    node, bounded by the same hot-bucket fence as the adjacency build."""
-    # multi-partition adjacency (r14): the per-round in-row mode pass —
-    # the whole query's compute — serialized on ONE task before
-    # _coactivity_adjacency's si-keyed pair fanout (noop profile: one
-    # 35 s single-task stage; the bench's count() action prunes the
-    # label computation entirely, so no earlier count-based A/B ever
-    # saw it, guide §1.4). The mode is a pure per-row function and lvec
-    # is an order-insensitive sorted collect, so partitioning cannot
-    # change any value.
-    full = _coactivity_adjacency(spark, sf_dir)
+    Each round is one :func:`iterate` round over the label vector; the
+    neighbour-label mode runs in-row. The mode is a pure per-row function
+    of the broadcast vector, so partitioning cannot change any value. The
+    mode fold is O(deg) per node after an O(deg log deg) sort, bounded by
+    the hot-bucket fence of the adjacency build."""
+    full = coactivity_adjacency(spark, sf_dir)
     lab = full.select("i", F.col("user_id").cast("long").alias("lab"))
-    # Round exprs parsed ONCE and reused across rounds (hoisted-Column
-    # pattern from events_pagerank, round-9 construction-cost pass —
-    # identical trees, name-bound at analysis).
-    c_lvec = F.expr(
-        "transform(array_sort(collect_list(struct(i, lab))), "
-        "s -> s.lab) AS larr"
-    )
-    c_nlabs = F.expr("transform(nbrs, nb -> element_at(larr, nb + 1))").alias(
-        "nlabs"
-    )
-    # mode of neighbor labels (r14 rewrite): ONE O(deg) run-length fold
-    # over the SORTED label array — runs arrive in ascending label
-    # order and the strict > keeps the first (smallest) label among
-    # equally-frequent ones, exactly the semantics of the previous
-    # distinct+filter fold, which re-scanned nlabs per distinct label
-    # (O(deg²) interpreted ops per node per round — with the filter
-    # evaluated TWICE per CASE arm). Counts are exact integers; the
-    # mode is bit-identical (pinned by test + hash-exact oracle).
-    # The node's own previous label is element_at(larr, i+1) — the
-    # broadcast vector carries it, so (like pagerank's rank rebuild)
-    # no round ever joins back to the previous label frame.
+    # mode of neighbour labels: one run-length fold over the SORTED label
+    # array. Runs arrive in ascending label order and the strict > keeps
+    # the first (smallest) label among equally frequent ones. A node
+    # without neighbours keeps its own label, element_at(larr, i + 1).
     c_mode = F.expr(
         "CASE WHEN size(nbrs) = 0 THEN element_at(larr, i + 1) ELSE "
-        "aggregate(array_sort(nlabs), "
+        "aggregate(array_sort(transform(nbrs, nb -> element_at(larr, nb + 1))), "
         "struct(CAST(NULL AS BIGINT) AS cur, CAST(0 AS BIGINT) AS curc, "
         "CAST(NULL AS BIGINT) AS ml, CAST(0 AS BIGINT) AS mc), "
         "(acc, v) -> CASE WHEN v <=> acc.cur THEN struct("
@@ -5119,14 +4838,10 @@ def events_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "acc -> CASE WHEN acc.curc > acc.mc THEN acc.cur ELSE acc.ml END) "
         "END"
     ).alias("lab")
-    c_i = F.col("i")
-    for _t in range(_LP_ROUNDS):
-        lvec = lab.agg(c_lvec)
-        lab = (
-            full.crossJoin(F.broadcast(lvec))
-            .withColumn("nlabs", c_nlabs)
-            .select(c_i, c_mode)
-        )
+    step = (F.col("i"), c_mode)
+    lab = iterate(
+        full, lab, [vertex_array("lab", "larr")], lambda _t: step, _LP_ROUNDS
+    )
     sized = lab.withColumn(
         "community_size",
         F.count(F.lit(1)).over(Window.partitionBy("lab")).cast("long"),
@@ -5150,17 +4865,7 @@ def _kcore_oracle() -> str:
     missing level. Pure integer arithmetic, exact."""
     parts = [
         f"""
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type,
-             CAST(FLOOR(epoch(ts) / {_TRI_BUCKET_S}) AS BIGINT) AS h
-      FROM events
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+    {coactivity_cte(TIGHT_BUCKET_S)},
     nodes AS MATERIALIZED (SELECT DISTINCT user_id FROM events),
     deg0 AS (
       SELECT n.user_id, COALESCE(d.c, 0) AS deg
@@ -5235,17 +4940,12 @@ def events_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability, LPA = density clusters, triangles = local motifs,
     k-core = global coreness).
 
-    Engine shape (the pagerank/LPA idiom): adjacency compiles once
-    (_coactivity_adjacency, tight bucket); each round is ONE one-row
-    broadcast of the |V|-sized layer vector (0 = alive, else removal
-    round) crossed into the adjacency scan — the alive-degree filter
-    runs in-row, zero joins and zero shuffles per round. Monotone state
-    (peeled stays peeled) makes the fixed _KCORE_ROUNDS a safe
-    overshoot of the measured fixpoint (<= 4 at all fixture SFs;
-    convergence asserted in tests). At 100 TB: per-round state is the
-    |V| layer vector (same |V| << |E| broadcast doctrine as
-    pagerank/LPA; swap for a shuffle join on billion-node graphs)."""
-    full = _coactivity_adjacency(spark, sf_dir, bucket_seconds=_TRI_BUCKET_S)
+    Each round is one :func:`iterate` round over the layer vector
+    (0 = alive, else the removal round); the alive-degree filter runs
+    in-row. Monotone state (peeled stays peeled) makes the fixed
+    _KCORE_ROUNDS a safe overshoot of the measured fixpoint (<= 4 at all
+    fixture SFs; convergence asserted in tests)."""
+    full = coactivity_adjacency(spark, sf_dir, bucket_seconds=TIGHT_BUCKET_S)
     kf = full.agg(
         F.greatest(
             F.element_at(
@@ -5255,31 +4955,26 @@ def events_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1),
         ).cast("long").alias("k")
     )
+    # k rides on every adjacency row
+    adj = full.crossJoin(F.broadcast(kf))
     state = full.select("i", F.lit(0).cast("long").alias("layer"))
-    # Round exprs as strings, the vector agg hoisted (pagerank's r9
-    # construction-cost pattern); the peel references the round number t,
-    # so it formats per round.
-    c_lvec = F.expr(
-        "transform(array_sort(collect_list(struct(i, layer))), "
-        "s -> s.layer) AS larr"
-    )
+    c_lvec = vertex_array("layer", "larr")
+    # the peel names the round number, so it is parsed once per round
     _PEEL = (
         "CAST(CASE WHEN element_at(larr, i + 1) != 0 "
         "THEN element_at(larr, i + 1) "
         "WHEN size(filter(nbrs, nb -> element_at(larr, nb + 1) = 0)) >= k "
         "THEN 0 ELSE {t} END AS BIGINT) AS layer"
     )
-    for t in range(1, _KCORE_ROUNDS + 1):
-        lvec = state.agg(c_lvec)
-        state = (
-            full.crossJoin(F.broadcast(lvec))
-            .crossJoin(F.broadcast(kf))
-            .selectExpr("i", _PEEL.format(t=t))
-        )
-    fvec = state.agg(c_lvec)
+    state = iterate(
+        adj,
+        state,
+        [c_lvec],
+        lambda t: (F.col("i"), F.expr(_PEEL.format(t=t))),
+        _KCORE_ROUNDS,
+    )
     return (
-        full.crossJoin(F.broadcast(fvec))
-        .crossJoin(F.broadcast(kf))
+        adj.crossJoin(F.broadcast(state.agg(c_lvec)))
         .selectExpr(
             "user_id",
             "CAST(deg AS BIGINT) AS deg0",
@@ -5734,35 +5429,78 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unordered-pair generation below the expansion is 8× lighter.
 _LINKPRED_MAX_NBRS = 32
 
-# Unordered in-row pair expansion over a SORTED sliced neighbor array:
-# (a, b) with a < b only, via index slicing — half the structs of the
-# a≠b double generation and no per-element filter() scan. Contributor
-# counts/weight-sums are orientation-symmetric (the contributing src set
-# for (a, b) equals that for (b, a)), so aggregating unordered pairs and
-# fanning both orientations back out AFTER the aggregate is exact — and
-# cuts the pre-aggregate shuffle in half again.
-_UNORDERED_PAIRS = (
-    "flatten(transform(sn, (a, i) -> "
-    "transform(slice(sn, i + 2, size(sn)), "
-    "b -> struct(a AS ia, b AS ib))))"
-)
+def _contributor_pairs(sl0: DataFrame, *extra) -> DataFrame:
+    """Candidate pairs (ia < ib) among each via node's sliced neighbours
+    (``coactivity_sliced``'s sn), with ``extra`` columns of the via row.
+    Per via row the pairs come out i ascending then b ascending, so float
+    sums over them keep a fixed addend order. Two chained generators, not
+    an in-row array of all cap²/2 structs. Via nodes with fewer than two
+    neighbours contribute nothing."""
+    # sl0 arrives as the 8-file slim checkpoint; unpinned, the cap² pair
+    # fan-out would run on a handful of tasks
+    sl = fanout(sl0, F.col("i")).select("i", "deg", "sn")
+    return (
+        sl.filter(F.col("deg") >= 2)
+        .select("deg", F.posexplode("sn").alias("__i", "ia"), "sn")
+        .select(
+            "ia",
+            F.explode(F.expr("slice(sn, __i + 2, size(sn))")).alias("ib"),
+            *extra,
+        )
+    )
+
+
+def _non_edges(spark: SparkSession, sf_dir: str, cand_u: DataFrame) -> DataFrame:
+    """The unordered candidates (ia < ib, plus value columns) of ``cand_u``
+    that are not tight co-activity edges, fanned out to both orientations.
+    Counts and weight sums are orientation-symmetric (the via-node set for
+    (a, b) equals that for (b, a)), so aggregating unordered pairs and
+    fanning out afterwards is exact.
+
+    Membership: the raw (si < di) co-activity rows stream map-side through
+    the broadcast candidate keys: no |E|-sized shuffle and no |E|-sized
+    hash build. Duplicate raw rows are harmless, since the anti join's
+    hash build collapses them to <= |cand| keys; its shuffle_hash pin keeps
+    the matched side off any broadcast. The broadcast bound is
+    |cand| <= cap²/2 * |V| keys, 512x the |V|-sized maps at cap = 32;
+    candidate sparsity keeps it small in practice (OPTIMIZATION_graph.md).
+    If bucket density pushed |cand| toward the 8 GiB broadcast limit, the
+    semi join takes the same shuffle_hash pin, trading one candidate-sized
+    shuffle for the broadcast."""
+    _, raw = coactivity_pairs(spark, sf_dir, TIGHT_BUCKET_S)
+    matched = (
+        raw.filter(F.col("si") < F.col("di"))
+        .join(
+            F.broadcast(
+                cand_u.select(
+                    F.col("ia").alias("si"), F.col("ib").alias("di")
+                )
+            ),
+            ["si", "di"],
+            "left_semi",
+        )
+        .withColumnsRenamed({"si": "ia", "di": "ib"})
+    )
+    kept = cand_u.join(
+        matched.hint("shuffle_hash"), ["ia", "ib"], "left_anti"
+    )
+    vals = [c for c in cand_u.columns if c not in ("ia", "ib")]
+    return kept.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("ia"), F.col("ib")),
+                F.struct(F.col("ib").alias("ia"), F.col("ia").alias("ib")),
+            )
+        ).alias("p"),
+        *vals,
+    ).select("p.ia", "p.ib", *vals)
 
 
 @register(
     "events_link_prediction",
     tags=("events", "graph", "analytics"),
     oracle=f"""
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type,
-             CAST(FLOOR(epoch(ts) / {_TRI_BUCKET_S}) AS BIGINT) AS h
-      FROM events
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+    {coactivity_cte(TIGHT_BUCKET_S)},
     deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY 1),
     sliced AS (
       SELECT src, dst FROM (
@@ -5813,61 +5551,21 @@ def events_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ordering). Hub fan-out is fenced: each 'via' node contributes
     pairs among its first {m} neighbors only (ascending id, mirrored in
     the oracle — the bounded-neighborhood truncation every web-scale CN
-    implementation applies). Engine shape (rebuilt r11 on the 100x
-    diagnosis): the SLIM sliced-graph checkpoint (_coactivity_sliced -
-    deg + cap-slice; the wide nbrs arrays never cross an exchange)
-    compiles once and every consumer re-reads it; contributor pairs
-    expand IN-ROW as UNORDERED (a < b) pairs from the sorted sliced
-    neighbor arrays (never the oracle's posting self-join), candidate
-    aggregation is one map-side-combinable shuffle at HALF the ordered
-    volume and is checkpointed (it feeds both the membership pass and
-    the result); existing edges leave by STREAMING the raw co-activity
-    pairs through a broadcast semi join against the candidate keys.
-    The honest broadcast bound (ADVICE r11): |cand| <= cap^2/2 * |V| =
-    512*|V| keys at cap=32 - a 512x LARGER constant than the degree/id
-    maps this family also broadcasts, so candidate SPARSITY is what
-    keeps it cheap in practice: measured at the 100x probe, |V| =
-    150,000 and |cand| = 1.82 M rows (~27 MiB raw, 2.4% of the bound)
-    because co-activity candidates concentrate in shared time buckets.
-    If a deployment's bucket density pushed |cand| toward the 512*|V|
-    bound past the 8 GiB broadcast limit, flip this semi join to the
-    same shuffle_hash pin the anti join below already carries - it
-    trades one candidate-sized shuffle for the broadcast, never an
-    |E|-sized one. (No |E|-sized shuffle and no |E|-sized hash build
-    either way - the r10 anti join shuffled AND hash-built all ~149 M
-    edges, 34 s of the 100x wall.) Plus a candidate-sized anti
-    join; both orientations fan back out in-row after the membership
-    filter (cn and the w-sum are orientation-symmetric - the
-    contributing src set for (a,b) equals that for (b,a), so the
-    per-group float sums are bit-identical addend sets), and the
-    per-user argmax is a window. At 100 TB: pair volume is |V|*cap^2/2
-    worst-case, the fence's purpose; the raw-pair stream is map-side
-    only; everything else shuffles one row per surviving candidate."""
-    sl0 = _coactivity_sliced(spark, sf_dir, _TRI_BUCKET_S, _LINKPRED_MAX_NBRS)
-    # fanout before the per-user pair expansion: sl0 arrives as the
-    # 8-file slim checkpoint, so unpinned the cap^2 pair fan-out would
-    # run on a handful of tasks (r9 10x probe: 73 s serialized before
-    # the pin).
-    sl = fanout(sl0, F.col("i")).select("i", "deg", "sn")
-    # two-generator expansion (operators.dedup.expand_pairs rationale,
-    # r14 A/B): same unordered (ia < ib) pair stream in the same order —
-    # per src row, i ascending then b ascending — through codegen
-    # Generates instead of the interpreted _UNORDERED_PAIRS HOF that
-    # built each row's full cap²/2 struct array; identical rows in
-    # identical order means the per-group float w-sums keep their exact
-    # addend order (bit-stable score).
-    contrib = (
-        sl.filter(F.col("deg") >= 2)
-        .select("deg", F.posexplode("sn").alias("__i", "ia"), "sn")
-        .select(
-            "ia",
-            F.explode(F.expr("slice(sn, __i + 2, size(sn))")).alias("ib"),
-            (F.lit(1.0) / F.log(F.col("deg").cast("double"))).alias("w"),
-        )
+    implementation applies). Engine shape: the slim sliced-graph
+    checkpoint (``coactivity_sliced``) compiles once and every consumer
+    re-reads it; contributor pairs expand in-row as unordered (a < b)
+    pairs, candidate aggregation is one map-side-combinable shuffle and
+    is materialized, existing edges leave through :func:`_non_edges`,
+    and the per-user argmax is a window. At 100 TB: pair volume is
+    |V|*cap²/2 worst-case, the fence's purpose; the raw-pair stream is
+    map-side only; everything else shuffles one row per surviving
+    candidate."""
+    sl0 = coactivity_sliced(spark, sf_dir, TIGHT_BUCKET_S, _LINKPRED_MAX_NBRS)
+    contrib = _contributor_pairs(
+        sl0, (F.lit(1.0) / F.log(F.col("deg").cast("double"))).alias("w")
     )
-    # checkpointed: consumed by BOTH the membership pass (broadcast
-    # build) and the anti join's left side - lazy it would re-run the
-    # cap^2 expansion twice (measured +40 s at the 100x probe).
+    # materialized: both the membership pass and the anti join read it;
+    # lazy, the cap² expansion would run twice
     cand_u = materialize(
         contrib.groupBy("ia", "ib").agg(
             F.count(F.lit(1)).cast("long").alias("cn"),
@@ -5875,38 +5573,7 @@ def events_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "linkpred-cand",
     )
-    # membership pass: raw (si < di) co-activity rows STREAM map-side
-    # through the broadcast candidate keys (no |E| shuffle, no |E| hash
-    # build); duplicate raw rows are harmless - the anti join's hash
-    # build collapses them to <= |cand| keys (shuffle_hash pin keeps the
-    # matched side off any broadcast, r10 hazard doctrine).
-    _, raw = _coactivity_pairs(spark, sf_dir, _TRI_BUCKET_S)
-    matched = (
-        raw.filter(F.col("si") < F.col("di"))
-        .join(
-            F.broadcast(
-                cand_u.select(
-                    F.col("ia").alias("si"), F.col("ib").alias("di")
-                )
-            ),
-            ["si", "di"],
-            "left_semi",
-        )
-        .withColumnsRenamed({"si": "ia", "di": "ib"})
-    )
-    kept = cand_u.join(
-        matched.hint("shuffle_hash"), ["ia", "ib"], "left_anti"
-    )
-    cand = kept.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("ia"), F.col("ib")),
-                F.struct(F.col("ib").alias("ia"), F.col("ia").alias("ib")),
-            )
-        ).alias("p"),
-        "cn",
-        "score",
-    ).select("p.ia", "p.ib", "cn", "score")
+    cand = _non_edges(spark, sf_dir, cand_u)
     wb = Window.partitionBy("ia").orderBy(F.col("cn").desc(), F.col("ib"))
     best = cand.withColumn("rn", F.row_number().over(wb)).filter(
         F.col("rn") == 1
@@ -6183,17 +5850,7 @@ fmt_doc(ts_periodogram,
     "events_jaccard_neighbors",
     tags=("events", "graph", "analytics"),
     oracle=f"""
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type,
-             CAST(FLOOR(epoch(ts) / {_TRI_BUCKET_S}) AS BIGINT) AS h
-      FROM events
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+    {coactivity_cte(TIGHT_BUCKET_S)},
     deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY 1),
     sliced AS (
       SELECT src, dst FROM (
@@ -6253,65 +5910,16 @@ def events_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: cn/degrees are exact integers and the ranking key
     cn/(da+db-cn) is ONE correctly-rounded IEEE division of exact
     integers - bit-identical in both engines - with ties broken by
-    candidate id. Scale posture: identical to events_link_prediction's
-    r11 rebuild (slim sliced-graph checkpoint so the wide nbrs arrays
-    never cross an exchange; |V|*cap^2/2 in-row unordered expansion; one
-    checkpointed candidate aggregate; membership by streaming the raw
-    co-activity pairs through a broadcast semi join on the candidate
-    keys + a candidate-sized anti join - replacing the r10 anti join
-    that shuffled AND hash-built all ~149 M edges; orientation fan-out
-    after the membership filter; degree broadcasts off the slim
-    checkpoint; per-user window). 100x probe r11 (warm min-of-2, same
-    instrument): 82 s (r10 judge) -> 33-37 s; growth for 10x data fell
-    17x -> 5.3x (sub-linear). The pre-rebuild body alone was 83 s."""
-    sl0 = _coactivity_sliced(spark, sf_dir, _TRI_BUCKET_S, _LINKPRED_MAX_NBRS)
-    # fanout before the expansion - same rationale as events_link_prediction
-    sl = fanout(sl0, F.col("i")).select("i", "deg", "sn")
-    # two-generator expansion — same rationale and same pair order as
-    # events_link_prediction above (cn is an exact integer count here,
-    # so only the pair SET matters)
-    contrib = (
-        sl.filter(F.col("deg") >= 2)
-        .select(F.posexplode("sn").alias("__i", "ia"), "sn")
-        .select(
-            "ia",
-            F.explode(F.expr("slice(sn, __i + 2, size(sn))")).alias("ib"),
-        )
-    )
+    candidate id. Engine shape: events_link_prediction's, with the
+    degree maps broadcast off the slim checkpoint."""
+    sl0 = coactivity_sliced(spark, sf_dir, TIGHT_BUCKET_S, _LINKPRED_MAX_NBRS)
     cand_u = materialize(
-        contrib.groupBy("ia", "ib").agg(
+        _contributor_pairs(sl0).groupBy("ia", "ib").agg(
             F.count(F.lit(1)).cast("long").alias("cn")
         ),
         "jacc-cand",
     )
-    # membership pass: see events_link_prediction (broadcast semi over
-    # the raw pair stream + candidate-sized shuffle_hash anti join).
-    _, raw = _coactivity_pairs(spark, sf_dir, _TRI_BUCKET_S)
-    matched = (
-        raw.filter(F.col("si") < F.col("di"))
-        .join(
-            F.broadcast(
-                cand_u.select(
-                    F.col("ia").alias("si"), F.col("ib").alias("di")
-                )
-            ),
-            ["si", "di"],
-            "left_semi",
-        )
-        .withColumnsRenamed({"si": "ia", "di": "ib"})
-    )
-    kept = cand_u.join(
-        matched.hint("shuffle_hash"), ["ia", "ib"], "left_anti"
-    )
-    cand = kept.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("ia"), F.col("ib")),
-                F.struct(F.col("ib").alias("ia"), F.col("ia").alias("ib")),
-            )
-        ).alias("p"),
-        "cn",
-    ).select("p.ia", "p.ib", "cn")
+    cand = _non_edges(spark, sf_dir, cand_u)
     degs = sl0.select("i", "deg")
     cand = (
         cand.join(

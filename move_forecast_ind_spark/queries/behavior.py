@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import r2, r4, r6, sql_r2, sql_r4, sql_r6
+from ..operators.graph import TIGHT_BUCKET_S, coactivity_cte
 from ..sources import load_table
 from .registry import fmt_doc, register
 
@@ -130,24 +131,11 @@ def events_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- community modularity ------------------------------------------------------
 
-_MOD_BUCKET_S = 300  # tight co-activity grain, shared with triangle count
-
-
 @register(
     "events_modularity",
     tags=("events", "graph"),
     oracle=f"""
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type,
-             CAST(FLOOR(epoch(ts) / {_MOD_BUCKET_S}) AS BIGINT) AS h
-      FROM events
-    ),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+    {coactivity_cte(TIGHT_BUCKET_S)},
     tc AS (
       SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
       FROM events GROUP BY 1, 2
@@ -214,7 +202,7 @@ def events_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     evd = ev.select(
         "user_id",
         "event_type",
-        F.floor(F.unix_timestamp("ts") / _MOD_BUCKET_S)
+        F.floor(F.unix_timestamp("ts") / TIGHT_BUCKET_S)
         .cast("long")
         .alias("h"),
     ).distinct()

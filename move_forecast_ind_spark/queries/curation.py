@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 from ..functions.rounding import r2, r4, r6, sql_r6
 from ..functions.text import fingerprint, sql_hashed_windows, tokens
 from ..sources import load_table
+from ..sources.tables import normalize_event_ts
 from .registry import fmt_doc, register
 
 # --- PII redaction ---------------------------------------------------------
@@ -947,32 +948,10 @@ def sql_recursive_session_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. Both shapes are value-identical against the recursive
     oracle; the switch is an execution-strategy decision, exactly what
     an optimizer would do with a depth estimate."""
-    from ..sources import register_views
-
-    register_views(spark, sf_dir, ["events"])
-    # Query-scoped recursion budget (ADVICE r8: the old session-wide 2e9
-    # disabled the cumulative-row runaway guard for every recursive CTE).
-    # Sessionization's cumulative row count across iterations is bounded
-    # by the events row count (each event appears in exactly one frontier
-    # row, plus the seed roots), so 4x the input is generous headroom
-    # while still being a REAL guard against a future buggy recursion.
-    # Set, not set-and-restored HERE: the returned frame is lazy and Spark
-    # reads this conf at execution time, after this function returns —
-    # the raised value is itself input-bounded, never unlimited. The
-    # harnesses restore the prior value after the action completes
-    # (ADVICE r9: tools/check_oracle.run_spark_query — which test_oracle
-    # shares — and bench.time_query), so other recursive queries in the
-    # same session keep the default runaway guard.
     # Depth pre-probe: the longest session chain is bounded by the
-    # busiest user's event count (one light aggregate — the query body
-    # dwarfs it). Below the switch, raise the LEVEL limit input-bounded
-    # (default 100 binds real data; fixtures topped out at 4 — still a
-    # genuine runaway guard, restored by the harness snapshot alongside
-    # the row limit). At or past it, the per-level scheduling cost makes
-    # the recursion the wrong physical shape — run the value-identical
-    # window root propagation instead (docstring). r14: ONE probe action
-    # yields both scalars (total events = sum of per-user counts; the
-    # old shape paid a second scan+job for the separate count()).
+    # busiest user's event count, and the total event count bounds the
+    # recursion's cumulative rows (each event appears in exactly one
+    # frontier row, plus the seed roots). One probe action yields both.
     probe = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -982,16 +961,33 @@ def sql_recursive_session_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_events = probe[0] or 0
     n_max_user = probe[1] or 0
-    spark.conf.set(
+    # Spark reads the recursion limits when the lazy frame runs, after
+    # this function returns, so they are raised on a child session that
+    # carries the caller's runtime conf: the caller's own limits (the
+    # runaway guard of every other recursive query) stay as they were.
+    # The raised limits are input-bounded, never unlimited.
+    child = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            child.conf.set(k, v)
+    child.conf.set(
         "spark.sql.cteRecursionRowLimit", str(max(1_000_000, 4 * n_events))
     )
+    # temp views are per session; load_table's cache is bound to the caller
+    normalize_event_ts(
+        child.read.parquet(f"{sf_dir}/events.parquet")
+    ).createOrReplaceTempView("events")
+    # Below the switch the genuine recursion runs with an input-bounded
+    # LEVEL limit (default 100 binds real data); at or past it the
+    # per-level scheduling cost makes recursion the wrong physical shape,
+    # so the value-identical window root propagation runs instead.
     if n_max_user + 10 <= _RECURSION_DEPTH_SWITCH:
-        spark.conf.set(
+        child.conf.set(
             "spark.sql.cteRecursionLevelLimit",
             str(max(100, n_max_user + 10)),
         )
-        return spark.sql(_RECURSIVE_SESSION_SQL)
-    return spark.sql(_WINDOW_SESSION_SQL)
+        return child.sql(_RECURSIVE_SESSION_SQL)
+    return child.sql(_WINDOW_SESSION_SQL)
 
 
 fmt_doc(sql_recursive_session_roots, lim=_RECURSION_DEPTH_SWITCH)

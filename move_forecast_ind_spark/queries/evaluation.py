@@ -43,6 +43,12 @@ from pyspark.sql.window import Window
 from ..functions.rounding import r2, r4, r6, sql_r2, sql_r4, sql_r6
 from ..functions.text import TOKENS_SQL
 from ..functions.vectors import as_double, cosine
+from ..operators.graph import (
+    TIGHT_BUCKET_S,
+    coactivity_adjacency,
+    coactivity_cte,
+    vertex_array,
+)
 from ..sources import load_table
 from .registry import fmt_doc, register
 
@@ -904,18 +910,8 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_degree_assortativity",
     tags=("events", "graph", "statistics"),
-    oracle="""
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type,
-             CAST(FLOOR(epoch(ts) / 300) AS BIGINT) AS h
-      FROM events
-    ),
-    edges AS (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.h = b.h
-       AND a.user_id <> b.user_id
-    ),
+    oracle=f"""
+    {coactivity_cte(TIGHT_BUCKET_S)},
     deg AS (
       SELECT src AS v, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY 1
     ),
@@ -957,25 +953,16 @@ def events_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^63 past sf1); the correlation assembles once from exact integers
     with an identical op sequence — bit-exact before the r6 grid; a
     degree-regular graph (zero variance) yields NULL. Engine shape: the
-    shared adjacency compiles once (_coactivity_adjacency, tight
-    bucket); the |V|-sized degree vector broadcasts as ONE row and edge
-    endpoints look degrees up in-row — the only data-sized stages are
-    the adjacency build itself and one global aggregate; no edge-level
-    join at all (vs the oracle's two, which exist only for SQL
-    clarity)."""
-    from .analytics import _TRI_BUCKET_S, _coactivity_adjacency
-
-    full = _coactivity_adjacency(spark, sf_dir, bucket_seconds=_TRI_BUCKET_S)
+    |V|-sized degree vector broadcasts as ONE row and edge endpoints look
+    degrees up in-row — the only data-sized stages are the adjacency
+    build itself and one global aggregate; no edge-level join at all (vs
+    the oracle's two, which exist only for SQL clarity)."""
+    full = coactivity_adjacency(spark, sf_dir, bucket_seconds=TIGHT_BUCKET_S)
     adj = full.filter(F.col("deg") > 0)
     # degree vector over ALL indices (the adjacency's i-space), so edge
     # endpoints can look degrees up positionally even after isolated
     # nodes are dropped from the edge side
-    darr = full.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "deg"))),
-            lambda s: s["deg"],
-        ).alias("degs")
-    )
+    darr = full.agg(vertex_array("deg", "degs"))
     e = (
         adj.select("i", "deg", F.explode("nbrs").alias("j"))
         .crossJoin(F.broadcast(darr))

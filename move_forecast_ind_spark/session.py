@@ -56,12 +56,6 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
-    # NOTE (r9): spark.sql.cteRecursionRowLimit is no longer raised here.
-    # Raising it session-wide disabled the cumulative-row runaway guard
-    # for EVERY recursive CTE (ADVICE r8); the one Spark-side recursive
-    # query (sql_recursive_session_roots) now raises it at its own call
-    # site, sized to its input (max(1M, 4x events rows)) — a real bound,
-    # not an opt-out. The depth limit (100) stays default everywhere.
 }
 
 

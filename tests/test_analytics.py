@@ -388,9 +388,9 @@ def test_coactivity_adjacency_is_symmetric(spark):
     simple undirected graph — no self-loops, neighbor lists sorted and
     duplicate-free, and i ∈ nbrs[j] ⟺ j ∈ nbrs[i]. PageRank's
     contribution sums and BFS's frontier relaxation both assume this."""
-    from move_forecast_ind_spark.queries.analytics import _coactivity_adjacency
+    from move_forecast_ind_spark.operators.graph import coactivity_adjacency
 
-    rows = _coactivity_adjacency(spark, "/root/testdata/sf0.01").collect()
+    rows = coactivity_adjacency(spark, "/root/testdata/sf0.01").collect()
     nbrs = {r.i: list(r.nbrs) for r in rows}
     for i, ns in nbrs.items():
         assert i not in ns
@@ -637,10 +637,8 @@ def test_link_prediction_matches_python_replica(spark):
 
     from conftest import SF_SMALL
     from move_forecast_ind_spark.queries import REGISTRY
-    from move_forecast_ind_spark.queries.analytics import (
-        _LINKPRED_MAX_NBRS,
-        _TRI_BUCKET_S,
-    )
+    from move_forecast_ind_spark.operators.graph import TIGHT_BUCKET_S
+    from move_forecast_ind_spark.queries.analytics import _LINKPRED_MAX_NBRS
     from move_forecast_ind_spark.sources import load_table
 
     rows = REGISTRY["events_link_prediction"].fn(spark, SF_SMALL).collect()
@@ -649,7 +647,7 @@ def test_link_prediction_matches_python_replica(spark):
         .selectExpr(
             "user_id",
             "event_type",
-            f"CAST(FLOOR(unix_timestamp(ts) / {_TRI_BUCKET_S}) AS BIGINT) AS h",
+            f"CAST(FLOOR(unix_timestamp(ts) / {TIGHT_BUCKET_S}) AS BIGINT) AS h",
         )
         .distinct()
         .collect()
@@ -700,10 +698,8 @@ def test_jaccard_neighbors_matches_python_replica(spark):
 
     from conftest import SF_SMALL
     from move_forecast_ind_spark.queries import REGISTRY
-    from move_forecast_ind_spark.queries.analytics import (
-        _LINKPRED_MAX_NBRS,
-        _TRI_BUCKET_S,
-    )
+    from move_forecast_ind_spark.operators.graph import TIGHT_BUCKET_S
+    from move_forecast_ind_spark.queries.analytics import _LINKPRED_MAX_NBRS
     from move_forecast_ind_spark.sources import load_table
 
     rows = REGISTRY["events_jaccard_neighbors"].fn(spark, SF_SMALL).collect()
@@ -712,7 +708,7 @@ def test_jaccard_neighbors_matches_python_replica(spark):
         .selectExpr(
             "user_id",
             "event_type",
-            f"CAST(FLOOR(unix_timestamp(ts) / {_TRI_BUCKET_S}) AS BIGINT) AS h",
+            f"CAST(FLOOR(unix_timestamp(ts) / {TIGHT_BUCKET_S}) AS BIGINT) AS h",
         )
         .distinct()
         .collect()

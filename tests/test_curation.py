@@ -553,3 +553,16 @@ def test_session_root_window_twin_matches_recursion(spark):
             spark.conf.unset("spark.sql.cteRecursionLevelLimit")
         else:
             spark.conf.set("spark.sql.cteRecursionLevelLimit", prior)
+
+
+def test_session_roots_leave_caller_recursion_limits_alone(spark):
+    """The query raises the recursion limits it needs on its own child
+    session; the caller's limits (the runaway guard of every other
+    recursive query in the session) are the same after the collect."""
+    from move_forecast_ind_spark.queries import REGISTRY
+
+    keys = ("spark.sql.cteRecursionRowLimit", "spark.sql.cteRecursionLevelLimit")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    rows = REGISTRY["sql_recursive_session_roots"].fn(spark, SF_SMALL).collect()
+    assert rows
+    assert {k: spark.conf.get(k, None) for k in keys} == before

@@ -114,10 +114,8 @@ def test_kcore_peel_matches_python_and_converges(spark):
     from collections import defaultdict
 
     from move_forecast_ind_spark.queries import REGISTRY
-    from move_forecast_ind_spark.queries.analytics import (
-        _KCORE_ROUNDS,
-        _TRI_BUCKET_S,
-    )
+    from move_forecast_ind_spark.operators.graph import TIGHT_BUCKET_S
+    from move_forecast_ind_spark.queries.analytics import _KCORE_ROUNDS
     from move_forecast_ind_spark.sources import load_table
 
     rows = REGISTRY["events_kcore_peel"].fn(spark, SF_SMALL).collect()
@@ -127,7 +125,7 @@ def test_kcore_peel_matches_python_and_converges(spark):
         .selectExpr(
             "user_id",
             "event_type",
-            f"CAST(FLOOR(unix_timestamp(ts) / {_TRI_BUCKET_S}) AS BIGINT) AS h",
+            f"CAST(FLOOR(unix_timestamp(ts) / {TIGHT_BUCKET_S}) AS BIGINT) AS h",
         )
         .distinct()
         .collect()

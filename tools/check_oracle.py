@@ -129,26 +129,10 @@ def normalize(cols: list[str], types: list[str], rows: list[tuple]):
 
 
 def run_spark_query(spark, spec, sf_dir):
-    # snapshot/restore the recursion guard: sql_recursive_session_roots
-    # raises spark.sql.cteRecursionRowLimit (input-sized, read at action
-    # time so it cannot restore it itself) — keep the default guard for
-    # every OTHER recursive query in this shared session (ADVICE r9)
-    _CTES = (
-        "spark.sql.cteRecursionRowLimit",
-        "spark.sql.cteRecursionLevelLimit",  # r12: depth raised input-bounded too
-    )
-    priors = {c: spark.conf.get(c, None) for c in _CTES}
-    try:
-        df = spec.fn(spark, sf_dir)
-        cols = df.columns
-        types = [f.dataType.simpleString() for f in df.schema.fields]
-        rows = [tuple(r) for r in df.collect()]
-    finally:
-        for c, prior in priors.items():
-            if prior is None:
-                spark.conf.unset(c)
-            elif spark.conf.get(c, None) != prior:
-                spark.conf.set(c, prior)
+    df = spec.fn(spark, sf_dir)
+    cols = df.columns
+    types = [f.dataType.simpleString() for f in df.schema.fields]
+    rows = [tuple(r) for r in df.collect()]
     return cols, types, rows
 
 
