@@ -185,17 +185,15 @@ def jaccard_pairs(
     # array. Guarding on F.size("shs") instead forces the whole
     # tokenize→shingle chain to evaluate twice (filter + generator) —
     # measured 3.2 s vs 0.6 s at sf0.1 for the postings stage alone.
-    # Shingle IDENTITY without shingle strings (r11, the
-    # corpus_source_overlap finding): the whole pipeline below consumes
-    # only shingle identity and per-doc distinct COUNTS, never shingle
-    # text, so hash each k-token window directly with k-arg xxhash64 and
-    # array_distinct the LONG array - no concat_ws string per window, no
-    # string-array dedup. Whitespace-split tokens make the window <->
-    # "a b c" string bijective, so the distinct-hash count equals the
-    # oracle's distinct-string count (2^-64 collision doctrine, same as
-    # the hash-keyed index below already relied on). A/B at the 100x
-    # probe: the map-side string materialization - not the shuffle - was
-    # the dominant cost of this tier.
+    # Shingle IDENTITY without shingle strings: the whole pipeline below
+    # consumes only shingle identity and per-doc distinct COUNTS, never
+    # shingle text, so hash each k-token window directly with k-arg
+    # xxhash64 and array_distinct the LONG array - no concat_ws string per
+    # window, no string-array dedup (the map-side string materialization,
+    # not the shuffle, is this tier's dominant cost). Whitespace-split
+    # tokens make the window <-> "a b c" string bijective, so the
+    # distinct-hash count equals the oracle's distinct-string count
+    # (2^-64 collision doctrine, same as the hash-keyed index below).
     sets = (
         fanout(docs.filter(F.length(F.col(text_col)) < _NMASK), F.col(id_col))
         .selectExpr(
@@ -210,7 +208,7 @@ def jaccard_pairs(
         # sum|bucket| rows) instead of this union+distinct over 2x the
         # pair rows - at the 100x probe dedup_winnow_pairs' pair frame is
         # 39.6M rows and the union-distinct was a measurable slice of the
-        # index build (r11).
+        # index build.
         cand_ids = candidate_ids
         if cand_ids is None:
             cand_ids = (
@@ -232,9 +230,8 @@ def jaccard_pairs(
     # hash column that many later expressions reference).
     # The index keys shingles by their 64-bit window hash (the same
     # identity `shs` now holds): the posting shuffle moves 8-byte longs
-    # instead of ~20-byte k-gram strings and the groupBy hashes longs
-    # (round-5 A/B at sf0.1: 2.36 → 2.11 s steady; r11 moved the hash
-    # up into the set build itself). A collision would merge two
+    # instead of ~20-byte k-gram strings and the groupBy hashes longs.
+    # A collision would merge two
     # shingles' posting lists (overcounting n_common) or shrink a doc's
     # distinct count by 1; with ~2.6e5 distinct shingles per 0.1 SF
     # against a 2^64 space the probability is ≪ 1e-8, and the oracle
@@ -450,7 +447,7 @@ def minhash_dedup_pairs(
     output to :func:`jaccard_pairs` whenever the banding catches every
     true pair (see the registry docstring for the measured fixture
     recall contract)."""
-    # Round-4 session-3 postings: hash the k-token window DIRECTLY
+    # Postings hash the k-token window DIRECTLY
     # (multi-arg xxhash64 over element_at slots) instead of building
     # shingle strings — no concat_ws, no array_distinct. Correct because
     # the signature stage only consumes minima: min over the multiset of
@@ -458,24 +455,19 @@ def minhash_dedup_pairs(
     # change a MIN), and the exact-Jaccard verify below still intersects
     # real distinct shingle STRINGS. Also drops the old repartition(id) —
     # the signature groupBy shuffles on doc anyway, so pre-shuffling the
-    # raw docs was a pure extra exchange. Measured at sf0.1:
-    # postings 0.64→0.37 s, postings+signatures 0.64→0.41 s.
+    # raw docs was a pure extra exchange.
     # Expression strings throughout (construction cost, not execution,
-    # dominated the cascade's wall in the round-8 profile): the parsed
-    # trees are identical to the old Column-lambda builds, but each string
-    # is ONE gateway roundtrip where the 32-permutation/8-band
-    # comprehensions cost hundreds.
-    # Topology (r12, RE-AFFIRMED r13 by measurement): two direct
-    # tokenize passes — the fence's df-count and the signature postings
-    # — plus a candidates-only third for verify; ZERO full-corpus
-    # materialization. The obvious-looking alternative (share ONE scan
-    # by checkpointing per-doc window-hash arrays, bigram-LM style) was
-    # built and A/B'd this round: 1.60 s vs 1.71 s at sf0.1 — and
-    # 74.8 s vs 7.8 s at the 100× probe, a 10× scale REGRESSION,
-    # because the store is corpus-sized (~11 GB of long arrays at 100×;
-    # at 100 TB it is the corpus). Re-tokenizing is two cheap streaming
-    # passes; storing the tokenize output costs a write+read of the
-    # same volume plus block-manager pressure. Rejected.
+    # dominates the cascade's wall): the parsed trees are identical to
+    # Column-lambda builds, but each string is ONE gateway roundtrip
+    # where the 32-permutation/8-band comprehensions cost hundreds.
+    # Topology: two direct tokenize passes — the fence's df-count and the
+    # signature postings — plus a candidates-only third for verify; ZERO
+    # full-corpus materialization. Sharing ONE scan by checkpointing
+    # per-doc window-hash arrays is a scale regression: the store is
+    # corpus-sized (at 100 TB it is the corpus), so it costs a write+read
+    # of the same volume plus block-manager pressure, where re-tokenizing
+    # is two cheap streaming passes. The measurements are in
+    # OPTIMIZATION_engine.md.
     win_slots = ", ".join(
         f"element_at(toks, CAST(i AS INT) + {j})" for j in range(k)
     )
@@ -635,8 +627,8 @@ def minhash_dedup_pairs(
     vsets = materialize(vs, "minhash-vsets")
     # ^ materialized because BOTH verify sides consume it and the cand
     # side of each join broadcasts — without lineage cut the semi-join +
-    # re-shingle + cap chain runs twice (r10 A/B at sf0.1 min-of-3:
-    # 1.56 s -> 1.16 s). Bounded: only docs appearing in a candidate pair.
+    # re-shingle + cap chain runs twice. Bounded: only docs appearing in a
+    # candidate pair.
     a = vsets.selectExpr("doc_id AS doc_a", "shs AS shs_a")
     b = vsets.selectExpr("doc_id AS doc_b", "shs AS shs_b")
     joined = cand.join(a, on="doc_a").join(b, on="doc_b")

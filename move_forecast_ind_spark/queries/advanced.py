@@ -124,16 +124,14 @@ def events_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterated on the driver (the kmeans/PCA fit-locally doctrine —
     CPython floats are the same correctly-rounded IEEE doubles, so the
     sorted-fold norm and the 1e-9 regrid are bit-identical to the
-    oracle's CTE stack). The earlier in-plan variant re-ran the
-    data-sized aggregate inside a 4-deep join lineage — measured 4.0 s
-    at sf0.1 vs ~1.0-1.4 s for the collect form (scan-bound), with
-    byte-identical output."""
+    oracle's CTE stack). An in-plan variant would re-run the data-sized
+    aggregate inside a 4-deep join lineage."""
     ev = load_table(spark, sf_dir, "events")
     # one user-keyed aggregate (collect_set dedups in-shuffle), then the
-    # <=k² pair fan-out expands IN-ROW — no distinct, no self-join.
-    # A/B at sf0.1: steady-state ~0.9 s, measured EQUAL to the
-    # ut-self-join form (both scan-bound); kept because it carries two
-    # shuffles instead of three — the difference that matters at 100 TB
+    # <=k² pair fan-out expands IN-ROW — no distinct, no self-join. Both
+    # this and a ut-self-join form are scan-bound locally; this one
+    # carries two shuffles instead of three — the difference that matters
+    # at 100 TB
     m = (
         ev.groupBy("user_id")
         .agg(F.collect_set("event_type").alias("tys"))

@@ -1223,16 +1223,13 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     d, s = _PCA_D, _PCA_SCALE
     v = F.col("embedding").cast("array<double>")
-    # Second moments via Arrow-batched PARTIAL Gram matrices (round-5
-    # rework): each mapInPandas batch emits one row carrying its numpy
-    # X'X (d² doubles), column sums, and count; the driver adds the
-    # handful of partials. This replaces the r4 in-row outer-product
-    # explode — n×d² = millions of struct rows shuffled into a d²-key
-    # aggregate — with d²-bounded state per batch (A/B at sf0.1:
-    # 3.8 s → ~1 s). Partial-sum order differs from DuckDB's sequential
-    # sum, which is exactly what the 1e-6 covariance quantization grid
-    # absorbs (same contract as before — the r4 groupBy partials were
-    # order-free neither).
+    # Second moments via Arrow-batched PARTIAL Gram matrices: each
+    # mapInPandas batch emits one row carrying its numpy X'X (d² doubles),
+    # column sums, and count; the driver adds the handful of partials —
+    # d²-bounded state per batch, where an in-row outer-product explode
+    # shuffles n×d² struct rows into a d²-key aggregate. Partial-sum order
+    # differs from DuckDB's sequential sum, which is exactly what the
+    # 1e-6 covariance quantization grid absorbs.
     import math
 
     import numpy as np
@@ -1646,18 +1643,16 @@ def lloyd_assign(
     rounds = ``iters − 1`` mean updates (the returned assignment uses
     the last updated centroids).
 
-    Round-5 topology: the WHOLE iteration chains lazily inside one plan —
+    Topology: the WHOLE iteration chains lazily inside one plan —
     per-round centroids are a k-row frame pivoted into one broadcast
     array row, the mean update and its fixed-point snap run in-plan, and
-    NOTHING reaches the driver between rounds (the r4 shape paid one
-    collect-job per round; A/B at sf0.1: kmeans 2.9 → 1.6 s, identical
-    assignments). Measured caveat: each round's centroid frame feeds both
-    the next assignment and the empty-cluster COALESCE, and AQE does NOT
-    reuse the duplicated stages (final-adaptive-plan inspection) — the
-    fully-lazy chain re-executes ~2^rounds small subtrees and still wins
-    locally because scans are cheaper than job floors; ``ckpt_every``
-    bounds the recompute for cluster runs (see the in-loop comment for
-    the A/B numbers). ``e`` is consumed once per round, so it is
+    NOTHING reaches the driver between rounds (no collect-job per round).
+    Caveat: each round's centroid frame feeds both the next assignment
+    and the empty-cluster COALESCE, and AQE does NOT reuse the
+    duplicated stages (final-adaptive-plan inspection) — the fully-lazy
+    chain re-executes ~2^rounds small subtrees and still wins locally
+    because scans are cheaper than job floors; ``ckpt_every`` bounds the
+    recompute for cluster runs. ``e`` is consumed once per round, so it is
     checkpointed here unless the caller already did
     (``pre_materialized=True``). Per round at cluster scale: one corpus
     scan (assignment map) + one (k×d)-keyed aggregate — driver state: 0."""
@@ -1669,13 +1664,12 @@ def lloyd_assign(
         e = materialize(e, "lloyd-vecs")
     w = Window.orderBy("vec_id")
     # All heavy array expressions below are SQL strings (F.expr), not
-    # Column-lambda higher-order functions: profiling (round 8) showed
-    # DataFrame CONSTRUCTION, not execution, dominated this query's wall
-    # (3.6k Py4J roundtrips ≈ 2.0 s — each Python lambda HOF costs dozens
-    # of gateway calls, and the lazily-chained rounds multiply them). One
-    # expr string = one roundtrip; the parsed Catalyst tree is identical,
-    # so plans, results and oracles are unchanged (A/B: construct
-    # ~1.0 s → ~0.2 s, assignments bit-identical).
+    # Column-lambda higher-order functions: DataFrame CONSTRUCTION, not
+    # execution, dominates this query's wall otherwise — each Python
+    # lambda HOF costs dozens of Py4J gateway calls, and the
+    # lazily-chained rounds multiply them. One expr string = one
+    # roundtrip; the parsed Catalyst tree is identical, so plans, results
+    # and oracles are the same.
     cents = (
         e.orderBy("vec_id")
         .limit(k)
@@ -1754,9 +1748,8 @@ def lloyd_assign(
         # assignment AND the coalesce), and AQE does not reuse the
         # duplicated stages here (verified on the final adaptive plan) —
         # fully-lazy means 2^rounds corpus scans. At fixture scale scans
-        # are cheaper than job floors, decisively: A/B at sf0.1
-        # ckpt_every=None 1.55 s vs ckpt_every=2 4.51 s (the checkpoint
-        # jobs re-execute the assignment subtrees they cut). A cluster
+        # are cheaper than job floors, decisively (the checkpoint jobs
+        # re-execute the assignment subtrees they cut). A cluster
         # run — where a corpus scan is hours — sets ckpt_every low so
         # the worst chain re-executes the corpus boundedly, the same
         # doctrine as the PageRank cadence; the local default stays
@@ -1802,9 +1795,8 @@ def ml_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pre_materialized: e is a pruned columnar scan (vec_id + embedding
     # only) — re-scanning it per assignment round beats a checkpoint
-    # (materialize()'s documented "none" case; A/B at sf0.1:
-    # 1.3 s vs 1.49 s). Derived/expression-heavy inputs (semdedup's BoW
-    # chain) still checkpoint.
+    # (materialize()'s documented "none" case). Derived/expression-heavy
+    # inputs (semdedup's BoW chain) still checkpoint.
     asg = lloyd_assign(e, _KM_K, _KM_ITERS, pre_materialized=True)
     return asg.join(e.select("vec_id", "label"), "vec_id").select(
         "vec_id", "label", "cluster_id"
@@ -3362,22 +3354,17 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # Hashed-BoW vectors built IN-ROW as a fold histogram (round-5
-    # rework): hash every token to its bucket once, then ONE fold over
-    # the hash array increments the matching slot of a 32-wide count
-    # vector — a MAP-ONLY stage, where the r4 shape (explode to 1 row
-    # per token + a 32-conditional-sum groupBy) paid a corpus-sized
-    # shuffle. Honest A/B at sf0.1 (forced evaluation — count() prunes
-    # the column and lies): fold-histogram 0.75 s vs explode+groupBy
-    # 1.38 s vs per-bucket filtered-size 5.98 s (that variant re-hashes
-    # every token per bucket — rejected). Counts are exact integers
+    # Hashed-BoW vectors built IN-ROW as a fold histogram: hash every
+    # token to its bucket once, then ONE fold over the hash array
+    # increments the matching slot of a 32-wide count vector — a MAP-ONLY
+    # stage, where exploding to 1 row per token + a 32-conditional-sum
+    # groupBy pays a corpus-sized shuffle. Counts are exact integers
     # either way — the oracle's explode/groupBy replica produces the
-    # identical vectors; 100 TB posture improves too (doc vectors now
-    # need zero shuffles).
+    # identical vectors; doc vectors need zero shuffles at 100 TB.
     # expr strings (construction-cost doctrine — lloyd_assign): identical
-    # parsed trees to the old Column-lambda build, fewer gateway calls.
+    # parsed trees to a Column-lambda build, fewer gateway calls.
     # Tokenizer composed from the shared TOKENS_SQL constant so it can
-    # never drift from functions.text.tokens() (ADVICE r8).
+    # never drift from functions.text.tokens().
     from ..functions.text import TOKENS_SQL
 
     _HA = (
@@ -3391,31 +3378,16 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # e has many consumers (k-means init + per-round updates + the final
     # assignment + the pair stage); without a barrier each one re-inlines
-    # the whole tokenize→hash→count chain (CollapseProject — measured
-    # 30 s! in the r4 explode/groupBy shape). r5 used a ReuseExchange
-    # barrier (every consumer shares one repartition Exchange); r14
-    # replaces it with a LAZY checkpoint (materialize eager=False) after
-    # a fanout, for two measured reasons, both invisible to the r5/r8
-    # A/Bs because those timed .count() — and count() ELIMINATES the
-    # drops left join (distinct right side) plus prunes v, i.e. the old
-    # numbers never timed the real computation (guide §1.4; r14 noop
-    # walls: 26-32 s vs 1.5 s count):
-    #   1. AQE coalesced the byte-tiny exchange to ONE task, so the fold
-    #      histogram (tokens×32 interpreted ops per doc) and every
-    #      consumer's re-evaluation of it serialized on a single core.
-    #      The barrier is now a FANOUT (round-robin spread) — still one
-    #      ReuseExchange'd shuffle that a COUNT action can prune through
-    #      (a lazy checkpoint here was measured and rejected: the opaque
-    #      LogicalRDD blocks count's join-elimination + column pruning
-    #      and the bench-methodology number went 1.6 → 4.0 s), but the
-    #      per-consumer v evaluation now runs 32-way parallel. Count
-    #      vectors are exact integers and centroid updates snap to the
-    #      1e-6 grid (lloyd_assign's cross-engine contract absorbs
-    #      sum-order noise by design), so partitioning cannot change the
-    #      fixed point — oracle-checked at all three SFs.
-    #   2. the pair stage self-joined the whole k-means assignment chain
-    #      (see the withn checkpoint below) and evaluated an interpreted
-    #      aggregate-fold dot per pair — 14.6 s of the old noop wall.
+    # the whole tokenize→hash→count chain (CollapseProject). The barrier
+    # is a FANOUT (round-robin spread): one ReuseExchange'd shuffle that
+    # a COUNT action can still prune through (an opaque lazy checkpoint
+    # would block count's join-elimination + column pruning), and,
+    # unlike a plain repartition Exchange that AQE coalesces to ONE
+    # task, it keeps the fold histogram (tokens×32 interpreted ops per
+    # doc) and every consumer's re-evaluation of it 32-way parallel.
+    # Count vectors are exact integers and centroid updates snap to the
+    # 1e-6 grid (lloyd_assign's cross-engine contract absorbs sum-order
+    # noise by design), so partitioning cannot change the fixed point.
     from ..operators.dedup import fanout
     from ..operators.materialize import materialize
 

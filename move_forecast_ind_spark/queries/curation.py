@@ -36,7 +36,6 @@ from pyspark.sql.window import Window
 from ..functions.rounding import r2, r4, r6, sql_r6
 from ..functions.text import fingerprint, sql_hashed_windows, tokens
 from ..sources import load_table
-from ..sources.tables import normalize_event_ts
 from .registry import fmt_doc, register
 
 # --- PII redaction ---------------------------------------------------------
@@ -973,10 +972,7 @@ def sql_recursive_session_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     child.conf.set(
         "spark.sql.cteRecursionRowLimit", str(max(1_000_000, 4 * n_events))
     )
-    # temp views are per session; load_table's cache is bound to the caller
-    normalize_event_ts(
-        child.read.parquet(f"{sf_dir}/events.parquet")
-    ).createOrReplaceTempView("events")
+    load_table(child, sf_dir, "events").createOrReplaceTempView("events")
     # Below the switch the genuine recursion runs with an input-bounded
     # LEVEL limit (default 100 binds real data); at or past it the
     # per-level scheduling cost makes recursion the wrong physical shape,
@@ -2319,10 +2315,10 @@ def mm_ahash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.size("ds") > 1) & (F.size("ds") <= _AHASH_MAX_DF))
         # fanout the ~53-row bucket frame before the in-row pair expansion:
         # AQE coalesces the byte-tiny bucket shuffle to ONE task, which then
-        # explodes ~2.3 M pairs serially (profiled r14: 2.6 s single-task).
+        # explodes ~2.3 M pairs serially.
         # Round-robin spread bounds the tail at the widest single bucket.
         .transform(fanout)
-        # two-generator expansion (operators.dedup.expand_pairs r14 A/B):
+        # two-generator expansion (see operators.dedup.expand_pairs):
         # same pair set, codegen Generates instead of interpreted HOF arrays
         .transform(expand_pairs)
         .distinct()

@@ -1976,7 +1976,7 @@ def dedup_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = sig.select(
         "doc_id", F.expr(f"explode(array({band_structs}))").alias("bb")
     ).select("doc_id", "bb.band", "bb.v1", "bb.v2")
-    # two-generator expansion (operators.dedup.expand_pairs r14 A/B):
+    # two-generator expansion (see operators.dedup.expand_pairs):
     # same pair set, codegen Generates instead of interpreted HOF arrays
     cand = expand_pairs(
         bands.groupBy("band", "v1", "v2")

@@ -465,15 +465,13 @@ def a_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point doctrine of the k-means/PCA tier without any driver
     round-trip. Engine shape: one aggregate to the |segments| x
     |nations| cell frame packed into a single row, then ALL six scale
-    layers as ONE in-row sequence-fold (the absorbing-markov idiom) —
-    r10 replaced the previous 6-WindowExec chain over the coalesced
-    cell frame after the VERDICT r9 floor decomposition: same exact
-    integer-grid arithmetic (margin sums are BIGINT adds, order-free),
-    A/B at sf0.1 min-of-3 0.50 s -> 0.41 s and a 6-operator-shorter
-    plan on a query whose DuckDB side is 0.04 s (pure job floor). The
-    in-row fold is over the bounded ~125-element cell array — safe at
-    any data volume; only the margins' CARDINALITY, never the data
-    size, reaches this row."""
+    layers as ONE in-row sequence-fold (the absorbing-markov idiom)
+    rather than a 6-WindowExec chain over the coalesced cell frame: the
+    same exact integer-grid arithmetic (margin sums are BIGINT adds,
+    order-free) in a 6-operator-shorter plan, on a query that is job
+    floor. The in-row fold is over the bounded ~125-element cell array
+    — safe at any data volume; only the margins' CARDINALITY, never the
+    data size, reaches this row."""
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", F.col("n_name").alias("nation")

@@ -103,13 +103,12 @@ def er_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # AQE coalesces the tiny block frame (~400 rows) to ONE partition,
     # which would serialize the 100x-larger pair fan-out + levenshtein
-    # behind a single core; spread the blocks back out before exploding
-    # (A/B at sf0.1: 0.98 s -> 0.43 s). A length-difference prefilter
-    # inside the pair lambda was measured flat (0.98 vs 1.00 s) and
-    # rejected — block members have near-uniform name lengths.
+    # behind a single core; spread the blocks back out before exploding.
+    # No length-difference prefilter: block members have near-uniform
+    # name lengths, so it prunes nothing.
     blocks = blocks.repartition(32)
-    # two-generator expansion (operators.dedup.expand_pairs rationale, r14
-    # A/B): arr is sort_array'd on (p_partkey, ...) with unique partkeys,
+    # two-generator expansion (see operators.dedup.expand_pairs): arr is
+    # sort_array'd on (p_partkey, ...) with unique partkeys,
     # so "later elements of the slice" IS the b.p_partkey > a.p_partkey
     # filter — the same ordered pair set, streamed through codegen
     # Generates instead of an interpreted flatten(transform(filter(...)))
@@ -576,31 +575,25 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import fanout
 
     # expr strings (construction-cost doctrine — lloyd_assign); trees
-    # identical to the prior Column-lambda build, oracle-checked 2 SFs+10×.
-    # Dictionary-encode source BEFORE the posting shuffle (r10, 100×
-    # probe): the distinct-source frame is tiny, and row_number() ORDER
-    # BY source makes code order == string order, so the in-row a<b pair
-    # expansion and the window partitions keep the exact string
-    # semantics on 4-byte ints; strings decode back onto the ≤ sources²
-    # tally frame. The dominant posting shuffle drops ~20 bytes/row:
-    # A/B min-of-2 same-session at the 100× dataset 26.2 → 19.2 s,
-    # neutral at 10× (3.8 vs 3.9 s), output identical at sf0.1 AND 10×.
+    # identical to a Column-lambda build.
+    # Dictionary-encode source BEFORE the posting shuffle: the
+    # distinct-source frame is tiny, and row_number() ORDER BY source
+    # makes code order == string order, so the in-row a<b pair expansion
+    # and the window partitions keep the exact string semantics on 4-byte
+    # ints; strings decode back onto the ≤ sources² tally frame. The
+    # dominant posting shuffle drops ~20 bytes/row.
     srcs = docs.select("source").distinct().selectExpr(
         "source", "row_number() OVER (ORDER BY source) AS sc"
     )
-    # Bigram identity WITHOUT bigram strings (r11, 100× probe): the
-    # matrix never reads shingle text, so hash the token PAIR directly
-    # with two-arg xxhash64 and dedupe the per-doc LONG array instead of
-    # building 25.6 M concat_ws(' ', a, b) strings and
-    # array_distinct-ing them — tokens are whitespace-split, so
+    # Bigram identity WITHOUT bigram strings: the matrix never reads
+    # shingle text, so hash the token PAIR directly with two-arg xxhash64
+    # and dedupe the per-doc LONG array instead of building a
+    # concat_ws(' ', a, b) string per window and array_distinct-ing them
+    # — the map-side string materialization, not the shuffle, is the
+    # cost (the aggregate reduces the postings to a few distinct groups
+    # per doc, so the exchange is tiny). Tokens are whitespace-split, so
     # (a, b) ↔ "a b" is bijective and the distinct-hash count equals the
     # oracle's distinct-string count (same 2^-64 collision doctrine).
-    # A/B at the 100× dataset, identical outputs (84 721 distinct h,
-    # 1 657 110 postings): the scan→postings→collect_set subtree fell
-    # 12.7 → 2.1-2.8 s warm — the map-side string materialization WAS
-    # the r10 "row-vs-columnar" residual, not the shuffle (the aggregate
-    # reduces 25.6 M rows to 84.7 k groups, so the exchange is tiny).
-    # Codec A/B same session (lz4 vs zstd): 12.9 vs 13.5 s — rejected.
     dh = (
         fanout(docs.join(F.broadcast(srcs), "source"), F.col("doc_id"))
         .selectExpr("sc", f"{TOKENS_SQL.format(col='text')} AS toks")
@@ -616,20 +609,16 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME in-row expansion — each shingle's source set emits its
     # per-source markers (a, NULL) alongside its a<b pairs (a, b), and
     # one count aggregate produces both the per-source distinct-shingle
-    # counts and the pair-overlap counts. Round-8 rewrite: the previous
-    # shape fed per_hash_all to THREE consumers (pair subtree + two
-    # broadcast count sides), and each physical subtree recomputed the
-    # full tokenize->shingle->explode->groupBy lineage (the 10x probe
-    # measured 22.4 s, ~3x the single-pass cost). Now the lineage runs
-    # once and has ONE consumer: the per-source totals attach to the
-    # pair rows with two window maxes over the tiny tally frame
-    # (<= sources^2 + sources rows — hundreds at 100 TB) instead of two
-    # joins — a pair row (a, b) shares the PARTITION BY sa window with
-    # the singles row (a, NULL), and the PARTITION BY coalesce(sb, sa)
-    # window with (b, NULL), so no materialization barrier is needed at
-    # all. 10x probe A/B: 22.4 s -> 2.2-3.1 s steady (vs DuckDB-oracle
-    # 4.5-9.1 s — Spark WINS at 10x), sf0.1 steady 1.6-1.7 s; marginal
-    # cost now linear in data.
+    # counts and the pair-overlap counts. The lineage runs once and has
+    # ONE consumer (feeding per_hash_all to a pair subtree plus two
+    # broadcast count sides recomputes the full
+    # tokenize->shingle->explode->groupBy lineage per subtree): the
+    # per-source totals attach to the pair rows with two window maxes
+    # over the tiny tally frame (<= sources^2 + sources rows — hundreds
+    # at 100 TB) instead of two joins — a pair row (a, b) shares the
+    # PARTITION BY sa window with the singles row (a, NULL), and the
+    # PARTITION BY coalesce(sb, sa) window with (b, NULL), so no
+    # materialization barrier is needed at all.
     per_hash_all = dh.groupBy("h").agg(
         F.expr("sort_array(collect_set(sc)) AS ss")
     )

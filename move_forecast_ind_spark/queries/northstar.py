@@ -914,7 +914,7 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "winnow-buckets",
         npartitions=32,
     )
-    # two-generator expansion (operators.dedup.expand_pairs r14 A/B):
+    # two-generator expansion (see operators.dedup.expand_pairs):
     # same pair set, codegen Generates instead of interpreted HOF arrays
     cand = expand_pairs(buckets).distinct()
     # Member-id set straight off the buckets (sum|bucket| rows) instead of

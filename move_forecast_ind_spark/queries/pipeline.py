@@ -279,18 +279,15 @@ def _build_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # The frame below only touches branches 1-10 in June; the filter is
     # on grouping keys, so slicing before the aggregates is exact.
-    # Round 5 re-measured the r4 facts-slice checkpoint under the new
-    # session tuning (4 MB local scan splits + table-metadata cache):
-    # the checkpoint job now COSTS more than the re-scan it saves —
-    # A/B at sf0.1: both ckpts 1.35 s, facts-lazy + pct-ckpt 0.91 s,
-    # none 0.89 s. The facts slice stays LAZY here (two pruned parallel
-    # scans feed the moves/totals aggregates); on a 100 TB
-    # date-partitioned lake those scans partition-prune on the month
-    # predicate (SCALE.md layout), and a flat lake restores the r4
-    # barrier. The move-type domain must stay GLOBAL (types_from=li): a
-    # type absent from the June slice still owes zero-percentage rows,
-    # which feed the month-grain average (reference precompute loop
-    # domain).
+    # The facts slice stays LAZY (two pruned parallel scans feed the
+    # moves/totals aggregates): under the session tuning (4 MB local scan
+    # splits + table-metadata cache) a checkpoint job costs more than the
+    # re-scan it saves. On a 100 TB date-partitioned lake those scans
+    # partition-prune on the month predicate (SCALE.md layout), and a
+    # flat lake restores a checkpoint barrier. The move-type domain must
+    # stay GLOBAL (types_from=li): a type absent from the June slice still
+    # owes zero-percentage rows, which feed the month-grain average
+    # (reference precompute loop domain).
     facts = li.filter(
         F.col("l_suppkey").between(1, 10) & (F.month("l_shipdate") == 6)
     )
@@ -299,14 +296,11 @@ def _build_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         date_col="l_shipdate", count_col="l_quantity", types_from=li,
     )
     # The ~1.2k-row day-grain slice feeds four broadcast subtrees (two
-    # day-grain keyings + two month-grain). Round-5 continuation
-    # re-measure under the final tuning (2 MB AQE advisory + the rest):
-    # the localCheckpoint now LOSES to staying lazy — each broadcast
-    # subtree contains the identical pct shuffle exchange, which
-    # ReuseExchange evaluates once per action, and only the trivial
-    # 1.2k-row post-shuffle aggregate re-runs per consumer (A/B at
-    # sf0.1: ckpt 0.95-1.38 s, coalesce+ckpt 0.86-1.05 s, lazy
-    # 0.75-0.99 s; outputs identical). Same lesson as the pagerank
+    # day-grain keyings + two month-grain) and stays lazy: each
+    # broadcast subtree contains the identical pct shuffle exchange,
+    # which ReuseExchange evaluates once per action, and only the trivial
+    # 1.2k-row post-shuffle aggregate re-runs per consumer, which is
+    # cheaper than a localCheckpoint job. Same lesson as the pagerank
     # adjacency and semdedup vector frames. On a 100 TB flat lake a
     # multi-action serving path should restore the barrier so the fact
     # aggregation cannot re-run per action (materialize(pct,

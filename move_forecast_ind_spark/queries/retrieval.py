@@ -328,10 +328,9 @@ def text_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries×candidates frame. The lexical rank uses the
     zeros-sort-last trick: ranking the full frame by (n_common DESC,
     doc_id) makes row_number restricted to n_common>0 rows exactly the
-    positive-overlap rank, so no filter+join-back is needed (A/B at
-    sf0.1: postings join + leg stitch 1.43 s → fused pass 1.18 s, of
-    which the data path is 0.43 s and the rest is the 3-window stage
-    floor; oracle-identical). Ranks compare per-row-identical values (integer
+    positive-overlap rank, so no filter+join-back is needed (the fused
+    pass replaces a postings join + leg stitch; what remains is mostly
+    the 3-window stage floor). Ranks compare per-row-identical values (integer
     overlaps; the shared left-fold dot product), so fusion is
     bit-exact before the r6 grid. At 100 TB: the corpus shuffles one
     row per (query, candidate) into the rank windows and nothing else;
@@ -340,8 +339,8 @@ def text_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), as_double(F.col("embedding")).alias("v")
     )
-    # Bigram IDENTITY without bigram strings (r11, the
-    # corpus_source_overlap finding): the lexical leg consumes only
+    # Bigram IDENTITY without bigram strings (as in
+    # corpus_source_overlap): the lexical leg consumes only
     # size(array_intersect(...)), so hash each 2-token window directly
     # (two-arg xxhash64) and dedupe/intersect LONG arrays — no concat_ws
     # string per window (whitespace tokens keep window <-> string
@@ -349,7 +348,7 @@ def text_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     univ = (
         docs.join(emb, "doc_id")
         # NOT fanout-pinned: both consumers are query-count-bounded slices;
-        # pinning measured neutral-to-negative (A/B: 2.15 vs 2.02 s).
+        # pinning measured neutral-to-negative.
         .repartition(F.col("doc_id"))
         .select("doc_id", tokens(F.col("text")).alias("toks"), "v")
         .selectExpr("doc_id", f"{sql_hashed_windows('toks', 2)} AS shs", "v")

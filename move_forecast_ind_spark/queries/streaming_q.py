@@ -1,13 +1,15 @@
-"""Batch twins of the streaming pipelines (SURVEY.md §2.10, M5).
+"""The streaming pipelines as batch queries (SURVEY.md §2.10, M5).
 
-Each query computes, with batch operators, exactly what the corresponding
-streaming pipeline in streaming/events.py emits once the stream drains —
-the driver's oracle hash-checks the batch side; tests/test_streaming.py
-asserts stream ≡ batch on the same data.
+Eight of these queries are a streaming transform from streaming/events.py
+applied to the batch events table — one definition, run incrementally there
+and once here. ``st_dedup_counts`` and ``st_stateful_user_gaps`` compute with
+batch operators what ``dropDuplicatesWithinWatermark`` and the GroupState
+operator in streaming/stateful.py leave behind. The driver's oracle
+hash-checks every query; tests/test_streaming.py drains each stream and
+asserts it emits the query's rows.
 
-Bucketing is epoch arithmetic (floor(us / width)) rather than Spark's
-``window()`` struct in the oracle-facing output so both engines agree on
-representation: bucket starts are epoch seconds (BIGINT), tz-free.
+Bucket starts are emitted as epoch seconds (BIGINT, tz-free) rather than
+Spark's ``window()`` struct, so both engines agree on representation.
 """
 
 from __future__ import annotations
@@ -15,12 +17,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.rounding import r2, sql_r2
+from ..functions.rounding import sql_r2
 from ..sources import load_table
+from ..streaming.events import (
+    decayed_scores,
+    decayed_state,
+    finalize_topk,
+    latest_state,
+    session_stats,
+    sliding_counts,
+    static_enriched_counts,
+    stream_stream_click_purchase_join,
+    tumbling_counts,
+    windowed_topk_counts,
+)
 from .registry import register
-
-TEN_MIN_US = 600_000_000
-FIVE_MIN_US = 300_000_000
 
 
 @register(
@@ -37,20 +48,9 @@ FIVE_MIN_US = 300_000_000
     """,
 )
 def st_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10-minute tumbling counts per type — batch twin of
-    streaming.events.tumbling_counts (same windows via window(); bucket
-    emitted as epoch seconds)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), r2(F.sum("value")).alias("sum_value"))
-        .select(
-            (F.unix_micros(F.col("w.start")) / 1_000_000).cast("long").alias("bucket_s"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
+    """10-minute tumbling counts and r2 value sums per type —
+    streaming.events.tumbling_counts on the batch table."""
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -73,19 +73,10 @@ def st_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10-min/5-min sliding counts — every event in exactly two windows
-    (Spark's window(ts, 10m, 5m); the oracle reconstructs the same windows
-    by epoch arithmetic)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            (F.unix_micros(F.col("w.start")) / 1_000_000).cast("long").alias("bucket_s"),
-            "event_type",
-            "n",
-        )
-    )
+    """10-min/5-min sliding counts — every event in exactly two windows —
+    streaming.events.sliding_counts on the batch table (the oracle
+    reconstructs the same windows by epoch arithmetic)."""
+    return sliding_counts(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -122,27 +113,12 @@ def st_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessions (30-min) per user — batch session_window; the
-    oracle derives identical sessions with lag + cumulative new-session
-    flags (new session when the gap is ≥ the threshold, matching
-    session_window's half-open [first, last+gap) semantics)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-        .select(
-            "user_id",
-            (F.unix_micros("first_ts") / 1_000_000).cast("long").alias("session_start_s"),
-            "n_events",
-            ((F.unix_micros("last_ts") - F.unix_micros("first_ts")) / 1_000_000)
-            .cast("long")
-            .alias("duration_s"),
-        )
-    )
+    """Gap-based sessions (30-min) per user — streaming.events.session_stats
+    on the batch table; the oracle derives identical sessions with lag +
+    cumulative new-session flags (new session when the gap is ≥ the
+    threshold, matching session_window's half-open [first, last+gap)
+    semantics)."""
+    return session_stats(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -186,31 +162,11 @@ def st_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream-stream click->purchase interval join
-    (streaming.events.stream_stream_click_purchase_join): same equi key +
-    event-time band."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-        F.col("value").alias("click_value"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("interval 15 minutes"))
-    )
-    return purchases.join(clicks, cond, "inner").select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("gap_us"),
-        "click_value",
-    )
+    """Click->purchase interval join (same user, click within the 15
+    minutes before the purchase) —
+    streaming.events.stream_stream_click_purchase_join on the batch
+    table."""
+    return stream_stream_click_purchase_join(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -264,27 +220,11 @@ def st_stateful_user_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st_static_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming.events.static_enriched_counts: the
-    stream-static enrichment join (events x customer dim on
-    user_id = c_custkey, broadcast — no stream-side shuffle for the
-    join) rolled up into 10-minute tumbling counts per market segment.
-    tests/test_streaming.py drains the streaming pipeline and asserts
-    it emits exactly these rows."""
-    ev = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    return (
-        ev.join(F.broadcast(cust), "user_id")
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            (F.unix_micros(F.col("w.start")) / 1_000_000)
-            .cast("long")
-            .alias("bucket_s"),
-            F.col("c_mktsegment").alias("segment"),
-            "n",
-        )
+    """Events x broadcast customer dim on user_id = c_custkey, rolled up
+    into 10-minute tumbling counts per market segment —
+    streaming.events.static_enriched_counts on the batch table."""
+    return static_enriched_counts(
+        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
     )
 
 
@@ -307,29 +247,12 @@ def st_static_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming.events.windowed_topk_counts + finalize_topk:
-    top-3 event types per 6-hour tumbling window (rank ties broken on
-    event_type). The streaming side splits this into an incrementally-
-    maintainable windowed count plus a per-micro-batch rank (foreachBatch)
-    because ranking itself is not append-mode maintainable;
-    tests/test_streaming.py drains the stream through both stages and
-    asserts it emits exactly these rows. At 100 TB the rank stage's input
-    is windows x event-types — metadata-scale next to the event stream."""
-    from ..streaming.events import finalize_topk
-
+    """Top-3 event types per 6-hour tumbling window (rank ties broken on
+    event_type) — streaming.events.windowed_topk_counts then finalize_topk
+    on the batch table. The stream splits the two stages because ranking
+    is not append-mode maintainable."""
     ev = load_table(spark, sf_dir, "events")
-    counts = (
-        ev.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            (F.unix_micros(F.col("w.start")) / 1_000_000)
-            .cast("long")
-            .alias("bucket_s"),
-            "event_type",
-            "n",
-        )
-    )
-    return finalize_topk(counts, k=3)
+    return finalize_topk(windowed_topk_counts(ev), k=3)
 
 
 @register(
@@ -350,42 +273,12 @@ def st_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming.events.latest_state — the CDC latest-value-
-    per-key materialization: per user, the (ts, event_id)-greatest event's
-    type and value plus the lifetime event count. In streaming this is ONE
-    state row per key updated in place (max_by aggregate, update mode, no
-    watermark since keys never expire); in batch it is a single
-    map-side-combinable groupBy — both sides deterministic because the
-    ordering key (ts, event_id) is unique. The last event's value is a
-    single row's double (no summation), so the r2 grid is cosmetic.
-    Engine shape at 100 TB: the batch twin is one shuffle keyed by user;
-    the oracle's window formulation exists for SQL clarity only.
-    tests/test_streaming.py::test_latest_state_equivalence drains the
-    stream and asserts it emits exactly these rows."""
-    ev = load_table(spark, sf_dir, "events")
-    latest = F.max_by(
-        F.struct(
-            F.unix_micros(F.col("ts")).alias("us"),
-            F.col("event_id").alias("event_id"),
-            F.col("event_type").alias("event_type"),
-            F.col("value").alias("value"),
-        ),
-        F.struct(F.unix_micros(F.col("ts")), F.col("event_id")),
-    )
-    return (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"), latest.alias("last"))
-        .select(
-            "user_id",
-            "n_events",
-            F.col("last.us").alias("last_ts_us"),
-            F.col("last.event_type").alias("last_type"),
-            r2(F.col("last.value")).alias("last_value"),
-        )
-    )
-
-
-# --- streaming decayed engagement (batch twin) ----------------------------------
+    """CDC latest value per key: per user, the (ts, event_id)-greatest
+    event's type and value plus the lifetime event count —
+    streaming.events.latest_state on the batch table. The ordering key is
+    unique, so both engines are deterministic; the oracle's window
+    formulation exists for SQL clarity only."""
+    return latest_state(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -409,45 +302,15 @@ def st_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming.events.decayed_state + read-out: the
-    7-day-half-life engagement score maintained INCREMENTALLY — the
-    per-user state is the time-shifted sum S = sum(v * exp(+lam*(t-t0)))
+    """7-day-half-life engagement score maintained INCREMENTALLY —
+    streaming.events.decayed_state then decayed_scores on the batch table.
+    The per-user state is the time-shifted sum S = sum(v * exp(+lam*(t-t0)))
     (each term constant at ingest time, so it streams as a plain
     update-mode aggregate with one state row per user), and the score at
-    the stream's high-watermark T is S * exp(-lam*(T-t0)). Same model as
+    the high-watermark T is S * exp(-lam*(T-t0)). Same model as
     events_decayed_engagement but algebraically refactored for
     streamability — the two differ only in op order inside the r4 grid
-    (documented sum-order contract). Drain test:
-    tests/test_streaming.py::test_decayed_engagement_equivalence drains
-    the stream, applies the identical read-out, and matches this twin.
-    At 100 TB streaming: state is O(|users|) doubles, no watermark, no
-    window — the feature-store continuous-refresh shape."""
-    from ..streaming.events import (
-        _DECAY_LAM_PER_DAY,
-        _DECAY_T0_US,
-        _US_PER_DAY_F,
-        decayed_state,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    st = decayed_state(ev)
-    g = st.agg(F.max("last_us").alias("t_now"))
-    return st.crossJoin(F.broadcast(g)).select(
-        "user_id",
-        "n_events",
-        (
-            F.floor(
-                F.col("s_shift")
-                * F.exp(
-                    -F.lit(_DECAY_LAM_PER_DAY)
-                    * (
-                        (F.col("t_now") - F.lit(_DECAY_T0_US))
-                        / _US_PER_DAY_F
-                    )
-                )
-                * 1e4
-                + F.lit(0.5)
-            )
-            / 1e4
-        ).alias("decayed_score"),
-    )
+    (documented sum-order contract). At 100 TB streaming: state is
+    O(|users|) doubles, no watermark, no window — the feature-store
+    continuous-refresh shape."""
+    return decayed_scores(decayed_state(load_table(spark, sf_dir, "events")))

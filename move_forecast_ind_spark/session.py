@@ -96,9 +96,8 @@ def tune(spark: SparkSession) -> SparkSession:
             # aggregates ~20 MB) coalesce to ONE post-shuffle partition
             # under the 64 MB default — single-core execution on a
             # 32-core box (statusTracker: every stage 1 task). A 2 MB
-            # advisory re-parallelizes them (interleaved A/B at sf0.1:
-            # jaccard 2.14 → 1.55 s; tiny-query set unchanged — their
-            # shuffles are < 2 MB and still collapse to one task). On a
+            # advisory re-parallelizes them; the tiny queries' shuffles
+            # are < 2 MB and still collapse to one task. On a
             # cluster the 64 MB default stands — coalescing there fights
             # per-task scheduling overhead across executors, and this
             # branch never fires.

@@ -55,7 +55,7 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-# Catalog-style table cache: keyed by (session JVM identity, path). A
+# Catalog-style table cache: keyed by (application, session, path). A
 # metastore-backed deployment gets this for free from the catalog —
 # re-resolving the same immutable parquet table re-reads its footer on
 # the DRIVER every time (~0.1 s per call here; a real object store adds
@@ -67,16 +67,17 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 # invalidation hook (the catalog analog: REFRESH TABLE).
 #
 # Two hazards this cache must manage (ADVICE r5):
-# - eviction: entries for stopped sessions would otherwise accumulate for
-#   the life of the process. load_table() evicts every key whose
-#   applicationId differs from the calling session's — the cache is
-#   deliberately single-session (test/driver processes use one session at
-#   a time; alternating live sessions would merely re-read footers).
+# - eviction: entries for stopped applications would otherwise accumulate
+#   for the life of the process. load_table() evicts every key whose
+#   applicationId differs from the calling session's. Sessions of one
+#   application (``spark.newSession()``) each get their own entries, since
+#   a frame is bound to the session that read it: its temp views and
+#   runtime conf are that session's.
 # - persist leak: the cached object is SHARED, so a caller that .cache()s
 #   it substitutes an InMemoryRelation into every later load_table user.
 #   Callers must .unpersist() when done (see tests/test_server.py's
 #   fixture) or persist a derived frame (.select("*")) instead.
-_TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -93,14 +94,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         pass
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    # applicationId (not Python object id) keys the session: a stopped
-    # session's id() could be reused by the allocator and hand back a
-    # DataFrame bound to a dead JVM.
+    # applicationId + the JVM session's UUID (not Python object id) key
+    # the session: a stopped session's id() could be reused by the
+    # allocator and hand back a DataFrame bound to a dead JVM.
     app_id = spark.sparkContext.applicationId
     stale = [k for k in _TABLE_CACHE if k[0] != app_id]
     for k in stale:
         del _TABLE_CACHE[k]
-    key = (app_id, f"{sf_dir}/{name}.parquet")
+    key = (app_id, spark._jsparkSession.sessionUUID(), f"{sf_dir}/{name}.parquet")
     df = _TABLE_CACHE.get(key)
     if df is None:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")

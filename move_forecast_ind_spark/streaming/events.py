@@ -1,10 +1,12 @@
 """Structured Streaming pipelines over the events table (SURVEY.md §2.10,
 milestone M5 — additive scope; the reference is wholly batch/request-response).
 
-Each pipeline has a *batch twin* in queries/streaming_q.py computing the same
-result with the same operators on the same data — the batch-equivalence
-contract tests/test_streaming.py asserts (stream results ⊆-equal batch
-results once the stream is fully drained).
+Each transform here is the one definition of its pipeline: it runs as a
+stream over :func:`read_event_stream` and, unchanged, as a batch query over
+``load_table(spark, sf_dir, "events")`` — the registered ``st_*`` queries in
+queries/streaming_q.py are exactly those batch runs (on a batch frame the
+optimizer removes ``withWatermark``). tests/test_streaming.py drains each
+stream and asserts it emits the registered query's rows.
 
 Scale posture: all state is keyed (event_type / user_id), watermarks bound
 state retention, and every aggregate is mergeable — the same topology runs
@@ -17,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.rounding import r2, r4
 from ..session import tune
 from ..sources.tables import normalize_event_ts
 
@@ -83,11 +86,12 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tumbling_counts(events: DataFrame) -> DataFrame:
     """10-minute tumbling windows per event_type with a 10-minute watermark:
     late data beyond the watermark is dropped; state per (type, window) is
-    evicted once the watermark passes the window end."""
+    evicted once the watermark passes the window end. ``sum_value`` is
+    rounded to the r2 grid so stream and batch emit the same doubles."""
     return (
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n"), r2(F.sum("value")).alias("sum_value"))
         .select(
             (F.unix_micros(F.col("w.start")) / 1_000_000)
             .cast("long")
@@ -123,7 +127,9 @@ def latest_state(events: DataFrame) -> DataFrame:
     streaming engine keeps ONE row of state per user and updates it
     in-place each micro-batch (update/complete mode); no watermark is
     needed because state is keyed by user, not by window, and never
-    expires. Batch twin: queries.streaming_q.st_cdc_latest_state."""
+    expires. In batch the same aggregate is one map-side-combinable
+    groupBy, one shuffle keyed by user. The last value is a single row's
+    double (no summation), so its r2 grid is cosmetic."""
     latest = F.max_by(
         F.struct(
             F.unix_micros(F.col("ts")).alias("us"),
@@ -141,7 +147,7 @@ def latest_state(events: DataFrame) -> DataFrame:
             "n_events",
             F.col("last.us").alias("last_ts_us"),
             F.col("last.event_type").alias("last_type"),
-            F.col("last.value").alias("last_value"),
+            r2(F.col("last.value")).alias("last_value"),
         )
     )
 
@@ -173,17 +179,16 @@ def static_enriched_counts(events: DataFrame, customer: DataFrame) -> DataFrame:
     the static customer dimension on user_id = c_custkey (the classic
     fact-stream x slowly-refreshed-dim shape), then rolls up 10-minute
     tumbling counts per market segment. Structured Streaming re-plans the
-    static side per micro-batch; with a dim this small Spark broadcasts
-    it, so the join adds no shuffle to the stream — the 100 TB/day
-    streaming posture (the dim refresh cadence, not size, is the design
-    variable; a big dim becomes a shuffle join with state only on the
-    aggregate)."""
+    static side per micro-batch; the dim is broadcast, so the join adds
+    no shuffle to the stream — the 100 TB/day streaming posture (the dim
+    refresh cadence, not size, is the design variable; a big dim becomes
+    a shuffle join with state only on the aggregate)."""
     dim = customer.select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     return (
         events.withWatermark("ts", "10 minutes")
-        .join(dim, "user_id")
+        .join(F.broadcast(dim), "user_id")
         .groupBy(F.window("ts", "10 minutes").alias("w"), "c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -203,7 +208,8 @@ def windowed_topk_counts(events: DataFrame) -> DataFrame:
     mode (a late row can reorder a window's ranks), so top-k is the
     two-stage idiom: this streaming aggregate plus :func:`finalize_topk`
     applied per sink micro-batch (foreachBatch) or on the drained result.
-    Batch twin: queries/streaming_q.py::st_topk_per_window."""
+    At 100 TB the rank stage's input is windows x event-types —
+    metadata-scale next to the event stream."""
     return (
         events.withWatermark("ts", "6 hours")
         .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
@@ -286,6 +292,15 @@ def stream_stream_click_purchase_join(events: DataFrame) -> DataFrame:
     )
 
 
+def daily_counts(events: DataFrame) -> DataFrame:
+    """Per-(event_type, day) event counts: the table
+    :func:`maintain_counts_incremental` maintains, and each micro-batch's
+    delta into it."""
+    return events.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+
+
 def apply_count_delta(batch_df: DataFrame, batch_id: int, target_path: str) -> None:
     """Merge one micro-batch's per-(event_type, day) counts into a derived
     table, rewriting ONLY the touched event_type partitions
@@ -312,9 +327,7 @@ def apply_count_delta(batch_df: DataFrame, batch_id: int, target_path: str) -> N
     if os.path.exists(marker):
         return
     spark = batch_df.sparkSession
-    delta = batch_df.groupBy(
-        "event_type", F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    delta = daily_counts(batch_df)
     from pyspark.errors import AnalysisException
 
     from ..sources.sinks import upsert_partition_overwrite
@@ -406,8 +419,8 @@ def decayed_state(events: DataFrame) -> DataFrame:
     aggregate with one state row per user and no watermark; the
     read-out score at any horizon T is S * exp(-lam*(T-t0)/day)
     (exp overflow is bounded because the anchor sits inside the data
-    window: lam*(t-t0) <= lam*30d ~ 3). Batch twin + read-out:
-    queries.features.st pattern in st_decayed_engagement."""
+    window: lam*(t-t0) <= lam*30d ~ 3); :func:`decayed_scores` reads it
+    out."""
     term = F.col("value") * F.exp(
         F.lit(_DECAY_LAM_PER_DAY)
         * ((F.unix_micros("ts") - F.lit(_DECAY_T0_US)) / _US_PER_DAY_F)
@@ -416,4 +429,20 @@ def decayed_state(events: DataFrame) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum(term).alias("s_shift"),
         F.max(F.unix_micros("ts")).cast("long").alias("last_us"),
+    )
+
+
+def decayed_scores(state: DataFrame) -> DataFrame:
+    """Read-out of :func:`decayed_state` at the stream's high-watermark
+    T = max(last_us): each user's score S * exp(-lam*(T-t0)/day) on the r4
+    grid. Applied to the drained state or to the batch state alike."""
+    g = state.agg(F.max("last_us").alias("t_now"))
+    decay = F.exp(
+        -F.lit(_DECAY_LAM_PER_DAY)
+        * ((F.col("t_now") - F.lit(_DECAY_T0_US)) / _US_PER_DAY_F)
+    )
+    return state.crossJoin(F.broadcast(g)).select(
+        "user_id",
+        "n_events",
+        r4(F.col("s_shift") * decay).alias("decayed_score"),
     )

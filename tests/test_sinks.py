@@ -79,6 +79,20 @@ def test_ddl_and_catalog(spark, tmpdir):
     assert not table_exists(spark, name)
 
 
+def test_load_table_cache_is_per_session(spark):
+    """load_table caches one lazy frame per session: a child session
+    (``spark.newSession()``) gets a frame bound to itself, not the
+    caller's, and the caller still gets its own cached object back."""
+    from move_forecast_ind_spark.sources import load_table
+
+    mine = load_table(spark, SF_SMALL, "events")
+    child = spark.newSession()
+    theirs = load_table(child, SF_SMALL, "events")
+    assert theirs.sparkSession is child
+    assert mine.sparkSession is spark
+    assert load_table(spark, SF_SMALL, "events") is mine
+
+
 def test_bucketed_join_has_no_exchange(spark, tmpdir):
     """S9: joins on the bucket key of two bucketed tables plan without a
     shuffle Exchange on either side — the 'index' of the lake."""

@@ -44,8 +44,8 @@ def test_tumbling_equivalence(spark, event_stream_factory):
 
     out = _drain(tumbling_counts(event_stream_factory()), "t_tumbling", "complete")
     batch = st_tumbling_counts(spark, SF_SMALL)
-    cols = ["bucket_s", "event_type", "n"]
-    assert _rows(out.select(*cols), cols) == _rows(batch.select(*cols), cols)
+    cols = ["bucket_s", "event_type", "n", "sum_value"]
+    assert _rows(out, cols) == _rows(batch, cols)
 
 
 def test_sliding_equivalence(spark, event_stream_factory):
@@ -69,15 +69,20 @@ def test_session_equivalence(spark, event_stream_factory):
 
 
 def test_dedup_within_watermark(spark, event_stream_factory):
+    """The drained dedup keeps one event per (user, type, minute) key, and
+    per event_type exactly as many as the batch twin's unique-key count."""
+    from move_forecast_ind_spark.queries.streaming_q import st_dedup_counts
     from move_forecast_ind_spark.streaming.events import dedup_within_watermark
 
     out = _drain(
         dedup_within_watermark(event_stream_factory()), "t_dedup", "append"
     )
-    # one surviving event per (user, type, minute) key
     keys = [tuple(r) for r in out.select("user_id", "event_type", "minute_bucket").collect()]
     assert len(keys) == len(set(keys))
     assert len(keys) > 0
+    per_type = {r.event_type: r["count"] for r in out.groupBy("event_type").count().collect()}
+    batch = {r.event_type: r.n_unique for r in st_dedup_counts(spark, SF_SMALL).collect()}
+    assert per_type == batch
 
 
 def test_stateful_running_counts(spark, event_stream_factory):
@@ -439,52 +444,32 @@ def test_windowed_topk_equivalence(spark, event_stream_factory):
 
 def test_latest_state_equivalence(spark, event_stream_factory):
     """CDC latest-per-key: the drained stream's one-row-per-user state
-    must equal the batch twin exactly (unique (ts, event_id) ordering
-    key -> fully deterministic, no rounding needed on the raw drain)."""
+    must equal the batch twin exactly, every column (unique (ts, event_id)
+    ordering key -> fully deterministic)."""
     from move_forecast_ind_spark.queries.streaming_q import st_cdc_latest_state
     from move_forecast_ind_spark.streaming.events import latest_state
 
     out = _drain(latest_state(event_stream_factory()), "t_latest", "complete")
     batch = st_cdc_latest_state(spark, SF_SMALL)
-    cols = ["user_id", "n_events", "last_ts_us", "last_type"]
-    assert _rows(out.select(*cols), cols) == _rows(batch.select(*cols), cols)
+    cols = ["user_id", "n_events", "last_ts_us", "last_type", "last_value"]
+    assert _rows(out, cols) == _rows(batch, cols)
 
 
 def test_decayed_engagement_equivalence(spark, event_stream_factory):
     """Streaming decayed-engagement state: drain the update-mode
-    aggregate, apply the identical read-out transform, and match the
-    batch twin on the r4 grid (sum-order contract: stream accumulates
-    across micro-batches in arrival order, batch in scan order)."""
-    from pyspark.sql import functions as F
-
+    aggregate, apply the same read-out, and match the batch twin on the
+    r4 grid (sum-order contract: stream accumulates across micro-batches
+    in arrival order, batch in scan order)."""
     from move_forecast_ind_spark.queries.streaming_q import (
         st_decayed_engagement,
     )
     from move_forecast_ind_spark.streaming.events import (
-        _DECAY_LAM_PER_DAY,
-        _DECAY_T0_US,
-        _US_PER_DAY_F,
+        decayed_scores,
         decayed_state,
     )
 
     out = _drain(decayed_state(event_stream_factory()), "t_decay", "complete")
-    g = out.agg(F.max("last_us").alias("t_now"))
-    scored = out.crossJoin(F.broadcast(g)).select(
-        "user_id",
-        "n_events",
-        (
-            F.floor(
-                F.col("s_shift")
-                * F.exp(
-                    -F.lit(_DECAY_LAM_PER_DAY)
-                    * ((F.col("t_now") - F.lit(_DECAY_T0_US)) / _US_PER_DAY_F)
-                )
-                * 1e4
-                + F.lit(0.5)
-            )
-            / 1e4
-        ).alias("decayed_score"),
-    )
+    scored = decayed_scores(out)
     batch = st_decayed_engagement(spark, SF_SMALL)
     cols = ["user_id", "n_events", "decayed_score"]
-    assert _rows(scored.select(*cols), cols) == _rows(batch.select(*cols), cols)
+    assert _rows(scored, cols) == _rows(batch, cols)

@@ -1,10 +1,12 @@
-"""Streaming restart-from-checkpoint fault evidence (r13, VERDICT item 1).
+"""Streaming restart-from-checkpoint fault check.
 
-The one failure mode with no prior measurement: a running Structured
-Streaming query is SIGKILLED mid-stream (the whole driver process — no
-graceful stop, no flush), then restarted from its checkpointLocation and
-drained; the final sink table must be hash-exact to the batch twin
-computed over the same rows. Two kill points per scenario:
+A running Structured Streaming query is SIGKILLED mid-stream (the whole
+driver process — no graceful stop, no flush), then restarted from its
+checkpointLocation and drained; the final sink table must be hash-exact
+to the same pipeline run as a batch query over the same rows. The stream
+and the batch side share one definition: ``_pipeline`` applies the
+streaming/events.py transform either to the staged file stream or to
+``load_table(spark, sf_dir, "events")``. Two kill points per scenario:
 
 - ``pre``  — kill at the START of the victim micro-batch's foreachBatch,
   before the sink write: the checkpoint has the batch's offsets but no
@@ -36,12 +38,11 @@ Prints one verdict row per (scenario, kill_point) and a JSON summary
 line. Exit code 0 iff every scenario is hash-exact and the negative
 control shows inflation.
 
-``--two-kill`` (r14, VERDICT item 4) switches to the re-entrancy
-protocol: kill at ``--kill-batch`` (post), restart and kill AGAIN
-mid-drain at ``--kill-batch2`` (post), restart once more and drain —
-three driver processes, two checkpoint recoveries, hash-exact against
-the batch twin. Pair with ``--sf <sf0.1> --nfiles 32`` for a
-32-micro-batch horizon::
+``--two-kill`` switches to the re-entrancy protocol: kill at
+``--kill-batch`` (post), restart and kill AGAIN mid-drain at
+``--kill-batch2`` (post), restart once more and drain — three driver
+processes, two checkpoint recoveries, hash-exact against the batch run.
+Pair with ``--sf <sf0.1> --nfiles 32`` for a 32-micro-batch horizon::
 
     python tools/stream_restart_check.py --two-kill \
         --sf <DATA_ROOT>/sf0.1 --nfiles 32 \
@@ -71,7 +72,7 @@ SCENARIOS = ("tumbling", "sliding", "session", "cdc_latest", "incremental")
 # comparison columns per scenario (the batch-equivalence tests' sets;
 # doubles rounded to 6 dp so partial-aggregation order can't flip a hash)
 _COLS = {
-    "tumbling": ["bucket_s", "event_type", "n"],
+    "tumbling": ["bucket_s", "event_type", "n", "sum_value"],
     "sliding": ["bucket_s", "event_type", "n"],
     "session": ["user_id", "session_start_s", "n_events", "duration_s"],
     "cdc_latest": ["user_id", "n_events", "last_ts_us", "last_type", "last_value"],
@@ -112,7 +113,9 @@ def _stage(spark, sf_dir: str, nfiles: int, staged: str) -> None:
         os.utime(os.path.join(staged, f), (base + i, base + i))
 
 
-def _pipeline(name: str, events_stream):
+def _pipeline(name: str, events):
+    """The scenario's streaming/events.py transform, over a stream or a
+    batch frame; the incremental scenario's stream feeds its sink raw."""
     from move_forecast_ind_spark.streaming import events as SE
 
     return {
@@ -120,7 +123,8 @@ def _pipeline(name: str, events_stream):
         "sliding": SE.sliding_counts,
         "session": SE.session_stats,
         "cdc_latest": SE.latest_state,
-    }[name](events_stream)
+        "incremental": SE.daily_counts,
+    }[name](events)
 
 
 def _read_staged_stream(spark, staged: str):
@@ -182,7 +186,7 @@ def _run_phase(args) -> None:
             hard_kill()
 
     if args.scenario == "incremental":
-        out, mode = stream, "append"
+        out, mode = stream, "append"  # apply_count_delta aggregates per batch
     else:
         out, mode = _pipeline(args.scenario, stream), "complete"
     q = (
@@ -194,26 +198,6 @@ def _run_phase(args) -> None:
     q.processAllAvailable()
     q.stop()
     spark.stop()
-
-
-def _batch_twin(spark, scenario: str, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from move_forecast_ind_spark.queries import streaming_q as SQ
-    from move_forecast_ind_spark.sources import load_table
-
-    if scenario == "incremental":
-        return (
-            load_table(spark, sf_dir, "events")
-            .groupBy("event_type", F.to_date("ts").alias("day"))
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-    return {
-        "tumbling": SQ.st_tumbling_counts,
-        "sliding": SQ.st_sliding_counts,
-        "session": SQ.st_session_stats,
-        "cdc_latest": SQ.st_cdc_latest_state,
-    }[scenario](spark, sf_dir)
 
 
 def _spawn(extra: list[str]) -> int:
@@ -239,7 +223,7 @@ def main() -> int:
     ap.add_argument(
         "--two-kill",
         action="store_true",
-        help="re-entrancy mode (r14, VERDICT item 4): per scenario, "
+        help="re-entrancy mode: per scenario, "
         "SIGKILL at --kill-batch (post), restart and SIGKILL AGAIN "
         "mid-drain at --kill-batch2 (post), restart once more and drain "
         "— proves recovery is re-entrant, not one-shot. Pair with "
@@ -267,6 +251,7 @@ def main() -> int:
         return 0
 
     from move_forecast_ind_spark.session import get_spark
+    from move_forecast_ind_spark.sources import load_table
 
     spark = get_spark("stream-restart-main")
     spark.sparkContext.setLogLevel("ERROR")
@@ -274,7 +259,7 @@ def main() -> int:
     _stage(spark, args.sf, args.nfiles, staged)
 
     if args.two_kill:
-        # Re-entrancy evidence (r14): recovery must survive a SECOND
+        # Re-entrancy: recovery must survive a SECOND
         # SIGKILL landing mid-drain of the first recovery. Both kills at
         # the `post` point (sink written, commit log not — the
         # double-delivery case), so the run exercises redelivery twice
@@ -309,7 +294,9 @@ def main() -> int:
             sh, sn = _canon_hash(
                 spark.read.parquet(os.path.join(work, "table")), _COLS[scenario]
             )
-            bh, bn = _canon_hash(_batch_twin(spark, scenario, args.sf), _COLS[scenario])
+            bh, bn = _canon_hash(
+                _pipeline(scenario, load_table(spark, args.sf, "events")), _COLS[scenario]
+            )
             match = sh == bh
             cell = {
                 "scenario": scenario,
@@ -381,7 +368,9 @@ def main() -> int:
             sh, sn = _canon_hash(
                 spark.read.parquet(os.path.join(work, "table")), _COLS[scenario]
             )
-            bh, bn = _canon_hash(_batch_twin(spark, scenario, args.sf), _COLS[scenario])
+            bh, bn = _canon_hash(
+                _pipeline(scenario, load_table(spark, args.sf, "events")), _COLS[scenario]
+            )
             match = sh == bh
             ok = ok and match and killed and rc2 == 0
             results.append(
